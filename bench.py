@@ -121,12 +121,19 @@ def run_headline(sf_dir: str, cpus: str) -> dict[str, float]:
     return {name: min(p[name] for p in passes) for name in HEADLINE}
 
 
-def _wait_for(path: str, proc=None, timeout: float = 900.0) -> None:
-    """Poll for a marker file; fail fast if the peer process died."""
+def _wait_for(
+    path: str, proc=None, parent_pid: int | None = None, timeout: float = 900.0
+) -> None:
+    """Poll for a marker file; fail fast if the peer process died —
+    ``proc`` is a worker the caller spawned, ``parent_pid`` the caller's
+    own parent (gone once the caller is re-parented)."""
     t0 = time.monotonic()
     while not os.path.exists(path):
         if proc is not None and proc.poll() is not None:
             raise RuntimeError(f"bench worker exited (rc={proc.returncode}) "
+                               f"while waiting for {path}")
+        if parent_pid is not None and os.getppid() != parent_pid:
+            raise RuntimeError(f"bench parent {parent_pid} exited "
                                f"while waiting for {path}")
         if time.monotonic() - t0 > timeout:
             raise TimeoutError(f"timed out waiting for {path}")
@@ -273,6 +280,7 @@ def extraction_worker(
 
     import shutil
 
+    parent = os.getppid()
     tag = master.replace("local[", "l").replace("]", "")
     spark = build_session(f"bench-{master}", master=master)
     full = spark.read.parquet(input_path)
@@ -303,7 +311,7 @@ def extraction_worker(
             open(os.path.join(sync_dir, f"ready_{tag}"), "w").close()
         for i in range(rounds):
             if sync_dir:
-                _wait_for(os.path.join(sync_dir, f"go_{tag}_{i}"))
+                _wait_for(os.path.join(sync_dir, f"go_{tag}_{i}"), parent_pid=parent)
             walls.append(_job(out_dir + "/run"))
             if sync_dir:
                 open(os.path.join(sync_dir, f"done_{tag}_{i}"), "w").close()

@@ -7,12 +7,13 @@ Design for the 10^12-turn target:
   ``repartition(P, conv_id, salt)``; extraction itself is a pipelined
   map stage (mapInPandas), and the output write is shuffle-free.
 - **Skew salting.** Conversation sizes are Zipf-ish (FIXTURES.md): a
-  single conversation can be 10^6 turns. A cheap partial-aggregated
-  ``groupBy(conv_id).count()`` pre-pass finds heavy hitters (result is
-  tiny — only convs above threshold — and broadcast), and only those
-  get a per-turn salt; normal convs keep salt 0 so their turns stay
-  co-located. Extraction is per-turn stateless, so salting is always
-  safe.
+  single conversation can be 10^6 turns. The salt is the turn's chunk
+  within its conversation, ``floor(turn_idx / threshold)`` — a plain
+  projection, no pre-pass. A conversation of up to ``threshold`` turns
+  keeps salt 0 and stays co-located; a longer one is cut into chunks
+  of consecutive turns, and because ``(conv_id, turn_idx)`` is unique
+  no ``(conv_id, salt)`` key ever holds more than ``threshold`` turns.
+  Extraction is per-turn stateless, so salting is always safe.
 - **Checkpoint-resume.** Work is split into ``n_shards`` bucket-groups
   by ``pmod(xxhash64(conv_id), n_shards)``. Each shard writes its
   output + lineage manifest, then an atomic ``.done`` marker; a re-run
@@ -56,8 +57,7 @@ from ocr_spark.schema import MANIFEST_SCHEMA, OUTPUT_SCHEMA
 from ocr_spark.sources.io import read_input, validate_input_schema, write_output
 from ocr_spark.udfs import extract_batch, extract_udf
 
-DEFAULT_SALT_THRESHOLD = 2000  # turns per conv before salting kicks in
-DEFAULT_N_SALTS = 16
+DEFAULT_SALT_THRESHOLD = 2000  # max turns per (conv_id, salt) shuffle key
 
 
 class SimulatedFailure(RuntimeError):
@@ -124,34 +124,18 @@ def extract_transcripts(df: DataFrame) -> DataFrame:
 # Skew salting
 # --------------------------------------------------------------------------
 
-def with_skew_salt(
-    df: DataFrame,
-    threshold: int = DEFAULT_SALT_THRESHOLD,
-    n_salts: int = DEFAULT_N_SALTS,
-) -> DataFrame:
-    """Add a ``salt`` column: 0 for normal conversations; heavy
-    conversations (> threshold turns) spread over ``n_salts`` values.
+def with_skew_salt(df: DataFrame, threshold: int = DEFAULT_SALT_THRESHOLD) -> DataFrame:
+    """Add a ``salt`` column: the turn's chunk of at most ``threshold``
+    consecutive turns within its conversation.
 
-    The heavy-hitter list is a partial-aggregated count (map-side
-    combine) filtered to the skew tail, so the broadcast side is tiny
-    at any input scale.
+    Conversations of up to ``threshold`` turns keep salt 0 (turn_idx
+    counts from 0), longer ones split into chunks. Floor division
+    keeps the chunk bound for negative ``turn_idx`` too.
     """
-    heavy = (
-        df.groupBy("conv_id")
-        .agg(F.count(F.lit(1)).alias("_n_turns"))
-        .filter(F.col("_n_turns") > threshold)
-        .select("conv_id", F.lit(True).alias("_heavy"))
-    )
-    return (
-        df.join(F.broadcast(heavy), "conv_id", "left")
-        .withColumn(
-            "salt",
-            F.when(
-                F.col("_heavy"),
-                F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_salts)).cast("int"),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("_heavy")
+    if threshold < 1:
+        raise ValueError(f"salt threshold must be >= 1, got {threshold}")
+    return df.withColumn(
+        "salt", F.floor(F.col("turn_idx") / F.lit(threshold)).cast("int")
     )
 
 
@@ -221,22 +205,11 @@ def _write_manifest_local(rows: list[dict], dest: str) -> None:
     with an object-store destination this stays a driver-side put."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     os.makedirs(dest, exist_ok=True)
-    cols = [f.name for f in MANIFEST_SCHEMA.fields]
-    int_cols = {f.name for f in MANIFEST_SCHEMA.fields if f.dataType.typeName() != "string"}
-    arrays = [
-        pa.array(
-            [r[c] for r in rows],
-            type=pa.int64()
-            if c in int_cols and c not in ("shard", "partition_id", "attempt")
-            else (
-                pa.int32() if c in ("shard", "partition_id", "attempt") else pa.string()
-            ),
-        )
-        for c in cols
-    ]
-    pq.write_table(pa.table(dict(zip(cols, arrays))), os.path.join(dest, "part-0.parquet"))
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(MANIFEST_SCHEMA))
+    pq.write_table(table, os.path.join(dest, "part-0.parquet"))
 
 
 def _marker_path(checkpoint_dir: str, shard: int) -> str:
@@ -251,7 +224,6 @@ def run_extraction(
     n_shards: int = 1,
     num_partitions: int | None = None,
     salt_threshold: int = DEFAULT_SALT_THRESHOLD,
-    n_salts: int = DEFAULT_N_SALTS,
     fail_after_shard: int | None = None,
 ) -> dict:
     """Run the full extraction job; returns a small summary dict.
@@ -281,7 +253,7 @@ def run_extraction(
             part = src.filter(
                 F.pmod(F.xxhash64("conv_id"), F.lit(n_shards)) == shard
             )
-        salted = with_skew_salt(part, salt_threshold, n_salts)
+        salted = with_skew_salt(part, salt_threshold)
         balanced = salted.repartition(num_partitions, "conv_id", "salt")
         acc = spark.sparkContext.accumulator([], _ListAccumulator())
         out = balanced.mapInPandas(_make_runner(acc, shard), OUTPUT_SCHEMA)
@@ -353,7 +325,6 @@ def _cli_main(argv: list[str] | None = None) -> None:
     ap.add_argument("--shards", type=int, default=1)
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--salt-threshold", type=int, default=DEFAULT_SALT_THRESHOLD)
-    ap.add_argument("--n-salts", type=int, default=DEFAULT_N_SALTS)
     args = ap.parse_args(argv)
 
     spark = SparkSession.builder.appName("ocr_spark-extract").getOrCreate()
@@ -365,7 +336,6 @@ def _cli_main(argv: list[str] | None = None) -> None:
         n_shards=args.shards,
         num_partitions=args.partitions,
         salt_threshold=args.salt_threshold,
-        n_salts=args.n_salts,
     )
     print(json.dumps(summary))
 

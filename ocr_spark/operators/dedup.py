@@ -1023,7 +1023,6 @@ def incremental_dedup(
     index_fps: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_probe: bool = True,
 ) -> DataFrame:
     """Dedup a NEW ingest batch against an EXISTING corpus fingerprint
     index — the shape a continuously-crawled 100 TB corpus actually
@@ -1060,9 +1059,7 @@ def incremental_dedup(
     100 TB additionally keep the index bucketed by fp
     (sources/bucketing.py — the streaming twin's epoch layout does
     exactly this) so even the index SCAN reads only the buckets the
-    batch can hit. Set ``broadcast_probe=False`` for the degenerate
-    batch ≈ index case (the semi join then plans as a plain shuffle
-    join — the pre-r5 shape).
+    batch can hit.
 
     ``index_fps`` needs one column ``fp``. Output
     (id_col, fp, verdict) for EVERY batch row. ``id_col`` should be
@@ -1078,20 +1075,16 @@ def incremental_dedup(
     keepers = b.groupBy("fp").agg(F.min(id_col).alias("first_id")).select(
         F.col("fp").alias("kfp"), "first_id"
     )
-    bfps = b.select("fp").where(F.col("fp").isNotNull()).distinct()
-    if broadcast_probe:
-        bfps = F.broadcast(bfps)
+    bfps = F.broadcast(b.select("fp").where(F.col("fp").isNotNull()).distinct())
     # membership-equivalent to distinct-ing the whole index: index fps
     # outside the batch could never join b anyway, so prefiltering them
     # out map-side changes nothing downstream
-    idx = (
+    idx = F.broadcast(
         index_fps.select("fp")
         .join(bfps, "fp", "semi")
         .distinct()
         .withColumn("in_idx", F.lit(True))
     )
-    if broadcast_probe:
-        idx = F.broadcast(idx)
     verdict = (
         F.when(F.col("in_idx").isNotNull(), "dup_index")
         .when(F.col(id_col) != F.col("first_id"), "dup_batch")

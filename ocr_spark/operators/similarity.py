@@ -488,7 +488,6 @@ def ivf_topk_seeded(
     n_cells: int = 16,
     n_probe: int = 4,
     dim: int = EMB_DIM,
-    inline_max_cells: int = 256,
 ) -> DataFrame:
     """IVF top-k with SEEDED centroids: the coarse quantizer's
     centroids are the first ``n_cells`` vectors themselves (no Lloyd
@@ -503,17 +502,15 @@ def ivf_topk_seeded(
     shuffle; the candidate join is an equi-join on cell id bounded by
     probe volume. Ties everywhere break on the lower cell / vec_id.
 
-    Assignment has two bit-identical physical forms, switched on
-    ``inline_max_cells``: at small n_cells the centroids are baked
-    into the expression as literal pow-chains (zero extra operators,
-    whole-stage codegen); past the threshold that expression tree
-    (n_cells × dim pow terms) would blow Catalyst codegen limits long
-    before memory, so the centroids travel as DATA instead — one
-    broadcast row holding array<array<double>>, distance =
-    ``aggregate(zip_with(...))`` over it, expression tree CONSTANT in
-    n_cells. Both forms fold dim terms left-to-right with the same
-    pow/cast primitives, so they agree to the last bit (pinned in
-    test_similarity.py) and the oracle needs no variant.
+    The centroids travel as DATA — one broadcast row holding
+    array<array<double>>, distance = ``aggregate(zip_with(...))`` over
+    it — so the expression tree is constant in n_cells (an inline
+    pow-literal chain per centroid would blow Catalyst codegen limits
+    long before memory). Both the vectors and the centroids are cut
+    to their first ``dim`` components, and the fold 0.0 + t0 + t1 + …
+    uses the oracle's pow/cast primitives in the oracle's order
+    (0.0 + x ≡ x in IEEE for the non-negative terms), so cell
+    assignment agrees with ``l2_sql`` to the last bit.
     """
     from pyspark.sql import Window
 
@@ -523,56 +520,31 @@ def ivf_topk_seeded(
         .orderBy("vec_id")
         .collect()
     )
-    cents = [[float(x) for x in r["embedding"]] for r in seeds]
+    cents = [[float(x) for x in r["embedding"][:dim]] for r in seeds]
+    cent_df = F.broadcast(
+        emb.sparkSession.createDataFrame([(cents,)], "_cents array<array<double>>")
+    )
 
-    def dist_exprs(col: str) -> list[Column]:
-        return [
-            F.expr(
-                " + ".join(
-                    f"pow(CAST({col}[{i}] AS DOUBLE) - CAST({c[i]!r} AS DOUBLE), 2)"
-                    for i in range(dim)
-                )
-            )
-            for c in cents
-        ]
-
-    if len(cents) <= inline_max_cells:
-        attach = lambda df: df  # noqa: E731
-
-        def darr(col: str) -> Column:
-            return F.array(*dist_exprs(col))
-
-    else:
-        cent_df = emb.sparkSession.createDataFrame(
-            [(cents,)], "_cents array<array<double>>"
+    def darr(col: str) -> Column:
+        vec = F.slice(F.col(col).cast("array<double>"), 1, dim)
+        return F.transform(
+            F.col("_cents"),
+            lambda c: F.aggregate(
+                F.zip_with(vec, c, lambda a, b: F.pow(a - b, F.lit(2.0))),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ),
         )
-        attach = lambda df: df.crossJoin(F.broadcast(cent_df))  # noqa: E731
-
-        def darr(col: str) -> Column:
-            # same left fold as the literal chain: 0.0 + t0 + t1 + …
-            # (0.0 + x ≡ x in IEEE for the non-negative pow terms)
-            return F.transform(
-                F.col("_cents"),
-                lambda c: F.aggregate(
-                    F.zip_with(
-                        F.col(col).cast("array<double>"),
-                        c,
-                        lambda a, b: F.pow(a - b, F.lit(2.0)),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-            )
 
     d_corpus = darr("embedding")
     # first occurrence of the min = lowest cell id on ties
     cell = (F.array_position(d_corpus, F.array_min(d_corpus)) - 1).cast("int")
-    assigned = attach(emb).select("vec_id", "embedding", cell.alias("cell"))
+    assigned = emb.crossJoin(cent_df).select("vec_id", "embedding", cell.alias("cell"))
 
     queries = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
-    q_cells = attach(queries).select(
+    q_cells = queries.crossJoin(cent_df).select(
         "q_id", "q_emb", F.posexplode(darr("q_emb")).alias("cell", "dist")
     )
     w_probe = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("cell").asc())

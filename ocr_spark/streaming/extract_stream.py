@@ -26,8 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_spark.job import extract_transcripts
 from ocr_spark.schema import TRANSCRIPT_SCHEMA
-from ocr_spark.udfs import extract_udf
 
 
 def streaming_extract(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -37,9 +37,7 @@ def streaming_extract(spark: SparkSession, input_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 8)
         .parquet(input_dir)
     )
-    return src.select(
-        "conv_id", "turn_idx", extract_udf(F.col("text")).alias("x")
-    ).select("conv_id", "turn_idx", "x.*")
+    return extract_transcripts(src)
 
 
 def windowed_turn_counts(

@@ -8,7 +8,10 @@ size, or resume path.
 
 from __future__ import annotations
 
+import glob
+
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,6 +24,7 @@ from ocr_spark.job import (
     run_extraction,
     with_skew_salt,
 )
+from ocr_spark.schema import MANIFEST_SCHEMA
 
 
 def _oracle_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -95,7 +99,7 @@ def test_equality_invariant_to_partitioning(spark, transcripts_path, oracle):
         lambda d: d.repartition(37),
         lambda d: d.repartition(3, "conv_id"),
         lambda d: d.orderBy(F.desc("turn_idx")),
-        lambda d: with_skew_salt(d, threshold=20, n_salts=4).repartition(
+        lambda d: with_skew_salt(d, threshold=20).repartition(
             16, "conv_id", "salt"
         ),
     ):
@@ -120,25 +124,31 @@ def test_small_arrow_batches(spark, transcripts_path, oracle):
 
 
 def test_skew_salt_splits_heavy_conversation(spark, transcripts_path):
+    """Turn-position chunks: heavy conversations spread over several
+    salts, no (conv_id, salt) key holds more than ``threshold`` turns,
+    and conversations of at most ``threshold`` turns keep salt 0."""
     df = spark.read.parquet(transcripts_path)
-    heavy_id = (
-        df.groupBy("conv_id").count().orderBy(F.desc("count")).first()["conv_id"]
-    )
-    salted = with_skew_salt(df, threshold=20, n_salts=4)
-    n_salts_heavy = (
-        salted.filter(F.col("conv_id") == heavy_id)
-        .select("salt").distinct().count()
-    )
-    assert n_salts_heavy > 1  # heavy conv spread over multiple salts
-    n_salts_normal = (
-        salted.filter(F.col("conv_id") != heavy_id)
-        .join(
-            salted.groupBy("conv_id").count().filter(F.col("count") <= 20),
-            "conv_id",
+    salted = with_skew_salt(df, threshold=20)
+    per_key = salted.groupBy("conv_id", "salt").count()
+    assert per_key.agg(F.max("count")).first()[0] <= 20
+    per_conv = {
+        r["conv_id"]: (r["n_turns"], r["salts"])
+        for r in per_key.groupBy("conv_id")
+        .agg(
+            F.sum("count").alias("n_turns"),
+            F.sort_array(F.collect_list("salt")).alias("salts"),
         )
-        .select("salt").distinct().count()
-    )
-    assert n_salts_normal == 1  # normal convs stay unsalted (salt=0)
+        .collect()
+    }
+    heavy_turns, heavy_salts = max(per_conv.values())
+    assert heavy_turns > 20 and len(heavy_salts) > 1
+    assert all(salts == [0] for n, salts in per_conv.values() if n <= 20)
+    # floor division: negative positions chunk at the same bound
+    neg = spark.range(-45, 45).selectExpr("'c' AS conv_id", "CAST(id AS INT) AS turn_idx")
+    neg_keys = with_skew_salt(neg, threshold=20).groupBy("salt").count().collect()
+    assert sorted((r["salt"], r["count"]) for r in neg_keys) == [
+        (-3, 5), (-2, 20), (-1, 20), (0, 20), (1, 20), (2, 5)
+    ]
 
 
 def test_job_end_to_end_with_manifest(spark, transcripts_path, oracle, tmp_path):
@@ -146,11 +156,15 @@ def test_job_end_to_end_with_manifest(spark, transcripts_path, oracle, tmp_path)
     ckpt = str(tmp_path / "ckpt")
     summary = run_extraction(
         spark, transcripts_path, out, checkpoint_dir=ckpt,
-        n_shards=3, num_partitions=8, salt_threshold=20, n_salts=4,
+        n_shards=3, num_partitions=8, salt_threshold=20,
     )
     assert summary["shards_run"] == [0, 1, 2]
     got = _collect_sorted(spark.read.parquet(out).drop("shard"))
     _assert_equal(got, oracle)
+    mschema = pq.read_schema(glob.glob(f"{out}/_manifest/shard=0/*.parquet")[0])
+    assert [(f.name, str(f.type)) for f in mschema] == list(
+        zip(MANIFEST_SCHEMA.fieldNames(), ["int32"] * 3 + ["int64"] * 7 + ["string"])
+    )
     m = read_manifest(spark, out).toPandas()
     assert m["n_turns"].sum() == len(oracle)
     assert (m["status"] == "ok").all()

@@ -73,6 +73,8 @@ def test_dedup_exact_is_partial_aggregated(spark):
 def test_extraction_job_exchange_count(spark, transcripts_path):
     """The full job plan: exactly one hash repartition (the explicit
     salted exchange) on the extraction path."""
+    import re
+
     from ocr_spark.job import ensure_package_shipped, with_skew_salt
     from ocr_spark.udfs import extract_udf
     from pyspark.sql import functions as F
@@ -82,10 +84,11 @@ def test_extraction_job_exchange_count(spark, transcripts_path):
     salted = with_skew_salt(df).repartition(32, "conv_id", "salt")
     out = salted.select("conv_id", "turn_idx", extract_udf(F.col("text")).alias("x"))
     plan = physical_plan(out)
-    # salt pre-pass: its aggregate exchange feeds a broadcast, leaving
-    # the single row-path repartition exchange
-    assert plan.count("Exchange hashpartitioning") <= 2
-    assert "BroadcastHashJoin" in plan  # heavy-hitter list is broadcast
+    # the salt is a projection of turn_idx: the salted hash repartition
+    # is the only exchange — no pre-pass aggregate, no join
+    assert count_exchanges(out) == 1
+    assert re.search(r"Arguments: hashpartitioning\(conv_id#\d+, salt#\d+, 32\)", plan)
+    assert "Join" not in plan
 
 
 def test_partitioned_output_prunes(spark, transcripts_path, tmp_path):

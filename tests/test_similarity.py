@@ -192,31 +192,25 @@ def test_filtered_knn_respects_pool(spark):
     assert all(sorted(v) == [1, 2, 3] for v in by_q.values())
 
 
-def test_ivf_seeded_assignment_paths_bit_identical(spark):
-    """The broadcast-data assignment twin (used above inline_max_cells)
-    returns EXACTLY the inline-literal path's rows — same pow/cast
-    primitives, same left fold order, so sims agree to the last bit
-    and ties break identically."""
+def test_ivf_seeded_dim_prefix_equals_truncated_embeddings(spark):
+    """``dim`` below the array length uses only the first ``dim``
+    components for vectors AND centroids: exactly the rows of the same
+    call over embeddings pre-truncated to ``dim``."""
+    from pyspark.sql import functions as F
+
     emb = load_table(spark, SF_DIR, "embeddings")
-    inline = sorted(
-        map(tuple, ivf_topk_seeded(emb, n_queries=8, k=3, n_cells=32, n_probe=5).collect())
-    )
-    data = sorted(
-        map(
-            tuple,
-            ivf_topk_seeded(
-                emb, n_queries=8, k=3, n_cells=32, n_probe=5, inline_max_cells=1
-            ).collect(),
-        )
-    )
-    assert inline == data
-    assert len(inline) == 8 * 3
+    dim = 8
+    cut = emb.withColumn("embedding", F.slice("embedding", 1, dim))
+    args = dict(n_queries=8, k=3, n_cells=32, n_probe=5, dim=dim)
+    got = sorted(map(tuple, ivf_topk_seeded(emb, **args).collect()))
+    assert got == sorted(map(tuple, ivf_topk_seeded(cut, **args).collect()))
+    assert len(got) == 8 * 3
 
 
 def test_ivf_seeded_large_cell_count_no_codegen_blowup(spark):
-    """n_cells = 1024 through the broadcast-data path: the expression
-    tree is constant-size (centroids are DATA), so a cell count that
-    would generate ~1024×dim pow literals inline plans and runs fine."""
+    """n_cells = 1024: the expression tree is constant-size (centroids
+    are DATA), so a cell count that would generate ~1024×dim pow
+    literals inline plans and runs fine."""
     from pyspark.sql import functions as F
 
     dim = 8
