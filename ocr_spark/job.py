@@ -15,13 +15,18 @@ Design for the 10^12-turn target:
   no ``(conv_id, salt)`` key ever holds more than ``threshold`` turns.
   Extraction is per-turn stateless, so salting is always safe.
 - **Checkpoint-resume.** Work is split into ``n_shards`` bucket-groups
-  by ``pmod(xxhash64(conv_id), n_shards)``. Each shard writes its
-  output + lineage manifest, then an atomic ``.done`` marker; a re-run
-  skips marked shards and overwrites (idempotent) any half-written
-  shard directory — strictly stronger than the reference's
-  lose-on-disconnect queue (``OCR API 2/api.py:167-178``). On a real
-  cluster the markers live on the shared FS next to the Iceberg
-  table; with Iceberg the per-shard write is a snapshot commit.
+  by ``pmod(xxhash64(conv_id), n_shards)``; the run's P tasks are
+  shared out, ``ceil(P / n_shards)`` per shard job. Pending shards
+  run as concurrent Spark jobs, just enough of them to fill the
+  default parallelism with tasks (a Python task has a fixed start-up
+  cost, so task count, not turn count, sets a small shard's cost).
+  Each shard writes its output + lineage manifest, then an atomic
+  ``.done`` marker, in shard order; a re-run skips marked shards and
+  overwrites (idempotent) any half-written shard directory — strictly
+  stronger than the reference's lose-on-disconnect queue (``OCR API
+  2/api.py:167-178``). On a real cluster the markers live on the
+  shared FS next to the Iceberg table; with Iceberg the per-shard
+  write is a snapshot commit.
 - **Per-partition lineage + metrics** (``MANIFEST_SCHEMA``): each task
   reports turns, convs, blocks kept/dropped, bytes in/out, wall_ms
   via an accumulator — one tiny dict per task on the driver.
@@ -33,17 +38,21 @@ event, the manifest rows are its per-job status events (S5/S6).
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 import time
 import uuid
 import zipfile
+from collections import deque
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 from pyspark import TaskContext
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 if __package__ in (None, ""):
     # executed by path (`python ocr_spark/job.py` / spark-submit's
@@ -58,6 +67,8 @@ from ocr_spark.sources.io import read_input, validate_input_schema, write_output
 from ocr_spark.udfs import extract_batch, extract_udf
 
 DEFAULT_SALT_THRESHOLD = 2000  # max turns per (conv_id, salt) shuffle key
+
+log = logging.getLogger(__name__)
 
 
 class SimulatedFailure(RuntimeError):
@@ -228,6 +239,16 @@ def run_extraction(
 ) -> dict:
     """Run the full extraction job; returns a small summary dict.
 
+    ``num_partitions`` (P, default twice the default parallelism) is
+    the run's total task count: each of the ``n_shards`` shard jobs
+    repartitions into ``ceil(P / n_shards)`` tasks. Pending shards run
+    as concurrent Spark jobs, as many at once as it takes to fill the
+    default parallelism with tasks. Shard k's ``.done`` marker is
+    written only after its output and manifest are committed and
+    every pending shard below k is marked. If a shard fails, shards
+    already running finish, none starts, and the error is re-raised:
+    a resume redoes the first unmarked shard and those after it.
+
     Output layout: ``output_dir/shard=K/*.parquet`` (+ the lineage
     manifest under ``output_dir/_manifest/shard=K`` — underscore
     prefix keeps it out of downstream reads of ``output_dir``).
@@ -235,43 +256,81 @@ def run_extraction(
     ensure_package_shipped(spark)
     if checkpoint_dir:
         os.makedirs(checkpoint_dir, exist_ok=True)
+    parallelism = spark.sparkContext.defaultParallelism
     if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
+        num_partitions = parallelism * 2
+    if n_shards < 1 or num_partitions < 1:
+        raise ValueError(
+            f"n_shards and num_partitions must be >= 1, got {n_shards}, {num_partitions}"
+        )
+    per_shard = -(-num_partitions // n_shards)
 
     src = read_input(spark, input_source)
     validate_input_schema(
         src, {"conv_id": "string", "turn_idx": "int", "text": "string"}
     )
     src = src.select("conv_id", "turn_idx", "text")
-    done, ran = [], []
-    for shard in range(n_shards):
-        if checkpoint_dir and os.path.exists(_marker_path(checkpoint_dir, shard)):
-            done.append(shard)
-            continue
+
+    def run_shard(shard: int, acc) -> None:
         part = src
         if n_shards > 1:
             part = src.filter(
                 F.pmod(F.xxhash64("conv_id"), F.lit(n_shards)) == shard
             )
         salted = with_skew_salt(part, salt_threshold)
-        balanced = salted.repartition(num_partitions, "conv_id", "salt")
-        acc = spark.sparkContext.accumulator([], _ListAccumulator())
+        balanced = salted.repartition(per_shard, "conv_id", "salt")
         out = balanced.mapInPandas(_make_runner(acc, shard), OUTPUT_SCHEMA)
         write_output(out, os.path.join(output_dir, f"shard={shard}"))
         _write_manifest_local(
             list(acc.value), os.path.join(output_dir, "_manifest", f"shard={shard}")
         )
-        ran.append(shard)
-        # crash window: output written, marker not yet — a resume must
-        # redo (overwrite) this shard with no duplicates
-        if fail_after_shard is not None and shard == fail_after_shard:
-            raise SimulatedFailure(f"simulated crash after shard {shard}")
-        if checkpoint_dir:
-            marker = _marker_path(checkpoint_dir, shard)
-            tmp = f"{marker}.{uuid.uuid4().hex}.tmp"
-            with open(tmp, "w") as f:
-                f.write("done\n")
-            os.replace(tmp, marker)  # atomic
+
+    done = [
+        s for s in range(n_shards)
+        if checkpoint_dir and os.path.exists(_marker_path(checkpoint_dir, s))
+    ]
+    pending = [s for s in range(n_shards) if s not in done]
+    ran: list[int] = []
+    # A shard starts only within `width` of the lowest unmarked one, so
+    # a lost driver redoes at most `width` shards and at most `width`
+    # shards' manifest rows sit in driver memory.
+    width = max(1, min(len(pending), -(-parallelism // per_shard)))
+    target = inheritable_thread_target(spark)(run_shard)
+    todo = deque(pending)
+    window: deque = deque()  # (shard, future), in shard order
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        try:
+            while window or todo:
+                while todo and len(window) < width and not any(
+                    f.done() and f.exception() is not None for _, f in window
+                ):
+                    shard = todo.popleft()
+                    # accumulators are made here, in one thread: pyspark
+                    # hands out accumulator ids without a lock
+                    acc = spark.sparkContext.accumulator([], _ListAccumulator())
+                    window.append((shard, pool.submit(target, shard, acc)))
+                shard, fut = window.popleft()
+                fut.result()
+                ran.append(shard)
+                # crash window: output written, marker not yet — a
+                # resume must redo (overwrite) this shard with no
+                # duplicates
+                if fail_after_shard is not None and shard == fail_after_shard:
+                    raise SimulatedFailure(f"simulated crash after shard {shard}")
+                if checkpoint_dir:
+                    marker = _marker_path(checkpoint_dir, shard)
+                    tmp = f"{marker}.{uuid.uuid4().hex}.tmp"
+                    with open(tmp, "w") as f:
+                        f.write("done\n")
+                    os.replace(tmp, marker)  # atomic
+        finally:
+            # let in-flight shards finish (their output stays unmarked)
+            # and read every future, so none of their errors is lost
+            for _, f in window:
+                try:
+                    f.result()
+                except Exception:
+                    log.exception("shard job failed after an earlier failure")
     return {"shards_run": ran, "shards_skipped": done, "n_shards": n_shards}
 
 
@@ -323,7 +382,11 @@ def _cli_main(argv: list[str] | None = None) -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--checkpoint", default=None)
     ap.add_argument("--shards", type=int, default=1)
-    ap.add_argument("--partitions", type=int, default=None)
+    ap.add_argument(
+        "--partitions", type=int, default=None,
+        help="total tasks for the run, shared out over the shards "
+        "(default: twice the default parallelism)",
+    )
     ap.add_argument("--salt-threshold", type=int, default=DEFAULT_SALT_THRESHOLD)
     args = ap.parse_args(argv)
 

@@ -9,6 +9,7 @@ size, or resume path.
 from __future__ import annotations
 
 import glob
+import os
 
 import pandas as pd
 import pyarrow.parquet as pq
@@ -166,6 +167,8 @@ def test_job_end_to_end_with_manifest(spark, transcripts_path, oracle, tmp_path)
         zip(MANIFEST_SCHEMA.fieldNames(), ["int32"] * 3 + ["int64"] * 7 + ["string"])
     )
     m = read_manifest(spark, out).toPandas()
+    # P=8 is the run's total: each of the 3 shard jobs gets ceil(8/3) tasks
+    assert m.groupby("shard")["partition_id"].nunique().to_dict() == {0: 3, 1: 3, 2: 3}
     assert m["n_turns"].sum() == len(oracle)
     assert (m["status"] == "ok").all()
     assert m["bytes_in"].sum() == oracle["bytes_in"].sum()
@@ -190,6 +193,64 @@ def test_resume_after_crash_no_duplicates(spark, transcripts_path, oracle, tmp_p
     got = _collect_sorted(spark.read.parquet(out).drop("shard"))
     assert not got.duplicated(["conv_id", "turn_idx"]).any()
     _assert_equal(got, oracle)
+
+
+def test_resume_after_failed_shard_write(spark, transcripts_path, oracle, tmp_path):
+    """A real write failure, not the simulated one: shard 1's manifest
+    path is a regular file, so that shard's manifest write raises."""
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    blocker = os.path.join(out, "_manifest", "shard=1")
+    os.makedirs(os.path.dirname(blocker))
+    open(blocker, "w").close()
+    with pytest.raises(OSError):
+        run_extraction(
+            spark, transcripts_path, out, checkpoint_dir=ckpt,
+            n_shards=3, num_partitions=8,
+        )
+    assert sorted(os.listdir(ckpt)) == ["shard-00000.done"]
+    os.remove(blocker)
+    summary = run_extraction(
+        spark, transcripts_path, out, checkpoint_dir=ckpt,
+        n_shards=3, num_partitions=8,
+    )
+    assert summary["shards_skipped"] == [0]
+    assert summary["shards_run"] == [1, 2]
+    got = _collect_sorted(spark.read.parquet(out).drop("shard"))
+    assert not got.duplicated(["conv_id", "turn_idx"]).any()
+    _assert_equal(got, oracle)
+
+
+def test_read_manifest_dedupe_keeps_ok_retry(spark, tmp_path):
+    """A task that failed on attempt 0 and succeeded on attempt 1 leaves
+    two raw rows; the deduped manifest keeps the ok one."""
+    from ocr_spark.job import _write_manifest_local
+
+    def row(shard, pid, attempt, n_turns, status):
+        return {
+            "shard": shard, "partition_id": pid, "attempt": attempt,
+            "n_turns": n_turns, "n_convs": 1, "blocks_kept": 0,
+            "blocks_dropped": 0, "bytes_in": 0, "bytes_out": 0,
+            "wall_ms": 1, "status": status,
+        }
+
+    out = str(tmp_path / "out")
+    _write_manifest_local(
+        [row(0, 0, 0, 5, "ok"), row(0, 1, 0, 2, "failed:OSError"), row(0, 1, 1, 7, "ok")],
+        os.path.join(out, "_manifest", "shard=0"),
+    )
+    _write_manifest_local(
+        [row(1, 0, 0, 4, "ok"), row(1, 1, 0, 6, "ok")],
+        os.path.join(out, "_manifest", "shard=1"),
+    )
+    assert read_manifest(spark, out, dedupe=False).count() == 5
+    kept = sorted(
+        (r["shard"], r["partition_id"], r["attempt"], r["n_turns"], r["status"])
+        for r in read_manifest(spark, out).collect()
+    )
+    assert kept == [
+        (0, 0, 0, 5, "ok"), (0, 1, 1, 7, "ok"), (1, 0, 0, 4, "ok"), (1, 1, 0, 6, "ok")
+    ]
 
 
 def test_spark_submit_cli(transcripts_path, tmp_path):
