@@ -44,7 +44,6 @@ _ZERO_WIDTH_RE = re.compile("[\u200b\u200c\u200d\u2060\ufeff\u00ad]")
 _UNICODE_SPACE_RE = re.compile("[\u00a0\u1680\u2000-\u200a\u202f\u205f\u3000]")
 
 _WS_RUN_RE = re.compile(r"[ \t\f\v]+")
-_NEWLINE_RE = re.compile(r"\r\n?")
 
 
 def fix_confusables(text: str) -> str:
@@ -99,11 +98,6 @@ def collapse_all_ws(text: str) -> str:
     noise; pdf_like/plain keep line structure and use ``collapse_ws``.
     """
     return _ALL_WS_RUN_RE.sub(" ", text).strip()
-
-
-def normalize_newlines(text: str) -> str:
-    """CRLF / CR → LF."""
-    return _NEWLINE_RE.sub("\n", text)
 
 
 def clean_inline(text: str) -> str:

@@ -49,10 +49,6 @@ def char_count(c: Column) -> Column:
     return F.length(c)
 
 
-def _word_re(word: str) -> str:
-    return rf"\b{word}\b"
-
-
 def stopword_hits(c: Column, lang: str) -> Column:
     """Total whole-word hits of the language's stopword set.
     SQL twin: len(regexp_extract_all(x, '\\b(w1|w2|...)\\b'))."""
@@ -187,7 +183,7 @@ def chunk_structs(c: Column, window: int = 40, stride: int = 20) -> Column:
     is silently dropped).
 
     The token array is computed ONCE and bound via the single-element-
-    array ``aggregate`` wrapper (the ``_winnow_fps_expr`` pattern): a
+    array ``aggregate`` wrapper (the ``_winnow_minima`` pattern): a
     plain transform would re-tokenize per chunk under Catalyst's
     lambda capture. SQL twin: range(0, len(w), stride) + list slices.
     """

@@ -71,10 +71,6 @@ DEFAULT_SALT_THRESHOLD = 2000  # max turns per (conv_id, salt) shuffle key
 log = logging.getLogger(__name__)
 
 
-class SimulatedFailure(RuntimeError):
-    """Raised by tests to simulate a mid-job crash (resume testing)."""
-
-
 class _ListAccumulator(AccumulatorParam):
     def zero(self, value):
         return []
@@ -235,7 +231,6 @@ def run_extraction(
     n_shards: int = 1,
     num_partitions: int | None = None,
     salt_threshold: int = DEFAULT_SALT_THRESHOLD,
-    fail_after_shard: int | None = None,
 ) -> dict:
     """Run the full extraction job; returns a small summary dict.
 
@@ -312,11 +307,6 @@ def run_extraction(
                 shard, fut = window.popleft()
                 fut.result()
                 ran.append(shard)
-                # crash window: output written, marker not yet — a
-                # resume must redo (overwrite) this shard with no
-                # duplicates
-                if fail_after_shard is not None and shard == fail_after_shard:
-                    raise SimulatedFailure(f"simulated crash after shard {shard}")
                 if checkpoint_dir:
                     marker = _marker_path(checkpoint_dir, shard)
                     tmp = f"{marker}.{uuid.uuid4().hex}.tmp"

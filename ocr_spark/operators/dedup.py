@@ -403,9 +403,10 @@ def _simhash_sig(text_col) -> "F.Column":
     the aggregate (Catalyst's projection collapse would re-run an outer
     column capture per reference).
 
-    Same algorithm (and values) as ``simhash_exploded`` / the DuckDB
-    oracle: slot i = 4*(hex position) + bit; char digit from per-bit
-    majority vote, tie → 0.
+    Same algorithm (and values) as the DuckDB oracle
+    ``ORACLE_SQL["simhash_docs"]``, which runs it exploded: slot i =
+    4*(hex position) + bit; char digit from per-bit majority vote,
+    tie → 0.
     """
     toks = F.array_distinct(F.split(F.trim(text_col), r"\s+"))
     hashes = F.transform(toks, lambda t: F.md5(t))
@@ -456,58 +457,10 @@ def _simhash_sig(text_col) -> "F.Column":
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash per doc as a 16-hex-char string — the scale path:
     one map-only projection (see ``_simhash_sig``), no shuffle at all.
-    Value-identical to ``simhash_exploded`` (asserted in tests) and to
-    the DuckDB oracle."""
+    Value-identical to the DuckDB oracle ``ORACLE_SQL["simhash_docs"]``
+    (asserted in tests/test_plan_shape.py)."""
     return df.select(
         F.col(id_col).alias("id"), _simhash_sig(F.col(text_col)).alias("simhash")
-    )
-
-
-def simhash_exploded(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exploded-arithmetic SimHash twin (the original formulation).
-
-    For each token, h = md5(token)[:16] (64 bits as hex). For each bit,
-    tokens vote +1/-1; majority (> 0) sets the bit. Implemented with
-    explode over (hex position k, bit m) — pure integer arithmetic, no
-    bit intrinsics, so the DuckDB oracle can run the identical algorithm.
-    Tie (sum == 0) → bit 0, deterministic. 64 shuffled rows per token
-    through two groupBys — kept as the cross-check twin; ``simhash`` is
-    the scale path.
-    """
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+"))).alias("tok"),
-    ).withColumn("h", F.md5(F.col("tok")))
-    k = toks.select("id", "h", F.explode(F.sequence(F.lit(1), F.lit(16))).alias("k"))
-    digit = k.withColumn(
-        "d",
-        (F.expr(f"instr('{_HEX}', substring(h, k, 1))") - 1).cast("int"),
-    )
-    bits = digit.select(
-        "id",
-        "k",
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("m"),
-        F.col("d"),
-    ).withColumn(
-        "contrib",
-        (F.floor(F.col("d") / F.pow(F.lit(2), F.col("m"))).cast("long") % 2) * 2 - 1,
-    )
-    votes = bits.groupBy("id", "k", "m").agg(F.sum("contrib").alias("s"))
-    digits = (
-        votes.withColumn("bitv", F.when(F.col("s") > 0, 1).otherwise(0))
-        .groupBy("id", "k")
-        .agg(F.sum(F.col("bitv") * F.pow(F.lit(2), F.col("m")).cast("int")).alias("dig"))
-        .withColumn("c", F.substring(F.lit(_HEX), (F.col("dig") + 1).cast("int"), 1))
-    )
-    return digits.groupBy("id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("k", "c"))), lambda s: s["c"]
-            ),
-            "",
-        ).alias("simhash")
     )
 
 
@@ -647,8 +600,10 @@ def duplicate_components(
     )
 
 
-def _winnow_fps_expr(text_col, k: int = 8, w: int = 4) -> "F.Column":
-    """Per-doc winnowing fingerprints as ONE scalar expression.
+def _winnow_minima(text_col, k: int, w: int) -> "F.Column":
+    """Per-doc winnowing minima as ONE scalar expression: md5 of every
+    k-char gram, then the minimum of each full w-window, in window
+    order (empty when the doc has fewer than w grams).
 
     The gram-hash array is computed once and then BOUND as a lambda
     variable by wrapping it in a single-element array fed to
@@ -665,7 +620,7 @@ def _winnow_fps_expr(text_col, k: int = 8, w: int = 4) -> "F.Column":
             lambda i: F.md5(F.substring(text_col, i, F.lit(k))),
         )
     ).otherwise(F.array().cast("array<string>"))
-    minima = F.aggregate(
+    return F.aggregate(
         F.array(hashes),  # 1-element wrapper: binds the hash array
         F.array().cast("array<string>"),
         lambda acc, h: F.when(
@@ -676,7 +631,6 @@ def _winnow_fps_expr(text_col, k: int = 8, w: int = 4) -> "F.Column":
             ),
         ).otherwise(acc),
     )
-    return F.array_sort(F.array_distinct(minima))
 
 
 def winnow_docs(
@@ -689,55 +643,20 @@ def winnow_docs(
     """Winnowing fingerprints (Schleimer et al., public): hash every
     k-char gram, keep each w-window's minimum hash, dedupe + sort.
 
-    Scale path: a single map-only projection (``_winnow_fps_expr``) —
+    Scale path: a single map-only projection (``_winnow_minima``) —
     zero shuffles, zero explodes; the signature stage pipelines with
-    the scan at any corpus size (the exploded-window twin below
-    shuffles the whole per-character gram stream into a per-doc window
-    sort — ~30× the corpus through an exchange at 100 TB). Docs too
-    short for one full window (< k+w-1 chars) are dropped by a pure
-    length predicate, matching the twin/oracle exactly. Output:
-    (doc_id, fps array<string>), value-identical to
-    ``winnow_docs_exploded`` (asserted in tests/test_plan_shape.py).
+    the scan at any corpus size (the exploded-window formulation the
+    DuckDB oracle runs would shuffle the whole per-character gram
+    stream into a per-doc window sort — ~30× the corpus through an
+    exchange at 100 TB). Docs too short for one full window (< k+w-1
+    chars) are dropped by a pure length predicate, matching the
+    oracle exactly. Output: (doc_id, fps array<string>),
+    value-identical to ``ORACLE_SQL["winnow_docs"]`` (asserted in
+    tests/test_plan_shape.py).
     """
     return df.filter(F.length(F.col(text_col)) >= F.lit(k + w - 1)).select(
         F.col(id_col).alias("doc_id"),
-        _winnow_fps_expr(F.col(text_col), k, w).alias("fps"),
-    )
-
-
-def winnow_docs_exploded(
-    df: DataFrame,
-    k: int = 8,
-    w: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exploded-window winnowing twin (the oracle's formulation): one
-    row per gram, frame-min over a (0, w-1) window, collect per doc.
-    Kept as the cross-check the DuckDB oracle mirrors — ``winnow_docs``
-    is the shuffle-free scale path (same values, asserted in tests)."""
-    from pyspark.sql import Window
-
-    n_grams = F.length(F.col(text_col)) - F.lit(k - 1)
-    grams = df.select(
-        F.col(id_col).alias("id"),
-        F.col(text_col).alias("t"),
-        F.explode(
-            F.when(n_grams >= 1, F.sequence(F.lit(1), n_grams)).otherwise(
-                F.array().cast("array<int>")
-            )
-        ).alias("i"),
-    ).select("id", "i", F.md5(F.expr(f"substring(t, i, {k})")).alias("h"))
-    win = Window.partitionBy("id").orderBy("i").rowsBetween(0, w - 1)
-    minima = grams.withColumn("wmin", F.min("h").over(win)).withColumn(
-        "n", F.max("i").over(Window.partitionBy("id"))
-    )
-    # only full windows (the last w-1 grams have truncated frames)
-    full = minima.filter(F.col("i") <= F.col("n") - F.lit(w - 1))
-    return (
-        full.groupBy("id")
-        .agg(F.array_sort(F.array_distinct(F.collect_list("wmin"))).alias("fps"))
-        .select(F.col("id").alias("doc_id"), "fps")
+        F.array_sort(F.array_distinct(_winnow_minima(F.col(text_col), k, w))).alias("fps"),
     )
 
 
@@ -801,30 +720,11 @@ def _winnow_run_starts_expr(text_col, k: int = 8, w: int = 4) -> "F.Column":
     the same gram stays the window minimum; span detection needs each
     run's start, and a repeated passage later in the doc re-emits its
     fingerprints, so this keeps every local occurrence — richer than
-    ``_winnow_fps_expr``'s global distinct). Same nested
-    aggregate-wrapper anti-inlining shape as ``_winnow_fps_expr``: the
-    md5 gram array and the minima array are each computed once and
-    bound as lambda variables, so work stays O(n·w) per doc inside a
-    single map-side projection."""
-    n_grams = F.length(text_col) - F.lit(k - 1)
-    hashes = F.when(
-        n_grams >= 1,
-        F.transform(
-            F.sequence(F.lit(1), n_grams),
-            lambda i: F.md5(F.substring(text_col, i, F.lit(k))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    minima = F.aggregate(
-        F.array(hashes),
-        F.array().cast("array<string>"),
-        lambda acc, h: F.when(
-            F.size(h) >= w,
-            F.transform(
-                F.sequence(F.lit(1), F.size(h) - F.lit(w - 1)),
-                lambda i: F.array_min(F.slice(h, i, F.lit(w))),
-            ),
-        ).otherwise(acc),
-    )
+    ``winnow_docs``' global distinct). The minima array
+    (``_winnow_minima``) is wrapped in a 1-element array too, so it is
+    bound as a lambda variable and computed once: work stays O(n·w)
+    per doc inside a single map-side projection."""
+    minima = _winnow_minima(text_col, k, w)
     empty = F.array().cast("array<struct<pos:int,fp:string>>")
     return F.aggregate(
         F.array(minima),

@@ -17,11 +17,22 @@ the shuffles are, what AQE handles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocr_spark.plans.session import ensure_utc
 from ocr_spark.sources.io import load_table
+
+
+def _dec(c: str) -> Column:
+    return F.col(c).cast("decimal(15,4)")
+
+
+def _revenue() -> Column:
+    """l_extendedprice × (1 − l_discount), exact in DECIMAL(30,8)."""
+    return (
+        _dec("l_extendedprice") * (F.lit(1).cast("decimal(15,4)") - _dec("l_discount"))
+    ).cast("decimal(30,8)")
 
 
 # --------------------------------------------------------------------------
@@ -33,19 +44,12 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on the (2×2-value) grouping key. At 100 TB this is
     scan-bound; DECIMAL sums keep it exact at any width."""
     li = load_table(spark, sf_dir, "lineitem")
-    dec = lambda c: F.col(c).cast("decimal(15,4)")  # noqa: E731
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(
-                (dec("l_extendedprice") * (F.lit(1).cast("decimal(15,4)") - dec("l_discount"))).cast(
-                    "decimal(30,8)"
-                )
-            )
-            .cast("double")
-            .alias("sum_disc_price"),
+            F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
+            F.sum(_dec("l_extendedprice")).cast("double").alias("sum_base_price"),
+            F.sum(_revenue()).cast("double").alias("sum_disc_price"),
             F.count(F.lit(1)).alias("count_order"),
         )
         .orderBy("l_returnflag", "l_linestatus")
@@ -60,13 +64,7 @@ def top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     rev = (
-        li.withColumn(
-            "rev",
-            (
-                F.col("l_extendedprice").cast("decimal(15,4)")
-                * (F.lit(1).cast("decimal(15,4)") - F.col("l_discount").cast("decimal(15,4)"))
-            ).cast("decimal(30,8)"),
-        )
+        li.withColumn("rev", _revenue())
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("o_orderkey", "o_orderdate")
@@ -94,14 +92,7 @@ def region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("r_name")
         .agg(
-            F.sum(
-                (
-                    F.col("l_extendedprice").cast("decimal(15,4)")
-                    * (F.lit(1).cast("decimal(15,4)") - F.col("l_discount").cast("decimal(15,4)"))
-                ).cast("decimal(30,8)")
-            )
-            .cast("double")
-            .alias("revenue"),
+            F.sum(_revenue()).cast("double").alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
         .orderBy("r_name")
@@ -595,14 +586,7 @@ def salted_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         j.groupBy("p_type")
         .agg(
-            F.sum(
-                (
-                    F.col("l_extendedprice").cast("decimal(15,4)")
-                    * (F.lit(1).cast("decimal(15,4)") - F.col("l_discount").cast("decimal(15,4)"))
-                ).cast("decimal(30,8)")
-            )
-            .cast("double")
-            .alias("revenue"),
+            F.sum(_revenue()).cast("double").alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
         .orderBy("p_type")

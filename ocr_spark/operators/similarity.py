@@ -25,7 +25,7 @@ Scale story:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 EMB_DIM = 64
@@ -63,6 +63,53 @@ def norm_sql(a: str, dim: int = EMB_DIM) -> str:
     )
 
 
+def _cosine(a: str, b: str, dim: int) -> Column:
+    """Cosine of two embedding columns, rounded to 6 places before any
+    ranking or threshold compares it (the oracle rounds the same way)."""
+    return F.round(dot_expr(a, b, dim) / (norm_expr(a, dim) * norm_expr(b, dim)), 6)
+
+
+def _queries(emb: DataFrame, n: int) -> DataFrame:
+    """The first ``n`` vec_ids as the query side: (q_id, q_emb)."""
+    return emb.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    )
+
+
+def _rank_topk(cand: DataFrame, k: int, dim: int) -> DataFrame:
+    """Score (q_id, q_emb) × (vec_id, embedding) candidate rows and keep
+    each query's ``k`` most similar; ties break on the lower vec_id.
+    Output (q_id, vec_id, sim, rank)."""
+    scored = cand.withColumn("sim", _cosine("q_emb", "embedding", dim))
+    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "vec_id", "sim", "rank")
+    )
+
+
+def _brute_topk(pool: DataFrame, queries: DataFrame, k: int, dim: int) -> DataFrame:
+    """Broadcast the queries against every ``pool`` vector but their own."""
+    cand = pool.crossJoin(F.broadcast(queries)).filter(F.col("vec_id") != F.col("q_id"))
+    return _rank_topk(cand, k, dim)
+
+
+def _pair_side(emb: DataFrame, side: str) -> DataFrame:
+    return emb.select(
+        F.col("vec_id").alias(f"id_{side}"), F.col("embedding").alias(f"e_{side}")
+    )
+
+
+def _verify_pairs(pairs: DataFrame, threshold: float, dim: int) -> DataFrame:
+    """Exact cosine of (id_a, e_a, id_b, e_b) pairs, kept at sim ≥ threshold."""
+    return (
+        pairs.withColumn("sim", _cosine("e_a", "e_b", dim))
+        .filter(F.col("sim") >= threshold)
+        .select("id_a", "id_b", "sim")
+    )
+
+
 def cosine_topk(
     emb: DataFrame,
     n_queries: int = 10,
@@ -71,29 +118,7 @@ def cosine_topk(
 ) -> DataFrame:
     """Brute-force cosine top-k: first ``n_queries`` vec_ids as queries,
     broadcast against the full table. Output (q_id, vec_id, sim, rank)."""
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    joined = (
-        emb.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn(
-            "sim",
-            F.round(
-                dot_expr("q_emb", "embedding", dim)
-                / (norm_expr("q_emb", dim) * norm_expr("embedding", dim)),
-                6,
-            ),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "sim", "rank")
-    )
+    return _brute_topk(emb, _queries(emb, n_queries), k, dim)
 
 
 def sign_bucket(col: str, bits: int = 8, offset: int = 0) -> Column:
@@ -122,21 +147,8 @@ def cosine_neardup(
 ) -> DataFrame:
     """Exact embedding near-dup pairs (vec_id_a < vec_id_b, sim ≥ t).
     O(N²) verifier — the LSH variant below is the scale path."""
-    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("e_a"))
-    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("e_b"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "sim",
-            F.round(
-                dot_expr("e_a", "e_b", dim) / (norm_expr("e_a", dim) * norm_expr("e_b", dim)),
-                6,
-            ),
-        )
-        .filter(F.col("sim") >= threshold)
-        .select("id_a", "id_b", "sim")
-    )
+    pairs = _pair_side(emb, "a").crossJoin(_pair_side(emb, "b"))
+    return _verify_pairs(pairs.filter(F.col("id_a") < F.col("id_b")), threshold, dim)
 
 
 def cosine_neardup_lsh(
@@ -194,21 +206,8 @@ def cosine_neardup_lsh(
         .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
         .distinct()
     )
-    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("e_a"))
-    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("e_b"))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "sim",
-            F.round(
-                dot_expr("e_a", "e_b", dim) / (norm_expr("e_a", dim) * norm_expr("e_b", dim)),
-                6,
-            ),
-        )
-        .filter(F.col("sim") >= threshold)
-        .select("id_a", "id_b", "sim")
-    )
+    pairs = cand.join(_pair_side(emb, "a"), "id_a").join(_pair_side(emb, "b"), "id_b")
+    return _verify_pairs(pairs, threshold, dim)
 
 
 def neardup_lsh_sql(
@@ -273,30 +272,8 @@ def cosine_topk_filtered(
     operator is the two-table form.
 
     Output (q_id, vec_id, sim, rank) — rank over the filtered pool."""
-    from pyspark.sql import Window
-
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
     pool = emb.join(allowed_ids.select("vec_id").distinct(), "vec_id")
-    scored = (
-        pool.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn(
-            "sim",
-            F.round(
-                dot_expr("q_emb", "embedding", dim)
-                / (norm_expr("q_emb", dim) * norm_expr("embedding", dim)),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "sim", "rank")
-    )
+    return _brute_topk(pool, _queries(emb, n_queries), k, dim)
 
 
 def semantic_decontaminate(
@@ -325,12 +302,7 @@ def semantic_decontaminate(
     )
     corpus = emb.filter(F.col("vec_id") >= n_eval)
     scored = corpus.crossJoin(F.broadcast(evals)).withColumn(
-        "sim",
-        F.round(
-            dot_expr("e_emb", "embedding", dim)
-            / (norm_expr("e_emb", dim) * norm_expr("embedding", dim)),
-            6,
-        ),
+        "sim", _cosine("e_emb", "embedding", dim)
     )
     return scored.groupBy("vec_id").agg(
         F.max("sim").alias("max_eval_sim"),
@@ -358,19 +330,9 @@ def knn_label_propagation(
     cell join (``ivf_topk_seeded``) — the vote logic is unchanged.
 
     Output (vec_id, predicted_label, votes)."""
-    from pyspark.sql import Window
-
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
     labeled = emb.filter(F.col("vec_id") >= n_queries)
-    scored = labeled.crossJoin(F.broadcast(queries)).withColumn(
-        "sim",
-        F.round(
-            dot_expr("q_emb", "embedding", dim)
-            / (norm_expr("q_emb", dim) * norm_expr("embedding", dim)),
-            6,
-        ),
+    scored = labeled.crossJoin(F.broadcast(_queries(emb, n_queries))).withColumn(
+        "sim", _cosine("q_emb", "embedding", dim)
     )
     w_nn = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
     nn = scored.withColumn("rk", F.row_number().over(w_nn)).filter(F.col("rk") <= k)
@@ -512,8 +474,6 @@ def ivf_topk_seeded(
     (0.0 + x ≡ x in IEEE for the non-negative terms), so cell
     assignment agrees with ``l2_sql`` to the last bit.
     """
-    from pyspark.sql import Window
-
     seeds = (
         emb.filter(F.col("vec_id") < n_cells)
         .select("vec_id", "embedding")
@@ -541,34 +501,26 @@ def ivf_topk_seeded(
     cell = (F.array_position(d_corpus, F.array_min(d_corpus)) - 1).cast("int")
     assigned = emb.crossJoin(cent_df).select("vec_id", "embedding", cell.alias("cell"))
 
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    q_cells = queries.crossJoin(cent_df).select(
+    q_cells = _queries(emb, n_queries).crossJoin(cent_df).select(
         "q_id", "q_emb", F.posexplode(darr("q_emb")).alias("cell", "dist")
     )
+    return _probe_topk(q_cells, assigned, n_probe, k, dim)
+
+
+def _probe_topk(
+    q_cells: DataFrame, assigned: DataFrame, n_probe: int, k: int, dim: int
+) -> DataFrame:
+    """The IVF search step: keep each query's ``n_probe`` nearest cells
+    from (q_id, q_emb, cell, dist) — ties to the lower cell — join them
+    to the (vec_id, embedding, cell) assignment and rank the top ``k``."""
     w_probe = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("cell").asc())
     probed = (
         q_cells.withColumn("pr", F.row_number().over(w_probe))
         .filter(F.col("pr") <= n_probe)
         .select("q_id", "q_emb", "cell")
     )
-
     cand = probed.join(assigned, "cell").filter(F.col("vec_id") != F.col("q_id"))
-    scored = cand.withColumn(
-        "sim",
-        F.round(
-            dot_expr("q_emb", "embedding", dim)
-            / (norm_expr("q_emb", dim) * norm_expr("embedding", dim)),
-            6,
-        ),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "sim", "rank")
-    )
+    return _rank_topk(cand, k, dim)
 
 
 def ivf_topk(
@@ -591,7 +543,6 @@ def ivf_topk(
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import Window
 
     vecs = emb.withColumn("features", array_to_vector(F.col("embedding").cast("array<double>")))
     model = KMeans(k=n_cells, seed=42, featuresCol="features", predictionCol="cell").fit(vecs)
@@ -599,13 +550,10 @@ def ivf_topk(
 
     # query → n_probe nearest cells (driver-side centroid math; tiny)
     centroids = [list(map(float, c)) for c in model.clusterCenters()]
-    queries = assigned.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
     spark = emb.sparkSession
     cent_rows = [(ci, [float(x) for x in c]) for ci, c in enumerate(centroids)]
     cent_df = spark.createDataFrame(cent_rows, "cell int, centroid array<double>")
-    q_cell_dist = queries.crossJoin(F.broadcast(cent_df)).withColumn(
+    q_cell_dist = _queries(assigned, n_queries).crossJoin(F.broadcast(cent_df)).withColumn(
         "dist",
         F.expr(
             " + ".join(
@@ -613,25 +561,4 @@ def ivf_topk(
             )
         ),
     )
-    w_probe = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("cell").asc())
-    probed = (
-        q_cell_dist.withColumn("pr", F.row_number().over(w_probe))
-        .filter(F.col("pr") <= n_probe)
-        .select("q_id", "q_emb", "cell")
-    )
-
-    cand = probed.join(assigned, "cell").filter(F.col("vec_id") != F.col("q_id"))
-    scored = cand.withColumn(
-        "sim",
-        F.round(
-            dot_expr("q_emb", "embedding", dim)
-            / (norm_expr("q_emb", dim) * norm_expr("embedding", dim)),
-            6,
-        ),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "sim", "rank")
-    )
+    return _probe_topk(q_cell_dist, assigned, n_probe, k, dim)

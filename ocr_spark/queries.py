@@ -1009,6 +1009,24 @@ sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id)
 """
 
 
+# winnowing (k=8, w=4): md5 of every 8-char gram, then each full
+# 4-window's minimum (rows i <= n - 3) — the exploded form of
+# dedup._winnow_minima
+_WINNOW_CTE = """grams AS (
+  SELECT doc_id,
+         CAST(unnest(range(1, greatest(length(text) - 6, 1))) AS INTEGER) AS i,
+         md5(substr(text, CAST(unnest(range(1, greatest(length(text) - 6, 1))) AS INTEGER), 8)) AS h
+  FROM documents
+),
+minima AS (
+  SELECT doc_id, i,
+         min(h) OVER (PARTITION BY doc_id ORDER BY i
+                      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin,
+         max(i) OVER (PARTITION BY doc_id) AS n
+  FROM grams
+)"""
+
+
 def _jaccard_select(pair_src: str, threshold: float) -> str:
     return f"""
 common AS (
@@ -1960,40 +1978,16 @@ SELECT label, count(*) AS n,
         / count(*), 6) AS centroid_c0
 FROM embeddings GROUP BY label
 """,
-    "winnow_docs": """
-WITH grams AS (
-  SELECT doc_id,
-         CAST(unnest(range(1, greatest(length(text) - 6, 1))) AS INTEGER) AS i,
-         md5(substr(text, CAST(unnest(range(1, greatest(length(text) - 6, 1))) AS INTEGER), 8)) AS h
-  FROM documents
-),
-minima AS (
-  SELECT doc_id, i,
-         min(h) OVER (PARTITION BY doc_id ORDER BY i
-                      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin,
-         max(i) OVER (PARTITION BY doc_id) AS n
-  FROM grams
-)
+    "winnow_docs": f"""
+WITH {_WINNOW_CTE}
 SELECT doc_id, array_to_string(list_sort(list(DISTINCT wmin)), ',') AS fps
 FROM minima WHERE i <= n - 3
 GROUP BY doc_id
 """,
     # passage-copy pairs: rare-fingerprint inverted index over the
     # same winnowing minima (posting cap = discriminative-fp filter)
-    "winnow_overlap": """
-WITH grams AS (
-  SELECT doc_id,
-         CAST(unnest(range(1, greatest(length(text) - 6, 1))) AS INTEGER) AS i,
-         md5(substr(text, CAST(unnest(range(1, greatest(length(text) - 6, 1))) AS INTEGER), 8)) AS h
-  FROM documents
-),
-minima AS (
-  SELECT doc_id, i,
-         min(h) OVER (PARTITION BY doc_id ORDER BY i
-                      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin,
-         max(i) OVER (PARTITION BY doc_id) AS n
-  FROM grams
-),
+    "winnow_overlap": f"""
+WITH {_WINNOW_CTE},
 fps AS (SELECT DISTINCT doc_id AS id, wmin AS fp FROM minima WHERE i <= n - 3),
 counts AS (SELECT fp, count(*) AS c FROM fps GROUP BY fp),
 bounded AS (SELECT f.id, f.fp FROM fps f JOIN counts USING (fp) WHERE c <= 4),
@@ -2248,19 +2242,7 @@ FROM w
     # postings CTE as cross_source_overlap, collapsed to the per-cap
     # drop summaries (integer counts — exact on both engines)
     "cap_drop_accounting": f"""
-WITH grams AS (
-  SELECT doc_id,
-         CAST(unnest(range(1, greatest(length(text) - 6, 1))) AS INTEGER) AS i,
-         md5(substr(text, CAST(unnest(range(1, greatest(length(text) - 6, 1))) AS INTEGER), 8)) AS h
-  FROM documents
-),
-minima AS (
-  SELECT doc_id, i,
-         min(h) OVER (PARTITION BY doc_id ORDER BY i
-                      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin,
-         max(i) OVER (PARTITION BY doc_id) AS n
-  FROM grams
-),
+WITH {_WINNOW_CTE},
 fps AS (SELECT DISTINCT doc_id AS id, wmin AS fp FROM minima WHERE i <= n - 3),
 wc AS (SELECT fp, count(*) AS c FROM fps GROUP BY fp),
 toks AS (SELECT source, {_TOKS} AS w FROM documents),
@@ -2604,20 +2586,8 @@ GROUP BY 1, 2
 # compressed to occurrence starts, diagonal (pa-pb) match grouping +
 # gaps-and-islands — the exploded/window formulation of the Spark
 # side's map-only signature stage
-ORACLE_SQL["winnow_span_runs"] = """
-WITH grams AS (
-  SELECT doc_id,
-         CAST(unnest(range(1, greatest(length(text) - 6, 1))) AS INTEGER) AS i,
-         md5(substr(text, CAST(unnest(range(1, greatest(length(text) - 6, 1))) AS INTEGER), 8)) AS h
-  FROM documents
-),
-minima AS (
-  SELECT doc_id, i,
-         min(h) OVER (PARTITION BY doc_id ORDER BY i
-                      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin,
-         max(i) OVER (PARTITION BY doc_id) AS n
-  FROM grams
-),
+ORACLE_SQL["winnow_span_runs"] = f"""
+WITH {_WINNOW_CTE},
 rc AS (
   SELECT doc_id, i AS pos, wmin AS fp,
          lag(wmin) OVER (PARTITION BY doc_id ORDER BY i) AS prev

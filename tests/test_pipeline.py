@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 from ocr_spark.core.extract import extract_turn
 from ocr_spark.fixtures import gen_transcripts
 from ocr_spark.job import (
-    SimulatedFailure,
     extract_transcripts,
     read_manifest,
     run_extraction,
@@ -176,14 +175,20 @@ def test_job_end_to_end_with_manifest(spark, transcripts_path, oracle, tmp_path)
 
 
 def test_resume_after_crash_no_duplicates(spark, transcripts_path, oracle, tmp_path):
+    import shutil
+
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    with pytest.raises(SimulatedFailure):
-        run_extraction(
-            spark, transcripts_path, out, checkpoint_dir=ckpt,
-            n_shards=3, num_partitions=8, fail_after_shard=1,
-        )
+    run_extraction(
+        spark, transcripts_path, out, checkpoint_dir=ckpt,
+        n_shards=3, num_partitions=8,
+    )
+    # the state a crash after shard 1's commit leaves behind:
     # shard 0 marked done; shard 1 written but unmarked; shard 2 missing
+    os.remove(os.path.join(ckpt, "shard-00001.done"))
+    os.remove(os.path.join(ckpt, "shard-00002.done"))
+    shutil.rmtree(os.path.join(out, "shard=2"))
+    shutil.rmtree(os.path.join(out, "_manifest", "shard=2"))
     summary = run_extraction(
         spark, transcripts_path, out, checkpoint_dir=ckpt,
         n_shards=3, num_partitions=8,
@@ -193,10 +198,14 @@ def test_resume_after_crash_no_duplicates(spark, transcripts_path, oracle, tmp_p
     got = _collect_sorted(spark.read.parquet(out).drop("shard"))
     assert not got.duplicated(["conv_id", "turn_idx"]).any()
     _assert_equal(got, oracle)
+    # shard 1's redo replaced its manifest rather than appending to it
+    raw = read_manifest(spark, out, dedupe=False).toPandas()
+    assert raw.groupby("shard").size().to_dict() == {0: 3, 1: 3, 2: 3}
+    assert raw.groupby("shard")["partition_id"].nunique().to_dict() == {0: 3, 1: 3, 2: 3}
 
 
 def test_resume_after_failed_shard_write(spark, transcripts_path, oracle, tmp_path):
-    """A real write failure, not the simulated one: shard 1's manifest
+    """A real write failure, not a hand-built crash state: shard 1's manifest
     path is a regular file, so that shard's manifest write raises."""
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")

@@ -115,13 +115,26 @@ def test_partitioned_output_prunes(spark, transcripts_path, tmp_path):
     assert back.count() > 0
 
 
+def _oracle(name: str, con=None) -> list[tuple]:
+    """Rows of ``ORACLE_SQL[name]`` run by DuckDB — over the sf0.001
+    documents table unless ``con`` already defines one."""
+    import duckdb
+
+    from ocr_spark.queries import ORACLE_SQL
+
+    if con is None:
+        con = duckdb.connect()
+        con.sql(f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'")
+    return con.sql(ORACLE_SQL[name]).fetchall()
+
+
 def test_simhash_native_zero_shuffle_equals_exploded(spark):
     """The scale-path SimHash is a single map-only projection (no
     Exchange, no Generate/explode) and is value-identical to the
-    exploded-arithmetic twin the DuckDB oracle mirrors."""
+    exploded-arithmetic DuckDB oracle."""
     import re
 
-    from ocr_spark.operators.dedup import simhash, simhash_exploded
+    from ocr_spark.operators.dedup import simhash
     from ocr_spark.plans.checks import count_exchanges, physical_plan
     from ocr_spark.sources.io import load_table
 
@@ -130,7 +143,7 @@ def test_simhash_native_zero_shuffle_equals_exploded(spark):
     assert count_exchanges(nat) == 0
     assert not re.search(r"\bGenerate\b", physical_plan(nat))
     a = {r["id"]: r["simhash"] for r in nat.collect()}
-    b = {r["id"]: r["simhash"] for r in simhash_exploded(d).collect()}
+    b = dict(_oracle("simhash_docs"))
     assert a == b and len(a) > 0
 
 
@@ -138,10 +151,10 @@ def test_winnow_native_zero_shuffle_equals_exploded(spark):
     """The scale-path winnowing signature is a single map-only
     projection (no Exchange, no Generate/explode before the result) —
     the per-gram explode + per-doc window sort lives only in the
-    oracle twin — and is value-identical to that twin."""
+    DuckDB oracle — and is value-identical to that oracle."""
     import re
 
-    from ocr_spark.operators.dedup import winnow_docs, winnow_docs_exploded
+    from ocr_spark.operators.dedup import winnow_docs
     from ocr_spark.plans.checks import count_exchanges, physical_plan
     from ocr_spark.sources.io import load_table
 
@@ -149,22 +162,30 @@ def test_winnow_native_zero_shuffle_equals_exploded(spark):
     nat = winnow_docs(d)
     assert count_exchanges(nat) == 0
     assert not re.search(r"\bGenerate\b", physical_plan(nat))
-    a = {r["doc_id"]: r["fps"] for r in nat.collect()}
-    b = {r["doc_id"]: r["fps"] for r in winnow_docs_exploded(d).collect()}
+    a = {r["doc_id"]: ",".join(r["fps"]) for r in nat.collect()}
+    b = dict(_oracle("winnow_docs"))
     assert a == b and len(a) > 0
 
 
 def test_winnow_short_docs_match_exploded(spark):
     """Docs shorter than one full window (< k+w-1 chars) are dropped
     by both formulations identically (the native path uses a pure
-    length predicate; the twin's frame filter drops them)."""
+    length predicate; the oracle's frame filter drops them)."""
+    import duckdb
+
     rows = [(1, ""), (2, "tiny"), (3, "elevenchars"), (4, "0123456789"),
             (5, "a dozen chars plus some more to fingerprint")]
     d = spark.createDataFrame(rows, "doc_id int, text string")
-    from ocr_spark.operators.dedup import winnow_docs, winnow_docs_exploded
+    from ocr_spark.operators.dedup import winnow_docs
 
-    a = {r["doc_id"]: r["fps"] for r in winnow_docs(d).collect()}
-    b = {r["doc_id"]: r["fps"] for r in winnow_docs_exploded(d).collect()}
+    con = duckdb.connect()
+    con.sql(
+        "CREATE TABLE documents AS SELECT * FROM (VALUES "
+        + ", ".join(f"({i}, '{t}')" for i, t in rows)
+        + ") AS t(doc_id, text)"
+    )
+    a = {r["doc_id"]: ",".join(r["fps"]) for r in winnow_docs(d).collect()}
+    b = dict(_oracle("winnow_docs", con))
     assert a == b
     assert set(a) == {3, 5}  # 11 chars = exactly one window; 10 → none
 
