@@ -17,7 +17,9 @@ Skew: a few conversations are 100-1000× the median turn count
 
 from __future__ import annotations
 
+import os
 import random
+import tempfile
 from datetime import datetime, timedelta
 
 import numpy as np
@@ -35,6 +37,16 @@ _WORDS = (
 # bump whenever generator output changes: cached fixture parquet paths
 # embed this so stale round-(N-1) files are never reused
 FIXTURE_VERSION = 2
+
+
+def _transcripts_fixture_file(sf: float) -> str:
+    """Where the cached transcripts parquet for ``sf`` lives; the Spark
+    queries read it and the conversation oracles' SQL names it."""
+    return os.path.join(
+        tempfile.gettempdir(),
+        f"ocr_spark_transcripts_v{FIXTURE_VERSION}_sf{sf}.parquet",
+    )
+
 
 _STATES = ("Maharashtra", "Gujarat", "West Bengal", "Karnataka", "Rajasthan")
 _MATERIALS = ("PLASTIC GRANULE", "PET BOTTLE SCRAP", "HDPE REGRIND", "LDPE FILM ROLL")

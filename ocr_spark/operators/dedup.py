@@ -16,10 +16,10 @@ Scale design (the 100 TB story):
 - **n-gram Jaccard**: inverted-index self-join on shingle — standard,
   but unbounded posting lists on hot shingles. Kept as the *exact*
   verifier; at scale the candidate generator must be LSH, not this.
-- **MinHash+LSH**: signatures are a shuffle-FREE projection
-  (array_min over transform of the shingle array — pipelines with the
-  scan); banding turns pair discovery into an equi-join on
-  (band, band_hash) — shuffle is O(docs × bands), never O(docs²);
+- **MinHash+LSH**: signatures are a shuffle-FREE projection (one
+  fused aggregate over the shingle array, ``_band_buckets_expr`` —
+  pipelines with the scan); banding turns pair discovery into an
+  equi-join on (band, band_hash) — shuffle is O(docs × bands), never O(docs²);
   verification is per-pair array_intersect. Hot buckets are bounded by
   ``max_bucket`` (skew guard: a bucket with B docs yields B² pairs).
 - **SimHash**: 64-bit signature from per-bit majority vote over token
@@ -132,27 +132,6 @@ def _band_buckets_expr(sh_arr, num_hashes: int, bands: int) -> "F.Column":
 
     zero = F.array_repeat(mod, num_hashes)  # sentinel > any g value
     return F.aggregate(pairs, zero, merge, finish)
-
-
-def _sig_cols(num_hashes: int) -> list:
-    """The k MinHash signature expressions over a ``sh_arr`` column
-    (inspection/testing surface; the pipeline uses the fused
-    ``_band_buckets_expr``)."""
-    _check_num_hashes(num_hashes)
-    mod = F.lit(_MINHASH_MOD).cast("long")
-    return [
-        F.array_min(
-            F.transform(
-                F.col("sh_arr"),
-                lambda x, i=i: (
-                    _hex60(F.concat(F.lit("h1|"), x))
-                    + F.lit(i).cast("long") * _hex60(F.concat(F.lit("h2|"), x))
-                )
-                % mod,
-            )
-        ).alias(f"sig{i}")
-        for i in range(num_hashes)
-    ]
 
 
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -270,26 +249,6 @@ def shingle_arrays(
         F.col(id_col).alias("id"),
         word_shingles(F.col(text_col), n).alias("sh_arr"),
     ).withColumn("n_sh", F.size("sh_arr"))
-
-
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
-    """k-column MinHash signature (double-hashing scheme, see
-    ``_band_buckets_expr``) as a pure projection — the
-    inspection/testing surface. ZERO shuffles: the signature stage is
-    map-only JVM expression work, so it pipelines with the scan at any
-    scale (the exploded groupBy formulation costs a full shuffle of
-    the shingle stream). NOTE: selecting k sig columns re-evaluates
-    the base hashes per column under projection collapse — the fused
-    pipeline path (``minhash_lsh_dedup``) uses the one-pass bucket
-    expression instead."""
-    arr = shingle_arrays(df, text_col, id_col, n)
-    return arr.select("id", *_sig_cols(num_hashes))
 
 
 def lsh_candidate_pairs(

@@ -57,16 +57,19 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-shaped join+agg+topk: customer filter broadcast into
-    orders⋈lineitem; revenue decimal-exact; top 10 deterministic."""
+    """TPC-H Q3-shaped join+agg+topk: the broadcast BUILDING customer
+    set filters orders BEFORE the lineitem join, so only BUILDING
+    orders meet the largest table; revenue decimal-exact; top 10
+    deterministic."""
     ensure_utc(spark)  # driver-session guard (plans/session.py)
     cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = load_table(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders").join(
+        F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")
+    )
     li = load_table(spark, sf_dir, "lineitem")
     rev = (
         li.withColumn("rev", _revenue())
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("o_orderkey", "o_orderdate")
         .agg(F.sum("rev").cast("double").alias("revenue"))
     )

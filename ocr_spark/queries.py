@@ -40,23 +40,26 @@ compute the same result, column-name and value identical. Parity rules
   upstream (NFKD or an explicit translate) if Turkish-script corpora
   must be oracle-compared.
 
-Queries with no oracle entry (non-SQL-expressible: the extraction
-pipeline itself, stub multimodal decode) get the driver's rows-only
-check and are covered instead by the in-repo oracle tests
-(tests/test_pipeline.py — exact per-turn equality vs the pure-Python
-reference implementation).
+Every ``SPARK_QUERIES`` key has an ``ORACLE_SQL`` entry. A query that
+applies one operator to one loaded input is a ``_on(loader, op, **kw)``
+row of the registry; a query with more to it is a ``q_*`` function.
+Queries that are not SQL-expressible (the extraction pipeline, the
+field extractor) compare against parquet written by a pure-Python run
+of the shared core (ocr_spark/oracle_fixtures.py);
+tests/test_entry_oracle.py runs the whole registry against its oracles.
 """
 
 from __future__ import annotations
 
 import os
 import re
-import tempfile
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ocr_spark.core.fields import FIELD_NAMES
+from ocr_spark.fixtures import _transcripts_fixture_file, write_transcripts
 from ocr_spark.functions.text import (
     LANG_PRIORITY,
     PII_EMAIL_RE as _PII_EMAIL,
@@ -64,106 +67,154 @@ from ocr_spark.functions.text import (
     PII_PHONE_RE as _PII_PHONE,
     STOPWORDS,
     char_count,
+    chunk_structs,
+    dup_line_frac,
     fingerprint,
     lang_id,
+    pii_counts,
+    pii_redact,
     quality_score,
     token_count,
     token_estimate,
+    top_bigram_frac,
+    word_shingles,
 )
+from ocr_spark.job import ensure_package_shipped, extract_transcripts
+from ocr_spark.operators import corpus as C
 from ocr_spark.operators import relational as R
-from ocr_spark.plans.session import ensure_utc
 from ocr_spark.operators import similarity as S
+from ocr_spark.operators.conversation import (
+    WEIGHBRIDGE_SLOT_FIELDS,
+    conv_dedup,
+    conv_rollup,
+    sft_pairs,
+    transaction_pivot,
+    transcript_lint,
+)
 from ocr_spark.operators.dedup import (
+    apply_span_surgery,
+    canonical_dedup,
     dedup_exact,
+    duplicate_components,
+    incremental_dedup,
+    keep_best_representative,
     minhash_lsh_dedup,
     ngram_jaccard_pairs,
     simhash,
+    winnow_docs,
+    winnow_overlap_pairs,
+    winnow_span_runs,
 )
-from ocr_spark.operators.multimodal import extract_media_features, to_media_table
+from ocr_spark.operators.multimodal import (
+    extract_media_features,
+    resize_images,
+    sample_frames,
+    to_media_table,
+)
+from ocr_spark.operators.sketch import (
+    bloom_semijoin_stats,
+    cms_top_frequencies,
+    hll_distinct,
+)
+from ocr_spark.oracle_fixtures import (
+    docextract_oracle_name,
+    extract_oracle_name,
+    fields_oracle_name,
+    oracle_path,
+)
+from ocr_spark.plans.session import ensure_utc
 from ocr_spark.sources.io import load_table
+from ocr_spark.udfs import extract_udf, fields_udf
 
 # ---------------------------------------------------------------------------
 # Spark-side queries
 # ---------------------------------------------------------------------------
+
+_Query = Callable[[SparkSession, str], DataFrame]
+
+_FIXTURE_CACHE: dict[float, str] = {}
+
+
+def _sf_of(sf_dir: str) -> float:
+    m = re.search(r"sf(\d+(?:\.\d+)?)", sf_dir)
+    return float(m.group(1)) if m else 0.01
+
+
+def transcripts_fixture_path(sf: float) -> str:
+    """Deterministic synthetic transcripts parquet for this sf, written
+    on first use and cached (fixtures._transcripts_fixture_file)."""
+    if sf not in _FIXTURE_CACHE:
+        path = _transcripts_fixture_file(sf)
+        if not os.path.exists(path):
+            tmp = path + ".tmp"
+            write_transcripts(tmp, sf)
+            os.replace(tmp, path)
+        _FIXTURE_CACHE[sf] = path
+    return _FIXTURE_CACHE[sf]
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
 
 
+def _wide_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents scan widened to every core. The testdata parquet
+    is a single row group, so the scan cannot split — without widening,
+    a hash-per-token map (simhash signatures, winnowing's rolling
+    hashes) runs on ONE core. The repartition shuffles ~raw-text bytes
+    (tiny) to unlock full-width compute, the same call minhash_lsh
+    makes before shingling (dedup.py). The operators themselves stay
+    map-only/zero-shuffle (tests/test_plan_shape.py); on a many-file
+    100 TB table the scan is already wide and the widening is a no-op
+    cost-wise (one linear pass it would spend anyway)."""
+    return _docs(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
+
+
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
 
 
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    return d.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_tokens"),
-        char_count(F.col("text")).alias("n_chars_actual"),
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "events")
+
+
+def _lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "lineitem")
+
+
+def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The synthetic transcripts fixture at the same sf tier as sf_dir."""
+    return spark.read.parquet(transcripts_fixture_path(_sf_of(sf_dir)))
+
+
+def _weighted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Documents with the length-derived integer sampling weight that
+    weighted_sample and its clamp audit both read."""
+    return _docs(spark, sf_dir).withColumn(
+        "weight", (F.lit(1) + F.floor(F.length("text") / 512)).cast("int")
     )
 
 
-def q_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    return d.select("doc_id", token_estimate(F.col("text")).alias("n_bpe_tokens"))
+def _on(loader: _Query, op: Callable[..., DataFrame], *args, **kw) -> _Query:
+    """The driver query ``op(loader(spark, sf_dir), *args, **kw)``."""
+
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return op(loader(spark, sf_dir), *args, **kw)
+
+    return query
 
 
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    return d.select("doc_id", lang_id(F.col("text")).alias("pred_lang"))
+def _per_doc(**exprs: Callable[[Column], Column]) -> _Query:
+    """A map-only driver query: doc_id plus one named column per scalar
+    text function applied to the document text."""
 
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        text = F.col("text")
+        return _docs(spark, sf_dir).select(
+            "doc_id", *(fn(text).alias(name) for name, fn in exprs.items())
+        )
 
-def q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    return d.select("doc_id", quality_score(F.col("text")).alias("quality"))
-
-
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    return d.select("doc_id", fingerprint(F.col("text")).alias("fp"))
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup_exact(_docs(spark, sf_dir))
-
-
-def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
-
-
-def q_mode_ties_null(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return R.mode_event_type_ties_null(spark, sf_dir)
-
-
-def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition signals per doc (zero-shuffle scalar
-    expressions: functions/text.dup_line_frac, top_bigram_frac)."""
-    from ocr_spark.functions.text import dup_line_frac, top_bigram_frac
-
-    d = _docs(spark, sf_dir)
-    return d.select(
-        "doc_id",
-        dup_line_frac(F.col("text")).alias("dup_line_frac"),
-        top_bigram_frac(F.col("text")).alias("top_bigram_frac"),
-    )
-
-
-def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_lsh_dedup(_docs(spark, sf_dir), threshold=0.5)
-
-
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The testdata parquet is a single row group, so the scan cannot
-    split — without widening, the whole md5-per-token signature pass
-    runs on ONE core. The repartition shuffles ~raw-text bytes (tiny)
-    to unlock full-width compute: the same call minhash_lsh makes
-    before shingling (dedup.py). The simhash OPERATOR itself stays
-    map-only/zero-shuffle (tests/test_plan_shape.py) — on a many-file
-    100 TB table the scan is already wide and the widening is a no-op
-    cost-wise (one linear pass it would spend anyway)."""
-    d = _docs(spark, sf_dir)
-    return simhash(d.repartition(spark.sparkContext.defaultParallelism))
+    return query
 
 
 def q_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,8 +225,6 @@ def q_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     per doc, the keeper is a window-min over the fingerprint (one
     shuffle total), and both gates are plain predicates — no second
     aggregation or join. At 100 TB this is scan + one exchange."""
-    from pyspark.sql import Window
-
     d = _docs(spark, sf_dir)
     scored = d.select(
         "doc_id",
@@ -198,70 +247,8 @@ def q_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster resolution: LSH near-dup pairs → connected
     components (min-label propagation) → per-doc keeper decision."""
-    from ocr_spark.operators.dedup import duplicate_components
-
     docs = _docs(spark, sf_dir)
     return duplicate_components(docs, minhash_lsh_dedup(docs, threshold=0.5))
-
-
-def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return S.cosine_topk(_emb(spark, sf_dir), n_queries=10, k=3)
-
-
-def q_emb_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return S.cosine_neardup(_emb(spark, sf_dir), threshold=0.4)
-
-
-def q_emb_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded sign-LSH near-dup (8 bands × 8 bits over the 64 dims,
-    per-bucket cap 256): the embedding-space analogue of minhash_lsh —
-    capped fan-out, candidate-bounded verify. See cosine_neardup_lsh's
-    docstring for the 100 TB bound."""
-    return S.cosine_neardup_lsh(
-        _emb(spark, sf_dir), threshold=0.3, bits=8, n_bands=8, max_bucket=256
-    )
-
-
-def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate nearest neighbors, driver surface: the seeded
-    closed-form quantizer at a wider probe width (6/16 cells), fully
-    oracle-checked. The MLlib k-means quantizer (``S.ivf_topk``) stays
-    a library API — clustering isn't SQL-expressible, so it is gated by
-    the recall test in tests/test_similarity.py instead of a hash row."""
-    return S.ivf_topk_seeded(_emb(spark, sf_dir), n_queries=10, k=3, n_probe=6)
-
-
-def q_ivf_topk_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seeded-centroid IVF — deterministic closed-form quantizer, so
-    the DuckDB oracle runs the identical algorithm (unlike the MLlib
-    k-means variant, which stays rows-only + recall-gated)."""
-    return S.ivf_topk_seeded(_emb(spark, sf_dir), n_queries=10, k=3, n_probe=4)
-
-
-def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return S.label_centroid_count(_emb(spark, sf_dir))
-
-
-def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space eval decontamination: max cosine of every
-    corpus vector against the broadcast eval pool (first 20 vec_ids),
-    flagged at 0.4 — the semantic twin of `decontaminate_docs`."""
-    return S.semantic_decontaminate(_emb(spark, sf_dir), n_eval=20, threshold=0.4)
-
-
-def q_knn_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Auto-labeling: majority label among the 5 nearest labeled
-    neighbors for each of the first 30 vectors (ties → smaller
-    label)."""
-    return S.knn_label_propagation(_emb(spark, sf_dir), n_queries=30, k=5)
-
-
-def q_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Case/punct-insensitive duplicate groups — the escalation step
-    between exact-md5 and shingle near-dup in a cleaning cascade."""
-    from ocr_spark.operators.dedup import canonical_dedup
-
-    return canonical_dedup(_docs(spark, sf_dir))
 
 
 def q_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,12 +261,6 @@ def q_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("vec_id"))
     )
     return S.cosine_topk_filtered(_emb(spark, sf_dir), allowed, n_queries=10, k=3)
-
-
-def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shuffle-key diagnostic over events.user_id — the numbers
-    that size salted_equijoin's n_salts and every cap in the repo."""
-    return R.skew_report(load_table(spark, sf_dir, "events"), "user_id", top_n=5)
 
 
 def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -301,50 +282,19 @@ def q_embedding_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_events_per_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_utc(spark)  # driver-session guard (plans/session.py)
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day")).agg(
-        F.count(F.lit(1)).alias("n_events")
-    )
+    return _events(spark, sf_dir).groupBy(
+        F.date_format("ts", "yyyy-MM-dd").alias("day")
+    ).agg(F.count(F.lit(1)).alias("n_events"))
 
 
 def q_props_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
     k = F.nullif(F.regexp_extract(F.col("props"), r'"k":\s*(\d+)', 1), F.lit("")).cast(
         "int"
     )
-    return ev.select("user_id", k.alias("k")).groupBy("user_id").agg(
+    return _events(spark, sf_dir).select("user_id", k.alias("k")).groupBy("user_id").agg(
         F.sum("k").alias("k_sum"),
         F.count("k").alias("k_n"),
     )
-
-
-# rows-only queries (no SQL oracle): the extraction engine itself
-
-_FIXTURE_CACHE: dict[float, str] = {}
-
-
-def _sf_of(sf_dir: str) -> float:
-    m = re.search(r"sf(\d+(?:\.\d+)?)", sf_dir)
-    return float(m.group(1)) if m else 0.01
-
-
-def transcripts_fixture_path(sf: float) -> str:
-    """Deterministic synthetic transcripts parquet for this sf (cached;
-    the generator version is part of the filename so a cached file from
-    an older generator is never reused)."""
-    if sf not in _FIXTURE_CACHE:
-        from ocr_spark.fixtures import FIXTURE_VERSION, write_transcripts
-
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"ocr_spark_transcripts_v{FIXTURE_VERSION}_sf{sf}.parquet",
-        )
-        if not os.path.exists(path):
-            tmp = path + ".tmp"
-            write_transcripts(tmp, sf)
-            os.replace(tmp, path)
-        _FIXTURE_CACHE[sf] = path
-    return _FIXTURE_CACHE[sf]
 
 
 def _json_spans(df: DataFrame) -> DataFrame:
@@ -358,18 +308,12 @@ def _json_spans(df: DataFrame) -> DataFrame:
 def q_extract_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship pipeline: synthetic transcripts (same sf tier as
     sf_dir) → sniff → route → extract → spans+metrics."""
-    from ocr_spark.job import ensure_package_shipped, extract_transcripts
-
     ensure_package_shipped(spark)
-    df = spark.read.parquet(transcripts_fixture_path(_sf_of(sf_dir)))
-    return _json_spans(extract_transcripts(df))
+    return _json_spans(extract_transcripts(_transcripts(spark, sf_dir)))
 
 
 def q_extract_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extraction over the driver's documents table (plain-text path)."""
-    from ocr_spark.job import ensure_package_shipped
-    from ocr_spark.udfs import extract_udf
-
     ensure_package_shipped(spark)
     d = _docs(spark, sf_dir)
     return _json_spans(
@@ -382,54 +326,14 @@ def q_extract_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_extract_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference parity surface: per-turn document fields over the
     pdf_like turns (classify cascade + W/F-heuristics, core/fields.py)."""
-    from ocr_spark.job import ensure_package_shipped, extract_transcripts
-    from ocr_spark.udfs import fields_udf
-
     ensure_package_shipped(spark)
-    df = spark.read.parquet(transcripts_fixture_path(_sf_of(sf_dir)))
-    ext = extract_transcripts(df).filter(F.col("kind") == "pdf_like")
-    return ext.select(
+    ext = extract_transcripts(_transcripts(spark, sf_dir))
+    return ext.filter(F.col("kind") == "pdf_like").select(
         "conv_id", "turn_idx", fields_udf(F.col("extracted_text")).alias("f")
     ).select("conv_id", "turn_idx", "f.*")
 
 
-def q_transaction_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conversation-level wide row of first-wins fields (A8 pivot)."""
-    from ocr_spark.operators.conversation import transaction_pivot
-
-    return transaction_pivot(q_extract_fields(spark, sf_dir))
-
-
-def q_conv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conversation-level transaction pivot (J3/A8) over transcripts."""
-    from ocr_spark.operators.conversation import conv_rollup
-
-    df = spark.read.parquet(transcripts_fixture_path(_sf_of(sf_dir)))
-    return conv_rollup(df)
-
-
-def q_transcript_lint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-conversation structural validation of the transcript corpus
-    (dup/missing turn_idx, timestamp disorder, role-alternation
-    breaks, toolless tool turns, empty payloads)."""
-    from ocr_spark.operators.conversation import transcript_lint
-
-    return transcript_lint(
-        spark.read.parquet(transcripts_fixture_path(_sf_of(sf_dir)))
-    )
-
-
-def q_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conversation-level exact dedup: md5 over turn texts in
-    (turn_idx, text) order, \\x1f-separated; keeper = min conv_id."""
-    from ocr_spark.operators.conversation import conv_dedup
-
-    return conv_dedup(spark.read.parquet(transcripts_fixture_path(_sf_of(sf_dir))))
-
-
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.job import ensure_package_shipped
-
     ensure_package_shipped(spark)
     return extract_media_features(to_media_table(_docs(spark, sf_dir)))
 
@@ -438,9 +342,6 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver surface projects thumbnail bytes to their length (the
     stub thumbnail is digest-repetition filler; its LENGTH is the part
     with defined semantics, and the oracle can compute it)."""
-    from ocr_spark.job import ensure_package_shipped
-    from ocr_spark.operators.multimodal import resize_images
-
     ensure_package_shipped(spark)
     r = resize_images(to_media_table(_docs(spark, sf_dir)))
     return r.select(
@@ -450,9 +351,6 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.job import ensure_package_shipped
-    from ocr_spark.operators.multimodal import sample_frames
-
     ensure_package_shipped(spark)
     return sample_frames(to_media_table(_docs(spark, sf_dir)))
 
@@ -460,54 +358,17 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-window chunking (context-window prep): one row per
     overlapping chunk, tail chunks kept short."""
-    from ocr_spark.functions.text import chunk_structs
-
     d = _docs(spark, sf_dir)
     return d.select(
         "doc_id", F.posexplode(chunk_structs(F.col("text"))).alias("chunk_idx", "c")
     ).select("doc_id", "chunk_idx", F.col("c.chunk_text"), F.col("c.n_tokens"))
 
 
-def q_sft_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(user → assistant) SFT pairs over the transcripts fixture."""
-    from ocr_spark.operators.conversation import sft_pairs
-
-    df = spark.read.parquet(transcripts_fixture_path(_sf_of(sf_dir)))
-    return sft_pairs(df)
-
-
-def q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Passage-copy pairs via shared rare winnowing fingerprints
-    (scan widened first — q_simhash rationale)."""
-    from ocr_spark.operators.dedup import winnow_overlap_pairs
-
-    return winnow_overlap_pairs(
-        _docs(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
-    )
-
-
 def q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver surface serializes the fingerprint array to a CSV string
-    (sorted + distinct already, so the string is canonical). Scan
-    widened first — same single-row-group rationale as q_simhash; the
-    rolling-hash pass is the most md5-dense map in the repo."""
-    from ocr_spark.operators.dedup import winnow_docs
-
-    d = _docs(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
-    w = winnow_docs(d)
+    (sorted + distinct already, so the string is canonical)."""
+    w = winnow_docs(_wide_docs(spark, sf_dir))
     return w.select("doc_id", F.array_join("fps", ",").alias("fps"))
-
-
-def q_winnow_span_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicated-passage spans (exact-substring dedup à la Lee et
-    al. 2021): maximal diagonal runs of matched winnowing
-    fingerprints → char offsets of the copied region in BOTH docs.
-    Scan widened first — q_simhash rationale."""
-    from ocr_spark.operators.dedup import winnow_span_runs
-
-    return winnow_span_runs(
-        _docs(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
-    )
 
 
 def q_near_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -515,13 +376,6 @@ def q_near_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters → keep the highest-QUALITY member per cluster (tie → min
     id) instead of the arbitrary min-id keeper. One row per doc with
     its cluster, score, and keep/drop verdict."""
-    from ocr_spark.operators.dedup import (
-        duplicate_components,
-        keep_best_representative,
-        minhash_lsh_dedup,
-    )
-    from ocr_spark.functions.text import quality_score
-
     docs = _docs(spark, sf_dir)
     pairs = minhash_lsh_dedup(docs, threshold=0.5)
     comps = duplicate_components(docs, pairs)
@@ -529,18 +383,12 @@ def q_near_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keep_best_representative(scored, comps)
 
 
-def q_clicks_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return R.clicks_before_purchase(spark, sf_dir)
-
-
 def q_span_surgery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span surgery end to end: detect duplicated passages
     (winnow_span_runs), then cut them out of the higher-id doc —
     whole-corpus output with per-doc cut accounting and the cleaned
     text's fingerprint."""
-    from ocr_spark.operators.dedup import apply_span_surgery, winnow_span_runs
-
-    docs = _docs(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
+    docs = _wide_docs(spark, sf_dir)
     return apply_span_surgery(docs, winnow_span_runs(docs))
 
 
@@ -551,60 +399,9 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     text pipeline uses; one representative (min vec_id) survives per
     cluster. Textually distinct rephrasings collapse here that no
     shingle method can catch — the complement of MinHash dedup."""
-    from ocr_spark.operators.dedup import duplicate_components
-
     emb = _emb(spark, sf_dir)
     pairs = S.cosine_neardup_lsh(emb, threshold=0.3, bits=8, n_bands=8, max_bucket=256)
     return duplicate_components(emb.select("vec_id"), pairs, id_col="vec_id")
-
-
-def q_materialize_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The temperature weights applied as a deterministic sampling
-    pass — coordination-free Bernoulli by md5 threshold."""
-    from ocr_spark.operators.corpus import materialize_mixture
-
-    return materialize_mixture(_docs(spark, sf_dir))
-
-
-def q_rolling_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return R.rolling_user_value(spark, sf_dir)
-
-
-def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return R.funnel_conversion(spark, sf_dir)
-
-
-def q_source_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.operators.corpus import source_top_terms
-
-    return source_top_terms(_docs(spark, sf_dir))
-
-
-def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted sampling without replacement, 20 docs per source,
-    inclusion probability ∝ a length-derived integer weight — the
-    deterministic mixture-sampling primitive (see corpus.weighted_sample
-    for the transcendental-free A-ES construction)."""
-    from ocr_spark.operators.corpus import weighted_sample
-
-    docs = _docs(spark, sf_dir).withColumn(
-        "weight", (F.lit(1) + F.floor(F.length("text") / 512)).cast("int")
-    )
-    return weighted_sample(docs, k=20)
-
-
-def q_weighted_sample_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Clamp accounting for `weighted_sample`'s max_weight=16 bound on
-    the SAME weight derivation the sampling query uses: rows clamped
-    high/low, heaviest raw weight, and the weight mass the clamp
-    redistributes — the audit row that says whether the cap distorts
-    this corpus's mixture (see corpus.weighted_sample_clamp_stats)."""
-    from ocr_spark.operators.corpus import weighted_sample_clamp_stats
-
-    docs = _docs(spark, sf_dir).withColumn(
-        "weight", (F.lit(1) + F.floor(F.length("text") / 512)).cast("int")
-    )
-    return weighted_sample_clamp_stats(docs, max_weight=16)
 
 
 def q_cap_drop_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -613,54 +410,18 @@ def q_cap_drop_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_sources=10): one summary row per cap quantifying the keys and
     postings the guard discards at this corpus scale — the audit a
     user runs before trusting a capped operator's recall."""
-    from ocr_spark.functions.text import word_shingles
-    from ocr_spark.operators.corpus import cap_drop_stats
-    from ocr_spark.operators.dedup import winnow_docs
-
     docs = _docs(spark, sf_dir)
     wfp = winnow_docs(docs).select("doc_id", F.explode("fps").alias("fp"))
-    w_stats = cap_drop_stats(wfp, "fp", 4, "winnow_max_postings")
+    w_stats = C.cap_drop_stats(wfp, "fp", 4, "winnow_max_postings")
     sh = docs.select(
         F.col("source").alias("src"),
         F.explode(word_shingles(F.col("text"), 3)).alias("s"),
     ).distinct()
-    s_stats = cap_drop_stats(sh, "s", 10, "cross_source_max_sources")
+    s_stats = C.cap_drop_stats(sh, "s", 10, "cross_source_max_sources")
     return w_stats.unionByName(s_stats)
 
 
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: shared word-3-grams vs the held-out
-    eval slice (doc_id % 41 == 0), map-only corpus pass."""
-    from ocr_spark.operators.corpus import decontaminate
-
-    return decontaminate(_docs(spark, sf_dir))
-
-
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.operators.corpus import tfidf_top_terms
-
-    return tfidf_top_terms(_docs(spark, sf_dir))
-
-
-def q_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.operators.corpus import length_percentiles
-
-    return length_percentiles(_docs(spark, sf_dir))
-
-
-def q_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.operators.corpus import vocab_stats
-
-    return vocab_stats(_docs(spark, sf_dir))
-
-
-def q_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.operators.corpus import train_val_split
-
-    return train_val_split(_docs(spark, sf_dir))
-
-
-def _pii_augmented_text() -> "F.Column":
+def _pii_augmented_text() -> Column:
     """The synthetic documents carry no PII, so the pii_scrub surface
     appends deterministic PII spans first (emails to 1 in 5 docs,
     phones to another fifth, IPs to a third) — the SAME augmentation
@@ -704,8 +465,6 @@ def _pii_augmented_text() -> "F.Column":
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII detection + redaction (emails/phones/IPv4) over the
     deterministically augmented text — map-only scalar regex work."""
-    from ocr_spark.functions.text import pii_counts, pii_redact
-
     d = _docs(spark, sf_dir).select("doc_id", _pii_augmented_text().alias("t"))
     n_emails, n_phones, n_ips = pii_counts(F.col("t"))
     return d.select(
@@ -717,73 +476,16 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.operators.corpus import source_stats
-
-    return source_stats(_docs(spark, sf_dir))
-
-
-def q_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.operators.corpus import cross_source_overlap
-
-    return cross_source_overlap(_docs(spark, sf_dir))
-
-
-def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return S.quantize_embeddings(_emb(spark, sf_dir))
-
-
-def q_boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.operators.corpus import boilerplate_scrub
-
-    return boilerplate_scrub(_docs(spark, sf_dir))
-
-
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.operators.corpus import pack_sequences
-
-    return pack_sequences(_docs(spark, sf_dir))
-
-
-def q_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.operators.corpus import script_profile
-
-    return script_profile(_docs(spark, sf_dir))
-
-
-def q_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.operators.corpus import source_mixture_weights
-
-    return source_mixture_weights(_docs(spark, sf_dir))
-
-
-def q_unigram_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.operators.corpus import unigram_commonness
-
-    return unigram_commonness(_docs(spark, sf_dir))
-
-
-def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL distinct l_orderkey per l_returnflag (~12k-40k distinct per
-    group at the driver tiers — solidly in the raw-estimate regime),
-    with the exact count joined in for side-by-side error."""
-    from ocr_spark.operators.sketch import hll_distinct
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return hll_distinct(li, "l_orderkey", "l_returnflag")
-
-
 def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom pre-filter stats: probe every lineitem row against a
     bitset of URGENT order keys; one row of exact effectiveness
     numbers (candidates, true matches, false positives, fp rate)."""
-    from ocr_spark.operators.sketch import bloom_semijoin_stats
-
-    li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
-    return bloom_semijoin_stats(li, orders, "l_orderkey", "o_orderkey")
+    return bloom_semijoin_stats(
+        _lineitem(spark, sf_dir), orders, "l_orderkey", "o_orderkey"
+    )
 
 
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -792,8 +494,6 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice and pii_scrub's augmentation): docs with id % 11 == 0 are
     removed in the new snapshot, id % 13 == 0 get a ' [rev2]' edit,
     id % 17 == 0 are duplicated as fresh high-id additions."""
-    from ocr_spark.operators.corpus import snapshot_diff
-
     docs = _docs(spark, sf_dir).select("doc_id", "text", "source")
     did = F.col("doc_id")
     base = docs.filter(did % 11 != 0).withColumn(
@@ -807,7 +507,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("added:"), F.col("text")).alias("text"),
         "source",
     )
-    return snapshot_diff(docs, base.unionByName(added))
+    return C.snapshot_diff(docs, base.unionByName(added))
 
 
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -818,9 +518,6 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     id % 7 == 0 — so the verdicts exercise all three outcomes
     (re-crawl of indexed docs → dup_index, fresh copies of unindexed
     docs → dup_batch, the rest → novel)."""
-    from ocr_spark.functions.text import fingerprint
-    from ocr_spark.operators.dedup import incremental_dedup
-
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     did = F.col("doc_id")
     batch = docs.unionByName(
@@ -834,53 +531,13 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_dedup(batch, index)
 
 
-def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-global collocations: top-50 adjacent word pairs by PMI
-    (ranked via the exact-count ratio — see the operator docstring),
-    min_count=5."""
-    from ocr_spark.operators.corpus import pmi_collocations
-
-    return pmi_collocations(_docs(spark, sf_dir))
-
-
-def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-BPE-merge pair statistics over the documents vocabulary
-    (top-30 adjacent character pairs weighted by word frequency)."""
-    from ocr_spark.operators.corpus import bpe_merge_candidates
-
-    return bpe_merge_candidates(_docs(spark, sf_dir))
-
-
-def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps'-law vocabulary growth at 25/50/75/100% of the doc-id
-    space (first-seen-minimum formulation — no per-checkpoint
-    rescan)."""
-    from ocr_spark.operators.corpus import vocab_growth
-
-    return vocab_growth(_docs(spark, sf_dir))
-
-
-def q_cms_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min frequency estimates for the 20 most frequent
-    l_partkey values — pure integer arithmetic, est >= exact always
-    (collisions only overcount). The synthetic key stream is uniform,
-    so the side-by-side exact column makes the ~N/w collision floor
-    visible — the guarantees under test are never-undercount and the
-    (e/w)*N bound, not point accuracy on uniform data (size w to
-    N/(eps*count) for heavy-hitter workloads)."""
-    from ocr_spark.operators.sketch import cms_top_frequencies
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return cms_top_frequencies(li, "l_partkey")
-
-
-SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+SPARK_QUERIES: dict[str, _Query] = {
     # relational operator suite (SURVEY §2.5/2.6 mappings)
     "q1_pricing_summary": R.pricing_summary,
     "q3_top_orders": R.top_orders,
     "q5_region_revenue": R.region_revenue,
     "mode_event_type": R.mode_event_type,
-    "mode_event_type_ties_null": q_mode_ties_null,
+    "mode_event_type_ties_null": R.mode_event_type_ties_null,
     "argmax_event": R.argmax_event,
     "latest_event": R.latest_event,
     "event_type_pivot": R.event_type_pivot,
@@ -901,90 +558,110 @@ SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "sessionize_events": R.sessionize_events,
     "asof_last_purchase": R.asof_last_purchase,
     "source_quota_sample": R.source_quota_sample,
-    "repetition_stats": q_repetition,
+    # Gopher-style repetition signals (zero-shuffle scalar expressions)
+    "repetition_stats": _per_doc(
+        dup_line_frac=dup_line_frac, top_bigram_frac=top_bigram_frac
+    ),
     "chunk_docs": q_chunk_docs,
-    "sft_pairs": q_sft_pairs,
+    "sft_pairs": _on(_transcripts, sft_pairs),
     "format_tons": R.format_tons,
     "embedding_components": q_embedding_components,
     # text analysis (training-data ops)
-    "text_stats": q_text_stats,
-    "token_estimate": q_token_estimate,
-    "lang_id_docs": q_lang_id,
-    "quality_score_docs": q_quality,
-    "fingerprint_docs": q_fingerprint,
+    "text_stats": _per_doc(n_tokens=token_count, n_chars_actual=char_count),
+    "token_estimate": _per_doc(n_bpe_tokens=token_estimate),
+    "lang_id_docs": _per_doc(pred_lang=lang_id),
+    "quality_score_docs": _per_doc(quality=quality_score),
+    "fingerprint_docs": _per_doc(fp=fingerprint),
     # dedup family
-    "dedup_exact_docs": q_dedup_exact,
-    "ngram_jaccard": q_ngram_jaccard,
-    "minhash_lsh": q_minhash_lsh,
-    "simhash_docs": q_simhash,
+    "dedup_exact_docs": _on(_docs, dedup_exact),
+    "ngram_jaccard": _on(_docs, ngram_jaccard_pairs, threshold=0.5),
+    "minhash_lsh": _on(_docs, minhash_lsh_dedup, threshold=0.5),
+    "simhash_docs": _on(_wide_docs, simhash),
     "dedup_components": q_dedup_components,
     "corpus_filter": q_corpus_filter,
     # similarity search
-    "knn_topk": q_knn,
-    "embedding_neardup": q_emb_neardup,
-    "embedding_neardup_lsh": q_emb_neardup_lsh,
-    "label_centroids": q_label_centroids,
-    "ivf_topk": q_ivf_topk,
-    "ivf_topk_seeded": q_ivf_topk_seeded,
+    "knn_topk": _on(_emb, S.cosine_topk, n_queries=10, k=3),
+    "embedding_neardup": _on(_emb, S.cosine_neardup, threshold=0.4),
+    "embedding_neardup_lsh": _on(
+        _emb, S.cosine_neardup_lsh, threshold=0.3, bits=8, n_bands=8, max_bucket=256
+    ),
+    "label_centroids": _on(_emb, S.label_centroid_count),
+    # IVF on the driver surface runs the seeded closed-form quantizer, so
+    # the DuckDB oracle runs the identical algorithm; ivf_topk is the
+    # wider probe (6 of 16 cells). The MLlib k-means quantizer
+    # (S.ivf_topk) stays a library API: clustering isn't SQL-expressible,
+    # so the recall test in tests/test_similarity.py gates it instead.
+    "ivf_topk": _on(_emb, S.ivf_topk_seeded, n_queries=10, k=3, n_probe=6),
+    "ivf_topk_seeded": _on(_emb, S.ivf_topk_seeded, n_queries=10, k=3, n_probe=4),
     # multimodal
     "media_meta": q_media_meta,
-    # extraction engine (rows-only; exact-equality gate lives in tests/)
+    # extraction engine and conversation ops: oracles are a pure-Python
+    # run of the shared core, or plain SQL over the same transcripts
     "extract_transcripts": q_extract_transcripts,
-    "conv_rollup": q_conv_rollup,
-    "transcript_lint": q_transcript_lint,
-    "conv_dedup": q_conv_dedup,
+    "conv_rollup": _on(_transcripts, conv_rollup),
+    "transcript_lint": _on(_transcripts, transcript_lint),
+    "conv_dedup": _on(_transcripts, conv_dedup),
     "extract_fields": q_extract_fields,
-    "transaction_pivot": q_transaction_pivot,
+    "transaction_pivot": _on(q_extract_fields, transaction_pivot),
     "extract_documents": q_extract_documents,
     "multimodal_features": q_multimodal_features,
     "multimodal_resize": q_multimodal_resize,
     "multimodal_frames": q_multimodal_frames,
     "winnow_docs": q_winnow,
-    "winnow_overlap": q_winnow_overlap,
-    "winnow_span_runs": q_winnow_span_runs,
+    "winnow_overlap": _on(_wide_docs, winnow_overlap_pairs),
+    "winnow_span_runs": _on(_wide_docs, winnow_span_runs),
     "near_dedup_keep_best": q_near_dedup_keep_best,
-    "clicks_before_purchase": q_clicks_before_purchase,
+    "clicks_before_purchase": R.clicks_before_purchase,
     # corpus-level training-data ops
-    "decontaminate_docs": q_decontaminate,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "length_percentiles": q_length_percentiles,
-    "vocab_stats": q_vocab_stats,
-    "train_val_split": q_train_val_split,
+    "decontaminate_docs": _on(_docs, C.decontaminate),
+    "tfidf_top_terms": _on(_docs, C.tfidf_top_terms),
+    "length_percentiles": _on(_docs, C.length_percentiles),
+    "vocab_stats": _on(_docs, C.vocab_stats),
+    "train_val_split": _on(_docs, C.train_val_split),
     "pii_scrub": q_pii_scrub,
-    "source_stats": q_source_stats,
-    "cross_source_overlap": q_cross_source_overlap,
-    "quantize_embeddings": q_quantize_embeddings,
-    "boilerplate_scrub": q_boilerplate_scrub,
-    "pack_sequences": q_pack_sequences,
-    "script_profile": q_script_profile,
-    "source_mixture_weights": q_source_mixture,
-    "materialize_mixture": q_materialize_mixture,
-    "rolling_user_value": q_rolling_user_value,
-    "funnel_conversion": q_funnel_conversion,
-    "source_top_terms": q_source_top_terms,
+    "source_stats": _on(_docs, C.source_stats),
+    "cross_source_overlap": _on(_docs, C.cross_source_overlap),
+    "quantize_embeddings": _on(_emb, S.quantize_embeddings),
+    "boilerplate_scrub": _on(_docs, C.boilerplate_scrub),
+    "pack_sequences": _on(_docs, C.pack_sequences),
+    "script_profile": _on(_docs, C.script_profile),
+    "source_mixture_weights": _on(_docs, C.source_mixture_weights),
+    "materialize_mixture": _on(_docs, C.materialize_mixture),
+    "rolling_user_value": R.rolling_user_value,
+    "funnel_conversion": R.funnel_conversion,
+    "source_top_terms": _on(_docs, C.source_top_terms),
     "cap_drop_accounting": q_cap_drop_accounting,
-    "weighted_sample": q_weighted_sample,
-    "weighted_sample_clamp": q_weighted_sample_clamp,
-    "semantic_decontaminate": q_semantic_decontaminate,
-    "knn_label_propagation": q_knn_label_propagation,
-    "canonical_dedup": q_canonical_dedup,
+    "weighted_sample": _on(_weighted_docs, C.weighted_sample, k=20),
+    "weighted_sample_clamp": _on(
+        _weighted_docs, C.weighted_sample_clamp_stats, max_weight=16
+    ),
+    "semantic_decontaminate": _on(
+        _emb, S.semantic_decontaminate, n_eval=20, threshold=0.4
+    ),
+    "knn_label_propagation": _on(_emb, S.knn_label_propagation, n_queries=30, k=5),
+    "canonical_dedup": _on(_docs, canonical_dedup),
     "filtered_knn": q_filtered_knn,
-    "skew_report": q_skew_report,
+    "skew_report": _on(_events, R.skew_report, "user_id", top_n=5),
     "semantic_dedup": q_semantic_dedup,
     "span_surgery": q_span_surgery,
-    "unigram_commonness": q_unigram_commonness,
+    "unigram_commonness": _on(_docs, C.unigram_commonness),
     # mergeable sketches (distributed cardinality / frequency / join pruning)
-    "hll_distinct": q_hll_distinct,
+    # ~12k-40k distinct l_orderkey per l_returnflag at the driver tiers:
+    # solidly in HLL's raw-estimate regime; the exact count rides along
+    "hll_distinct": _on(_lineitem, hll_distinct, "l_orderkey", "l_returnflag"),
     "bloom_semijoin": q_bloom_semijoin,
-    "cms_frequencies": q_cms_frequencies,
+    # the synthetic l_partkey stream is uniform, so the exact column
+    # shows the ~N/w collision floor: what is under test is
+    # never-undercount and the (e/w)*N bound, not point accuracy
+    "cms_frequencies": _on(_lineitem, cms_top_frequencies, "l_partkey"),
     # skew-safe join mechanism + corpus CDC
     "salted_join_revenue": R.salted_part_revenue,
     "snapshot_diff": q_snapshot_diff,
     # batch-vs-index dedup protocol + collocation mining + BPE stats
     "incremental_dedup": q_incremental_dedup,
-    "pmi_collocations": q_pmi_collocations,
-    "bpe_merge_candidates": q_bpe_merge_candidates,
-    "vocab_growth": q_vocab_growth,
+    "pmi_collocations": _on(_docs, C.pmi_collocations),
+    "bpe_merge_candidates": _on(_docs, C.bpe_merge_candidates),
+    "vocab_growth": _on(_docs, C.vocab_growth),
 }
 
 # ---------------------------------------------------------------------------
@@ -1252,69 +929,45 @@ toks AS (
 # Pipeline oracles: pure-Python reference execution materialized as
 # parquet (ocr_spark/oracle_fixtures.py), aggregated/selected in SQL.
 # The driver's correctness pass runs at sf0.01 (driver contract), so
-# the embedded paths are pinned there; __spark_entry__.oracle_sql()
+# ORACLE_SQL embeds the paths of that tier; __spark_entry__.oracle_sql()
 # materializes the files before returning these strings.
 # ---------------------------------------------------------------------------
 
-from ocr_spark.core.fields import FIELD_NAMES  # noqa: E402
-from ocr_spark.operators.conversation import WEIGHBRIDGE_SLOT_FIELDS  # noqa: E402
-from ocr_spark.oracle_fixtures import (  # noqa: E402
-    docextract_oracle_name,
-    extract_oracle_name,
-    fields_oracle_name,
-    oracle_path,
-)
-
 ORACLE_SF = 0.01
 ORACLE_SF_DIR = "/root/testdata/sf0.01"
-_XT_PATH = oracle_path(extract_oracle_name(ORACLE_SF))
-_XD_PATH = oracle_path(docextract_oracle_name(ORACLE_SF_DIR))
-_FLD_PATH = oracle_path(fields_oracle_name(ORACLE_SF))
-
-
-def _transcripts_fixture_sql_path(sf: float = ORACLE_SF) -> str:
-    """The transcripts fixture parquet path for the oracle sf tier
-    (same file the Spark side reads — conv_rollup's oracle is plain
-    SQL over it, no Python oracle involved)."""
-    from ocr_spark.fixtures import FIXTURE_VERSION
-
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"ocr_spark_transcripts_v{FIXTURE_VERSION}_sf{sf}.parquet",
-    )
 
 
 def pipeline_oracle_overrides(sf: float, sf_dir: str) -> dict[str, str]:
-    """The sf-dependent oracle entries re-targeted at another scale
-    tier (the driver contract is pinned at sf0.01 — this exists so the
-    in-repo suite can re-verify the same parity at sf0.1, 10× scale;
-    caller must run oracle_fixtures.ensure_oracle_fixtures(sf, sf_dir)
+    """The sf-dependent oracle entries for one scale tier. ORACLE_SQL
+    takes them at the driver tier (sf0.01); the in-repo suite
+    re-targets them to re-verify the same parity at sf0.1, 10× scale
+    (caller must run oracle_fixtures.ensure_oracle_fixtures(sf, sf_dir)
     first)."""
     xt = oracle_path(extract_oracle_name(sf))
     xd = oracle_path(docextract_oracle_name(sf_dir))
     fld = oracle_path(fields_oracle_name(sf))
+    tp = _transcripts_fixture_file(sf)
     return {
         "extract_transcripts": f"SELECT * FROM read_parquet('{xt}')",
         "extract_documents": f"SELECT * FROM read_parquet('{xd}')",
         "extract_fields": f"SELECT * FROM read_parquet('{fld}')",
         "transaction_pivot": _transaction_pivot_sql(fld),
-        "conv_rollup": _conv_rollup_sql(_transcripts_fixture_sql_path(sf)),
-        "sft_pairs": _sft_pairs_sql(_transcripts_fixture_sql_path(sf)),
-        "transcript_lint": _transcript_lint_sql(_transcripts_fixture_sql_path(sf)),
-        "conv_dedup": _conv_dedup_sql(_transcripts_fixture_sql_path(sf)),
+        "conv_rollup": _conv_rollup_sql(tp),
+        "sft_pairs": _sft_pairs_sql(tp),
+        "transcript_lint": _transcript_lint_sql(tp),
+        "conv_dedup": _conv_dedup_sql(tp),
     }
 
 
-def _transcript_lint_sql(transcripts_path: str | None = None) -> str:
+def _transcript_lint_sql(transcripts_path: str) -> str:
     """DuckDB twin of conversation.transcript_lint — same total
     ordering (turn_idx, ts, role, text), same integer counts."""
-    p = transcripts_path or _transcripts_fixture_sql_path()
     return f"""
 WITH s AS (
   SELECT conv_id, turn_idx, role, tool, ts, trim(text) AS t,
     lag(ts) OVER (PARTITION BY conv_id ORDER BY turn_idx, ts, role, text) AS prev_ts,
     lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx, ts, role, text) AS prev_role
-  FROM read_parquet('{p}')
+  FROM read_parquet('{transcripts_path}')
 )
 SELECT conv_id,
   count(*) AS n_turns,
@@ -1330,19 +983,18 @@ FROM s GROUP BY conv_id
 """
 
 
-def _conv_dedup_sql(transcripts_path: str | None = None) -> str:
+def _conv_dedup_sql(transcripts_path: str) -> str:
     """DuckDB twin of conversation.conv_dedup — string_agg ORDER BY
     (turn_idx, text) ≡ Spark's array_sort(struct(turn_idx, text));
     text coalesced to '' on both engines (NULL-turn contract, see
     conv_dedup docstring)."""
-    p = transcripts_path or _transcripts_fixture_sql_path()
     return f"""
 WITH pc AS (
   SELECT conv_id,
     md5(string_agg(coalesce(text, ''), chr(31)
         ORDER BY turn_idx, coalesce(text, ''))) AS conv_fp,
     count(*) AS n_turns
-  FROM read_parquet('{p}') GROUP BY conv_id
+  FROM read_parquet('{transcripts_path}') GROUP BY conv_id
 )
 SELECT conv_id, conv_fp, n_turns,
   count(*) OVER (PARTITION BY conv_fp) AS n_dup_convs,
@@ -1351,7 +1003,7 @@ FROM pc
 """
 
 
-def _transaction_pivot_sql(fields_path: str | None = None) -> str:
+def _transaction_pivot_sql(fields_path: str) -> str:
     value_fields = [f for f in FIELD_NAMES if f != "category"]
     firsts = ",\n  ".join(
         f"first({f} ORDER BY turn_idx) FILTER (WHERE {f} IS NOT NULL) AS {f}"
@@ -1364,7 +1016,7 @@ def _transaction_pivot_sql(fields_path: str | None = None) -> str:
         for c in WEIGHBRIDGE_SLOT_FIELDS
     )
     return f"""
-WITH f AS (SELECT * FROM read_parquet('{fields_path or _FLD_PATH}')),
+WITH f AS (SELECT * FROM read_parquet('{fields_path}')),
 staged AS (
   SELECT *, sum(CASE WHEN category = 'Weighbridge' THEN 1 ELSE 0 END) OVER (
       PARTITION BY conv_id ORDER BY turn_idx
@@ -1381,14 +1033,14 @@ FROM staged GROUP BY conv_id
 """
 
 
-def _sft_pairs_sql(transcripts_path: str | None = None) -> str:
+def _sft_pairs_sql(transcripts_path: str) -> str:
     return f"""
 WITH lagged AS (
   SELECT conv_id, turn_idx, role, text,
          lag(role) OVER w AS prev_role,
          lag(text) OVER w AS prev_text,
          lag(turn_idx) OVER w AS prev_idx
-  FROM read_parquet('{transcripts_path or _transcripts_fixture_sql_path()}')
+  FROM read_parquet('{transcripts_path}')
   WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx ASC)
 )
 SELECT conv_id,
@@ -1401,7 +1053,7 @@ WHERE role = 'assistant' AND prev_role = 'user'
 """
 
 
-def _conv_rollup_sql(transcripts_path: str | None = None) -> str:
+def _conv_rollup_sql(transcripts_path: str) -> str:
     return f"""
 SELECT conv_id,
   CAST(count(*) AS INTEGER) AS n_turns,
@@ -1411,7 +1063,7 @@ SELECT conv_id,
   arg_min(role, turn_idx) AS first_role,
   arg_max(role, turn_idx) AS last_role,
   CAST(sum(length(text)) AS BIGINT) AS total_chars
-FROM read_parquet('{transcripts_path or _transcripts_fixture_sql_path()}')
+FROM read_parquet('{transcripts_path}')
 GROUP BY conv_id
 """
 
@@ -2010,16 +1662,9 @@ FROM documents
     # pipeline oracles: pure-Python reference run (oracle_fixtures.py)
     # selected/aggregated in SQL — Spark's Arrow batching, projection,
     # and aggregation plans vs an independent single-threaded execution
-    "extract_transcripts": f"SELECT * FROM read_parquet('{_XT_PATH}')",
-    "extract_documents": f"SELECT * FROM read_parquet('{_XD_PATH}')",
-    "extract_fields": f"SELECT * FROM read_parquet('{_FLD_PATH}')",
-    "transaction_pivot": _transaction_pivot_sql(),
-    # conv_rollup / sft_pairs: plain SQL over the same transcripts
-    # parquet the Spark side reads — no Python oracle involved at all
-    "conv_rollup": _conv_rollup_sql(),
-    "transcript_lint": _transcript_lint_sql(),
-    "conv_dedup": _conv_dedup_sql(),
-    "sft_pairs": _sft_pairs_sql(),
+    # (extract_*, transaction_pivot); the conversation ops are plain
+    # SQL over the same transcripts parquet the Spark side reads
+    **pipeline_oracle_overrides(ORACLE_SF, ORACLE_SF_DIR),
     # chunking: range(0, n, stride) starts + list slices — mirrors
     # chunk_structs (tail chunks shorter than the window are kept)
     "chunk_docs": r"""

@@ -7,9 +7,7 @@ import duckdb
 import pytest
 
 from ocr_spark.operators.dedup import (
-    MAX_NUM_HASHES,
     minhash_lsh_dedup,
-    minhash_signatures,
     ngram_jaccard_pairs,
 )
 from ocr_spark.queries import _minhash_sql
@@ -21,8 +19,6 @@ def test_num_hashes_overflow_bound_enforced(spark):
     df = spark.createDataFrame([(1, "a b c d e")], "doc_id int, text string")
     with pytest.raises(ValueError, match="num_hashes"):
         minhash_lsh_dedup(df, num_hashes=16, bands=4)
-    with pytest.raises(ValueError, match="num_hashes"):
-        minhash_signatures(df, num_hashes=MAX_NUM_HASHES + 1)
 
 
 TINY_DOCS = [

@@ -57,6 +57,22 @@ def test_top_orders_broadcasts_customer(spark):
     assert "BroadcastHashJoin" in plan
     # filter pushdown on mktsegment reaches the customer scan
     assert "PushedFilters: [IsNotNull(c_mktsegment), EqualTo(c_mktsegment,BUILDING)" in plan
+    # the customer join filters orders BELOW (before) the lineitem join
+    import re
+
+    tree, details = plan.split("\n\n", 1)
+    joins = {
+        m.group(3): (m.group(2), m.group(1))
+        for m in re.finditer(r"^\((\d+)\) (\w*Join) ?\nLeft keys \[1\]: \[(\w+)#", details, re.M)
+    }
+    depth = {
+        m.group(2): len(m.group(1))
+        for m in re.finditer(r"^([ :|+-]*)\w*Join .*\((\d+)\)$", tree, re.M)
+    }
+    cust_op, cust_id = joins["o_custkey"]
+    _, li_id = joins["l_orderkey"]
+    assert cust_op == "BroadcastHashJoin"
+    assert depth[cust_id] > depth[li_id]
 
 
 def test_dedup_exact_is_partial_aggregated(spark):
@@ -236,9 +252,9 @@ def test_repetition_stats_zero_shuffle(spark):
     import re
 
     from ocr_spark.plans.checks import count_exchanges, physical_plan
-    from ocr_spark.queries import q_repetition
+    from ocr_spark.queries import SPARK_QUERIES
 
-    df = q_repetition(spark, SF_DIR)
+    df = SPARK_QUERIES["repetition_stats"](spark, SF_DIR)
     assert count_exchanges(df) == 0
     assert not re.search(r"\bGenerate\b", physical_plan(df))
 
@@ -420,9 +436,9 @@ def test_pmi_collocations_bounded_rank_sort(spark):
     (TakeOrderedAndProject): the global PMI sort touches only the
     top-k survivors, never the full bigram vocabulary; unigram counts
     broadcast back onto the min_count-filtered bigram table."""
-    from ocr_spark.queries import q_pmi_collocations
+    from ocr_spark.queries import SPARK_QUERIES
 
-    df = q_pmi_collocations(spark, SF_DIR)
+    df = SPARK_QUERIES["pmi_collocations"](spark, SF_DIR)
     plan = physical_plan(df)
     assert "TakeOrderedAndProject" in plan
     import re
@@ -436,9 +452,9 @@ def test_bpe_merge_candidates_vocab_sized_explosion(spark):
     the corpus: exactly two exchanges (corpus word count, vocab pair
     count), zero UDF stages, and the rank filter compiles to a
     window-group-limit."""
-    from ocr_spark.queries import q_bpe_merge_candidates
+    from ocr_spark.queries import SPARK_QUERIES
 
-    df = q_bpe_merge_candidates(spark, SF_DIR)
+    df = SPARK_QUERIES["bpe_merge_candidates"](spark, SF_DIR)
     assert count_exchanges(df) == 2
     assert udf_stage_count(df) == 0
     plan = physical_plan(df)
@@ -450,9 +466,9 @@ def test_vocab_growth_no_per_checkpoint_rescan(spark):
     """The Heaps' curve must come from the first-seen-minimum
     formulation: zero UDFs, no cartesian blowup (the only crossJoins
     carry the 4-row threshold table), no Window."""
-    from ocr_spark.queries import q_vocab_growth
+    from ocr_spark.queries import SPARK_QUERIES
 
-    df = q_vocab_growth(spark, SF_DIR)
+    df = SPARK_QUERIES["vocab_growth"](spark, SF_DIR)
     assert udf_stage_count(df) == 0
     plan = physical_plan(df)
     assert "CartesianProduct" not in plan
