@@ -39,9 +39,8 @@ def oracle_sql() -> dict[str, str]:
     conv_rollup's oracle is plain SQL over the same transcripts parquet
     both sides read. This call materializes those files for the
     driver's sf0.01 correctness tier. Every query key has an oracle
-    (the driver-surface ``ivf_topk`` runs the seeded closed-form
-    quantizer, fully SQL-expressible; MLlib k-means remains a library
-    API gated by the recall tests in tests/test_similarity.py).
+    (``ivf_topk`` runs the seeded closed-form quantizer, fully
+    SQL-expressible).
     """
     from ocr_spark.oracle_fixtures import ensure_oracle_fixtures
     from ocr_spark.queries import ORACLE_SF, ORACLE_SF_DIR, ORACLE_SQL

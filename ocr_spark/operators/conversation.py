@@ -2,43 +2,17 @@
 (``docOcrWeb/src/download.jsx:158-264``, SURVEY.md J3/A8) rebuilt over
 transcripts: group a conversation's turns into one wide row.
 
-Two implementations of the same semantic:
-
-- ``conv_rollup``: native conditional aggregation — the scale path
-  (map-side combine, one shuffle on conv_id, whole-stage codegen).
-- ``conv_rollup_grouped``: ``groupBy().applyInPandas`` — the
-  grouped-map pattern for rollups that genuinely need per-group
-  imperative logic (the reference's arrival-order weighbridge
-  loading/unloading slotting is exactly this shape). Kept
-  result-identical to the native path and asserted so in tests; use
-  it only when the logic stops being expressible as aggregates.
+Rollups are native conditional aggregation (map-side combine, one
+shuffle on conv_id, whole-stage codegen). Even the reference's
+arrival-order weighbridge slotting needs no per-group imperative code:
+``transaction_pivot`` does it with a running window counter plus
+conditional aggregates.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-ROLLUP_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("n_turns", IntegerType()),
-        StructField("n_user", IntegerType()),
-        StructField("n_assistant", IntegerType()),
-        StructField("n_tool", IntegerType()),
-        StructField("first_role", StringType()),
-        StructField("last_role", StringType()),
-        StructField("total_chars", LongType()),
-    ]
-)
 
 
 def conv_rollup(transcripts: DataFrame) -> DataFrame:
@@ -81,36 +55,6 @@ def sft_pairs(transcripts: DataFrame) -> DataFrame:
         F.col("turn_idx").alias("response_turn_idx"),
         F.col("prev_text").alias("prompt"),
         F.col("text").alias("response"),
-    )
-
-
-def conv_rollup_grouped(transcripts: DataFrame) -> DataFrame:
-    """Grouped-map (applyInPandas) version: per-conversation pandas
-    frame in turn order → one output row. Arrow-batched; one shuffle."""
-
-    def roll(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx")
-        roles = pdf["role"]
-        lens = pdf["text"].str.len()
-        # match native sum(length(text)): nulls skipped, all-null → NULL
-        total_chars = int(lens.sum()) if lens.notna().any() else None
-        return pd.DataFrame(
-            {
-                "conv_id": [pdf["conv_id"].iloc[0]],
-                "n_turns": [len(pdf)],
-                "n_user": [int((roles == "user").sum())],
-                "n_assistant": [int((roles == "assistant").sum())],
-                "n_tool": [int((roles == "tool").sum())],
-                "first_role": [roles.iloc[0]],
-                "last_role": [roles.iloc[-1]],
-                "total_chars": [total_chars],
-            }
-        )
-
-    return (
-        transcripts.select("conv_id", "turn_idx", "role", "text")
-        .groupBy("conv_id")
-        .applyInPandas(roll, ROLLUP_SCHEMA)
     )
 
 

@@ -49,7 +49,7 @@ corpus-preparation operations the north brief adds.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.functions.text import token_count, tokens
@@ -304,6 +304,13 @@ def cap_drop_stats(
     )
 
 
+def _clamped_weight(w: Column, max_weight: int) -> Column:
+    """``w`` clamped to [1, max_weight]; a NULL weight counts as 1
+    (``least`` skips NULLs, so without the coalesce it would clamp to
+    max_weight and get the highest inclusion odds)."""
+    return F.greatest(F.lit(1), F.least(F.coalesce(w, F.lit(1)), F.lit(max_weight)))
+
+
 def weighted_sample(
     df: DataFrame,
     k: int = 20,
@@ -322,8 +329,9 @@ def weighted_sample(
     uniforms (CDF x^w both ways), so the key here is
     ``max_{i=1..w} md5int(id|i)`` — pure md5 + integer compare, no
     pow/ln whose 1-ulp libm differences could flip ranks between
-    engines. Weights clamp to [1, max_weight]; the key loop is O(w)
-    md5 calls inside one map-side projection.
+    engines. Weights clamp to [1, max_weight] and a NULL weight counts
+    as 1; the key loop is O(w) md5 calls inside one map-side
+    projection.
 
     Scale shape: the only wide operation is the per-group top-k
     window — one shuffle on ``group_col`` followed by Spark's
@@ -346,9 +354,7 @@ def weighted_sample(
     md5 calls per row)."""
     from pyspark.sql import Window
 
-    w_clamped = F.greatest(
-        F.lit(1), F.least(F.col(weight_col).cast("int"), F.lit(max_weight))
-    )
+    w_clamped = _clamped_weight(F.col(weight_col).cast("int"), max_weight)
     key = F.array_max(
         F.transform(
             F.sequence(F.lit(1), w_clamped),
@@ -402,7 +408,7 @@ def weighted_sample_clamp_stats(
     verbatim, so the accounting can never drift from the behavior it
     reports on."""
     w = F.col(weight_col).cast("int")
-    clamped = F.greatest(F.lit(1), F.least(w, F.lit(max_weight)))
+    clamped = _clamped_weight(w, max_weight)
     return df.agg(
         F.lit(name).alias("cap_name"),
         F.lit(max_weight).cast("int").alias("cap_value"),
@@ -677,8 +683,8 @@ def snapshot_diff(
     Shape: each side collapses to (id, source, md5 fingerprint) at
     scan time — the full-outer join shuffles key-sized rows, never
     text — then one per-source conditional aggregation. At 100 TB,
-    bucket both snapshot tables by id (sources/bucketing.py) and the
-    join becomes a shuffle-free zip of co-located partitions.
+    bucket both snapshot tables by id (``bucketBy`` + ``saveAsTable``)
+    and the join becomes a shuffle-free zip of co-located partitions.
 
     Output (source, n_added, n_removed, n_changed, n_unchanged)."""
     o = old.select(

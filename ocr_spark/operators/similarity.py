@@ -455,8 +455,8 @@ def ivf_topk_seeded(
     centroids are the first ``n_cells`` vectors themselves (no Lloyd
     iterations) — a standard cheap IVF variant whose every step is a
     deterministic closed-form expression, so the DuckDB oracle can run
-    the identical algorithm end-to-end (the k-means variant
-    ``ivf_topk`` stays rows-only + recall-gated: MLlib isn't SQL).
+    the identical algorithm end-to-end (k-means cells would need MLlib,
+    which isn't SQL).
 
     Scale shape: centroids are collected driver-side (n_cells×dim
     floats — metadata at any corpus scale, exactly like a deployed IVF
@@ -504,15 +504,7 @@ def ivf_topk_seeded(
     q_cells = _queries(emb, n_queries).crossJoin(cent_df).select(
         "q_id", "q_emb", F.posexplode(darr("q_emb")).alias("cell", "dist")
     )
-    return _probe_topk(q_cells, assigned, n_probe, k, dim)
-
-
-def _probe_topk(
-    q_cells: DataFrame, assigned: DataFrame, n_probe: int, k: int, dim: int
-) -> DataFrame:
-    """The IVF search step: keep each query's ``n_probe`` nearest cells
-    from (q_id, q_emb, cell, dist) — ties to the lower cell — join them
-    to the (vec_id, embedding, cell) assignment and rank the top ``k``."""
+    # keep each query's n_probe nearest cells (ties to the lower cell)
     w_probe = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("cell").asc())
     probed = (
         q_cells.withColumn("pr", F.row_number().over(w_probe))
@@ -521,44 +513,3 @@ def _probe_topk(
     )
     cand = probed.join(assigned, "cell").filter(F.col("vec_id") != F.col("q_id"))
     return _rank_topk(cand, k, dim)
-
-
-def ivf_topk(
-    emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 3,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    dim: int = EMB_DIM,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: k-means cells + probe the
-    ``n_probe`` nearest cells per query, exact cosine inside them.
-
-    Scale path: the corpus is scanned once to assign cells (model
-    broadcast by MLlib); per query only ~n_probe/n_cells of the corpus
-    is ranked — the candidate join is an equi-join on cell id, so
-    shuffle is bounded by candidate volume, never O(Q×N). Centroids
-    (n_cells × dim floats) live on the driver: metadata-sized at any
-    corpus scale. Deterministic for a fixed seed and input.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = emb.withColumn("features", array_to_vector(F.col("embedding").cast("array<double>")))
-    model = KMeans(k=n_cells, seed=42, featuresCol="features", predictionCol="cell").fit(vecs)
-    assigned = model.transform(vecs).select("vec_id", "embedding", "cell")
-
-    # query → n_probe nearest cells (driver-side centroid math; tiny)
-    centroids = [list(map(float, c)) for c in model.clusterCenters()]
-    spark = emb.sparkSession
-    cent_rows = [(ci, [float(x) for x in c]) for ci, c in enumerate(centroids)]
-    cent_df = spark.createDataFrame(cent_rows, "cell int, centroid array<double>")
-    q_cell_dist = _queries(assigned, n_queries).crossJoin(F.broadcast(cent_df)).withColumn(
-        "dist",
-        F.expr(
-            " + ".join(
-                f"pow(CAST(q_emb[{i}] AS DOUBLE) - centroid[{i}], 2)" for i in range(dim)
-            )
-        ),
-    )
-    return _probe_topk(q_cell_dist, assigned, n_probe, k, dim)

@@ -586,11 +586,9 @@ SPARK_QUERIES: dict[str, _Query] = {
         _emb, S.cosine_neardup_lsh, threshold=0.3, bits=8, n_bands=8, max_bucket=256
     ),
     "label_centroids": _on(_emb, S.label_centroid_count),
-    # IVF on the driver surface runs the seeded closed-form quantizer, so
-    # the DuckDB oracle runs the identical algorithm; ivf_topk is the
-    # wider probe (6 of 16 cells). The MLlib k-means quantizer
-    # (S.ivf_topk) stays a library API: clustering isn't SQL-expressible,
-    # so the recall test in tests/test_similarity.py gates it instead.
+    # IVF runs the seeded closed-form quantizer, so the DuckDB oracle
+    # runs the identical algorithm; ivf_topk is the wider probe (6 of
+    # 16 cells).
     "ivf_topk": _on(_emb, S.ivf_topk_seeded, n_queries=10, k=3, n_probe=6),
     "ivf_topk_seeded": _on(_emb, S.ivf_topk_seeded, n_queries=10, k=3, n_probe=4),
     # multimodal
@@ -1619,9 +1617,8 @@ SELECT q_id AS vec_id, label AS predicted_label, CAST(votes AS BIGINT) AS votes
 FROM p WHERE pr = 1
 """,
     # seeded IVF: identical algorithm both engines (cell = argmin over
-    # the first-16-vector centroids, same fold order). The driver
-    # surface 'ivf_topk' is the same quantizer at probe width 6 (the
-    # MLlib k-means variant is library-only: clustering isn't SQL).
+    # the first-16-vector centroids, same fold order). 'ivf_topk' is
+    # the same quantizer at probe width 6.
     "ivf_topk": _ivf_seeded_sql(n_probe=6),
     "ivf_topk_seeded": _ivf_seeded_sql(n_probe=4),
     "label_centroids": """
@@ -1849,7 +1846,7 @@ FROM k
     "weighted_sample": """
 WITH wts AS (
   SELECT doc_id, source,
-    greatest(1, least(CAST(1 + floor(length(text) / 512) AS INT), 16)) AS weight
+    greatest(1, least(coalesce(CAST(1 + floor(length(text) / 512) AS INT), 1), 16)) AS weight
   FROM documents
 ),
 keyed AS (
@@ -1880,7 +1877,7 @@ SELECT 'weighted_sample_max_weight' AS cap_name,
   CAST(sum(CASE WHEN w IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_weight,
   CAST(max(w) AS BIGINT) AS max_weight_seen,
   CAST(sum(w) AS BIGINT) AS weight_mass_raw,
-  CAST(sum(greatest(1, least(w, 16))) AS BIGINT) AS weight_mass_clamped
+  CAST(sum(greatest(1, least(coalesce(w, 1), 16))) AS BIGINT) AS weight_mass_clamped
 FROM w
 """,
     # same winnowing-fps CTE as winnow_overlap and the same shingle

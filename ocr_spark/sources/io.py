@@ -9,6 +9,10 @@ paths: path-vs-identifier picks the surface by name shape, and
 identifier writes branch on a one-time classloader probe for the
 Iceberg runtime (plans/session.iceberg_runtime_available) — never a
 try/except at task time.
+
+The report exports (S7 CSV, S8 PDF) have no wrapper here: their data
+is the ``transaction_pivot`` driver query, written with Spark's own
+``df.write.csv``.
 """
 
 from __future__ import annotations
@@ -75,15 +79,6 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     return {n: load_table(spark, sf_dir, n) for n in (names or TESTDATA_TABLES)}
 
 
-def write_csv_report(df: DataFrame, dest: str, single_file: bool = True) -> None:
-    """CSV report sink (SURVEY S7 — ``docOcrWeb/src/download.jsx:153-286``):
-    quoting/escaping handled by Spark's writer. ``single_file`` mirrors
-    the reference's one-file export via coalesce(1) — only for
-    report-sized extracts; never for table-scale output."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", True).option("quoteAll", False).csv(dest)
-
-
 class SchemaMismatch(ValueError):
     pass
 
@@ -101,101 +96,3 @@ def validate_input_schema(df: DataFrame, required: dict[str, str]) -> None:
             problems.append(f"column {col} is {actual[col]}, expected {typ}")
     if problems:
         raise SchemaMismatch("; ".join(problems))
-
-
-def write_jsonl(df: DataFrame, dest: str, mode: str = "overwrite") -> None:
-    """JSONL sink — the interchange format of training-data pipelines
-    (one JSON object per line; Spark's json writer IS line-delimited).
-    Partition-parallel: one file per task, no coalesce — at corpus
-    scale the shard-per-partition layout is the point, downstream
-    loaders glob the directory."""
-    df.write.mode(mode).json(dest)
-
-
-def read_jsonl(spark: SparkSession, source: str, schema: str | None = None) -> DataFrame:
-    """JSONL source. Pass an explicit DDL ``schema`` at scale —
-    omitting it makes Spark run a full inference pre-pass over the
-    data (a second scan of 100 TB); with a schema the read is a single
-    streaming pass with column pruning."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(source)
-
-
-def write_transaction_report(pivot_df: DataFrame, dest: str) -> None:
-    """Transaction report sink (SURVEY S8's DATA content — the
-    reference renders the same per-transaction wide rows into a styled
-    PDF, ``download.jsx:288-501``; presentation is out of scope, the
-    rows are identical): one CSV row per conversation from the
-    transaction pivot, ordered by conv_id for a stable report."""
-    write_csv_report(pivot_df.orderBy("conv_id"), dest)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 256,
-    min_files: int = 1,
-) -> dict:
-    """Small-file compaction — the table-maintenance pass every
-    long-running ingest needs (streaming microbatches and per-shard
-    resume output accumulate files far below the HDFS/S3-efficient
-    block size; a 100 TB table of 1 MB files is a metadata DoS on the
-    NameNode/object store AND a task-granularity disaster: one scan
-    task per tiny file).
-
-    Rewrites ``path`` in place to ceil(bytes / target_file_mb) files
-    via a staging directory + a two-rename swap (write staging →
-    move old aside → move staging in → delete old). Each rename is
-    atomic, but the PAIR is not: between them the live path briefly
-    does not exist, so a concurrent reader can hit FileNotFoundError
-    (it never sees a partial MIX — retry-on-missing is the reader
-    contract, same as an Iceberg commit retry). A crash between the
-    renames strands the data at ``<path>.compact_old``; this function
-    recovers that automatically at entry (restore ``.compact_old`` to
-    the live path if the live path is gone, discard it if the swap
-    had completed), so re-running after any crash converges. On
-    Iceberg this is `rewrite_data_files`; this is the plain-parquet
-    form for the job's output directories.
-
-    Returns {files_before, files_after, bytes} for lineage/metrics.
-    Content is preserved exactly (same rows; file grouping changes)."""
-    import math
-    import shutil
-
-    def _parts(p: str) -> list[str]:
-        return [
-            os.path.join(p, f)
-            for f in os.listdir(p)
-            if f.endswith(".parquet") and not f.startswith(".")
-        ]
-
-    live = path.rstrip("/")
-    prior_old = live + ".compact_old"
-    if os.path.exists(prior_old):
-        if not os.path.exists(live):
-            # crashed between the two renames: the old set IS the data
-            os.replace(prior_old, live)
-        else:
-            # crashed after the swap, before cleanup: old set superseded
-            shutil.rmtree(prior_old, ignore_errors=True)
-
-    before = _parts(path)
-    total_bytes = sum(os.path.getsize(f) for f in before)
-    n_out = max(min_files, math.ceil(total_bytes / (target_file_mb * (1 << 20))))
-    staging = path.rstrip("/") + ".compact_staging"
-    old = path.rstrip("/") + ".compact_old"
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    # coalesce, not repartition: compaction must not pay a shuffle —
-    # it only narrows the output file count
-    spark.read.parquet(path).coalesce(n_out).write.mode("overwrite").parquet(staging)
-    os.replace(path.rstrip("/"), old)
-    os.replace(staging, path.rstrip("/"))
-    shutil.rmtree(old, ignore_errors=True)
-    return {
-        "files_before": len(before),
-        "files_after": len(_parts(path)),
-        "bytes": total_bytes,
-    }

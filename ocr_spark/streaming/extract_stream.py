@@ -218,10 +218,10 @@ def incremental_dedup_batch_fn(
     buckets is ≤256 strings — driver metadata, like the IVF centroid
     fetch). As epochs accumulate, rebase the index
     periodically: rewrite ``spark.read.parquet(index_dir)`` into
-    epoch=0 of a FRESH directory and point the job there (do NOT run
-    ``compact_parquet`` on the live root — flattening the ``epoch=``
-    layout would defeat the marker scheme and mix partitioned with
-    flat files).
+    epoch=0 of a FRESH directory and point the job there (never
+    compact the live root in place — flattening the ``epoch=`` layout
+    would defeat the marker scheme and mix partitioned with flat
+    files).
     """
     import os
     import re

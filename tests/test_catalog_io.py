@@ -46,30 +46,6 @@ def test_identifier_roundtrip_via_session_catalog(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
-def test_jsonl_roundtrip_sft_pairs(spark, transcripts_path, tmp_path):
-    """SFT pairs export to JSONL (the training-data interchange format)
-    and read back with an explicit schema — no inference pre-pass, and
-    the values survive the round trip exactly."""
-    import os
-
-    from ocr_spark.operators.conversation import sft_pairs
-    from ocr_spark.sources.io import read_jsonl, write_jsonl
-
-    pairs = sft_pairs(spark.read.parquet(transcripts_path))
-    dest = str(tmp_path / "sft.jsonl")
-    write_jsonl(pairs, dest)
-    # line-delimited shards, one per task — no coalesce
-    shards = [f for f in os.listdir(dest) if f.startswith("part-")]
-    assert shards
-    with open(os.path.join(dest, shards[0])) as fh:
-        first = fh.readline()
-    assert first.startswith("{") and first.rstrip().endswith("}")
-
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in pairs.schema)
-    back = read_jsonl(spark, dest, schema=schema)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, pairs.collect()))
-
-
 def test_identifier_roundtrip_via_iceberg(spark, tmp_path):
     """The production branch: an atomic Iceberg snapshot commit via
     writeTo().createOrReplace(). Runs only where the runtime JAR is on
@@ -84,22 +60,3 @@ def test_identifier_roundtrip_via_iceberg(spark, tmp_path):
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
-
-def test_compact_parquet_preserves_rows_and_reduces_files(spark, tmp_path):
-    """Compaction: many tiny files → few, rows byte-identical, old
-    directory cleaned up, metrics accurate."""
-    from ocr_spark.sources.io import compact_parquet, load_table
-
-    src = load_table(spark, "/root/testdata/sf0.001", "events")
-    path = str(tmp_path / "events_tiny")
-    src.repartition(24).write.parquet(path)
-    import os as _os
-
-    before = {tuple(r) for r in spark.read.parquet(path).collect()}
-    stats = compact_parquet(spark, path, target_file_mb=256)
-    assert stats["files_before"] == 24
-    assert stats["files_after"] == 1  # tiny table → one file
-    after = {tuple(r) for r in spark.read.parquet(path).collect()}
-    assert after == before
-    assert not _os.path.exists(path + ".compact_old")
-    assert not _os.path.exists(path + ".compact_staging")

@@ -321,6 +321,51 @@ def test_weighted_sample_bias_determinism_and_small_groups(spark):
     assert sorted(r[3] for r in tiny) == [1, 2, 3, 4, 5]
 
 
+def test_weighted_sample_null_weight_counts_as_one(spark, tmp_path):
+    """A NULL-text document has a NULL raw weight. Both engines must
+    clamp it to 1, not to max_weight, in the sampler and in its clamp
+    audit (``least`` skips NULLs, so an unguarded clamp gives it the
+    highest inclusion odds)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_spark.queries import ORACLE_SQL, SPARK_QUERIES
+
+    docs = str(tmp_path / "documents.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([1, 2, 3, 4], pa.int64()),
+                "text": [None, "a" * 600, "short", "b" * 9000],
+                "source": ["web", "web", "web", "code"],
+            }
+        ),
+        docs,
+    )
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
+
+    got = {}
+    for name in ("weighted_sample", "weighted_sample_clamp"):
+        df = SPARK_QUERIES[name](spark, str(tmp_path))
+        cols = sorted(df.columns)
+        spark_rows = sorted(tuple(r[c] for c in cols) for r in df.collect())
+        rel = con.sql(ORACLE_SQL[name])
+        assert sorted(rel.columns) == cols
+        duck_rows = sorted(
+            tuple(r[rel.columns.index(c)] for c in cols) for r in rel.fetchall()
+        )
+        assert spark_rows == duck_rows, name
+        got[name] = [dict(zip(cols, r)) for r in spark_rows]
+
+    weights = {r["doc_id"]: r["weight"] for r in got["weighted_sample"]}
+    assert weights == {1: 1, 2: 2, 3: 1, 4: 16}
+    (stats,) = got["weighted_sample_clamp"]
+    assert stats["n_null_weight"] == 1
+    assert stats["weight_mass_clamped"] == 1 + 2 + 1 + 16
+
+
 def test_pmi_collocations_count_invariants(spark):
     """Every reported pair satisfies the count lattice (c_x >= c_xy,
     c_y >= c_xy >= min_count), ranks are contiguous from 1, and the
@@ -471,7 +516,7 @@ def test_case_fold_parity_contract(spark):
 def test_weighted_sample_clamp_stats_quantifies_distortion(spark):
     """The accounting row reports exactly what the [1, max_weight]
     clamp does: high/low/NULL clamp counts, heaviest raw weight, and
-    the redistributed weight mass (raw 40+16+0(NULL→skip)+(-3→1)+5)."""
+    the redistributed weight mass (raw 40+16+0(NULL→skip)-3+5)."""
     from ocr_spark.operators.corpus import weighted_sample_clamp_stats
 
     df = spark.createDataFrame(
@@ -485,5 +530,5 @@ def test_weighted_sample_clamp_stats_quantifies_distortion(spark):
     assert r["n_null_weight"] == 1
     assert r["max_weight_seen"] == 40
     assert r["weight_mass_raw"] == 40 + 16 - 3 + 5
-    # clamped: 16 + 16 + (NULL: least(NULL,16)=16 both engines) + 1 + 5
-    assert r["weight_mass_clamped"] == 16 + 16 + 16 + 1 + 5
+    # clamped: 16 + 16 + (NULL counts as 1, as in the sampler) + 1 + 5
+    assert r["weight_mass_clamped"] == 16 + 16 + 1 + 1 + 5

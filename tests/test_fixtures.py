@@ -42,12 +42,8 @@ def test_tool_column_rule():
     assert df.loc[df.role == "tool", "tool"].str.match(r"tool\d").all()
 
 
-def test_csv_sink_and_schema_validation(spark, transcripts_path, tmp_path):
-    from ocr_spark.sources.io import (
-        SchemaMismatch,
-        validate_input_schema,
-        write_csv_report,
-    )
+def test_input_schema_validation(spark, transcripts_path):
+    from ocr_spark.sources.io import SchemaMismatch, validate_input_schema
     import pytest as _pytest
 
     df = spark.read.parquet(transcripts_path)
@@ -59,9 +55,3 @@ def test_csv_sink_and_schema_validation(spark, transcripts_path, tmp_path):
         validate_input_schema(df, {"conv_id": "string", "nope": "int"})
     with _pytest.raises(SchemaMismatch):
         validate_input_schema(df, {"turn_idx": "string"})
-
-    out = str(tmp_path / "report")
-    write_csv_report(df.select("conv_id", "turn_idx").limit(50), out)
-    back = spark.read.option("header", True).csv(out)
-    assert back.count() == 50
-    assert back.columns == ["conv_id", "turn_idx"]

@@ -308,18 +308,6 @@ def test_spark_submit_cli(transcripts_path, tmp_path):
     assert os.path.exists(os.path.join(ckpt, "shard-00000.done"))
 
 
-def test_conv_rollup_native_equals_grouped(spark, transcripts_path):
-    from ocr_spark.job import ensure_package_shipped
-    from ocr_spark.operators.conversation import conv_rollup, conv_rollup_grouped
-
-    ensure_package_shipped(spark)
-    df = spark.read.parquet(transcripts_path)
-    a = {r["conv_id"]: tuple(r)[1:] for r in conv_rollup(df).collect()}
-    b = {r["conv_id"]: tuple(r)[1:] for r in conv_rollup_grouped(df).collect()}
-    assert a == b
-    assert len(a) == df.select("conv_id").distinct().count()
-
-
 def test_fields_udf_and_transaction_pivot(spark, transcripts_path):
     from ocr_spark.core.fields import extract_fields
     from ocr_spark.job import ensure_package_shipped, extract_transcripts
@@ -420,37 +408,6 @@ def test_duplicate_components_resolves_clusters(spark):
         5: (5, True), 6: (5, False),
         7: (7, True),
     }
-
-
-def test_transaction_report_sink(spark, transcripts_path, tmp_path):
-    """S8 report content: one ordered CSV row per conversation with
-    the pivot's full column set, loading/unloading slots included."""
-    import csv
-    import glob
-
-    from ocr_spark.job import ensure_package_shipped, extract_transcripts
-    from ocr_spark.operators.conversation import transaction_pivot
-    from ocr_spark.sources.io import write_transaction_report
-    from ocr_spark.udfs import fields_udf
-
-    ensure_package_shipped(spark)
-    ext = extract_transcripts(spark.read.parquet(transcripts_path)).filter(
-        F.col("kind") == "pdf_like"
-    )
-    piv = transaction_pivot(
-        ext.select(
-            "conv_id", "turn_idx", fields_udf(F.col("extracted_text")).alias("f")
-        ).select("conv_id", "turn_idx", "f.*")
-    )
-    dest = str(tmp_path / "report")
-    write_transaction_report(piv, dest)
-    (csv_file,) = glob.glob(dest + "/*.csv")
-    with open(csv_file, newline="") as f:
-        rows = list(csv.DictReader(f))
-    assert len(rows) == piv.count()
-    assert "loading_net_weight" in rows[0] and "n_weighbridge" in rows[0]
-    convs = [r["conv_id"] for r in rows]
-    assert convs == sorted(convs)
 
 
 def test_range_join_binned_bin_boundaries(spark):
@@ -621,47 +578,3 @@ def test_conv_dedup_finds_duplicate_conversations(spark):
     got = {r["conv_id"]: (r["n_dup_convs"], r["is_keeper"]) for r in conv_dedup(df).collect()}
     assert got == {"a": (2, True), "b": (2, False), "c": (1, True)}
 
-
-def test_pdf_report_sink(spark, transcripts_path, tmp_path):
-    """S8 full: the transaction pivot renders to a structurally valid
-    PDF — header/trailer, exact xref byte offsets, page count, and the
-    report cells present (escaped) in the content streams."""
-    import re
-
-    from ocr_spark.job import ensure_package_shipped, extract_transcripts
-    from ocr_spark.operators.conversation import transaction_pivot
-    from ocr_spark.sources.pdf import render_pdf, write_pdf_report
-    from ocr_spark.udfs import fields_udf
-
-    ensure_package_shipped(spark)
-    ext = extract_transcripts(spark.read.parquet(transcripts_path)).filter(
-        F.col("kind") == "pdf_like"
-    )
-    piv = transaction_pivot(
-        ext.select(
-            "conv_id", "turn_idx", fields_udf(F.col("extracted_text")).alias("f")
-        ).select("conv_id", "turn_idx", "f.*")
-    )
-    dest = str(tmp_path / "report.pdf")
-    n = write_pdf_report(piv, dest, columns=["conv_id", "category", "n_docs"])
-    raw = open(dest, "rb").read()
-    assert raw.startswith(b"%PDF-1.4\n") and raw.endswith(b"%%EOF\n")
-    assert n == piv.count()
-    # every conv_id cell appears in a content stream
-    for r in piv.select("conv_id").limit(5).collect():
-        assert r["conv_id"].encode("latin-1") in raw
-    # xref offsets are exact: each entry points at "N 0 obj"
-    xref_pos = int(raw.rsplit(b"startxref\n", 1)[1].split(b"\n", 1)[0])
-    assert raw[xref_pos : xref_pos + 4] == b"xref"
-    entries = re.findall(rb"(\d{10}) 00000 n", raw[xref_pos:])
-    for num, off in enumerate(entries, start=1):
-        assert raw[int(off) :].startswith(b"%d 0 obj" % num)
-    # pagination: 200 lines -> 3 pages at 76 lines/page
-    multi = render_pdf([f"line {i} (with) \\parens" for i in range(200)])
-    assert b"/Count 3" in multi
-    assert rb"line 7 \(with\) \\parens" in multi
-    # table-scale refusal
-    import pytest
-
-    with pytest.raises(ValueError, match="max_rows"):
-        write_pdf_report(piv, dest, max_rows=1)

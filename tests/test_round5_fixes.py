@@ -1,21 +1,16 @@
 """Round-5 ADVICE fixes, pinned.
 
-1. compact_parquet recovers a leftover .compact_old at entry (crash
-   between the two swap renames no longer strands the table).
-2. incremental_dedup_batch_fn refuses object-store paths loudly
+1. incremental_dedup_batch_fn refuses object-store paths loudly
    (os.listdir-based marker discovery would silently see an empty
    index and emit all-novel verdicts).
-3. skew_report surfaces NULL keys under the '<null>' sentinel — in
+2. skew_report surfaces NULL keys under the '<null>' sentinel — in
    parity with the DuckDB oracle shape (Spark↔DuckDB NULL ordering
    and concat-drop semantics would otherwise diverge).
-4. conv_dedup coalesces NULL turn text to '' on both engines (NULL
+3. conv_dedup coalesces NULL turn text to '' on both engines (NULL
    text ≡ empty turn; all-NULL conversations group, not NULL-fp).
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 import duckdb
 import pytest
@@ -23,46 +18,7 @@ from pyspark.sql import functions as F
 
 
 # ------------------------------------------------------------------
-# 1. compact_parquet crash recovery
-# ------------------------------------------------------------------
-
-
-def _rows(spark, path):
-    return sorted(r["v"] for r in spark.read.parquet(path).collect())
-
-
-def test_compact_recovers_mid_swap_crash(spark, tmp_path):
-    from ocr_spark.sources.io import compact_parquet
-
-    path = str(tmp_path / "t")
-    spark.range(100).withColumnRenamed("id", "v").repartition(6).write.parquet(path)
-    # simulate a crash BETWEEN the two renames: live path gone, data
-    # stranded at .compact_old
-    os.replace(path, path + ".compact_old")
-    assert not os.path.exists(path)
-    stats = compact_parquet(spark, path, target_file_mb=256)
-    assert stats["files_after"] == 1
-    assert _rows(spark, path) == list(range(100))
-    assert not os.path.exists(path + ".compact_old")
-
-
-def test_compact_discards_stale_old_after_completed_swap(spark, tmp_path):
-    from ocr_spark.sources.io import compact_parquet
-
-    path = str(tmp_path / "t")
-    spark.range(50).withColumnRenamed("id", "v").repartition(4).write.parquet(path)
-    # simulate a crash AFTER the swap, before cleanup: live path is the
-    # new data, .compact_old is a superseded copy (different content so
-    # a wrong recovery direction would be caught)
-    stale = path + ".compact_old"
-    spark.range(5).withColumnRenamed("id", "v").write.parquet(stale)
-    compact_parquet(spark, path, target_file_mb=256)
-    assert _rows(spark, path) == list(range(50))
-    assert not os.path.exists(stale)
-
-
-# ------------------------------------------------------------------
-# 2. incremental_dedup_batch_fn path validation
+# 1. incremental_dedup_batch_fn path validation
 # ------------------------------------------------------------------
 
 
@@ -88,7 +44,7 @@ def test_incremental_dedup_accepts_local_paths(spark, tmp_path):
 
 
 # ------------------------------------------------------------------
-# 3. skew_report NULL-key sentinel (Spark ↔ DuckDB parity)
+# 2. skew_report NULL-key sentinel (Spark ↔ DuckDB parity)
 # ------------------------------------------------------------------
 
 
@@ -121,7 +77,7 @@ FROM top
 
 
 # ------------------------------------------------------------------
-# 4. conv_dedup NULL-text contract (Spark ↔ DuckDB parity)
+# 3. conv_dedup NULL-text contract (Spark ↔ DuckDB parity)
 # ------------------------------------------------------------------
 
 
