@@ -916,9 +916,8 @@ def incremental_dedup(
     into the verdict join. Everything that does shuffle is (id,
     32-hex) batch rows only, never text, on one shared fp key. At
     100 TB additionally keep the index bucketed by fp
-    (``bucketBy`` + ``saveAsTable``; the streaming twin's epoch layout
-    does exactly this) so even the index SCAN reads only the buckets the
-    batch can hit.
+    (``bucketBy`` + ``saveAsTable``) so even the index SCAN reads only
+    the buckets the batch can hit.
 
     ``index_fps`` needs one column ``fp``. Output
     (id_col, fp, verdict) for EVERY batch row. ``id_col`` should be

@@ -31,15 +31,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("payload", BinaryType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
-
 FEATURE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),

@@ -459,9 +459,8 @@ def sessionize_events(
 ) -> DataFrame:
     """Gap-based sessionization: a new session starts when the gap to
     the previous event exceeds ``gap_minutes`` (lag + cumulative-sum
-    windows — the batch formulation of session windows; the streaming
-    twin is ``F.session_window``). Output: per-user session count and
-    largest session size."""
+    windows — the batch formulation of session windows). Output:
+    per-user session count and largest session size."""
     ev = load_table(spark, sf_dir, "events")
     # microsecond-precision epoch on BOTH sides (DuckDB twin uses
     # epoch_us): whole-second truncation would disagree with the

@@ -298,7 +298,6 @@ def cms_top_frequencies(
 
 BLOOM_BITS = 65536  # 2^16 bits in 2048 32-bit-per-word slots
 BLOOM_K = 2  # two salted md5-derived hash positions per key
-_WORD_BITS = 32  # 32 bits per int64 word keeps every mask positive
 
 
 def _bloom_pos(key_str_col, i: int, n_bits: int) -> "F.Column":

@@ -14,19 +14,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
-)
-
-# BASELINE.json input_hint
-TRANSCRIPT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("turn_idx", IntegerType()),
-        StructField("role", StringType()),
-        StructField("text", StringType()),
-        StructField("tool", StringType()),
-        StructField("ts", TimestampType()),
-    ]
 )
 
 SPAN_TYPE = StructType(

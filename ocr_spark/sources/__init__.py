@@ -2,9 +2,8 @@
 
 from ocr_spark.sources.io import (
     load_table,
-    load_tables,
     read_input,
     write_output,
 )
 
-__all__ = ["read_input", "write_output", "load_table", "load_tables"]
+__all__ = ["read_input", "write_output", "load_table"]

@@ -412,11 +412,10 @@ def test_incremental_dedup_fp_keyed_only(spark):
     protocol's big side — is never shuffled: its membership probe is a
     BroadcastHashJoin LeftSemi against the broadcast batch-fp set
     (map-side filter of the index scan; bucketing the index by fp
-    additionally bounds the scan itself — the streaming twin's epoch
-    layout). The scan reads nothing beyond (doc_id, text). Crucially
-    NO Window operator: first-wins is groupBy(min)+join so a hot
-    fingerprint is map-side combined and AQE-skew-splittable instead
-    of pinning a single window reducer."""
+    additionally bounds the scan itself). The scan reads nothing
+    beyond (doc_id, text). Crucially NO Window operator: first-wins is
+    groupBy(min)+join so a hot fingerprint is map-side combined and
+    AQE-skew-splittable instead of pinning a single window reducer."""
     from ocr_spark.queries import q_incremental_dedup
 
     df = q_incremental_dedup(spark, SF_DIR)

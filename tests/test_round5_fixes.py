@@ -1,50 +1,20 @@
 """Round-5 ADVICE fixes, pinned.
 
-1. incremental_dedup_batch_fn refuses object-store paths loudly
-   (os.listdir-based marker discovery would silently see an empty
-   index and emit all-novel verdicts).
-2. skew_report surfaces NULL keys under the '<null>' sentinel — in
+1. skew_report surfaces NULL keys under the '<null>' sentinel — in
    parity with the DuckDB oracle shape (Spark↔DuckDB NULL ordering
    and concat-drop semantics would otherwise diverge).
-3. conv_dedup coalesces NULL turn text to '' on both engines (NULL
+2. conv_dedup coalesces NULL turn text to '' on both engines (NULL
    text ≡ empty turn; all-NULL conversations group, not NULL-fp).
 """
 
 from __future__ import annotations
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 
 # ------------------------------------------------------------------
-# 1. incremental_dedup_batch_fn path validation
-# ------------------------------------------------------------------
-
-
-@pytest.mark.parametrize(
-    "bad", ["s3://bucket/index", "hdfs://nn:8020/index", "file:///tmp/index"]
-)
-def test_incremental_dedup_rejects_remote_paths(spark, tmp_path, bad):
-    from ocr_spark.streaming.extract_stream import incremental_dedup_batch_fn
-
-    with pytest.raises(ValueError, match="LOCAL"):
-        incremental_dedup_batch_fn(spark, bad, str(tmp_path / "out"))
-    with pytest.raises(ValueError, match="LOCAL"):
-        incremental_dedup_batch_fn(spark, str(tmp_path / "idx"), bad)
-
-
-def test_incremental_dedup_accepts_local_paths(spark, tmp_path):
-    from ocr_spark.streaming.extract_stream import incremental_dedup_batch_fn
-
-    fn = incremental_dedup_batch_fn(
-        spark, str(tmp_path / "idx"), str(tmp_path / "out")
-    )
-    assert callable(fn)
-
-
-# ------------------------------------------------------------------
-# 2. skew_report NULL-key sentinel (Spark ↔ DuckDB parity)
+# 1. skew_report NULL-key sentinel (Spark ↔ DuckDB parity)
 # ------------------------------------------------------------------
 
 
@@ -77,7 +47,7 @@ FROM top
 
 
 # ------------------------------------------------------------------
-# 3. conv_dedup NULL-text contract (Spark ↔ DuckDB parity)
+# 2. conv_dedup NULL-text contract (Spark ↔ DuckDB parity)
 # ------------------------------------------------------------------
 
 
