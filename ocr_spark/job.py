@@ -20,8 +20,9 @@ Design for the 10^12-turn target:
   run as concurrent Spark jobs, just enough of them to fill the
   default parallelism with tasks (a Python task has a fixed start-up
   cost, so task count, not turn count, sets a small shard's cost).
-  Each shard writes its output + lineage manifest, then an atomic
-  ``.done`` marker, in shard order; a re-run skips marked shards and
+  The next pending shard starts as soon as any shard finishes. Each
+  shard writes its output + lineage manifest, then an atomic ``.done``
+  marker as soon as it commits; a re-run skips marked shards and
   overwrites (idempotent) any half-written shard directory — strictly
   stronger than the reference's lose-on-disconnect queue (``OCR API
   2/api.py:167-178``). On a real cluster the markers live on the
@@ -41,11 +42,12 @@ from __future__ import annotations
 import logging
 import os
 import tempfile
+import threading
 import time
 import uuid
 import zipfile
 from collections import deque
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
 import pandas as pd
 from pyspark import TaskContext
@@ -64,7 +66,7 @@ if __package__ in (None, ""):
 
 from ocr_spark.schema import MANIFEST_SCHEMA, OUTPUT_SCHEMA
 from ocr_spark.sources.io import read_input, validate_input_schema, write_output
-from ocr_spark.udfs import extract_batch, extract_udf
+from ocr_spark.udfs import drop_dead_importers, extract_batch, extract_udf
 
 DEFAULT_SALT_THRESHOLD = 2000  # max turns per (conv_id, salt) shuffle key
 
@@ -154,6 +156,7 @@ def _make_runner(acc, shard: int):
     """mapInPandas runner: extract + accumulate per-task lineage."""
 
     def run(batches):
+        drop_dead_importers()
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         attempt = ctx.attemptNumber() if ctx is not None else 0
@@ -223,6 +226,38 @@ def _marker_path(checkpoint_dir: str, shard: int) -> str:
     return os.path.join(checkpoint_dir, f"shard-{shard:05d}.done")
 
 
+def _run_shards(pending, width: int, run_one, mark) -> list[int]:
+    """Run ``run_one(shard)`` for each pending shard, at most ``width``
+    at a time, refilling a slot as soon as any shard finishes, and
+    ``mark(shard)`` each one as it finishes. If a shard or its mark
+    fails, those in flight finish (and are marked), none starts, and
+    the first error is re-raised. Returns the shards run, sorted."""
+    todo = deque(pending)
+    running: dict = {}  # future -> shard
+    ran: list[int] = []
+    errors: list[BaseException] = []
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        while running or (todo and not errors):
+            while todo and not errors and len(running) < width:
+                shard = todo.popleft()
+                running[pool.submit(run_one, shard)] = shard
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                shard = running.pop(fut)
+                try:
+                    fut.result()
+                    mark(shard)
+                except Exception as exc:  # drain the rest, then re-raise
+                    errors.append(exc)
+                    continue
+                ran.append(shard)
+    if errors:
+        for err in errors[1:]:
+            log.error("shard job failed after an earlier failure", exc_info=err)
+        raise errors[0]
+    return sorted(ran)
+
+
 def run_extraction(
     spark: SparkSession,
     input_source: str,
@@ -237,12 +272,12 @@ def run_extraction(
     ``num_partitions`` (P, default twice the default parallelism) is
     the run's total task count: each of the ``n_shards`` shard jobs
     repartitions into ``ceil(P / n_shards)`` tasks. Pending shards run
-    as concurrent Spark jobs, as many at once as it takes to fill the
-    default parallelism with tasks. Shard k's ``.done`` marker is
-    written only after its output and manifest are committed and
-    every pending shard below k is marked. If a shard fails, shards
-    already running finish, none starts, and the error is re-raised:
-    a resume redoes the first unmarked shard and those after it.
+    as concurrent Spark jobs, at most ``width`` at once (enough to fill
+    the default parallelism with tasks); the next starts as soon as any
+    finishes. Shard k's ``.done`` marker is written as soon as its
+    output and manifest are committed. If a shard fails, shards already
+    running finish and are marked, none starts, and the error is
+    re-raised: a resume redoes at most the ``width`` shards in flight.
 
     Output layout: ``output_dir/shard=K/*.parquet`` (+ the lineage
     manifest under ``output_dir/_manifest/shard=K`` — underscore
@@ -265,8 +300,12 @@ def run_extraction(
         src, {"conv_id": "string", "turn_idx": "int", "text": "string"}
     )
     src = src.select("conv_id", "turn_idx", "text")
+    acc_lock = threading.Lock()
 
-    def run_shard(shard: int, acc) -> None:
+    def run_shard(shard: int) -> None:
+        # pyspark hands out accumulator ids without a lock
+        with acc_lock:
+            acc = spark.sparkContext.accumulator([], _ListAccumulator())
         part = src
         if n_shards > 1:
             part = src.filter(
@@ -280,47 +319,24 @@ def run_extraction(
             list(acc.value), os.path.join(output_dir, "_manifest", f"shard={shard}")
         )
 
+    def mark(shard: int) -> None:
+        if checkpoint_dir:
+            marker = _marker_path(checkpoint_dir, shard)
+            tmp = f"{marker}.{uuid.uuid4().hex}.tmp"
+            with open(tmp, "w") as f:
+                f.write("done\n")
+            os.replace(tmp, marker)  # atomic
+
     done = [
         s for s in range(n_shards)
         if checkpoint_dir and os.path.exists(_marker_path(checkpoint_dir, s))
     ]
     pending = [s for s in range(n_shards) if s not in done]
-    ran: list[int] = []
-    # A shard starts only within `width` of the lowest unmarked one, so
-    # a lost driver redoes at most `width` shards and at most `width`
-    # shards' manifest rows sit in driver memory.
+    # At most `width` shards are in flight, so a lost driver redoes at
+    # most `width` shards.
     width = max(1, min(len(pending), -(-parallelism // per_shard)))
     target = inheritable_thread_target(spark)(run_shard)
-    todo = deque(pending)
-    window: deque = deque()  # (shard, future), in shard order
-    with ThreadPoolExecutor(max_workers=width) as pool:
-        try:
-            while window or todo:
-                while todo and len(window) < width and not any(
-                    f.done() and f.exception() is not None for _, f in window
-                ):
-                    shard = todo.popleft()
-                    # accumulators are made here, in one thread: pyspark
-                    # hands out accumulator ids without a lock
-                    acc = spark.sparkContext.accumulator([], _ListAccumulator())
-                    window.append((shard, pool.submit(target, shard, acc)))
-                shard, fut = window.popleft()
-                fut.result()
-                ran.append(shard)
-                if checkpoint_dir:
-                    marker = _marker_path(checkpoint_dir, shard)
-                    tmp = f"{marker}.{uuid.uuid4().hex}.tmp"
-                    with open(tmp, "w") as f:
-                        f.write("done\n")
-                    os.replace(tmp, marker)  # atomic
-        finally:
-            # let in-flight shards finish (their output stays unmarked)
-            # and read every future, so none of their errors is lost
-            for _, f in window:
-                try:
-                    f.result()
-                except Exception:
-                    log.exception("shard job failed after an earlier failure")
+    ran = _run_shards(pending, width, target, mark)
     return {"shards_run": ran, "shards_skipped": done, "n_shards": n_shards}
 
 

@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ocr_spark.udfs import drop_dead_importers
+
 FEATURE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -82,6 +84,7 @@ def extract_media_features(media: DataFrame) -> DataFrame:
     stage, schema-stable output, no shuffle."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_dead_importers()
         for pdf in batches:
             dims = [
                 _fake_decode(_as_bytes(p), m)
@@ -130,6 +133,7 @@ def resize_images(media: DataFrame, max_side: int = 64) -> DataFrame:
     relevant rows (predicate applied before the Python boundary)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_dead_importers()
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
@@ -164,6 +168,7 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     payload (a real frame decoder replaces this wholesale anyway)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_dead_importers()
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):

@@ -11,11 +11,27 @@ processes one document per network round-trip (``OCR API
 
 from __future__ import annotations
 
+import sys
+import zipimport
+
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
 from ocr_spark.core.extract import extract_turn
 from ocr_spark.schema import EXTRACT_STRUCT
+
+
+def drop_dead_importers() -> None:
+    """Worker hygiene; call first in every Python entry point. pyspark
+    runs ``importlib.invalidate_caches()`` before each task, which makes
+    every zipimporter re-read its zip: the spark-core jar (no ``.py``)
+    and one per imported ``pyspark.zip`` subpackage (docs/SCALE.md §1).
+    Drop those, so only the top-level zips are re-read; the path hooks
+    rebuild a dropped subdirectory importer from zipimport's cache."""
+    sys.path[:] = [p for p in sys.path if not str(p).endswith(".jar")]
+    for key, f in list(sys.path_importer_cache.items()):
+        if isinstance(f, zipimport.zipimporter) and (f.archive.endswith(".jar") or f.prefix):
+            del sys.path_importer_cache[key]
 
 
 def extract_batch(text: pd.Series) -> pd.DataFrame:
@@ -48,6 +64,7 @@ def extract_batch(text: pd.Series) -> pd.DataFrame:
 @pandas_udf(EXTRACT_STRUCT)
 def extract_udf(text: pd.Series) -> pd.DataFrame:
     """Scalar Arrow UDF: text → extraction struct."""
+    drop_dead_importers()
     return extract_batch(text)
 
 
@@ -75,4 +92,5 @@ def _fields_struct_type():
 @pandas_udf(_fields_struct_type())
 def fields_udf(text: pd.Series) -> pd.DataFrame:
     """Scalar Arrow UDF: reconstructed text → document fields."""
+    drop_dead_importers()
     return fields_batch(text)
