@@ -1,25 +1,1 @@
 """Scalar/text function library (SURVEY.md §2.3 generalized)."""
-
-from ocr_spark.functions.text import (
-    char_count,
-    fingerprint,
-    lang_id,
-    quality_score,
-    stopword_hits,
-    token_count,
-    token_estimate,
-    tokens,
-    word_shingles,
-)
-
-__all__ = [
-    "tokens",
-    "token_count",
-    "token_estimate",
-    "char_count",
-    "stopword_hits",
-    "lang_id",
-    "quality_score",
-    "fingerprint",
-    "word_shingles",
-]

@@ -314,10 +314,17 @@ def run_extraction(
         salted = with_skew_salt(part, salt_threshold)
         balanced = salted.repartition(per_shard, "conv_id", "salt")
         out = balanced.mapInPandas(_make_runner(acc, shard), OUTPUT_SCHEMA)
-        write_output(out, os.path.join(output_dir, f"shard={shard}"))
-        _write_manifest_local(
-            list(acc.value), os.path.join(output_dir, "_manifest", f"shard={shard}")
-        )
+        try:
+            write_output(out, os.path.join(output_dir, f"shard={shard}"))
+            _write_manifest_local(
+                list(acc.value), os.path.join(output_dir, "_manifest", f"shard={shard}")
+            )
+        finally:
+            # pyspark never unregisters an accumulator, so the driver
+            # would keep every shard's rows for the SparkContext's life.
+            # Empty it instead of popping it: a late task update for a
+            # popped id raises KeyError in pyspark's update handler.
+            acc.value = []
 
     def mark(shard: int) -> None:
         if checkpoint_dir:
@@ -368,7 +375,7 @@ def read_manifest(
     )
 
 
-def _cli_main(argv: list[str] | None = None) -> None:
+def _cli_main() -> None:
     """spark-submit entry point (SURVEY.md §3.4):
 
         spark-submit --py-files ocr_spark.zip ocr_spark/job.py \
@@ -394,7 +401,7 @@ def _cli_main(argv: list[str] | None = None) -> None:
         "(default: twice the default parallelism)",
     )
     ap.add_argument("--salt-threshold", type=int, default=DEFAULT_SALT_THRESHOLD)
-    args = ap.parse_args(argv)
+    args = ap.parse_args()
 
     spark = SparkSession.builder.appName("ocr_spark-extract").getOrCreate()
     summary = run_extraction(

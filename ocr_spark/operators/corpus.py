@@ -53,20 +53,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.functions.text import token_count, tokens
-from ocr_spark.operators.dedup import shingle_arrays
+from ocr_spark.operators.dedup import SHINGLE_N, shingle_arrays
 
 DEFAULT_EVAL_MOD = 41  # doc_id % mod == 0 designates the held-out eval docs
+OVERLAP_MAX_SOURCES = 10  # sources per shingle before cross_source_overlap drops it
+_MAX_WEIGHT = 16  # weighted_sample clamps weights to [1, _MAX_WEIGHT]
 
 
-def decontaminate(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    eval_mod: int = DEFAULT_EVAL_MOD,
-) -> DataFrame:
+def decontaminate(df: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag training docs sharing any word
-    n-gram with the held-out eval slice (docs with id % eval_mod == 0
+    n-gram with the held-out eval slice (docs with id % DEFAULT_EVAL_MOD == 0
     stand in for a benchmark table; swap the filter for a real eval
     DataFrame in production).
 
@@ -74,17 +70,17 @@ def decontaminate(
     docs. Map-only over the corpus: the eval shingle set is one
     broadcast array row, matched per-doc with ``array_intersect`` —
     the corpus-side shingle stream is never exploded or shuffled."""
-    sh = shingle_arrays(df, text_col, id_col, n)
+    sh = shingle_arrays(df)
     eval_arr = (
-        sh.filter(F.col("id") % eval_mod == 0)
+        sh.filter(F.col("id") % DEFAULT_EVAL_MOD == 0)
         .select(F.explode("sh_arr").alias("s"))
         .agg(F.array_sort(F.collect_set("s")).alias("eval_sh"))
     )
     return (
-        sh.filter(F.col("id") % eval_mod != 0)
+        sh.filter(F.col("id") % DEFAULT_EVAL_MOD != 0)
         .crossJoin(F.broadcast(eval_arr))
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.size(F.array_intersect("sh_arr", "eval_sh"))
             .cast("long")
             .alias("n_eval_shingles"),
@@ -95,20 +91,15 @@ def decontaminate(
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Top-k salient terms per document by tf·(N/df) — the tf-idf
     ranking with a ratio idf (no log), keeping the score a single
     IEEE division + multiplication of exact integers so both engines
     agree bit-for-bit. Ranking ties break on the term string.
 
     Output (doc_id, term, tf, dfreq, score, rn)."""
-    toks = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term"))
-    tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    toks = df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("term"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("dfreq"))
     n_docs = df.agg(F.count("*").alias("n_docs"))
     from pyspark.sql.window import Window
@@ -118,20 +109,16 @@ def tfidf_top_terms(
         .crossJoin(F.broadcast(n_docs))
         .withColumn("score", F.col("tf") * (F.col("n_docs") / F.col("dfreq")))
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select(id_col, "term", "tf", "dfreq", "score", "rn")
+        .select("doc_id", "term", "tf", "dfreq", "score", "rn")
     )
 
 
-def length_percentiles(
-    df: DataFrame,
-    text_col: str = "text",
-    group_col: str = "lang",
-) -> DataFrame:
-    """Exact p50/p90 of per-doc token counts per group, histogram
+def length_percentiles(df: DataFrame) -> DataFrame:
+    """Exact p50/p90 of per-doc token counts per language, histogram
     formulation: aggregate to (group, n_tokens) counts (map-side
     combine → shuffle carries #distinct values, not #docs), cumulative
     window over that tiny histogram, then integer-rank pick
@@ -139,11 +126,11 @@ def length_percentiles(
     reaches ceil(p·total), expressed as cum·10 >= p·10·total — no
     floats anywhere).
 
-    Output (group, n_docs, p50_tokens, p90_tokens)."""
+    Output (lang, n_docs, p50_tokens, p90_tokens)."""
     from pyspark.sql.window import Window
 
     hist = (
-        df.select(F.col(group_col).alias("grp"), token_count(F.col(text_col)).alias("n"))
+        df.select(F.col("lang").alias("grp"), token_count(F.col("text")).alias("n"))
         .groupBy("grp", "n")
         .agg(F.count("*").alias("cnt"))
     )
@@ -159,15 +146,15 @@ def length_percentiles(
         F.min(F.when(F.col("cum") * 10 >= F.col("total") * 9, F.col("n"))).alias(
             "p90_tokens"
         ),
-    ).withColumnRenamed("grp", group_col)
+    ).withColumnRenamed("grp", "lang")
 
 
-def vocab_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def vocab_stats(df: DataFrame) -> DataFrame:
     """Corpus vocabulary statistics in one row: total token count,
     distinct term count, hapax legomena count and fraction. One
     partially-aggregated shuffle on term, then a scalar re-agg of the
     vocabulary-sized table."""
-    toks = df.select(F.explode(tokens(F.col(text_col))).alias("term"))
+    toks = df.select(F.explode(tokens(F.col("text"))).alias("term"))
     counts = toks.groupBy("term").agg(F.count("*").alias("c"))
     return counts.agg(
         F.sum("c").alias("n_total_tokens"),
@@ -179,12 +166,7 @@ def vocab_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def source_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    source_col: str = "source",
-    lang_col: str = "lang",
-) -> DataFrame:
+def source_stats(df: DataFrame) -> DataFrame:
     """Per-source corpus diagnostics: doc count, distinct languages,
     distinct normalized texts (exact-dup check), majority language and
     its fraction, mean chars. The (source, lang) aggregate and the
@@ -200,25 +182,25 @@ def source_stats(
 
     from ocr_spark.functions.text import fingerprint
 
-    per_lang = df.groupBy(source_col, lang_col).agg(F.count("*").alias("cnt"))
-    w = Window.partitionBy(source_col).orderBy(F.desc("cnt"), F.asc(lang_col))
+    per_lang = df.groupBy("source", "lang").agg(F.count("*").alias("cnt"))
+    w = Window.partitionBy("source").orderBy(F.desc("cnt"), F.asc("lang"))
     top = (
         per_lang.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
-            source_col,
-            F.col(lang_col).alias("top_lang"),
+            "source",
+            F.col("lang").alias("top_lang"),
             F.col("cnt").alias("top_cnt"),
         )
     )
-    tot = df.groupBy(source_col).agg(
+    tot = df.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.countDistinct(lang_col).alias("n_langs"),
-        F.countDistinct(fingerprint(F.col(text_col))).alias("n_unique_texts"),
+        F.countDistinct("lang").alias("n_langs"),
+        F.countDistinct(fingerprint(F.col("text"))).alias("n_unique_texts"),
         F.sum("n_chars").alias("sum_chars"),
     )
-    return tot.join(F.broadcast(top), source_col).select(
-        source_col,
+    return tot.join(F.broadcast(top), "source").select(
+        "source",
         "n_docs",
         "n_langs",
         "n_unique_texts",
@@ -228,22 +210,17 @@ def source_stats(
     )
 
 
-def cross_source_overlap(
-    df: DataFrame,
-    text_col: str = "text",
-    source_col: str = "source",
-    n: int = 3,
-    max_sources: int = 10,
-) -> DataFrame:
+def cross_source_overlap(df: DataFrame) -> DataFrame:
     """Cross-source contamination matrix: for each source pair, the
     number of distinct word n-gram shingles both emit — the mirror /
     syndicated-content detector for multi-crawl corpora. Inverted-index
     shape: distinct (shingle, source) postings, a count window on the
-    same key bounds each posting list to ``max_sources`` (shingles in
-    nearly every source carry no dup signal and would dominate the
-    join fan-out — the identical skew guard as LSH's ``max_bucket``),
+    same key bounds each posting list to ``OVERLAP_MAX_SOURCES``
+    (shingles in nearly every source carry no dup signal and would
+    dominate the join fan-out — the identical skew guard as
+    ``LSH_MAX_BUCKET``),
     then a per-shingle self-join grouped to the #sources²-sized matrix.
-    Per-shingle fan-out is hard-capped at C(max_sources, 2); the
+    Per-shingle fan-out is hard-capped at C(OVERLAP_MAX_SOURCES, 2); the
     discard is quantified by ``cap_drop_stats`` (surfaced as the
     ``cap_drop_accounting`` driver query), not silent.
 
@@ -254,15 +231,15 @@ def cross_source_overlap(
 
     postings = (
         df.select(
-            F.col(source_col).alias("src"),
-            F.explode(word_shingles(F.col(text_col), n)).alias("s"),
+            F.col("source").alias("src"),
+            F.explode(word_shingles(F.col("text"), SHINGLE_N)).alias("s"),
         )
         .distinct()
     )
     w = Window.partitionBy("s")
     bounded = (
         postings.withColumn("n_src", F.count(F.lit(1)).over(w))
-        .filter((F.col("n_src") >= 2) & (F.col("n_src") <= max_sources))
+        .filter((F.col("n_src") >= 2) & (F.col("n_src") <= OVERLAP_MAX_SOURCES))
         .select("src", "s")
     )
     return (
@@ -281,8 +258,8 @@ def cap_drop_stats(
 ) -> DataFrame:
     """Drop accounting for a posting-cap skew guard: ONE summary row
     quantifying exactly what a ``count(key) <= cap`` filter discards —
-    the caps themselves (winnow_overlap_pairs' ``max_postings``,
-    cross_source_overlap's ``max_sources``, LSH ``max_bucket``) trade
+    the caps themselves (``WINNOW_MAX_POSTINGS``,
+    ``OVERLAP_MAX_SOURCES``, ``LSH_MAX_BUCKET``) trade
     recall for a hard join-fan-out bound, and a user sizing that trade
     at THEIR corpus scale needs the discard quantified, not silent.
 
@@ -311,14 +288,7 @@ def _clamped_weight(w: Column, max_weight: int) -> Column:
     return F.greatest(F.lit(1), F.least(F.coalesce(w, F.lit(1)), F.lit(max_weight)))
 
 
-def weighted_sample(
-    df: DataFrame,
-    k: int = 20,
-    weight_col: str = "weight",
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    max_weight: int = 16,
-) -> DataFrame:
+def weighted_sample(df: DataFrame, k: int = 20) -> DataFrame:
     """Deterministic weighted sampling without replacement, k per
     group (Efraimidis & Spirakis 2006, A-ES): rank items by a key
     whose distribution is u^(1/w) and keep the top k — each item's
@@ -329,12 +299,12 @@ def weighted_sample(
     uniforms (CDF x^w both ways), so the key here is
     ``max_{i=1..w} md5int(id|i)`` — pure md5 + integer compare, no
     pow/ln whose 1-ulp libm differences could flip ranks between
-    engines. Weights clamp to [1, max_weight] and a NULL weight counts
+    engines. Weights clamp to [1, _MAX_WEIGHT] and a NULL weight counts
     as 1; the key loop is O(w) md5 calls inside one map-side
     projection.
 
     Scale shape: the only wide operation is the per-group top-k
-    window — one shuffle on ``group_col`` followed by Spark's
+    window — one shuffle on ``source`` followed by Spark's
     external (spill-safe) sort; sampling keys are uniform by
     construction, so there is no key-space skew, and group skew is
     absorbed by the sort's spilling rather than any collect. This is
@@ -343,18 +313,18 @@ def weighted_sample(
     sample is reproducible and append-stable (new rows never perturb
     existing keys — only the top-k cut line moves).
 
-    Output (id_col, group_col, weight, sample_rank), sample_rank in
-    [1, k] by descending key (ties break on id). The [1, max_weight]
+    Output (doc_id, source, weight, sample_rank), sample_rank in
+    [1, k] by descending key (ties break on id). The [1, _MAX_WEIGHT]
     clamp is a silent distortion for any corpus whose weights exceed
     it (a weight-40 doc samples like weight-16, 2.5× under its nominal
     inclusion odds) — ``weighted_sample_clamp_stats`` is the
     cap_drop_stats-style accounting row that quantifies exactly that
-    at the caller's corpus scale; raise max_weight when its
-    weight_mass delta matters (the key loop cost grows O(max_weight)
+    at the caller's corpus scale; raise _MAX_WEIGHT when its
+    weight_mass delta matters (the key loop cost grows O(_MAX_WEIGHT)
     md5 calls per row)."""
     from pyspark.sql import Window
 
-    w_clamped = _clamped_weight(F.col(weight_col).cast("int"), max_weight)
+    w_clamped = _clamped_weight(F.col("weight").cast("int"), _MAX_WEIGHT)
     key = F.array_max(
         F.transform(
             F.sequence(F.lit(1), w_clamped),
@@ -363,7 +333,7 @@ def weighted_sample(
                     F.md5(
                         F.concat(
                             F.lit("wrs|"),
-                            F.col(id_col).cast("string"),
+                            F.col("doc_id").cast("string"),
                             F.lit("|"),
                             i.cast("string"),
                         )
@@ -377,24 +347,19 @@ def weighted_sample(
         )
     )
     keyed = df.select(
-        id_col, group_col, w_clamped.alias("weight"), key.alias("_key")
+        "doc_id", "source", w_clamped.alias("weight"), key.alias("_key")
     )
-    win = Window.partitionBy(group_col).orderBy(
-        F.col("_key").desc(), F.col(id_col).asc()
+    win = Window.partitionBy("source").orderBy(
+        F.col("_key").desc(), F.col("doc_id").asc()
     )
     return (
         keyed.withColumn("sample_rank", F.row_number().over(win))
         .filter(F.col("sample_rank") <= k)
-        .select(id_col, group_col, "weight", "sample_rank")
+        .select("doc_id", "source", "weight", "sample_rank")
     )
 
 
-def weighted_sample_clamp_stats(
-    df: DataFrame,
-    weight_col: str = "weight",
-    max_weight: int = 16,
-    name: str = "weighted_sample_max_weight",
-) -> DataFrame:
+def weighted_sample_clamp_stats(df: DataFrame, max_weight: int = _MAX_WEIGHT) -> DataFrame:
     """Accounting row for ``weighted_sample``'s [1, max_weight] weight
     clamp — the quantified answer to "does the cap change MY sampling
     distribution?": how many rows clamp (high and low), the heaviest
@@ -407,10 +372,10 @@ def weighted_sample_clamp_stats(
     The clamped-mass term uses the sampler's own clamp expression
     verbatim, so the accounting can never drift from the behavior it
     reports on."""
-    w = F.col(weight_col).cast("int")
+    w = F.col("weight").cast("int")
     clamped = _clamped_weight(w, max_weight)
     return df.agg(
-        F.lit(name).alias("cap_name"),
+        F.lit("weighted_sample_max_weight").alias("cap_name"),
         F.lit(max_weight).cast("int").alias("cap_value"),
         F.count(F.lit(1)).alias("n_rows"),
         F.sum((w > max_weight).cast("int")).cast("long").alias("n_clamped_high"),
@@ -422,13 +387,7 @@ def weighted_sample_clamp_stats(
     )
 
 
-def boilerplate_scrub(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seg_tokens: int = 4,
-    max_docs: int = 4,
-) -> DataFrame:
+def boilerplate_scrub(df: DataFrame, seg_tokens: int = 4, max_docs: int = 4) -> DataFrame:
     """CCNet-style corpus-frequency boilerplate removal: segments that
     recur across more than ``max_docs`` documents (headers, footers,
     navigation chrome, license blurbs) are dropped from every document
@@ -450,20 +409,20 @@ def boilerplate_scrub(
     from ocr_spark.functions.text import chunk_structs
 
     segs = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
-            chunk_structs(F.col(text_col), window=seg_tokens, stride=seg_tokens)
+            chunk_structs(F.col("text"), window=seg_tokens, stride=seg_tokens)
         ).alias("pos", "c"),
-    ).select(id_col, "pos", F.col("c.chunk_text").alias("seg"))
+    ).select("doc_id", "pos", F.col("c.chunk_text").alias("seg"))
     boiler = (
         segs.groupBy("seg")
-        .agg(F.countDistinct(id_col).alias("nd"))
+        .agg(F.countDistinct("doc_id").alias("nd"))
         .filter(F.col("nd") > max_docs)
         .select("seg", F.lit(1).alias("bp"))
     )
     marked = segs.join(F.broadcast(boiler), "seg", "left")
     kept = F.col("bp").isNull()
-    return marked.groupBy(id_col).agg(
+    return marked.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.when(kept, F.struct("pos", "seg")))),
@@ -476,16 +435,10 @@ def boilerplate_scrub(
     )
 
 
-def pack_sequences(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shard_col: str = "source",
-    capacity: int = 256,
-) -> DataFrame:
+def pack_sequences(df: DataFrame, capacity: int = 256) -> DataFrame:
     """Concat-and-split sequence packing — the pretraining step that
     lays documents end-to-end into fixed ``capacity``-token context
-    windows. Packing is per shard (``shard_col``), the way a real
+    windows. Packing is per shard (``source``), the way a real
     pipeline packs within an input shard so 1000 executors pack 1000
     shards with zero coordination: a running token total over
     (shard, doc_id) order places each document at an absolute stream
@@ -504,17 +457,17 @@ def pack_sequences(
     from ocr_spark.functions.text import token_count
 
     w = (
-        Window.partitionBy(shard_col)
-        .orderBy(id_col)
+        Window.partitionBy("source")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    nt = token_count(F.col(text_col)).cast("long")
+    nt = token_count(F.col("text")).cast("long")
     return (
-        df.select(shard_col, id_col, nt.alias("n_tokens"))
+        df.select("source", "doc_id", nt.alias("n_tokens"))
         .withColumn("cum", F.sum(F.col("n_tokens")).over(w))
         .select(
-            shard_col,
-            id_col,
+            "source",
+            "doc_id",
             "n_tokens",
             F.expr(f"(cum - n_tokens) DIV {capacity}").alias("bin_id"),
             ((F.col("cum") - F.col("n_tokens")) % capacity).alias("bin_offset"),
@@ -525,7 +478,7 @@ def pack_sequences(
     )
 
 
-def script_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
+def script_profile(df: DataFrame) -> DataFrame:
     """Per-document character-class profile — the script/charset gate of
     a multilingual ingest (mojibake and wrong-charset docs show up as
     high ``other_frac``). Counts are length deltas under global
@@ -537,11 +490,12 @@ def script_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     Output (doc_id, n_chars, latin_frac, digit_frac, space_frac,
     other_frac)."""
 
+    t = F.col("text")
+
     def cnt(cls: str):
-        t = F.col(text_col)
         return F.length(t) - F.length(F.regexp_replace(t, cls, ""))
 
-    n = F.length(F.col(text_col))
+    n = F.length(t)
     latin, digit, space = cnt("[A-Za-z]"), cnt("[0-9]"), cnt("[ \\t\\n\\r]")
     return df.select(
         "doc_id",
@@ -553,7 +507,7 @@ def script_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def source_mixture_weights(df: DataFrame, text_col: str = "text") -> DataFrame:
+def source_mixture_weights(df: DataFrame) -> DataFrame:
     """Temperature-based source mixing (multilingual-pretraining
     sampling, α = 0.5): raw source probabilities p_i from exact token
     counts, smoothed w_i = sqrt(p_i) (sqrt, unlike pow, is IEEE
@@ -572,7 +526,7 @@ def source_mixture_weights(df: DataFrame, text_col: str = "text") -> DataFrame:
     from ocr_spark.functions.text import token_count
 
     s = df.groupBy("source").agg(
-        F.sum(token_count(F.col(text_col)).cast("long")).alias("n_tokens")
+        F.sum(token_count(F.col("text")).cast("long")).alias("n_tokens")
     )
     tot = s.agg(F.sum("n_tokens").alias("t"))
     r = s.crossJoin(F.broadcast(tot)).withColumn(
@@ -596,9 +550,7 @@ def source_mixture_weights(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def unigram_commonness(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def unigram_commonness(df: DataFrame) -> DataFrame:
     """Corpus-LM quality signal (the CCNet/KenLM perplexity filter's
     exact-arithmetic analogue): score each document by the mean
     document-frequency of its token occurrences — gibberish and
@@ -619,19 +571,19 @@ def unigram_commonness(
     Output (doc_id, n_tokens, sum_df, common_score)."""
     from ocr_spark.functions.text import tokens
 
-    tok = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("t"))
-    dfreq = tok.groupBy("t").agg(F.countDistinct(id_col).alias("dfc"))
+    tok = df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("t"))
+    dfreq = tok.groupBy("t").agg(F.countDistinct("doc_id").alias("dfc"))
     n_docs = df.agg(F.count(F.lit(1)).alias("nd"))
     return (
         tok.join(F.broadcast(dfreq), "t")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum("dfc").alias("sum_df"),
         )
         .crossJoin(F.broadcast(n_docs))
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             "sum_df",
             F.round(
@@ -641,12 +593,7 @@ def unigram_commonness(
     )
 
 
-def train_val_split(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    train_lt: int = 230,
-    val_lt: int = 243,
-) -> DataFrame:
+def train_val_split(df: DataFrame) -> DataFrame:
     """Deterministic hash split: first md5 byte of the id buckets each
     doc into train (<230 ≈ 90%), val (<243 ≈ 5%), test (rest ≈ 5%).
     Stateless and engine-portable — the same doc lands in the same
@@ -654,27 +601,21 @@ def train_val_split(
     property a distributed split assignment needs; no sampling RNG).
 
     Output (doc_id, bucket, split)."""
-    b = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 2), 16, 10).cast(
+    b = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10).cast(
         "int"
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         b.alias("bucket"),
     ).withColumn(
         "split",
-        F.when(F.col("bucket") < train_lt, "train")
-        .when(F.col("bucket") < val_lt, "val")
+        F.when(F.col("bucket") < 230, "train")
+        .when(F.col("bucket") < 243, "val")
         .otherwise("test"),
     )
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Corpus version diff: per-source added / removed / changed /
     unchanged counts between two snapshots — the CDC primitive an
     iteratively-rebuilt training corpus needs (what changed since the
@@ -688,14 +629,14 @@ def snapshot_diff(
 
     Output (source, n_added, n_removed, n_changed, n_unchanged)."""
     o = old.select(
-        F.col(id_col).alias("id"),
-        F.col(source_col).alias("src_o"),
-        F.md5(F.col(text_col)).alias("fp_o"),
+        F.col("doc_id").alias("id"),
+        F.col("source").alias("src_o"),
+        F.md5(F.col("text")).alias("fp_o"),
     )
     n = new.select(
-        F.col(id_col).alias("id"),
-        F.col(source_col).alias("src_n"),
-        F.md5(F.col(text_col)).alias("fp_n"),
+        F.col("doc_id").alias("id"),
+        F.col("source").alias("src_n"),
+        F.md5(F.col("text")).alias("fp_n"),
     )
     status = (
         F.when(F.col("fp_o").isNull(), "added")
@@ -718,14 +659,9 @@ def snapshot_diff(
     )
 
 
-def materialize_mixture(
-    df: DataFrame,
-    base_rate: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def materialize_mixture(df: DataFrame) -> DataFrame:
     """Turn the temperature mixing WEIGHTS into an actual sampling
-    PASS: per-source keep rate = min(1, base_rate × sample_mult) from
+    PASS: per-source keep rate = min(1, 0.5 × sample_mult) from
     ``source_mixture_weights``, applied as a deterministic Bernoulli
     draw — the doc's md5-derived 32-bit uniform against the rate's
     integer threshold. No RNG state anywhere: any executor, any retry,
@@ -736,22 +672,22 @@ def materialize_mixture(
     is map-only after it.
 
     Output: (id, source, keep_rate, is_kept) for every doc."""
-    w = source_mixture_weights(df, text_col).select("source", "sample_mult")
+    w = source_mixture_weights(df).select("source", "sample_mult")
     u32 = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit("mix|"), F.col(id_col).cast("string"))), 1, 8
+            F.md5(F.concat(F.lit("mix|"), F.col("doc_id").cast("string"))), 1, 8
         ),
         16,
         10,
     ).cast("long")
-    # NO rounding on the rate: base_rate × sample_mult is one IEEE
+    # NO rounding on the rate: 0.5 × sample_mult is one IEEE
     # multiply on a double both engines already hold bit-identically
     # (sample_mult is the round-6 output column) — rounding HERE would
     # re-create exact 7th-decimal ties (0.5 × a 6-dp value), which the
     # engines break differently. One multiply, zero rounds, identical.
-    rate = F.least(F.lit(1.0), F.lit(base_rate) * F.col("sample_mult"))
+    rate = F.least(F.lit(1.0), F.lit(0.5) * F.col("sample_mult"))
     return (
-        df.select(id_col, "source")
+        df.select("doc_id", "source")
         .join(F.broadcast(w), "source")
         .withColumn("keep_rate", rate)
         .withColumn(
@@ -759,16 +695,11 @@ def materialize_mixture(
             u32
             < F.floor(F.col("keep_rate") * F.lit(4294967296.0)).cast("long"),
         )
-        .select(id_col, "source", "keep_rate", "is_kept")
+        .select("doc_id", "source", "keep_rate", "is_kept")
     )
 
 
-def source_top_terms(
-    df: DataFrame,
-    text_col: str = "text",
-    k: int = 5,
-    min_tf: int = 5,
-) -> DataFrame:
+def source_top_terms(df: DataFrame) -> DataFrame:
     """Distinctive terms PER SOURCE by keyness — the relative-frequency
     ratio (tf_s/N_s)/(tf_c/N_c) corpus linguists use to answer "what
     does this source talk about that the rest of the corpus doesn't"
@@ -776,13 +707,13 @@ def source_top_terms(
     Score = one IEEE division of two exact BIGINT cross-products
     (tf_s·N_c and N_s·tf_c — both < 2^53 at any plausible vocab, so
     the doubles are exact) — bit-identical cross-engine, rank ties
-    break on the term string. ``min_tf`` suppresses hapax noise.
+    break on the term string. A tf_s floor of 5 suppresses hapax noise.
 
     Shuffles: one partial-agg on (source, term); the term-marginal and
     source-marginal tables re-aggregate from it (vocab- and
     source-sized) and broadcast back; the top-k window partitions by
-    source over the vocab-bounded scored table."""
-    toks = df.select("source", F.explode(tokens(F.col(text_col))).alias("term"))
+    source over the vocab-bounded scored table; the top 5 are kept."""
+    toks = df.select("source", F.explode(tokens(F.col("text"))).alias("term"))
     tfs = toks.groupBy("source", "term").agg(F.count("*").alias("tf_s"))
     tot_s = tfs.groupBy("source").agg(F.sum("tf_s").alias("n_s"))
     tfc = tfs.groupBy("term").agg(F.sum("tf_s").alias("tf_c"))
@@ -790,7 +721,7 @@ def source_top_terms(
     from pyspark.sql.window import Window
 
     scored = (
-        tfs.filter(F.col("tf_s") >= min_tf)
+        tfs.filter(F.col("tf_s") >= 5)
         .join(F.broadcast(tfc), "term")
         .join(F.broadcast(tot_s), "source")
         .crossJoin(F.broadcast(n_c))
@@ -801,7 +732,7 @@ def source_top_terms(
     w = Window.partitionBy("source").orderBy(F.desc("keyness"), F.asc("term"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= 5)
         .select(
             "source",
             "term",
@@ -813,12 +744,7 @@ def source_top_terms(
     )
 
 
-def pmi_collocations(
-    df: DataFrame,
-    text_col: str = "text",
-    min_count: int = 5,
-    top_n: int = 50,
-) -> DataFrame:
+def pmi_collocations(df: DataFrame, min_count: int = 5, top_n: int = 50) -> DataFrame:
     """Collocation mining: the corpus's most-associated adjacent word
     pairs by pointwise mutual information — the classic phrase
     detector (Church & Hanks 1990; word2vec's phrase pass uses the
@@ -856,7 +782,7 @@ def pmi_collocations(
     """
     from pyspark.sql import Window
 
-    w = tokens(F.col(text_col))
+    w = tokens(F.col("text"))
     pairs = (
         df.select(w.alias("toks"))
         .filter(F.size("toks") >= 2)
@@ -910,12 +836,7 @@ def pmi_collocations(
     )
 
 
-def bpe_merge_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    top_n: int = 30,
-    min_count: int = 5,
-) -> DataFrame:
+def bpe_merge_candidates(df: DataFrame, top_n: int = 30, min_count: int = 5) -> DataFrame:
     """Tokenizer-training primitive: the first BPE merge step's pair
     statistics (Sennrich et al. 2016) — adjacent character-pair counts
     over the corpus, each word's pairs weighted by the word's corpus
@@ -935,7 +856,7 @@ def bpe_merge_candidates(
     from pyspark.sql import Window
 
     vocab = (
-        df.select(F.explode(tokens(F.col(text_col))).alias("word"))
+        df.select(F.explode(tokens(F.col("text"))).alias("word"))
         .filter(F.length("word") >= 2)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("wc"))
@@ -969,11 +890,7 @@ def bpe_merge_candidates(
     )
 
 
-def vocab_growth(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def vocab_growth(df: DataFrame) -> DataFrame:
     """Heaps'-law vocabulary-growth diagnostic: distinct-term and
     token totals for the corpus prefix at 25/50/75/100% of the id
     space — the curve that says whether a corpus is still finding new
@@ -993,8 +910,8 @@ def vocab_growth(
 
     Output (pct, id_threshold, n_docs, n_tokens, n_distinct_terms,
     heaps_ratio) — one row per checkpoint, pct in {25,50,75,100}."""
-    toks = df.select(F.col(id_col).alias("did"), tokens(F.col(text_col)).alias("w"))
-    max_id = df.agg(F.max(F.col(id_col)).alias("mid"))
+    toks = df.select(F.col("doc_id").alias("did"), tokens(F.col("text")).alias("w"))
+    max_id = df.agg(F.max(F.col("doc_id")).alias("mid"))
     first_seen = (
         toks.select("did", F.explode("w").alias("t"))
         .groupBy("t")

@@ -21,7 +21,7 @@ Scale design (the 100 TB story):
   pipelines with the scan); banding turns pair discovery into an
   equi-join on (band, band_hash) — shuffle is O(docs × bands), never O(docs²);
   verification is per-pair array_intersect. Hot buckets are bounded by
-  ``max_bucket`` (skew guard: a bucket with B docs yields B² pairs).
+  ``LSH_MAX_BUCKET`` (skew guard: a bucket with B docs yields B² pairs).
 - **SimHash**: 64-bit signature from per-bit majority vote over token
   hashes; near-dup = equal signature (or equal band for Hamming<k).
 
@@ -40,6 +40,11 @@ from ocr_spark.functions.text import fingerprint, word_shingles
 
 DEFAULT_NUM_HASHES = 8
 DEFAULT_BANDS = 4  # rows per band = num_hashes // bands
+SHINGLE_N = 3  # words per shingle, for every shingle-set operator
+LSH_MAX_BUCKET = 64  # docs per LSH (band, bucket) before it is dropped
+WINNOW_MAX_POSTINGS = 4  # docs per winnowing fingerprint before it is dropped
+_WINNOW_K = 8  # chars per winnowing gram
+_WINNOW_W = 4  # grams per winnowing window
 
 # double-hashing g_i = a + i*b with 60-bit a,b stays under 2^63 only
 # for i <= 7; beyond that Spark's (non-ANSI) BIGINT silently wraps
@@ -134,11 +139,11 @@ def _band_buckets_expr(sh_arr, num_hashes: int, bands: int) -> "F.Column":
     return F.aggregate(pairs, zero, merge, finish)
 
 
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Exact duplicate groups by normalized-text fingerprint.
     Returns (fp, keeper, n_dups); keeper = min id (deterministic)."""
     return (
-        df.select(fingerprint(F.col(text_col)).alias("fp"), F.col(id_col))
+        df.select(fingerprint(F.col("text")).alias("fp"), F.col(id_col))
         .groupBy("fp")
         .agg(
             F.min(id_col).alias("keeper"),
@@ -147,9 +152,7 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def canonical_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def canonical_dedup(df: DataFrame) -> DataFrame:
     """Case/punctuation-insensitive duplicate detection: docs collapse
     to a CANONICAL fingerprint — lowercase, every non-alphanumeric run
     folded to one space, trimmed — before hashing, so trivially-edited
@@ -162,30 +165,28 @@ def canonical_dedup(
     Java∩RE2∩DuckDB-common subset) + one fp-keyed window — shuffle
     carries (id, 32-hex) rows only, same cost as ``dedup_exact``.
 
-    Output (id_col, canon_fp, n_variants, is_keeper) for EVERY doc:
+    Output (doc_id, canon_fp, n_variants, is_keeper) for EVERY doc:
     keeper = min id per group, like every dedup keeper rule here."""
     from pyspark.sql import Window
 
     canon = F.trim(
-        F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]+", " ")
+        F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " ")
     )
-    keyed = df.select(F.col(id_col), F.md5(canon).alias("canon_fp"))
+    keyed = df.select(F.col("doc_id"), F.md5(canon).alias("canon_fp"))
     w = Window.partitionBy("canon_fp")
     return keyed.select(
-        id_col,
+        "doc_id",
         "canon_fp",
         F.count(F.lit(1)).over(w).alias("n_variants"),
-        (F.col(id_col) == F.min(id_col).over(w)).alias("is_keeper"),
+        (F.col("doc_id") == F.min("doc_id").over(w)).alias("is_keeper"),
     )
 
 
-def exploded_shingles(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
+def exploded_shingles(df: DataFrame) -> DataFrame:
     """(id, shingle) pairs, distinct per doc — the inverted-index base."""
     return df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), n)).alias("sh"),
+        F.col("doc_id").alias("id"),
+        F.explode(word_shingles(F.col("text"), SHINGLE_N)).alias("sh"),
     )
 
 
@@ -195,9 +196,6 @@ DEFAULT_MAX_POSTINGS = 256
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     max_postings: int = DEFAULT_MAX_POSTINGS,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (id_a < id_b, jaccard ≥ t).
@@ -208,12 +206,12 @@ def ngram_jaccard_pairs(
     ``max_postings`` bounds the inverted-index fan-out (a shingle in P
     docs yields P² join rows): shingles hotter than the cap are dropped
     from the candidate join — the same skew-guard shape as LSH's
-    ``max_bucket`` and winnowing's posting cap. A dropped shingle still
+    ``LSH_MAX_BUCKET`` and winnowing's posting cap. A dropped shingle still
     counts toward both docs' set sizes, so surviving pairs' Jaccard is
     a (tight) LOWER bound; the denominator stays exact. The default is
     generous — this operator's role is the exact verifier, and a
     3-token shingle shared by >256 docs is boilerplate, not content."""
-    sh = exploded_shingles(df, text_col, id_col, n)
+    sh = exploded_shingles(df)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     postings = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("_p"))
     bounded = sh.join(
@@ -241,24 +239,19 @@ def ngram_jaccard_pairs(
     )
 
 
-def shingle_arrays(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
+def shingle_arrays(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, sh_arr, n_sh): distinct shingles as an array column."""
     return df.select(
         F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), n).alias("sh_arr"),
+        word_shingles(F.col("text"), SHINGLE_N).alias("sh_arr"),
     ).withColumn("n_sh", F.size("sh_arr"))
 
 
-def lsh_candidate_pairs(
-    bucketed: DataFrame,
-    max_bucket: int = 64,
-) -> DataFrame:
+def lsh_candidate_pairs(bucketed: DataFrame) -> DataFrame:
     """Candidate pairs sharing ≥1 LSH band bucket (id_a < id_b,
     distinct), from a (id, buckets array<string>) frame.
 
-    Pair generation is an equi-join on (band, bucket). ``max_bucket``
+    Pair generation is an equi-join on (band, bucket). ``LSH_MAX_BUCKET``
     caps degenerate buckets (boilerplate-heavy corpora) — dropped
     buckets trade recall for a hard bound on join fan-out; at 100 TB
     this is what keeps the stage from quadratic blowup.
@@ -267,7 +260,7 @@ def lsh_candidate_pairs(
         "id", F.posexplode("buckets").alias("band", "bucket")
     )
     counts = buckets.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("n"))
-    small = counts.filter(F.col("n") <= max_bucket).select("band", "bucket")
+    small = counts.filter(F.col("n") <= LSH_MAX_BUCKET).select("band", "bucket")
     bounded = buckets.join(small, ["band", "bucket"])
     return (
         bounded.alias("a")
@@ -283,9 +276,7 @@ def minhash_lsh_dedup(
     threshold: float = 0.5,
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
-    text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
 ) -> DataFrame:
     """MinHash-LSH near-dup pipeline: signatures → banded candidates →
     exact-Jaccard verification of candidates only.
@@ -306,12 +297,10 @@ def minhash_lsh_dedup(
     arr = _materialize_shingles(
         shingle_arrays(
             df.repartition(df.sparkSession.sparkContext.defaultParallelism),
-            text_col,
             id_col,
-            n,
         )
     )
-    # docs with zero shingles (< n tokens) carry the sentinel
+    # docs with zero shingles (< SHINGLE_N tokens) carry the sentinel
     # accumulator: every such doc would hash to the SAME band buckets
     # and become a mutual candidate (the DuckDB twin's list_min gives
     # NULL buckets, which never join). Values still agree either way —
@@ -413,32 +402,24 @@ def _simhash_sig(text_col) -> "F.Column":
     return F.aggregate(hashes, zero, merge, finish)
 
 
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """64-bit SimHash per doc as a 16-hex-char string — the scale path:
     one map-only projection (see ``_simhash_sig``), no shuffle at all.
     Value-identical to the DuckDB oracle ``ORACLE_SQL["simhash_docs"]``
     (asserted in tests/test_plan_shape.py)."""
     return df.select(
-        F.col(id_col).alias("id"), _simhash_sig(F.col(text_col)).alias("simhash")
+        F.col("doc_id").alias("id"), _simhash_sig(F.col("text")).alias("simhash")
     )
 
 
-def winnow_overlap_pairs(
-    df: DataFrame,
-    min_shared: int = 3,
-    max_postings: int = 4,
-    k: int = 8,
-    w: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Passage-copy detection: doc pairs sharing ≥ ``min_shared``
-    winnowing fingerprints (Schleimer et al. §5 — fingerprint overlap
-    finds copied SPANS, where shingle Jaccard only scores whole-doc
-    similarity). ``max_postings`` keeps only rare (discriminative)
+def winnow_overlap_pairs(df: DataFrame) -> DataFrame:
+    """Passage-copy detection: doc pairs sharing ≥ 3 winnowing
+    fingerprints (Schleimer et al. §5 — fingerprint overlap finds
+    copied SPANS, where shingle Jaccard only scores whole-doc
+    similarity). ``WINNOW_MAX_POSTINGS`` keeps only rare (discriminative)
     fingerprints: a fingerprint appearing in many docs is vocabulary,
     not copying, and would blow the inverted-index join up
-    quadratically — the same skew-cap shape as LSH's max_bucket.
+    quadratically — the same skew-cap shape as ``LSH_MAX_BUCKET``.
     What the cap discards is quantified (not silent):
     ``corpus.cap_drop_stats`` over the same fps postings — surfaced as
     the ``cap_drop_accounting`` driver query — reports keys/postings
@@ -449,13 +430,13 @@ def winnow_overlap_pairs(
     (localCheckpoint, call-scoped like minhash's shingle table) so the
     md5-dense rolling-hash pass runs once, not three times."""
     fps = _materialize_shingles(
-        winnow_docs(df, k, w, text_col, id_col).select(
+        winnow_docs(df).select(
             "doc_id", F.explode("fps").alias("fp")
         )
     )
     counts = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("c"))
     bounded = fps.join(
-        counts.filter(F.col("c") <= max_postings).select("fp"), "fp"
+        counts.filter(F.col("c") <= WINNOW_MAX_POSTINGS).select("fp"), "fp"
     )
     return (
         bounded.alias("a")
@@ -465,7 +446,7 @@ def winnow_overlap_pairs(
             F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
         )
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= 3)
     )
 
 
@@ -559,10 +540,11 @@ def duplicate_components(
     )
 
 
-def _winnow_minima(text_col, k: int, w: int) -> "F.Column":
+def _winnow_minima(text_col) -> "F.Column":
     """Per-doc winnowing minima as ONE scalar expression: md5 of every
-    k-char gram, then the minimum of each full w-window, in window
-    order (empty when the doc has fewer than w grams).
+    ``_WINNOW_K``-char gram, then the minimum of each full
+    ``_WINNOW_W``-gram window, in window order (empty when the doc has
+    fewer than ``_WINNOW_W`` grams).
 
     The gram-hash array is computed once and then BOUND as a lambda
     variable by wrapping it in a single-element array fed to
@@ -572,6 +554,7 @@ def _winnow_minima(text_col, k: int, w: int) -> "F.Column":
     ``_band_buckets_expr``; a naive transform-over-slices formulation
     re-runs the whole hash array per window → O(n²) md5). Work per doc
     is O(n) md5 + O(n·w) comparisons, all inside one projection."""
+    k, w = _WINNOW_K, _WINNOW_W
     n_grams = F.length(text_col) - F.lit(k - 1)
     hashes = F.when(
         n_grams >= 1, F.transform(
@@ -592,53 +575,44 @@ def _winnow_minima(text_col, k: int, w: int) -> "F.Column":
     )
 
 
-def winnow_docs(
-    df: DataFrame,
-    k: int = 8,
-    w: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def winnow_docs(df: DataFrame) -> DataFrame:
     """Winnowing fingerprints (Schleimer et al., public): hash every
-    k-char gram, keep each w-window's minimum hash, dedupe + sort.
+    ``_WINNOW_K``-char gram, keep each ``_WINNOW_W``-gram window's
+    minimum hash, dedupe + sort.
 
     Scale path: a single map-only projection (``_winnow_minima``) —
     zero shuffles, zero explodes; the signature stage pipelines with
     the scan at any corpus size (the exploded-window formulation the
     DuckDB oracle runs would shuffle the whole per-character gram
     stream into a per-doc window sort — ~30× the corpus through an
-    exchange at 100 TB). Docs too short for one full window (< k+w-1
-    chars) are dropped by a pure length predicate, matching the
-    oracle exactly. Output: (doc_id, fps array<string>),
+    exchange at 100 TB). Docs too short for one full window
+    (< _WINNOW_K + _WINNOW_W - 1 chars) are dropped by a pure length
+    predicate, matching the oracle exactly. Output: (doc_id, fps array<string>),
     value-identical to ``ORACLE_SQL["winnow_docs"]`` (asserted in
     tests/test_plan_shape.py).
     """
-    return df.filter(F.length(F.col(text_col)) >= F.lit(k + w - 1)).select(
-        F.col(id_col).alias("doc_id"),
-        F.array_sort(F.array_distinct(_winnow_minima(F.col(text_col), k, w))).alias("fps"),
+    text = F.col("text")
+    return df.filter(F.length(text) >= F.lit(_WINNOW_K + _WINNOW_W - 1)).select(
+        F.col("doc_id"),
+        F.array_sort(F.array_distinct(_winnow_minima(text))).alias("fps"),
     )
 
 
-def keep_best_representative(
-    scored: DataFrame,
-    comps: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "quality",
-) -> DataFrame:
+def keep_best_representative(scored: DataFrame, comps: DataFrame) -> DataFrame:
     """Cluster-representative selection — the final step of the
     near-dedup pipeline users actually run: after LSH pairs resolve
     into duplicate clusters (``duplicate_components``), keep the
     HIGHEST-QUALITY member of each cluster rather than the arbitrary
     min-id (dropping the best-written copy of a passage because it
     drew a larger id is a real corpus-quality loss). ``scored`` is
-    (id, score) — any deterministic score column works; ties break to
+    (doc_id, quality) — any deterministic score works; ties break to
     the smaller id so the pick is total-ordered. One hash join on id
     plus one window shuffle on component — both linear; component
     cardinality ≈ doc count, so no skew beyond the clusters
     themselves (a pathological mega-cluster is exactly what the LSH
-    ``max_bucket`` cap upstream prevents).
+    ``LSH_MAX_BUCKET`` cap upstream prevents).
 
-    Output: (id, component, score, is_best) for EVERY doc in
+    Output: (doc_id, component, quality, is_best) for EVERY doc in
     ``comps`` — downstream keeps ``is_best`` rows and drops the rest.
     The join is a LEFT join from comps with a row-level assert on the
     score: a doc missing from ``scored`` fails the job loudly instead
@@ -649,21 +623,21 @@ def keep_best_representative(
     # the guard lives INSIDE the score column (which the window sort
     # consumes) — a guard parked in a dropped side-column would be
     # pruned out of the plan by Catalyst and never fire
-    guarded = F.when(F.col(score_col).isNotNull(), F.col(score_col)).otherwise(
+    guarded = F.when(F.col("quality").isNotNull(), F.col("quality")).otherwise(
         F.raise_error(
             F.concat(
                 F.lit("keep_best_representative: no score for "),
-                F.col(id_col).cast("string"),
+                F.col("doc_id").cast("string"),
             )
         )
     )
     j = (
-        comps.select(id_col, "component")
-        .join(scored, id_col, "left")
-        .withColumn(score_col, guarded)
+        comps.select("doc_id", "component")
+        .join(scored, "doc_id", "left")
+        .withColumn("quality", guarded)
     )
     w = Window.partitionBy("component").orderBy(
-        F.col(score_col).desc(), F.col(id_col).asc()
+        F.col("quality").desc(), F.col("doc_id").asc()
     )
     return (
         j.withColumn("_rnk", F.row_number().over(w))
@@ -672,7 +646,7 @@ def keep_best_representative(
     )
 
 
-def _winnow_run_starts_expr(text_col, k: int = 8, w: int = 4) -> "F.Column":
+def _winnow_run_starts_expr(text_col) -> "F.Column":
     """Positioned, run-compressed winnowing minima as ONE scalar
     expression: array<struct<pos,fp>> where ``pos`` is the window
     start of each NEW fingerprint run (winnowing minima repeat while
@@ -683,7 +657,7 @@ def _winnow_run_starts_expr(text_col, k: int = 8, w: int = 4) -> "F.Column":
     (``_winnow_minima``) is wrapped in a 1-element array too, so it is
     bound as a lambda variable and computed once: work stays O(n·w)
     per doc inside a single map-side projection."""
-    minima = _winnow_minima(text_col, k, w)
+    minima = _winnow_minima(text_col)
     empty = F.array().cast("array<struct<pos:int,fp:string>>")
     return F.aggregate(
         F.array(minima),
@@ -704,22 +678,17 @@ def _winnow_run_starts_expr(text_col, k: int = 8, w: int = 4) -> "F.Column":
     )
 
 
-def winnow_run_starts(
-    df: DataFrame,
-    k: int = 8,
-    w: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def winnow_run_starts(df: DataFrame) -> DataFrame:
     """(doc_id, pos, fp): one row per run-compressed fingerprint
     occurrence — the positioned input ``winnow_span_runs`` matches on.
     Map-only signature stage (the explode unpacks an already-computed
     array; no window sort over the gram stream)."""
+    text = F.col("text")
     return (
-        df.filter(F.length(F.col(text_col)) >= F.lit(k + w - 1))
+        df.filter(F.length(text) >= F.lit(_WINNOW_K + _WINNOW_W - 1))
         .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(_winnow_run_starts_expr(F.col(text_col), k, w)).alias("s"),
+            F.col("doc_id"),
+            F.explode(_winnow_run_starts_expr(text)).alias("s"),
         )
         .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.fp").alias("fp"))
     )
@@ -728,12 +697,7 @@ def winnow_run_starts(
 def winnow_span_runs(
     df: DataFrame,
     min_run: int = 3,
-    max_postings: int = 4,
-    gap: int = 8,
-    k: int = 8,
-    w: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    max_postings: int = WINNOW_MAX_POSTINGS,
 ) -> DataFrame:
     """Duplicated-PASSAGE span detection (the exact-substring dedup of
     Lee et al., "Deduplicating Training Data Makes Language Models
@@ -747,7 +711,7 @@ def winnow_span_runs(
     ``pa - pb`` (collinear matches = same copied region shifted by a
     constant offset — the classic dotplot/plagiarism-detection trick)
     → gaps-and-islands split where consecutive matched positions jump
-    by more than ``gap`` chars → one output row per island with char
+    by more than 8 chars → one output row per island with char
     offsets (``a_start..a_end``) in both docs. Every stage is a
     bounded equi-shuffle; the window sort runs per (pair, diagonal),
     which the posting cap keeps small. Output spans feed the same
@@ -755,7 +719,7 @@ def winnow_span_runs(
     out of one side instead of dropping whole docs."""
     from pyspark.sql import Window
 
-    occ = _materialize_shingles(winnow_run_starts(df, k, w, text_col, id_col))
+    occ = _materialize_shingles(winnow_run_starts(df))
     counts = occ.groupBy("fp").agg(F.count(F.lit(1)).alias("c"))
     bounded = occ.join(counts.filter(F.col("c") <= max_postings).select("fp"), "fp")
     m = (
@@ -771,10 +735,10 @@ def winnow_span_runs(
         )
     )
     wd = Window.partitionBy("id_a", "id_b", "diag").orderBy("pa")
-    span_tail = F.lit(k + w - 2)  # last gram of the last window
+    span_tail = F.lit(_WINNOW_K + _WINNOW_W - 2)  # last gram of the last window
     return (
         m.withColumn(
-            "_nf", F.when(F.col("pa") - F.lag("pa").over(wd) > gap, 1).otherwise(0)
+            "_nf", F.when(F.col("pa") - F.lag("pa").over(wd) > 8, 1).otherwise(0)
         )
         .withColumn(
             "island", F.sum("_nf").over(wd.rowsBetween(Window.unboundedPreceding, 0))
@@ -792,12 +756,7 @@ def winnow_span_runs(
     )
 
 
-def apply_span_surgery(
-    docs: DataFrame,
-    spans: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def apply_span_surgery(docs: DataFrame, spans: DataFrame) -> DataFrame:
     """SPAN SURGERY — the consumption side of ``winnow_span_runs``:
     instead of dropping a whole doc because one passage is copied, cut
     the copied char range out of the HIGHER-id doc (id_a < id_b by
@@ -847,9 +806,7 @@ def apply_span_surgery(
         F.count(F.lit(1)).alias("n_spans_cut"),
         F.sum(F.col("e") - F.col("s") + 1).alias("n_chars_removed"),
     )
-    j = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).join(per_doc, "doc_id", "left")
+    j = docs.select("doc_id", "text").join(per_doc, "doc_id", "left")
     # fold over merged (disjoint, sorted) spans: emit the text between
     # the previous cut's end and this span's start, then jump past it
     stitched = F.expr(
@@ -877,12 +834,7 @@ def apply_span_surgery(
     )
 
 
-def incremental_dedup(
-    batch: DataFrame,
-    index_fps: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def incremental_dedup(batch: DataFrame, index_fps: DataFrame) -> DataFrame:
     """Dedup a NEW ingest batch against an EXISTING corpus fingerprint
     index — the shape a continuously-crawled 100 TB corpus actually
     runs daily: the historical corpus is never re-read, only its
@@ -920,17 +872,17 @@ def incremental_dedup(
     the buckets the batch can hit.
 
     ``index_fps`` needs one column ``fp``. Output
-    (id_col, fp, verdict) for EVERY batch row. ``id_col`` should be
+    (doc_id, fp, verdict) for EVERY batch row. ``doc_id`` should be
     unique per batch row (the usual primary-key contract); rows that
     share both id and fingerprint all tie at ``min(id)`` and are each
     labeled novel — the min-formulation keeps that edge deterministic
     (a row_number would order ties arbitrarily), but dedupe the batch
     on id first if exact-once novel emission matters under id reuse.
     """
-    b = batch.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
+    b = batch.select(F.col("doc_id"), fingerprint(F.col("text")).alias("fp"))
     # null-safe keeper join: a NULL-text batch row still gets a verdict
     # (the "every batch row" contract); NULL fps never match the index
-    keepers = b.groupBy("fp").agg(F.min(id_col).alias("first_id")).select(
+    keepers = b.groupBy("fp").agg(F.min("doc_id").alias("first_id")).select(
         F.col("fp").alias("kfp"), "first_id"
     )
     bfps = F.broadcast(b.select("fp").where(F.col("fp").isNotNull()).distinct())
@@ -945,11 +897,11 @@ def incremental_dedup(
     )
     verdict = (
         F.when(F.col("in_idx").isNotNull(), "dup_index")
-        .when(F.col(id_col) != F.col("first_id"), "dup_batch")
+        .when(F.col("doc_id") != F.col("first_id"), "dup_batch")
         .otherwise("novel")
     )
     return (
         b.join(keepers, F.col("fp").eqNullSafe(F.col("kfp")))
         .join(idx, "fp", "left")
-        .select(id_col, "fp", verdict.alias("verdict"))
+        .select("doc_id", "fp", verdict.alias("verdict"))
     )

@@ -117,6 +117,8 @@ RESIZE_SCHEMA = StructType(
     ]
 )
 
+_N_FRAMES = 4  # frames sample_frames takes from each video payload
+
 FRAME_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -126,9 +128,10 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def resize_images(media: DataFrame, max_side: int = 64) -> DataFrame:
-    """Image resize plumbing: aspect-preserving target dims + a
-    deterministic stub thumbnail (real path: PIL.Image.thumbnail).
+def resize_images(media: DataFrame) -> DataFrame:
+    """Image resize plumbing: aspect-preserving target dims (longest
+    side at most 64) + a deterministic stub thumbnail (real path:
+    PIL.Image.thumbnail).
     Filters to image payloads first so the decode stage scans only the
     relevant rows (predicate applied before the Python boundary)."""
 
@@ -139,7 +142,7 @@ def resize_images(media: DataFrame, max_side: int = 64) -> DataFrame:
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 b = _as_bytes(payload)
                 w, h = _fake_decode(b, "image/png")
-                scale = min(1.0, max_side / max(w, h))
+                scale = min(1.0, 64 / max(w, h))
                 rw, rh = max(1, int(w * scale)), max(1, int(h * scale))
                 # STUB thumbnail: digest-derived bytes, length rw*rh//64
                 thumb = hashlib.sha256(b).digest() * (1 + rw * rh // 2048)
@@ -157,10 +160,11 @@ def resize_images(media: DataFrame, max_side: int = 64) -> DataFrame:
     )
 
 
-def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Video frame-sampling plumbing: N evenly-spaced frames per
-    payload (real path: pyav seek+decode). One input row fans out to N
-    output rows — the mapInPandas generator shape for 1→N expansion.
+def sample_frames(media: DataFrame) -> DataFrame:
+    """Video frame-sampling plumbing: ``_N_FRAMES`` evenly-spaced frames
+    per payload (real path: pyav seek+decode). One input row fans out
+    to ``_N_FRAMES`` output rows — the mapInPandas generator shape for
+    1→N expansion.
 
     The STUB windows over decoded CHARACTERS, not raw bytes: byte
     windows can split multi-byte sequences, which no SQL oracle can
@@ -173,8 +177,8 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 s = _as_bytes(payload).decode("utf-8", errors="replace")
-                step = max(1, len(s) // n_frames)
-                for i in range(n_frames):
+                step = max(1, len(s) // _N_FRAMES)
+                for i in range(_N_FRAMES):
                     # STUB frame decode: checksum of the char window
                     window = s[i * step : (i + 1) * step] or s
                     rows.append(

@@ -230,23 +230,21 @@ def asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def source_quota_sample(
-    spark: SparkSession, sf_dir: str, per_source: int = 10
-) -> DataFrame:
+def source_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source document quota (the domain-cap step of a pretraining
-    mix: no single source may contribute more than K docs). Selection
+    mix: no single source may contribute more than 10 docs). Selection
     is a deterministic hash order — row_number over md5(doc_id) within
     each source — so the sample is reproducible and unbiased by
     ingestion order. One shuffle on source; at extreme source skew the
     window sort is bounded per partition, and AQE's skew split handles
-    a hot source (the selection itself only ever keeps K rows)."""
+    a hot source (the selection itself only ever keeps 10 rows)."""
     d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")).asc(), F.col("doc_id").asc()
     )
     return (
         d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= per_source)
+        .filter(F.col("rn") <= 10)
         .select("doc_id", "source", "rn")
     )
 
@@ -255,15 +253,16 @@ def source_quota_sample(
 # Pagination / dedup (SURVEY J4/J5)
 # --------------------------------------------------------------------------
 
-def paginate_events(spark: SparkSession, sf_dir: str, page: int = 11, size: int = 10) -> DataFrame:
-    """J4 pagination via row_number over a total order.
+def paginate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J4 pagination via row_number over a total order: page 11 at 10
+    rows per page.
 
     REPORT-ONLY operator: the unpartitioned window forces the whole
     table through one task — fine for a bounded report, wrong as an API
     at scale. The scale path is ``paginate_events_keyset`` below."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.orderBy(F.col("event_id").asc())
-    lo, hi = (page - 1) * size, page * size
+    lo, hi = 100, 110
     return (
         ev.withColumn("rn", F.row_number().over(w))
         .filter((F.col("rn") > lo) & (F.col("rn") <= hi))
@@ -271,19 +270,17 @@ def paginate_events(spark: SparkSession, sf_dir: str, page: int = 11, size: int 
     )
 
 
-def paginate_events_keyset(
-    spark: SparkSession, sf_dir: str, after_key: int = 100, size: int = 10
-) -> DataFrame:
+def paginate_events_keyset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 pagination, keyset form — the scale path: ``WHERE key >
-    last_seen ORDER BY key LIMIT n``. The predicate pushes down to the
-    scan and orderBy+limit plans as TakeOrderedAndProject (per-partition
-    top-k, merged on the driver) — no global sort, no single-task
-    window, at any table size."""
+    last_seen ORDER BY key LIMIT n``, here the 10 rows after key 100.
+    The predicate pushes down to the scan and orderBy+limit plans as
+    TakeOrderedAndProject (per-partition top-k, merged on the driver)
+    — no global sort, no single-task window, at any table size."""
     ev = load_table(spark, sf_dir, "events")
     return (
-        ev.filter(F.col("event_id") > after_key)
+        ev.filter(F.col("event_id") > 100)
         .orderBy(F.col("event_id").asc())
-        .limit(size)
+        .limit(10)
         .select("event_id", "user_id", "event_type")
     )
 
@@ -305,15 +302,15 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def label_next_value(spark: SparkSession, sf_dir: str, label: str = "customer") -> DataFrame:
-    """W2 relational analogue — label token → next-position value
+def label_next_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """W2 relational analogue — label token 'customer' → next-position value
     (first occurrence per doc). In the engine proper this runs
     in-batch (core/pdf_layout.py); this is the Window.partitionBy
     formulation for the relational surface."""
     toks = _doc_tokens(spark, sf_dir)
     w = Window.partitionBy("doc_id").orderBy("pos")
     led = toks.withColumn("nxt", F.lead("word").over(w))
-    matches = led.filter(F.col("word") == label)
+    matches = led.filter(F.col("word") == "customer")
     w2 = Window.partitionBy("doc_id").orderBy("pos")
     return (
         matches.withColumn("rn", F.row_number().over(w2))
@@ -322,18 +319,16 @@ def label_next_value(spark: SparkSession, sf_dir: str, label: str = "customer") 
     )
 
 
-def anchor_lookback(
-    spark: SparkSession, sf_dir: str, anchor: str = "spark", target: str = "table"
-) -> DataFrame:
-    """W1 relational analogue — at each anchor token, the nearest
-    target token within the previous 10 positions (frame max of
-    conditional pos). First anchor per doc."""
+def anchor_lookback(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """W1 relational analogue — at each anchor token 'spark', the
+    nearest target token 'table' within the previous 10 positions
+    (frame max of conditional pos). First anchor per doc."""
     toks = _doc_tokens(spark, sf_dir)
     w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-10, -1)
     scanned = toks.withColumn(
-        "back_pos", F.max(F.when(F.col("word") == target, F.col("pos"))).over(w)
+        "back_pos", F.max(F.when(F.col("word") == "table", F.col("pos"))).over(w)
     )
-    anchors = scanned.filter(F.col("word") == anchor)
+    anchors = scanned.filter(F.col("word") == "spark")
     w2 = Window.partitionBy("doc_id").orderBy("pos")
     return (
         anchors.withColumn("rn", F.row_number().over(w2))
@@ -342,14 +337,14 @@ def anchor_lookback(
     )
 
 
-def label_offset2(spark: SparkSession, sf_dir: str, label: str = "group") -> DataFrame:
-    """W3 relational analogue — value at position label+2 (the
+def label_offset2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """W3 relational analogue — value at position 'group'+2 (the
     reference's From/(State) offset-2 capture, ocr_utils.py:131-154),
     first occurrence per doc."""
     toks = _doc_tokens(spark, sf_dir)
     w = Window.partitionBy("doc_id").orderBy("pos")
     led = toks.withColumn("plus2", F.lead("word", 2).over(w))
-    m = led.filter(F.col("word") == label)
+    m = led.filter(F.col("word") == "group")
     w2 = Window.partitionBy("doc_id").orderBy("pos")
     return (
         m.withColumn("rn", F.row_number().over(w2))
@@ -454,11 +449,9 @@ def revenue_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sessionize_events(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30
-) -> DataFrame:
+def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization: a new session starts when the gap to
-    the previous event exceeds ``gap_minutes`` (lag + cumulative-sum
+    the previous event exceeds 30 minutes (lag + cumulative-sum
     windows — the batch formulation of session windows). Output:
     per-user session count and largest session size."""
     ev = load_table(spark, sf_dir, "events")
@@ -471,7 +464,7 @@ def sessionize_events(
     gapped = ev.withColumn(
         "new_session",
         F.when(
-            (epoch - F.lag(epoch).over(w)) > gap_minutes * 60 * 1_000_000,
+            (epoch - F.lag(epoch).over(w)) > 30 * 60 * 1_000_000,
             1,
         )
         .otherwise(0)
@@ -671,26 +664,24 @@ def clicks_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def rolling_user_value(
-    spark: SparkSession, sf_dir: str, frame: int = 5
-) -> DataFrame:
-    """Moving-window aggregate per key — the rolling-feature shape
-    every event-stream feature pipeline needs (trailing spend, rate
-    counters). One shuffle on user_id, then a per-user linear frame
-    scan; the frame is row-bounded so state is O(frame) regardless of
-    history length. Values go to integer CENTS before summing
-    (round(value·100) — double-representable ties don't exist at the
-    3rd decimal) so the window sum is exact-integer and independent of
-    both fold order and the engines' float-window implementations
-    (Spark's running frame vs DuckDB's segment tree would diverge on
-    raw double sums). Total order (ts, event_id) pins frame membership
+def rolling_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Moving-window aggregate per key over the trailing 5 events — the
+    rolling-feature shape every event-stream feature pipeline needs
+    (trailing spend, rate counters). One shuffle on user_id, then a
+    per-user linear frame scan; the frame is row-bounded so per-user
+    state is constant in history length. Values go to integer CENTS
+    before summing (round(value·100) — double-representable ties don't
+    exist at the 3rd decimal) so the window sum is exact-integer and
+    independent of both fold order and the engines' float-window
+    implementations (Spark's running frame vs DuckDB's segment tree
+    would diverge on raw double sums). Total order (ts, event_id) pins frame membership
     under timestamp ties."""
     ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.col("ts").asc(), F.col("event_id").asc())
-        .rowsBetween(-(frame - 1), 0)
+        .rowsBetween(-4, 0)
     )
     return (
         ev.select(
@@ -705,11 +696,9 @@ def rolling_user_value(
     )
 
 
-def funnel_conversion(
-    spark: SparkSession, sf_dir: str, window_days: int = 7
-) -> DataFrame:
+def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Funnel analysis: for each user's FIRST signup, did a purchase
-    land within ``window_days``, and how long did it take. The
+    land within 7 days, and how long did it take. The
     first-signup pick is min(struct(ts_us, event_id)) — Spark struct
     ordering is field-wise, identical to the oracle's
     row_number(ORDER BY ts, event_id) = 1 — and all time arithmetic is
@@ -719,7 +708,7 @@ def funnel_conversion(
     ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
-    w_us = window_days * 86_400_000_000
+    w_us = 7 * 86_400_000_000
     sig = (
         ev.filter(F.col("event_type") == "signup")
         .select("user_id", F.struct(us.alias("s_us"), "event_id").alias("k"))

@@ -46,18 +46,20 @@ def norm_expr(a: str, dim: int = EMB_DIM) -> Column:
     return F.expr(f"SQRT({terms})")
 
 
-def dot_sql(a: str, b: str, dim: int = EMB_DIM) -> str:
+def dot_sql(a: str, b: str) -> str:
     """The same chain in ANSI/DuckDB SQL (1-indexed lists)."""
     return " + ".join(
-        f"CAST({a}[{i + 1}] AS DOUBLE) * CAST({b}[{i + 1}] AS DOUBLE)" for i in range(dim)
+        f"CAST({a}[{i + 1}] AS DOUBLE) * CAST({b}[{i + 1}] AS DOUBLE)"
+        for i in range(EMB_DIM)
     )
 
 
-def norm_sql(a: str, dim: int = EMB_DIM) -> str:
+def norm_sql(a: str) -> str:
     return (
         "SQRT("
         + " + ".join(
-            f"CAST({a}[{i + 1}] AS DOUBLE) * CAST({a}[{i + 1}] AS DOUBLE)" for i in range(dim)
+            f"CAST({a}[{i + 1}] AS DOUBLE) * CAST({a}[{i + 1}] AS DOUBLE)"
+            for i in range(EMB_DIM)
         )
         + ")"
     )
@@ -110,15 +112,10 @@ def _verify_pairs(pairs: DataFrame, threshold: float, dim: int) -> DataFrame:
     )
 
 
-def cosine_topk(
-    emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 3,
-    dim: int = EMB_DIM,
-) -> DataFrame:
+def cosine_topk(emb: DataFrame, n_queries: int = 10, k: int = 3) -> DataFrame:
     """Brute-force cosine top-k: first ``n_queries`` vec_ids as queries,
     broadcast against the full table. Output (q_id, vec_id, sim, rank)."""
-    return _brute_topk(emb, _queries(emb, n_queries), k, dim)
+    return _brute_topk(emb, _queries(emb, n_queries), k, EMB_DIM)
 
 
 def sign_bucket(col: str, bits: int = 8, offset: int = 0) -> Column:
@@ -142,13 +139,11 @@ def sign_bucket_sql(col: str, bits: int = 8, offset: int = 0) -> str:
     return f"({parts})"
 
 
-def cosine_neardup(
-    emb: DataFrame, threshold: float = 0.4, dim: int = EMB_DIM
-) -> DataFrame:
+def cosine_neardup(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
     """Exact embedding near-dup pairs (vec_id_a < vec_id_b, sim ≥ t).
     O(N²) verifier — the LSH variant below is the scale path."""
     pairs = _pair_side(emb, "a").crossJoin(_pair_side(emb, "b"))
-    return _verify_pairs(pairs.filter(F.col("id_a") < F.col("id_b")), threshold, dim)
+    return _verify_pairs(pairs.filter(F.col("id_a") < F.col("id_b")), threshold, EMB_DIM)
 
 
 def cosine_neardup_lsh(
@@ -215,7 +210,6 @@ def neardup_lsh_sql(
     bits: int = 8,
     n_bands: int = 8,
     max_bucket: int = 256,
-    dim: int = EMB_DIM,
 ) -> str:
     """DuckDB twin of ``cosine_neardup_lsh`` — identical algorithm
     (banding, cap, verify), identical fold order, 1-indexed lists."""
@@ -224,9 +218,9 @@ def neardup_lsh_sql(
         f"{sign_bucket_sql('embedding', bits, l * bits)} AS bucket FROM embeddings"
         for l in range(n_bands)
     )
-    dot = dot_sql("ea.embedding", "eb.embedding", dim)
-    na = norm_sql("ea.embedding", dim)
-    nb = norm_sql("eb.embedding", dim)
+    dot = dot_sql("ea.embedding", "eb.embedding")
+    na = norm_sql("ea.embedding")
+    nb = norm_sql("eb.embedding")
     return f"""
 WITH wb AS (
   {bands}
@@ -256,7 +250,6 @@ def cosine_topk_filtered(
     allowed_ids: DataFrame,
     n_queries: int = 10,
     k: int = 3,
-    dim: int = EMB_DIM,
 ) -> DataFrame:
     """Pre-filtered ANN ("filtered vector search"): cosine top-k where
     candidates are restricted to ``allowed_ids`` (one ``vec_id``
@@ -273,7 +266,7 @@ def cosine_topk_filtered(
 
     Output (q_id, vec_id, sim, rank) — rank over the filtered pool."""
     pool = emb.join(allowed_ids.select("vec_id").distinct(), "vec_id")
-    return _brute_topk(pool, _queries(emb, n_queries), k, dim)
+    return _brute_topk(pool, _queries(emb, n_queries), k, EMB_DIM)
 
 
 def semantic_decontaminate(
@@ -349,7 +342,7 @@ def knn_label_propagation(
     )
 
 
-def label_centroid_count(emb: DataFrame, dim: int = EMB_DIM) -> DataFrame:
+def label_centroid_count(emb: DataFrame) -> DataFrame:
     """Per-label vector counts + exact (decimal-summed) centroid of the
     first component — demonstrates order-independent float aggregation:
     components go through DECIMAL(25,9) so the sum is exact regardless
@@ -371,14 +364,14 @@ def label_centroid_count(emb: DataFrame, dim: int = EMB_DIM) -> DataFrame:
     )
 
 
-def _quant_code_expr(i: int, vec: str = "embedding", one_indexed: bool = False) -> str:
+def _quant_code_expr(i: int, one_indexed: bool = False) -> str:
     """Int8 code for component ``i`` against per-dim [mn_i, mx_i] stats:
     floor((x - mn) / (mx - mn) * 256), clipped to 255 at x == mx, then
     shifted to [-128, 127]. floor-then-cast is the cross-engine-safe
     order — DuckDB rounds on CAST(double AS INT) while Spark truncates,
     but both agree on an already-integral double. Degenerate dims
     (mx == mn) code to 0."""
-    x = f"CAST({vec}[{i + 1 if one_indexed else i}] AS DOUBLE)"
+    x = f"CAST(embedding[{i + 1 if one_indexed else i}] AS DOUBLE)"
     return (
         f"CASE WHEN mx_{i} = mn_{i} THEN 0 ELSE "
         f"CAST(LEAST(255.0, FLOOR(({x} - mn_{i}) / (mx_{i} - mn_{i}) * 256.0)) AS INT)"
@@ -386,7 +379,7 @@ def _quant_code_expr(i: int, vec: str = "embedding", one_indexed: bool = False) 
     )
 
 
-def quantize_embeddings(emb: DataFrame, dim: int = EMB_DIM) -> DataFrame:
+def quantize_embeddings(emb: DataFrame) -> DataFrame:
     """Int8 scalar quantization of the embedding column — the storage /
     ANN-index compression step (4 bytes/float32 → 1 byte/component).
     Two passes: a per-dimension min/max aggregate collapses to ONE
@@ -402,31 +395,31 @@ def quantize_embeddings(emb: DataFrame, dim: int = EMB_DIM) -> DataFrame:
     stats = emb.agg(
         *[
             F.min(F.expr(f"CAST(embedding[{i}] AS DOUBLE)")).alias(f"mn_{i}")
-            for i in range(dim)
+            for i in range(EMB_DIM)
         ],
         *[
             F.max(F.expr(f"CAST(embedding[{i}] AS DOUBLE)")).alias(f"mx_{i}")
-            for i in range(dim)
+            for i in range(EMB_DIM)
         ],
     )
-    codes = [F.expr(_quant_code_expr(i)) for i in range(dim)]
+    codes = [F.expr(_quant_code_expr(i)) for i in range(EMB_DIM)]
     return emb.crossJoin(F.broadcast(stats)).select(
         "vec_id",
         F.concat_ws(",", *[c.cast("string") for c in codes]).alias("codes"),
     )
 
 
-def quantize_sql(dim: int = EMB_DIM) -> str:
+def quantize_sql() -> str:
     """The DuckDB twin of ``quantize_embeddings`` (1-indexed lists)."""
     mins = ", ".join(
-        f"min(CAST(embedding[{i + 1}] AS DOUBLE)) AS mn_{i}" for i in range(dim)
+        f"min(CAST(embedding[{i + 1}] AS DOUBLE)) AS mn_{i}" for i in range(EMB_DIM)
     )
     maxs = ", ".join(
-        f"max(CAST(embedding[{i + 1}] AS DOUBLE)) AS mx_{i}" for i in range(dim)
+        f"max(CAST(embedding[{i + 1}] AS DOUBLE)) AS mx_{i}" for i in range(EMB_DIM)
     )
     codes = ", ".join(
         f"CAST(({_quant_code_expr(i, one_indexed=True)}) AS VARCHAR)"
-        for i in range(dim)
+        for i in range(EMB_DIM)
     )
     return f"""
 WITH stats AS (SELECT {mins}, {maxs} FROM embeddings)
@@ -435,11 +428,11 @@ FROM embeddings, stats
 """
 
 
-def l2_sql(a: str, b: str, dim: int = EMB_DIM) -> str:
+def l2_sql(a: str, b: str) -> str:
     """Squared-L2 chain in SQL (1-indexed), same fold order as Spark."""
     return " + ".join(
         f"pow(CAST({a}[{i + 1}] AS DOUBLE) - CAST({b}[{i + 1}] AS DOUBLE), 2)"
-        for i in range(dim)
+        for i in range(EMB_DIM)
     )
 
 

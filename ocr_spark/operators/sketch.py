@@ -29,7 +29,7 @@ Scale design (the 100 TB story):
 - **Bloom semi-join** is the classic runtime-filter pattern (what
   Spark's AQE bloom join injects automatically) made explicit and
   portable: the needle side's keys are folded into a sparse bitset
-  (one partial-agg shuffle of at most ``n_bits/32`` words), broadcast
+  (one partial-agg shuffle of at most ``BLOOM_BITS/32`` words), broadcast
   as a single map row, and the probe side is then MAP-ONLY — no
   shuffle of the 100 TB fact table to discover that most rows match
   nothing. False positives are quantified exactly (the stats row
@@ -198,31 +198,29 @@ CMS_DEPTH = 4  # rows; error probability ~ e^-d
 CMS_WIDTH = 1024  # counters per row; overestimate bound ~ (e/w) * N
 
 
-def _cms_col(item_str_col, i: int, w: int) -> "F.Column":
-    """Counter column for hash row i: 60-bit md5 prefix mod w."""
+def _cms_col(item_str_col, i: int) -> "F.Column":
+    """Counter column for hash row i: 60-bit md5 prefix mod CMS_WIDTH."""
     return (
         F.conv(
             F.substring(F.md5(F.concat(F.lit(f"cm{i}|"), item_str_col)), 1, 15), 16, 10
         ).cast("long")
-        % w
+        % CMS_WIDTH
     )
 
 
-def count_min_counters(
-    df: DataFrame, item_col: str, d: int = CMS_DEPTH, w: int = CMS_WIDTH
-) -> DataFrame:
+def count_min_counters(df: DataFrame, item_col: str) -> DataFrame:
     """The count-min counter table (row, col, c) — the mergeable sketch
     state: merging two sketches = unioning counter tables and SUMMING
     per (row, col), which is what the partial/final HashAggregate pair
     of the groupBy does across partitions. The shuffle carries at most
-    d*w counters per partition regardless of input size."""
+    CMS_DEPTH*CMS_WIDTH counters per partition regardless of input size."""
     s = F.col(item_col).cast("string")
     pairs = df.select(
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(i).alias("row"), _cms_col(s, i, w).alias("col"))
-                    for i in range(d)
+                    F.struct(F.lit(i).alias("row"), _cms_col(s, i).alias("col"))
+                    for i in range(CMS_DEPTH)
                 ]
             )
         ).alias("p")
@@ -232,14 +230,8 @@ def count_min_counters(
     )
 
 
-def cms_top_frequencies(
-    df: DataFrame,
-    item_col: str,
-    top_k: int = 20,
-    d: int = CMS_DEPTH,
-    w: int = CMS_WIDTH,
-) -> DataFrame:
-    """Count-min frequency estimates for the ``top_k`` most frequent
+def cms_top_frequencies(df: DataFrame, item_col: str) -> DataFrame:
+    """Count-min frequency estimates for the 20 most frequent
     items (deterministic probe set: count desc, item asc), with the
     exact count joined in for side-by-side error.
 
@@ -247,12 +239,13 @@ def cms_top_frequencies(
     integer arithmetic end to end (no floats anywhere), so the oracle
     match is trivially bit-exact. CMS can only OVERcount (collisions
     add, never subtract): overestimate >= 0 always, bounded by
-    ~(e/w)*N per probe with probability 1 - e^-d. The counter table is
-    d*w cells, broadcast to the probe join; the input stream is
-    touched once with a partially-aggregated groupBy."""
+    ~(e/CMS_WIDTH)*N per probe with probability 1 - e^-CMS_DEPTH. The
+    counter table is CMS_DEPTH*CMS_WIDTH cells, broadcast to the probe
+    join; the input stream is touched once with a partially-aggregated
+    groupBy."""
     from pyspark.sql import Window
 
-    counters = count_min_counters(df, item_col, d, w)
+    counters = count_min_counters(df, item_col)
     exact = df.groupBy(F.col(item_col).alias("item")).agg(
         F.count("*").alias("exact_count")
     )
@@ -263,7 +256,7 @@ def cms_top_frequencies(
                 Window.orderBy(F.col("exact_count").desc(), F.col("item").asc())
             ),
         )
-        .filter(F.col("rn") <= top_k)
+        .filter(F.col("rn") <= 20)
         .drop("rn")
     )
     s = F.col("item").cast("string")
@@ -273,8 +266,8 @@ def cms_top_frequencies(
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(i).alias("row"), _cms_col(s, i, w).alias("col"))
-                    for i in range(d)
+                    F.struct(F.lit(i).alias("row"), _cms_col(s, i).alias("col"))
+                    for i in range(CMS_DEPTH)
                 ]
             )
         ).alias("p"),
@@ -300,28 +293,26 @@ BLOOM_BITS = 65536  # 2^16 bits in 2048 32-bit-per-word slots
 BLOOM_K = 2  # two salted md5-derived hash positions per key
 
 
-def _bloom_pos(key_str_col, i: int, n_bits: int) -> "F.Column":
-    """Bit position i for a key: 60-bit md5 prefix mod n_bits."""
+def _bloom_pos(key_str_col, i: int) -> "F.Column":
+    """Bit position i for a key: 60-bit md5 prefix mod BLOOM_BITS."""
     return (
         F.conv(
             F.substring(F.md5(F.concat(F.lit(f"bf{i}|"), key_str_col)), 1, 15), 16, 10
         ).cast("long")
-        % n_bits
+        % BLOOM_BITS
     )
 
 
-def bloom_build(
-    needles: DataFrame, key_col: str, n_bits: int = BLOOM_BITS
-) -> DataFrame:
+def bloom_build(needles: DataFrame, key_col: str) -> DataFrame:
     """Fold the needle keys into a sparse bitset: ONE row holding a
     map<word_idx, bits> (word = 32 bits in an int64, so every mask is
     positive and portable). The groupBy is partially aggregated —
-    the shuffle carries at most n_bits/32 words per partition no
+    the shuffle carries at most BLOOM_BITS/32 words per partition no
     matter how many needles there are."""
     ks = needles.select(F.col(key_col).cast("string").alias("key")).distinct()
     pos = ks.select(
         F.explode(
-            F.array(*[_bloom_pos(F.col("key"), i, n_bits) for i in range(BLOOM_K)])
+            F.array(*[_bloom_pos(F.col("key"), i) for i in range(BLOOM_K)])
         ).alias("pos")
     )
     words = pos.groupBy(F.shiftright("pos", 5).alias("w")).agg(
@@ -339,7 +330,6 @@ def bloom_semijoin_stats(
     needles: DataFrame,
     fact_key: str,
     needle_key: str,
-    n_bits: int = BLOOM_BITS,
 ) -> DataFrame:
     """Probe every fact row against the needle-side Bloom filter and
     report the pre-filter's exact effectiveness in one stats row:
@@ -351,12 +341,12 @@ def bloom_semijoin_stats(
     would run **on the candidates only** is evaluated here over all
     rows purely to measure the false-positive rate. No false negatives
     are possible: every needle key set its own bits."""
-    bloom = bloom_build(needles, needle_key, n_bits)
+    bloom = bloom_build(needles, needle_key)
     true_keys = needles.select(F.col(needle_key).alias("tk")).distinct()
     probe = fact.select(
         F.col(fact_key).alias("fk"),
         *[
-            _bloom_pos(F.col(fact_key).cast("string"), i, n_bits).alias(f"p{i}")
+            _bloom_pos(F.col(fact_key).cast("string"), i).alias(f"p{i}")
             for i in range(BLOOM_K)
         ],
     )

@@ -1,15 +1,1 @@
 """Session construction + physical-plan quality checks."""
-
-from ocr_spark.plans.checks import (
-    count_exchanges,
-    physical_plan,
-    udf_stage_count,
-)
-from ocr_spark.plans.session import build_session
-
-__all__ = [
-    "build_session",
-    "physical_plan",
-    "count_exchanges",
-    "udf_stage_count",
-]

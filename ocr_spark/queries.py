@@ -92,6 +92,11 @@ from ocr_spark.operators.conversation import (
     transcript_lint,
 )
 from ocr_spark.operators.dedup import (
+    DEFAULT_BANDS,
+    DEFAULT_NUM_HASHES,
+    LSH_MAX_BUCKET,
+    SHINGLE_N,
+    WINNOW_MAX_POSTINGS,
     apply_span_surgery,
     canonical_dedup,
     dedup_exact,
@@ -406,18 +411,20 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cap_drop_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Emitted drop accounting for the repo's two silent posting caps
-    (winnow_overlap_pairs max_postings=4, cross_source_overlap
-    max_sources=10): one summary row per cap quantifying the keys and
-    postings the guard discards at this corpus scale — the audit a
-    user runs before trusting a capped operator's recall."""
+    (winnow_overlap_pairs' ``WINNOW_MAX_POSTINGS``, cross_source_overlap's
+    ``OVERLAP_MAX_SOURCES`` over ``SHINGLE_N``-word shingles): one summary
+    row per cap quantifying the keys and postings the guard discards at
+    this corpus scale — the audit a user runs before trusting a capped
+    operator's recall. It reads the operators' own constants, so it
+    always audits the caps they apply."""
     docs = _docs(spark, sf_dir)
     wfp = winnow_docs(docs).select("doc_id", F.explode("fps").alias("fp"))
-    w_stats = C.cap_drop_stats(wfp, "fp", 4, "winnow_max_postings")
+    w_stats = C.cap_drop_stats(wfp, "fp", WINNOW_MAX_POSTINGS, "winnow_max_postings")
     sh = docs.select(
         F.col("source").alias("src"),
-        F.explode(word_shingles(F.col("text"), 3)).alias("s"),
+        F.explode(word_shingles(F.col("text"), SHINGLE_N)).alias("s"),
     ).distinct()
-    s_stats = C.cap_drop_stats(sh, "s", 10, "cross_source_max_sources")
+    s_stats = C.cap_drop_stats(sh, "s", C.OVERLAP_MAX_SOURCES, "cross_source_max_sources")
     return w_stats.unionByName(s_stats)
 
 
@@ -718,12 +725,12 @@ WHERE round(common / (sa.n_sh + sb.n_sh - common), 6) >= {threshold}
 """
 
 
-def _minhash_sql(num_hashes: int = 8, bands: int = 4, max_bucket: int = 64,
-                 threshold: float = 0.5) -> str:
+def _minhash_sql(threshold: float = 0.5) -> str:
     # double-hashing MinHash (Kirsch-Mitzenmacher): g_i = (a + i*b)
     # mod 2^60 over two 60-bit md5-prefix hashes — identical
     # arithmetic to operators/dedup._band_buckets_expr (DuckDB's
     # ('0x'||hex)::BIGINT ≡ Spark's conv(hex,16,10), verified)
+    num_hashes, bands = DEFAULT_NUM_HASHES, DEFAULT_BANDS
     r = num_hashes // bands
     mod = 1 << 60
 
@@ -762,7 +769,7 @@ buckets AS ({band_rows}),
 counts AS (SELECT band, bucket, count(*) AS n FROM buckets GROUP BY 1, 2),
 bounded AS (
   SELECT b.id, b.band, b.bucket FROM buckets b
-  JOIN counts c USING (band, bucket) WHERE c.n <= {max_bucket}
+  JOIN counts c USING (band, bucket) WHERE c.n <= {LSH_MAX_BUCKET}
 ),
 cand AS (
   SELECT DISTINCT a.id AS id_a, b.id AS id_b
@@ -867,13 +874,14 @@ _NORM_B = S.norm_sql("b.embedding")
 _FP_SQL = "md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))"
 
 
-def _ivf_seeded_sql(n_probe: int, n_cells: int = 16, n_queries: int = 10, k: int = 3) -> str:
-    """Seeded-IVF oracle (mirrors S.ivf_topk_seeded): cell = argmin L2
-    to the first ``n_cells`` vectors, probe the ``n_probe`` nearest
-    cells per query, exact cosine inside them."""
+def _ivf_seeded_sql(n_probe: int) -> str:
+    """Seeded-IVF oracle (mirrors S.ivf_topk_seeded at its defaults):
+    cell = argmin L2 to the first 16 vectors, probe the ``n_probe``
+    nearest cells for each of the first 10 queries, exact cosine top 3
+    inside them."""
     return f"""
 WITH seeds AS (
-  SELECT vec_id AS cell, embedding AS c_emb FROM embeddings WHERE vec_id < {n_cells}
+  SELECT vec_id AS cell, embedding AS c_emb FROM embeddings WHERE vec_id < 16
 ),
 d AS (
   SELECT e.vec_id, e.embedding, s.cell,
@@ -885,7 +893,7 @@ a AS (
     SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist ASC, cell ASC) AS rn
     FROM d) WHERE rn = 1
 ),
-q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < {n_queries}),
+q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
 qd AS (
   SELECT q.q_id, q.q_emb, s.cell,
          {S.l2_sql("q.q_emb", "s.c_emb")} AS dist
@@ -911,7 +919,7 @@ r AS (
          CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id ASC) AS INTEGER) AS rank
   FROM sc
 )
-SELECT q_id, vec_id, sim, rank FROM r WHERE rank <= {k}
+SELECT q_id, vec_id, sim, rank FROM r WHERE rank <= 3
 """
 
 _DOC_TOKENS_CTE = """
@@ -1121,16 +1129,16 @@ FROM r
 """
 
 
-def _multimodal_frames_sql(n_frames: int = 4) -> str:
-    return f"""
+def _multimodal_frames_sql() -> str:
+    return """
 WITH v AS (
   SELECT doc_id, text,
-         greatest(1, CAST(floor(length(text) / {n_frames}.0) AS INTEGER)) AS step
+         greatest(1, CAST(floor(length(text) / 4.0) AS INTEGER)) AS step
   FROM documents WHERE doc_id % 3 = 2
 ),
 f AS (
   SELECT doc_id, text, step,
-         CAST(unnest(range({n_frames})) AS INTEGER) AS frame_idx
+         CAST(unnest(range(4)) AS INTEGER) AS frame_idx
   FROM v
 )
 SELECT doc_id, frame_idx,

@@ -52,8 +52,8 @@ def read_input(spark: SparkSession, source: str) -> DataFrame:
     return spark.read.parquet(source)
 
 
-def write_output(df: DataFrame, dest: str, mode: str = "overwrite") -> None:
-    """Write a table. A path writes parquet; an identifier routes by
+def write_output(df: DataFrame, dest: str) -> None:
+    """Write (overwrite) a table. A path writes parquet; an identifier routes by
     runtime: with Iceberg available, a DataSourceV2 ``writeTo(...)
     createOrReplace`` (an atomic Iceberg snapshot commit — the real
     deployment's transactional sink); without it, a session-catalog
@@ -65,9 +65,9 @@ def write_output(df: DataFrame, dest: str, mode: str = "overwrite") -> None:
         if iceberg_runtime_available(df.sparkSession):
             df.writeTo(dest).using("iceberg").createOrReplace()
         else:
-            df.write.mode(mode).saveAsTable(dest)
+            df.write.mode("overwrite").saveAsTable(dest)
     else:
-        df.write.mode(mode).parquet(dest)
+        df.write.mode("overwrite").parquet(dest)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -174,6 +174,24 @@ def test_job_end_to_end_with_manifest(spark, transcripts_path, oracle, tmp_path)
     assert m["blocks_kept"].sum() == oracle["blocks_kept"].sum()
 
 
+def test_manifest_rows_leave_the_driver_after_each_run(spark, transcripts_path, tmp_path):
+    """pyspark keeps every accumulator in a module registry for the
+    SparkContext's life; a finished run must not leave its manifest
+    rows there, or driver memory grows with every run."""
+    from pyspark.accumulators import _accumulatorRegistry
+
+    for run in range(2):
+        run_extraction(
+            spark, transcripts_path, str(tmp_path / f"out{run}"),
+            n_shards=4, num_partitions=8,
+        )
+        held = sum(
+            len(a._value) for a in _accumulatorRegistry.values()
+            if isinstance(a._value, list)
+        )
+        assert held == 0, f"run {run}: {held} manifest rows still on the driver"
+
+
 def test_resume_after_crash_no_duplicates(spark, transcripts_path, oracle, tmp_path):
     import shutil
 
