@@ -69,9 +69,9 @@ def main() -> None:
         F.col("extracted_text").alias("text"),
     ).filter(F.length("text") > 0)
     print("exact-dup groups with >1 member:",
-          dedup_exact(docs, id_col="doc_id").filter(F.col("n_dups") > 1).count())
+          dedup_exact(docs).filter(F.col("n_dups") > 1).count())
     print("minhash-lsh near-dup pairs (j>=0.5):",
-          minhash_lsh_dedup(docs, id_col="doc_id").count())
+          minhash_lsh_dedup(docs).count())
     spark.stop()
 
 

@@ -3,7 +3,7 @@
 Schema = BASELINE.json ``input_hint``:
 ``(conv_id string, turn_idx int32, role string, text string, tool
 string, ts timestamp)``. Fixed seed, no wall-clock, no dict-order
-dependence — the same (sf, seed) always yields byte-identical tables.
+dependence — the same sf always yields byte-identical tables.
 
 Payload mix ≈ 40% html / 30% pdf_like / 30% plain, mirroring the
 reference's category routing spread (``OCR API 2/ocr_utils.py:15-41``).
@@ -56,6 +56,7 @@ _UNITS = ("KGS", "KG", "MT", "TONS")
 _EMOJI = ("✅", "🚚", "📦", "🔍", "—")
 
 _BASE_TS = datetime(2026, 1, 1, 0, 0, 0)
+_SEED = 42
 
 
 def _sentence(rng: random.Random, lo: int = 8, hi: int = 18) -> str:
@@ -262,13 +263,13 @@ def gen_payload(rng: random.Random) -> str:
     return _gen_plain(rng)
 
 
-def gen_transcripts(sf: float, seed: int = 42) -> pd.DataFrame:
+def gen_transcripts(sf: float) -> pd.DataFrame:
     """Deterministic transcripts table at scale factor ``sf``.
 
     ~600k turns/sf-unit (sf0.001→~600, sf0.01→~6k, sf0.1→~60k), matching
     TESTDATA.md's lineitem scaling convention.
     """
-    rng = random.Random(int(seed) * 1_000_003 + int(sf * 1_000_000))
+    rng = random.Random(_SEED * 1_000_003 + int(sf * 1_000_000))
     target = max(100, int(600_000 * sf))
     rows: list[tuple[str, int, str, str, str | None]] = []
     # skew fixtures: 2 heavy conversations carry ~10% of all turns
@@ -324,12 +325,12 @@ def write_replicated_transcripts(dst: str, src_path: str, replication: int) -> s
     return dst
 
 
-def write_transcripts(path: str, sf: float, seed: int = 42) -> str:
+def write_transcripts(path: str, sf: float) -> str:
     """Write the fixture table as parquet; returns the path."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    df = gen_transcripts(sf, seed)
+    df = gen_transcripts(sf)
     schema = pa.schema(
         [
             ("conv_id", pa.string()),

@@ -103,8 +103,11 @@ def fingerprint(c: Column) -> Column:
     return F.md5(F.regexp_replace(F.lower(F.trim(c)), r"\s+", " "))
 
 
-def word_shingles(c: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles as an array<string>.
+SHINGLE_N = 3  # words per shingle, for every shingle-set operator
+
+
+def word_shingles(c: Column) -> Column:
+    """Distinct word ``SHINGLE_N``-gram shingles as an array<string>.
     SQL twin: list_distinct(list_transform(range(len(w)-n+1),
     i -> w[i+1] || ' ' || ... )). Both sides 1-index element access.
 
@@ -115,6 +118,7 @@ def word_shingles(c: Column, n: int = 3) -> Column:
     stage); ``zip_with`` arguments are plain expressions evaluated
     once. ``concat`` (null-propagating) marks the <n-length tail,
     which the final slice drops."""
+    n = SHINGLE_N
     w = tokens(c)
     count = F.greatest(F.size(w) - F.lit(n - 1), F.lit(0))
     res = F.slice(w, n, F.size(w))  # tokens at offset n-1

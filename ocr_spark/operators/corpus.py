@@ -34,7 +34,7 @@ Scale design (the 100 TB story):
   split assignment needs).
 - **broadcast marginals**: where a count floor provably bounds the
   broadcast side it is applied (``pmi_collocations`` pre-filters
-  marginals to c_t >= min_count — output-invariant, cuts the Zipf
+  marginals to c_t >= _PMI_MIN_COUNT — output-invariant, cuts the Zipf
   tail); where the OUTPUT depends on the full vocabulary (tf-idf's
   dfreq, keyness's tf_c) the ``broadcast()`` hint is an optimization
   for realistic vocabulary sizes — at extreme vocabulary scale drop
@@ -53,11 +53,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.functions.text import token_count, tokens
-from ocr_spark.operators.dedup import SHINGLE_N, shingle_arrays
+from ocr_spark.operators.dedup import shingle_arrays
 
 DEFAULT_EVAL_MOD = 41  # doc_id % mod == 0 designates the held-out eval docs
 OVERLAP_MAX_SOURCES = 10  # sources per shingle before cross_source_overlap drops it
 _MAX_WEIGHT = 16  # weighted_sample clamps weights to [1, _MAX_WEIGHT]
+_SEG_TOKENS = 4  # tokens per boilerplate_scrub segment
+_PMI_MIN_COUNT = 5  # pmi_collocations' floor on bigram and word counts
 
 
 def decontaminate(df: DataFrame) -> DataFrame:
@@ -232,7 +234,7 @@ def cross_source_overlap(df: DataFrame) -> DataFrame:
     postings = (
         df.select(
             F.col("source").alias("src"),
-            F.explode(word_shingles(F.col("text"), SHINGLE_N)).alias("s"),
+            F.explode(word_shingles(F.col("text"))).alias("s"),
         )
         .distinct()
     )
@@ -359,8 +361,8 @@ def weighted_sample(df: DataFrame, k: int = 20) -> DataFrame:
     )
 
 
-def weighted_sample_clamp_stats(df: DataFrame, max_weight: int = _MAX_WEIGHT) -> DataFrame:
-    """Accounting row for ``weighted_sample``'s [1, max_weight] weight
+def weighted_sample_clamp_stats(df: DataFrame) -> DataFrame:
+    """Accounting row for ``weighted_sample``'s [1, _MAX_WEIGHT] weight
     clamp — the quantified answer to "does the cap change MY sampling
     distribution?": how many rows clamp (high and low), the heaviest
     raw weight seen, and the total weight mass before vs after the
@@ -373,12 +375,12 @@ def weighted_sample_clamp_stats(df: DataFrame, max_weight: int = _MAX_WEIGHT) ->
     verbatim, so the accounting can never drift from the behavior it
     reports on."""
     w = F.col("weight").cast("int")
-    clamped = _clamped_weight(w, max_weight)
+    clamped = _clamped_weight(w, _MAX_WEIGHT)
     return df.agg(
         F.lit("weighted_sample_max_weight").alias("cap_name"),
-        F.lit(max_weight).cast("int").alias("cap_value"),
+        F.lit(_MAX_WEIGHT).cast("int").alias("cap_value"),
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum((w > max_weight).cast("int")).cast("long").alias("n_clamped_high"),
+        F.sum((w > _MAX_WEIGHT).cast("int")).cast("long").alias("n_clamped_high"),
         F.sum((w < 1).cast("int")).cast("long").alias("n_clamped_low"),
         F.sum(w.isNull().cast("int")).cast("long").alias("n_null_weight"),
         F.max(w).cast("long").alias("max_weight_seen"),
@@ -387,13 +389,13 @@ def weighted_sample_clamp_stats(df: DataFrame, max_weight: int = _MAX_WEIGHT) ->
     )
 
 
-def boilerplate_scrub(df: DataFrame, seg_tokens: int = 4, max_docs: int = 4) -> DataFrame:
+def boilerplate_scrub(df: DataFrame, max_docs: int = 4) -> DataFrame:
     """CCNet-style corpus-frequency boilerplate removal: segments that
     recur across more than ``max_docs`` documents (headers, footers,
     navigation chrome, license blurbs) are dropped from every document
     and the text is reassembled from the surviving segments in order.
     CCNet's removal unit is the paragraph; for unstructured single-line
-    text the unit is a fixed non-overlapping ``seg_tokens``-token window
+    text the unit is a fixed non-overlapping ``_SEG_TOKENS``-token window
     (``chunk_structs`` with window == stride).
 
     Scale shape: segment rows are token-sized (not char-sized), the
@@ -411,7 +413,7 @@ def boilerplate_scrub(df: DataFrame, seg_tokens: int = 4, max_docs: int = 4) -> 
     segs = df.select(
         F.col("doc_id"),
         F.posexplode(
-            chunk_structs(F.col("text"), window=seg_tokens, stride=seg_tokens)
+            chunk_structs(F.col("text"), window=_SEG_TOKENS, stride=_SEG_TOKENS)
         ).alias("pos", "c"),
     ).select("doc_id", "pos", F.col("c.chunk_text").alias("seg"))
     boiler = (
@@ -744,7 +746,7 @@ def source_top_terms(df: DataFrame) -> DataFrame:
     )
 
 
-def pmi_collocations(df: DataFrame, min_count: int = 5, top_n: int = 50) -> DataFrame:
+def pmi_collocations(df: DataFrame, top_n: int = 50) -> DataFrame:
     """Collocation mining: the corpus's most-associated adjacent word
     pairs by pointwise mutual information — the classic phrase
     detector (Church & Hanks 1990; word2vec's phrase pass uses the
@@ -759,17 +761,17 @@ def pmi_collocations(df: DataFrame, min_count: int = 5, top_n: int = 50) -> Data
     at extreme corpus scale lift them to DECIMAL(38,0)) meeting in ONE
     IEEE division, bit-identical on any engine — no transcendental
     ``ln`` whose last ulp varies between libm builds (same dodge as
-    unigram_commonness). min_count floors the classic PMI rare-pair
+    unigram_commonness). ``_PMI_MIN_COUNT`` floors the classic PMI rare-pair
     pathology (a 1-occurrence pair of two 1-occurrence words scores
     maximal PMI).
 
     Shape: one corpus-sized partial-agg shuffle for bigram counts, one
     for unigram counts (vocabulary-sized output); unigram marginals
-    then broadcast-join back onto the min_count-survivor bigrams, and
+    then broadcast-join back onto the _PMI_MIN_COUNT-survivor bigrams, and
     the final top_n window sorts only the survivor table. No shuffle
     carries document text. The broadcast side is NOT the full
-    vocabulary: a surviving bigram needs c(xy) >= min_count, and
-    c(x) >= c(xy), so marginals are pre-filtered to c_t >= min_count —
+    vocabulary: a surviving bigram needs c(xy) >= _PMI_MIN_COUNT, and
+    c(x) >= c(xy), so marginals are pre-filtered to c_t >= _PMI_MIN_COUNT —
     provably output-invariant, and it cuts the hapax-dominated Zipf
     tail (the bulk of distinct types in a web corpus) before the
     broadcast. n_total still sums the UNFILTERED counts. If the
@@ -802,13 +804,13 @@ def pmi_collocations(df: DataFrame, min_count: int = 5, top_n: int = 50) -> Data
         .agg(F.count(F.lit(1)).alias("c_t"))
     )
     n_total = uni.agg(F.sum("c_t").alias("n_total"))
-    # output-invariant broadcast bound: c(x) >= c(xy) >= min_count for
-    # every surviving bigram, so sub-min_count marginals can't join
-    marg = uni.filter(F.col("c_t") >= min_count)
+    # output-invariant broadcast bound: c(x) >= c(xy) >= _PMI_MIN_COUNT for
+    # every surviving bigram, so sub-_PMI_MIN_COUNT marginals can't join
+    marg = uni.filter(F.col("c_t") >= _PMI_MIN_COUNT)
     big = (
         pairs.groupBy("x", "y")
         .agg(F.count(F.lit(1)).alias("c_xy"))
-        .filter(F.col("c_xy") >= min_count)
+        .filter(F.col("c_xy") >= _PMI_MIN_COUNT)
     )
     scored = (
         big.join(F.broadcast(marg.withColumnRenamed("t", "x")), "x")

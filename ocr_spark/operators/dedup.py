@@ -40,7 +40,6 @@ from ocr_spark.functions.text import fingerprint, word_shingles
 
 DEFAULT_NUM_HASHES = 8
 DEFAULT_BANDS = 4  # rows per band = num_hashes // bands
-SHINGLE_N = 3  # words per shingle, for every shingle-set operator
 LSH_MAX_BUCKET = 64  # docs per LSH (band, bucket) before it is dropped
 WINNOW_MAX_POSTINGS = 4  # docs per winnowing fingerprint before it is dropped
 _WINNOW_K = 8  # chars per winnowing gram
@@ -139,14 +138,14 @@ def _band_buckets_expr(sh_arr, num_hashes: int, bands: int) -> "F.Column":
     return F.aggregate(pairs, zero, merge, finish)
 
 
-def dedup_exact(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(df: DataFrame) -> DataFrame:
     """Exact duplicate groups by normalized-text fingerprint.
-    Returns (fp, keeper, n_dups); keeper = min id (deterministic)."""
+    Returns (fp, keeper, n_dups); keeper = min doc_id (deterministic)."""
     return (
-        df.select(fingerprint(F.col("text")).alias("fp"), F.col(id_col))
+        df.select(fingerprint(F.col("text")).alias("fp"), "doc_id")
         .groupBy("fp")
         .agg(
-            F.min(id_col).alias("keeper"),
+            F.min("doc_id").alias("keeper"),
             F.count(F.lit(1)).alias("n_dups"),
         )
     )
@@ -186,7 +185,7 @@ def exploded_shingles(df: DataFrame) -> DataFrame:
     """(id, shingle) pairs, distinct per doc — the inverted-index base."""
     return df.select(
         F.col("doc_id").alias("id"),
-        F.explode(word_shingles(F.col("text"), SHINGLE_N)).alias("sh"),
+        F.explode(word_shingles(F.col("text"))).alias("sh"),
     )
 
 
@@ -239,11 +238,11 @@ def ngram_jaccard_pairs(
     )
 
 
-def shingle_arrays(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, sh_arr, n_sh): distinct shingles as an array column."""
+def shingle_arrays(df: DataFrame) -> DataFrame:
+    """(id, sh_arr, n_sh): a doc's distinct shingles as an array column."""
     return df.select(
-        F.col(id_col).alias("id"),
-        word_shingles(F.col("text"), SHINGLE_N).alias("sh_arr"),
+        F.col("doc_id").alias("id"),
+        word_shingles(F.col("text")).alias("sh_arr"),
     ).withColumn("n_sh", F.size("sh_arr"))
 
 
@@ -275,18 +274,16 @@ def minhash_lsh_dedup(
     df: DataFrame,
     threshold: float = 0.5,
     num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """MinHash-LSH near-dup pipeline: signatures → banded candidates →
-    exact-Jaccard verification of candidates only.
+    """MinHash-LSH near-dup pipeline: signatures → ``DEFAULT_BANDS``
+    banded candidates → exact-Jaccard verification of candidates only.
 
     Output (id_a, id_b, jaccard) — same shape as ``ngram_jaccard_pairs``
     but with LSH-bounded candidate generation (the scale path)."""
-    if num_hashes % bands:
+    if num_hashes % DEFAULT_BANDS:
         raise ValueError(
             f"num_hashes ({num_hashes}) must divide evenly into bands "
-            f"({bands}) — trailing signatures would be silently unused"
+            f"({DEFAULT_BANDS}) — trailing signatures would be silently unused"
         )
     _check_num_hashes(num_hashes)
     # widen BEFORE shingling: the input scan's partition count
@@ -295,12 +292,9 @@ def minhash_lsh_dedup(
     # parallelism of every downstream stage reading the materialized
     # table (signatures, bucket join, verify)
     arr = _materialize_shingles(
-        shingle_arrays(
-            df.repartition(df.sparkSession.sparkContext.defaultParallelism),
-            id_col,
-        )
+        shingle_arrays(df.repartition(df.sparkSession.sparkContext.defaultParallelism))
     )
-    # docs with zero shingles (< SHINGLE_N tokens) carry the sentinel
+    # docs with zero shingles (< text.SHINGLE_N tokens) carry the sentinel
     # accumulator: every such doc would hash to the SAME band buckets
     # and become a mutual candidate (the DuckDB twin's list_min gives
     # NULL buckets, which never join). Values still agree either way —
@@ -308,7 +302,7 @@ def minhash_lsh_dedup(
     # keeps the bucket join structurally identical across engines and
     # out of the skew cap's way.
     bucketed = arr.filter(F.col("n_sh") > 0).select(
-        "id", _band_buckets_expr(F.col("sh_arr"), num_hashes, bands).alias("buckets")
+        "id", _band_buckets_expr(F.col("sh_arr"), num_hashes, DEFAULT_BANDS).alias("buckets")
     )
     cand = lsh_candidate_pairs(bucketed)
     # exact verify via per-pair array_intersect: two equi-joins to

@@ -1,15 +1,22 @@
 """Relational operator suite over the driver testdata tables.
 
 Each function is the Spark side of a SURVEY.md §2 operator mapping; its
-DuckDB oracle twin lives in ``__spark_entry__.oracle_sql``. Engine
-parity rules used throughout:
+DuckDB oracle twin is the same-named entry of ``queries.ORACLE_SQL``.
+Operators take the table DataFrames they read (``events``,
+``documents``, ``lineitem``, ...) and read no paths and no session
+state: ``queries.SPARK_QUERIES`` binds each to its testdata loaders.
+Engine parity rules used throughout:
 
 - Money/quantity aggregation goes through DECIMAL casts → sums are
   exact and partition-order-independent (doubles would drift between
   Spark's parallel and DuckDB's sequential fold).
 - Every rank/top-k has a total deterministic ORDER BY (unique-key
   tie-break).
-- Timestamps are emitted as formatted strings (engine-neutral).
+- Timestamps (``events.ts``, ``orders.o_orderdate``) are
+  TIMESTAMP_NTZ and every expression over them is zone-free: text is
+  a prefix of the NTZ→string cast and epoch micros the NTZ interval
+  since 1970-01-01, so results do not depend on the session's
+  ``spark.sql.session.timeZone``.
 
 Scale notes are per-function docstrings: which side broadcasts, where
 the shuffles are, what AQE handles.
@@ -17,15 +24,33 @@ the shuffles are, what AQE handles.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from ocr_spark.plans.session import ensure_utc
-from ocr_spark.sources.io import load_table
 
 
 def _dec(c: str) -> Column:
     return F.col(c).cast("decimal(15,4)")
+
+
+def _epoch_us(ts: Column) -> Column:
+    """The TIMESTAMP_NTZ ``ts`` as UTC epoch micros (DuckDB's
+    ``epoch_us``): NTZ minus NTZ is an interval with no zone in it, where
+    ``unix_micros(ts.cast("timestamp"))`` shifts by the session zone and
+    ``timestampdiff`` moves a wall time inside a DST gap by an hour."""
+    since = ts - F.expr("TIMESTAMP_NTZ'1970-01-01 00:00:00'")
+    return (since.cast("interval second").cast("decimal(18,6)") * 1_000_000).cast("long")
+
+
+def _ts_text(ts: Column, n_chars: int) -> Column:
+    """The first ``n_chars`` of the TIMESTAMP_NTZ ``ts`` as ``yyyy-MM-dd
+    HH:mm:ss`` (19) text: the cast prints the stored wall time, where
+    ``date_format`` moves one inside a DST gap (02:30 → 03:30)."""
+    return F.substring(ts.cast("string"), 1, n_chars)
+
+
+def _k_prop() -> Column:
+    """The integer ``"k"`` field of the ``props`` JSON text, or NULL."""
+    return F.nullif(F.regexp_extract(F.col("props"), r'"k":\s*(\d+)', 1), F.lit("")).cast("int")
 
 
 def _revenue() -> Column:
@@ -39,13 +64,12 @@ def _revenue() -> Column:
 # Aggregation pipeline (SURVEY A1/A2: SUM/MAX over harvested numerics)
 # --------------------------------------------------------------------------
 
-def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1-shaped rollup: one scan, map-side partial agg, one
     shuffle on the (2×2-value) grouping key. At 100 TB this is
     scan-bound; DECIMAL sums keep it exact at any width."""
-    li = load_table(spark, sf_dir, "lineitem")
     return (
-        li.groupBy("l_returnflag", "l_linestatus")
+        lineitem.groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
             F.sum(_dec("l_extendedprice")).cast("double").alias("sum_base_price"),
@@ -56,43 +80,46 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+def top_orders(customer: DataFrame, orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """TPC-H Q3-shaped join+agg+topk: the broadcast BUILDING customer
     set filters orders BEFORE the lineitem join, so only BUILDING
     orders meet the largest table; revenue decimal-exact; top 10
     deterministic."""
-    ensure_utc(spark)  # driver-session guard (plans/session.py)
-    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = load_table(spark, sf_dir, "orders").join(
-        F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")
-    )
-    li = load_table(spark, sf_dir, "lineitem")
+    cust = customer.filter(F.col("c_mktsegment") == "BUILDING")
+    building = orders.join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
     rev = (
-        li.withColumn("rev", _revenue())
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        lineitem.withColumn("rev", _revenue())
+        .join(building, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("o_orderkey", "o_orderdate")
         .agg(F.sum("rev").cast("double").alias("revenue"))
     )
     return rev.orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc()).limit(10).select(
         "o_orderkey",
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
+        _ts_text(F.col("o_orderdate"), 10).alias("orderdate"),
         "revenue",
     )
 
 
-def region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star-join chain region⋈nation⋈supplier⋈lineitem: every dim side
-    broadcast (region=5, nation=25, supplier=100 rows — and on a real
-    cluster still ≪ the 10 MB auto-broadcast bar), so the only shuffle
-    is the final group-by."""
-    region = load_table(spark, sf_dir, "region")
-    nation = load_table(spark, sf_dir, "nation")
-    supplier = load_table(spark, sf_dir, "supplier")
-    li = load_table(spark, sf_dir, "lineitem")
+def _star_join(
+    lineitem: DataFrame, supplier: DataFrame, nation: DataFrame, region: DataFrame
+) -> DataFrame:
+    """lineitem⋈supplier⋈nation⋈region, every dim side broadcast (region=5,
+    nation=25, supplier=100 rows — on a real cluster still ≪ the 10 MB
+    auto-broadcast bar), so no shuffle comes before the caller's agg."""
     return (
-        li.join(F.broadcast(supplier), F.col("l_suppkey") == F.col("s_suppkey"))
+        lineitem.join(F.broadcast(supplier), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
+    )
+
+
+def region_revenue(
+    lineitem: DataFrame, supplier: DataFrame, nation: DataFrame, region: DataFrame
+) -> DataFrame:
+    """Revenue per region over ``_star_join``: the only shuffle is the
+    final group-by."""
+    return (
+        _star_join(lineitem, supplier, nation, region)
         .groupBy("r_name")
         .agg(
             F.sum(_revenue()).cast("double").alias("revenue"),
@@ -106,12 +133,11 @@ def region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Mode / argmax / latest (SURVEY A3/A4/A5)
 # --------------------------------------------------------------------------
 
-def mode_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
+def mode_event_type(ev: DataFrame) -> DataFrame:
     """A5 deterministic mode: most frequent event_type per user, ties →
     lexicographically smallest (the reference returns "None" on ties,
     App.jsx:496-544 — we pick a total order instead so the result is
     well-defined under any parallelism)."""
-    ev = load_table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("user_id").orderBy(F.col("n").desc(), F.col("event_type").asc())
     return (
@@ -121,7 +147,7 @@ def mode_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def mode_event_type_ties_null(spark: SparkSession, sf_dir: str) -> DataFrame:
+def mode_event_type_ties_null(ev: DataFrame) -> DataFrame:
     """A5 mode with the REFERENCE's tie semantics (App.jsx:496-544):
     a tie for the top count yields NULL (the reference renders "None")
     rather than a picked winner. Offered alongside the deterministic
@@ -129,7 +155,6 @@ def mode_event_type_ties_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie policy explicitly. Plan: the count groupBy's exchange also
     serves the per-user max window and final groupBy (same user_id
     hash partitioning) — still effectively one wide shuffle."""
-    ev = load_table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
     max_n = F.max("n").over(Window.partitionBy("user_id"))
     top = counts.withColumn("max_n", max_n).filter(F.col("n") == F.col("max_n"))
@@ -148,11 +173,10 @@ def mode_event_type_ties_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def argmax_event(spark: SparkSession, sf_dir: str) -> DataFrame:
+def argmax_event(ev: DataFrame) -> DataFrame:
     """A3 argmax: per user, the event with the max value (tie → min
     event_id). row_number over a total order — portable, unlike
     engine-specific max_by tie semantics."""
-    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.col("value").desc(), F.col("event_id").asc())
     return (
         ev.withColumn("rn", F.row_number().over(w))
@@ -161,25 +185,34 @@ def argmax_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def latest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
+def latest_event(ev: DataFrame) -> DataFrame:
     """A4 max-over-dates per user; timestamp out as string."""
-    ensure_utc(spark)  # driver-session guard (plans/session.py)
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id")
-        .agg(F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("latest_ts"))
+    return ev.groupBy("user_id").agg(_ts_text(F.max("ts"), 19).alias("latest_ts"))
+
+
+def events_per_day(ev: DataFrame) -> DataFrame:
+    """Event count per calendar day of ``ts``."""
+    return ev.groupBy(_ts_text(F.col("ts"), 10).alias("day")).agg(
+        F.count(F.lit(1)).alias("n_events")
+    )
+
+
+def props_sum(ev: DataFrame) -> DataFrame:
+    """Per user, the sum and count of the ``"k"`` props field."""
+    return ev.select("user_id", _k_prop().alias("k")).groupBy("user_id").agg(
+        F.sum("k").alias("k_sum"),
+        F.count("k").alias("k_n"),
     )
 
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 
-def event_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+def event_type_pivot(ev: DataFrame) -> DataFrame:
     """A6/A8 pivot: per-user counts by event_type as fixed columns
     (conditional aggregation — the reference's transaction pivot,
     download.jsx:184-264, with a static column set so the schema is
     stable and no driver-side distinct/collect is needed)."""
-    ev = load_table(spark, sf_dir, "events")
     aggs = [
         F.sum(F.when(F.col("event_type") == t, 1).otherwise(0)).alias(f"n_{t}")
         for t in EVENT_TYPES
@@ -187,10 +220,9 @@ def event_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.groupBy("user_id").agg(*aggs)
 
 
-def progress_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+def progress_ratio(ev: DataFrame) -> DataFrame:
     """A7 progress ratio: share of each user's events that are 'click'
     (integer counts + single division → portable)."""
-    ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("user_id").agg(
         F.round(
             F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
@@ -200,7 +232,7 @@ def progress_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+def asof_last_purchase(ev: DataFrame) -> DataFrame:
     """AS-OF JOIN, an operator Spark has no native keyword for: each
     'click' event is joined to the user's most recent purchase at or
     before it (J2's correlation join generalized to event-time
@@ -213,7 +245,6 @@ def asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     a naive ``b.ts <= a.ts`` join produces (at 100 TB that join is
     quadratic per user; this stays O(n log n) sort-bounded). Total
     order (ts, event_id) makes the pick deterministic under ties."""
-    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.col("ts").asc(), F.col("event_id").asc())
@@ -230,7 +261,7 @@ def asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def source_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+def source_quota_sample(docs: DataFrame) -> DataFrame:
     """Per-source document quota (the domain-cap step of a pretraining
     mix: no single source may contribute more than 10 docs). Selection
     is a deterministic hash order — row_number over md5(doc_id) within
@@ -238,12 +269,11 @@ def source_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingestion order. One shuffle on source; at extreme source skew the
     window sort is bounded per partition, and AQE's skew split handles
     a hot source (the selection itself only ever keeps 10 rows)."""
-    d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")).asc(), F.col("doc_id").asc()
     )
     return (
-        d.withColumn("rn", F.row_number().over(w))
+        docs.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 10)
         .select("doc_id", "source", "rn")
     )
@@ -253,14 +283,13 @@ def source_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Pagination / dedup (SURVEY J4/J5)
 # --------------------------------------------------------------------------
 
-def paginate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+def paginate_events(ev: DataFrame) -> DataFrame:
     """J4 pagination via row_number over a total order: page 11 at 10
     rows per page.
 
     REPORT-ONLY operator: the unpartitioned window forces the whole
     table through one task — fine for a bounded report, wrong as an API
     at scale. The scale path is ``paginate_events_keyset`` below."""
-    ev = load_table(spark, sf_dir, "events")
     w = Window.orderBy(F.col("event_id").asc())
     lo, hi = 100, 110
     return (
@@ -270,13 +299,12 @@ def paginate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def paginate_events_keyset(spark: SparkSession, sf_dir: str) -> DataFrame:
+def paginate_events_keyset(ev: DataFrame) -> DataFrame:
     """J4 pagination, keyset form — the scale path: ``WHERE key >
     last_seen ORDER BY key LIMIT n``, here the 10 rows after key 100.
     The predicate pushes down to the scan and orderBy+limit plans as
     TakeOrderedAndProject (per-partition top-k, merged on the driver)
     — no global sort, no single-task window, at any table size."""
-    ev = load_table(spark, sf_dir, "events")
     return (
         ev.filter(F.col("event_id") > 100)
         .orderBy(F.col("event_id").asc())
@@ -285,9 +313,8 @@ def paginate_events_keyset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def distinct_user_types(spark: SparkSession, sf_dir: str) -> DataFrame:
+def distinct_user_types(ev: DataFrame) -> DataFrame:
     """J5 idempotent dedup: distinct (user_id, event_type) pairs."""
-    ev = load_table(spark, sf_dir, "events")
     return ev.select("user_id", "event_type").distinct()
 
 
@@ -295,19 +322,18 @@ def distinct_user_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Line-window operators over exploded token positions (SURVEY W1/W2)
 # --------------------------------------------------------------------------
 
-def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
+def _doc_tokens(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "word")
     )
 
 
-def label_next_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+def label_next_value(docs: DataFrame) -> DataFrame:
     """W2 relational analogue — label token 'customer' → next-position value
     (first occurrence per doc). In the engine proper this runs
     in-batch (core/pdf_layout.py); this is the Window.partitionBy
     formulation for the relational surface."""
-    toks = _doc_tokens(spark, sf_dir)
+    toks = _doc_tokens(docs)
     w = Window.partitionBy("doc_id").orderBy("pos")
     led = toks.withColumn("nxt", F.lead("word").over(w))
     matches = led.filter(F.col("word") == "customer")
@@ -319,11 +345,11 @@ def label_next_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def anchor_lookback(spark: SparkSession, sf_dir: str) -> DataFrame:
+def anchor_lookback(docs: DataFrame) -> DataFrame:
     """W1 relational analogue — at each anchor token 'spark', the
     nearest target token 'table' within the previous 10 positions
     (frame max of conditional pos). First anchor per doc."""
-    toks = _doc_tokens(spark, sf_dir)
+    toks = _doc_tokens(docs)
     w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-10, -1)
     scanned = toks.withColumn(
         "back_pos", F.max(F.when(F.col("word") == "table", F.col("pos"))).over(w)
@@ -337,11 +363,11 @@ def anchor_lookback(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def label_offset2(spark: SparkSession, sf_dir: str) -> DataFrame:
+def label_offset2(docs: DataFrame) -> DataFrame:
     """W3 relational analogue — value at position 'group'+2 (the
     reference's From/(State) offset-2 capture, ocr_utils.py:131-154),
     first occurrence per doc."""
-    toks = _doc_tokens(spark, sf_dir)
+    toks = _doc_tokens(docs)
     w = Window.partitionBy("doc_id").orderBy("pos")
     led = toks.withColumn("plus2", F.lead("word", 2).over(w))
     m = led.filter(F.col("word") == "group")
@@ -353,12 +379,12 @@ def label_offset2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def multi_pass_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
+def multi_pass_coalesce(docs: DataFrame) -> DataFrame:
     """W7 relational analogue — the reference's 3-pass vehicle search
     (weighbridge.py:28-81) as an ordered coalesce of strategies:
     (1) token after first 'hash', (2) token after first 'merge',
     (3) first token of the doc."""
-    toks = _doc_tokens(spark, sf_dir)
+    toks = _doc_tokens(docs)
     w = Window.partitionBy("doc_id").orderBy("pos")
     led = toks.withColumn("nxt", F.lead("word").over(w))
 
@@ -388,12 +414,10 @@ def multi_pass_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
+def orders_by_month(orders: DataFrame) -> DataFrame:
     """F5/F11 date ops: month bucketing + decimal-exact totals."""
-    ensure_utc(spark)  # driver-session guard (plans/session.py)
-    orders = load_table(spark, sf_dir, "orders")
     return (
-        orders.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
+        orders.groupBy(_ts_text(F.col("o_orderdate"), 7).alias("month"))
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.sum(F.col("o_totalprice").cast("decimal(15,4)"))
@@ -403,33 +427,26 @@ def orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP(region, nation) revenue — hierarchical totals in one
-    pass (grouping-sets machinery; subtotal rows carry NULLs)."""
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    supplier = load_table(spark, sf_dir, "supplier")
-    li = load_table(spark, sf_dir, "lineitem")
-    joined = (
-        li.join(F.broadcast(supplier), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
-    )
+def revenue_rollup(
+    lineitem: DataFrame, supplier: DataFrame, nation: DataFrame, region: DataFrame
+) -> DataFrame:
+    """ROLLUP(region, nation) quantity over ``_star_join`` — hierarchical
+    totals in one pass (grouping-sets machinery; subtotal rows carry
+    NULLs)."""
+    joined = _star_join(lineitem, supplier, nation, region)
     return joined.rollup("r_name", "n_name").agg(
         F.sum(F.col("l_quantity").cast("decimal(15,4)")).cast("double").alias("sum_qty"),
         F.count(F.lit(1)).alias("n_items"),
     )
 
 
-def format_tons(spark: SparkSession, sf_dir: str) -> DataFrame:
+def format_tons(ev: DataFrame) -> DataFrame:
     """F9/F10 unit formatting: kg→tons with printf formatting
     (weighbridge.py:103 `f"{kg/1000:.3f} Tons"`). Integer-derived
     values only — never exactly at a rounding tie, so C/Java printf
     agree."""
-    ev = load_table(spark, sf_dir, "events")
-    k = F.nullif(F.regexp_extract(F.col("props"), r'"k":\s*(\d+)', 1), F.lit("")).cast("int")
     return (
-        ev.select("user_id", k.alias("k"))
+        ev.select("user_id", _k_prop().alias("k"))
         .groupBy("user_id")
         .agg(F.max("k").alias("max_k"))
         .select(
@@ -439,27 +456,24 @@ def format_tons(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def revenue_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
+def revenue_cube(lineitem: DataFrame) -> DataFrame:
     """CUBE(returnflag, linestatus) — all grouping-set combinations in
     one pass (rollup's sibling; subtotals carry NULLs)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
+    return lineitem.cube("l_returnflag", "l_linestatus").agg(
         F.sum(F.col("l_quantity").cast("decimal(15,4)")).cast("double").alias("sum_qty"),
         F.count(F.lit(1)).alias("n_items"),
     )
 
 
-def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sessionize_events(ev: DataFrame) -> DataFrame:
     """Gap-based sessionization: a new session starts when the gap to
     the previous event exceeds 30 minutes (lag + cumulative-sum
     windows — the batch formulation of session windows). Output:
     per-user session count and largest session size."""
-    ev = load_table(spark, sf_dir, "events")
     # microsecond-precision epoch on BOTH sides (DuckDB twin uses
     # epoch_us): whole-second truncation would disagree with the
     # oracle for gaps within 1s of the boundary
-    ensure_utc(spark)
-    epoch = F.unix_micros(F.col("ts").cast("timestamp"))
+    epoch = _epoch_us(F.col("ts"))
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     gapped = ev.withColumn(
         "new_session",
@@ -494,19 +508,24 @@ def skew_report(df: DataFrame, key_col: str, top_n: int = 5) -> DataFrame:
     TakeOrderedAndProject for the top-N (no full sort), and an
     all-to-one stats aggregate — safe on any input size. Determinism:
     top-N orders by (count desc, key-as-string asc) and the serialized
-    list re-sorts the same way on both engines. A NULL key — often
-    exactly the hot key this diagnostic exists to surface — is
-    reported under the sentinel string ``<null>`` (a raw NULL would be
-    silently dropped by concat/array_join AND ordered differently by
-    Spark's NULLS-FIRST vs DuckDB's NULLS-LAST at a top_n tie)."""
-    ks = F.coalesce(F.col("k").cast("string"), F.lit("<null>"))
+    list re-sorts the same way on both engines, a NULL key first among
+    equal counts (Spark orders NULLs first, DuckDB last, unless told).
+    A NULL key — often exactly the hot key this diagnostic exists to
+    surface — is listed as ``null=count``: every other entry is
+    ``key:count`` and so holds a ``:``, which this one does not, so no
+    string key (``'null'``, ``'<null>'``, ...) can print as it."""
+    ks = F.col("k").cast("string")
+    c = F.col("c").cast("string")
+    entry = F.when(ks.isNull(), F.concat(F.lit("null="), c)).otherwise(
+        F.concat(ks, F.lit(":"), c)
+    )
     counts = df.groupBy(F.col(key_col).alias("k")).agg(F.count(F.lit(1)).alias("c"))
     stats = counts.agg(
         F.sum("c").cast("long").alias("n_rows"),
         F.count(F.lit(1)).alias("n_keys"),
         F.max("c").alias("max_count"),
     )
-    top = counts.orderBy(F.col("c").desc(), ks.asc()).limit(top_n)
+    top = counts.orderBy(F.col("c").desc(), ks.asc_nulls_first()).limit(top_n)
     top_str = top.agg(
         F.array_join(
             F.transform(
@@ -514,11 +533,13 @@ def skew_report(df: DataFrame, key_col: str, top_n: int = 5) -> DataFrame:
                     F.collect_list(
                         F.struct(
                             (-F.col("c")).alias("nc"),
+                            ks.isNotNull().alias("has_key"),
                             ks.alias("ks"),
+                            entry.alias("entry"),
                         )
                     )
                 ),
-                lambda s: F.concat(s["ks"], F.lit(":"), (-s["nc"]).cast("string")),
+                lambda s: s["entry"],
             ),
             ",",
         ).alias("top_keys")
@@ -571,13 +592,12 @@ def salted_equijoin(
     return f.join(d.hint("shuffle_hash"), [fact_key, "_salt"]).drop("_salt")
 
 
-def salted_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+def salted_part_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     """Revenue per part type through the salted join (lineitem ⋈ part
     on partkey, salt spread by l_orderkey). Decimal-exact sums; the
     result is identical to the unsalted join by construction."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    j = salted_equijoin(li, part, "l_partkey", "p_partkey", "l_orderkey")
+    part = part.select("p_partkey", "p_type")
+    j = salted_equijoin(lineitem, part, "l_partkey", "p_partkey", "l_orderkey")
     return (
         j.groupBy("p_type")
         .agg(
@@ -635,21 +655,16 @@ def range_join_binned(
     ).drop("_bin")
 
 
-def clicks_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+def clicks_before_purchase(ev: DataFrame) -> DataFrame:
     """Attribution range-join: for every purchase event, how many of
     the same user's clicks landed in the preceding hour. Work in
-    integer epoch-microseconds end to end (``unix_micros`` here,
+    integer epoch-microseconds end to end (``_epoch_us`` here,
     ``epoch_us`` in the DuckDB oracle) so the range predicate is
     exact-integer in both engines. The oracle states the naive
     inequality join; this plan is the binned equivalent — identical
     result, linear cost."""
-    ensure_utc(spark)
-    ev = load_table(spark, sf_dir, "events")
     hour = 3_600_000_000
-    # parquet ts is TIMESTAMP_NTZ; the cast reinterprets the wall time
-    # as UTC (session tz pinned above) — same reading as DuckDB's
-    # epoch_us on a naive timestamp
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    us = _epoch_us(F.col("ts"))
     p = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", us.alias("p_us")
     )
@@ -664,7 +679,7 @@ def clicks_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def rolling_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+def rolling_user_value(ev: DataFrame) -> DataFrame:
     """Moving-window aggregate per key over the trailing 5 events — the
     rolling-feature shape every event-stream feature pipeline needs
     (trailing spend, rate counters). One shuffle on user_id, then a
@@ -676,8 +691,6 @@ def rolling_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     implementations (Spark's running frame vs DuckDB's segment tree
     would diverge on raw double sums). Total order (ts, event_id) pins frame membership
     under timestamp ties."""
-    ensure_utc(spark)
-    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.col("ts").asc(), F.col("event_id").asc())
@@ -696,7 +709,7 @@ def rolling_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
+def funnel_conversion(ev: DataFrame) -> DataFrame:
     """Funnel analysis: for each user's FIRST signup, did a purchase
     land within 7 days, and how long did it take. The
     first-signup pick is min(struct(ts_us, event_id)) — Spark struct
@@ -705,9 +718,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer epoch-micros. One groupBy per stage + one equi-join on
     user_id; nothing scans event pairs, so cost is linear in events
     regardless of per-user history length."""
-    ensure_utc(spark)
-    ev = load_table(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    us = _epoch_us(F.col("ts"))
     w_us = 7 * 86_400_000_000
     sig = (
         ev.filter(F.col("event_type") == "signup")

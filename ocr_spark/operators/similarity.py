@@ -29,6 +29,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 EMB_DIM = 64
+# cosine_neardup_lsh's default banding, the one its SQL twin runs:
+# sign components per band, bands, and docs per (band, bucket)
+SIGN_LSH_BITS = 8
+SIGN_LSH_BANDS = 8
+SIGN_LSH_MAX_BUCKET = 256
 
 
 def dot_expr(a: str, b: str, dim: int = EMB_DIM) -> Column:
@@ -112,10 +117,10 @@ def _verify_pairs(pairs: DataFrame, threshold: float, dim: int) -> DataFrame:
     )
 
 
-def cosine_topk(emb: DataFrame, n_queries: int = 10, k: int = 3) -> DataFrame:
-    """Brute-force cosine top-k: first ``n_queries`` vec_ids as queries,
-    broadcast against the full table. Output (q_id, vec_id, sim, rank)."""
-    return _brute_topk(emb, _queries(emb, n_queries), k, EMB_DIM)
+def cosine_topk(emb: DataFrame, k: int = 3) -> DataFrame:
+    """Brute-force cosine top-k: first 10 vec_ids as queries, broadcast
+    against the full table. Output (q_id, vec_id, sim, rank)."""
+    return _brute_topk(emb, _queries(emb, 10), k, EMB_DIM)
 
 
 def sign_bucket(col: str, bits: int = 8, offset: int = 0) -> Column:
@@ -131,10 +136,11 @@ def sign_bucket(col: str, bits: int = 8, offset: int = 0) -> Column:
     return F.concat(*chars)
 
 
-def sign_bucket_sql(col: str, bits: int = 8, offset: int = 0) -> str:
+def sign_bucket_sql(col: str, offset: int = 0) -> str:
+    """DuckDB twin of ``sign_bucket`` at ``SIGN_LSH_BITS`` bits."""
     parts = " || ".join(
         f"(CASE WHEN CAST({col}[{offset + i + 1}] AS DOUBLE) >= 0 THEN '+' ELSE '-' END)"
-        for i in range(bits)
+        for i in range(SIGN_LSH_BITS)
     )
     return f"({parts})"
 
@@ -149,9 +155,9 @@ def cosine_neardup(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
 def cosine_neardup_lsh(
     emb: DataFrame,
     threshold: float = 0.4,
-    bits: int = 8,
-    n_bands: int = 8,
-    max_bucket: int = 256,
+    bits: int = SIGN_LSH_BITS,
+    n_bands: int = SIGN_LSH_BANDS,
+    max_bucket: int = SIGN_LSH_MAX_BUCKET,
     dim: int = EMB_DIM,
 ) -> DataFrame:
     """Banded sign-LSH near-dup pairs (id_a < id_b, sim ≥ t): candidate
@@ -205,18 +211,14 @@ def cosine_neardup_lsh(
     return _verify_pairs(pairs, threshold, dim)
 
 
-def neardup_lsh_sql(
-    threshold: float = 0.4,
-    bits: int = 8,
-    n_bands: int = 8,
-    max_bucket: int = 256,
-) -> str:
-    """DuckDB twin of ``cosine_neardup_lsh`` — identical algorithm
-    (banding, cap, verify), identical fold order, 1-indexed lists."""
+def neardup_lsh_sql(threshold: float = 0.4) -> str:
+    """DuckDB twin of ``cosine_neardup_lsh`` at its default banding —
+    identical algorithm (banding, cap, verify), identical fold order,
+    1-indexed lists."""
     bands = "\n  UNION ALL ".join(
         f"SELECT vec_id, {l} AS band, "
-        f"{sign_bucket_sql('embedding', bits, l * bits)} AS bucket FROM embeddings"
-        for l in range(n_bands)
+        f"{sign_bucket_sql('embedding', l * SIGN_LSH_BITS)} AS bucket FROM embeddings"
+        for l in range(SIGN_LSH_BANDS)
     )
     dot = dot_sql("ea.embedding", "eb.embedding")
     na = norm_sql("ea.embedding")
@@ -226,7 +228,7 @@ WITH wb AS (
   {bands}
 ),
 ok AS (
-  SELECT band, bucket FROM wb GROUP BY band, bucket HAVING count(*) <= {max_bucket}
+  SELECT band, bucket FROM wb GROUP BY band, bucket HAVING count(*) <= {SIGN_LSH_MAX_BUCKET}
 ),
 bounded AS (
   SELECT wb.vec_id, wb.band, wb.bucket FROM wb JOIN ok USING (band, bucket)

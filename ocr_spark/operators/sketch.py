@@ -52,18 +52,6 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 
 HLL_P = 8  # 2^8 = 256 registers; standard error 1.04/sqrt(256) ~ 6.5%
-HLL_M = 1 << HLL_P
-# 32-bit hash, p index bits -> (32 - p)-bit pattern field; rank in
-# [1, 32 - p + 1]. Scaling the harmonic sum by 2^maxrank keeps every
-# term a positive integer power of two: max sum = m * 2^maxrank
-# = 2^(8+25) = 2^33 << 2^63.
-HLL_MAXRANK = 32 - HLL_P + 1  # 25
-# alpha_m * m^2 * 2^maxrank, computed ONCE here and interpolated into
-# both the Spark plan and the DuckDB oracle as the same double literal
-# (multiplying a double by exact powers of two is exact, so the
-# constant is bit-identical however either engine re-parses its repr).
-HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_M)
-HLL_NUMERATOR = HLL_ALPHA * HLL_M * HLL_M * float(1 << HLL_MAXRANK)
 
 
 def hll_consts(p: int) -> tuple[int, int, float]:
@@ -85,6 +73,17 @@ def hll_consts(p: int) -> tuple[int, int, float]:
         alpha = 0.7213 / (1.0 + 1.079 / m)
     maxr = 32 - p + 1
     return m, maxr, alpha * m * m * float(1 << maxr)
+
+
+# m registers; 32-bit hash, p index bits -> (32 - p)-bit pattern field,
+# rank in [1, maxrank = 32 - p + 1]. Scaling the harmonic sum by
+# 2^maxrank keeps every term a positive integer power of two: max sum
+# = m * 2^maxrank = 2^(8+25) = 2^33 << 2^63. The numerator
+# alpha_m * m^2 * 2^maxrank is computed ONCE here and interpolated into
+# both the Spark plan and the DuckDB oracle as the same double literal
+# (multiplying a double by exact powers of two is exact, so the
+# constant is bit-identical however either engine re-parses its repr).
+HLL_M, HLL_MAXRANK, HLL_NUMERATOR = hll_consts(HLL_P)
 
 
 def _hll_h32(key_str_col) -> "F.Column":

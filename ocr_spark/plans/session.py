@@ -8,8 +8,11 @@ bench, and the driver entry all run the same engine settings:
 - **Arrow on** with a bounded ``maxRecordsPerBatch`` — long transcript
   payloads mean batch size must be bounded by rows, not left at the
   10k default (SURVEY.md §4 "Spill / memory").
-- **UTC session timezone** — timestamp values must be engine-portable
-  (the DuckDB oracle is tz-naive).
+- **UTC session timezone** — for the timestamps a caller makes itself.
+  No operator depends on it: the testdata timestamps are TIMESTAMP_NTZ
+  and the operators read them through zone-free expressions
+  (operators/relational.py), so a session built elsewhere, in any
+  zone, gets the same rows, and nothing here rewrites its conf.
 - **shuffle.partitions ≈ 2-3× cores** locally; on a real cluster this
   is set per-job from executor count (AQE coalesces the excess).
 """
@@ -79,17 +82,3 @@ def iceberg_runtime_available(spark: SparkSession) -> bool:
     sc._ocr_spark_iceberg = available
     return available
 
-
-def ensure_utc(spark: SparkSession) -> None:
-    """Pin the session timezone to UTC if it isn't already.
-
-    Sessions built here are always UTC; this guard exists for
-    externally-built sessions (the grading driver hands queries its own
-    SparkSession) where a non-UTC timezone would shift every
-    date_format against the tz-naive DuckDB oracle. Centralized so the
-    session mutation happens in exactly one documented place instead of
-    scattered inside query builders."""
-    # no-default get: Spark 4 validates a supplied default against the
-    # conf's timezone validator, so "" would throw
-    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -41,8 +41,10 @@ compute the same result, column-name and value identical. Parity rules
   must be oracle-compared.
 
 Every ``SPARK_QUERIES`` key has an ``ORACLE_SQL`` entry. A query that
-applies one operator to one loaded input is a ``_on(loader, op, **kw)``
-row of the registry; a query with more to it is a ``q_*`` function.
+applies one operator to its loaded inputs is a ``_on(loader, op, **kw)``
+row of the registry (``_on((loader, ...), op)`` for several inputs); a
+query with more to it is a ``q_*`` function. The loaders here are the
+only code that knows the testdata layout: operators take DataFrames.
 Queries that are not SQL-expressible (the extraction pipeline, the
 field extractor) compare against parquet written by a pure-Python run
 of the shared core (ocr_spark/oracle_fixtures.py);
@@ -95,7 +97,6 @@ from ocr_spark.operators.dedup import (
     DEFAULT_BANDS,
     DEFAULT_NUM_HASHES,
     LSH_MAX_BUCKET,
-    SHINGLE_N,
     WINNOW_MAX_POSTINGS,
     apply_span_surgery,
     canonical_dedup,
@@ -127,7 +128,6 @@ from ocr_spark.oracle_fixtures import (
     fields_oracle_name,
     oracle_path,
 )
-from ocr_spark.plans.session import ensure_utc
 from ocr_spark.sources.io import load_table
 from ocr_spark.udfs import extract_udf, fields_udf
 
@@ -158,8 +158,13 @@ def transcripts_fixture_path(sf: float) -> str:
     return _FIXTURE_CACHE[sf]
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
+def _table(name: str) -> _Query:
+    """The loader of testdata table ``name`` (TESTDATA.md)."""
+
+    def load(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return load_table(spark, sf_dir, name)
+
+    return load
 
 
 def _wide_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -172,19 +177,9 @@ def _wide_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only/zero-shuffle (tests/test_plan_shape.py); on a many-file
     100 TB table the scan is already wide and the widening is a no-op
     cost-wise (one linear pass it would spend anyway)."""
-    return _docs(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
-
-
-def _lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "lineitem")
+    return load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
 
 
 def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,16 +190,21 @@ def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _weighted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents with the length-derived integer sampling weight that
     weighted_sample and its clamp audit both read."""
-    return _docs(spark, sf_dir).withColumn(
+    return load_table(spark, sf_dir, "documents").withColumn(
         "weight", (F.lit(1) + F.floor(F.length("text") / 512)).cast("int")
     )
 
 
-def _on(loader: _Query, op: Callable[..., DataFrame], *args, **kw) -> _Query:
-    """The driver query ``op(loader(spark, sf_dir), *args, **kw)``."""
+def _on(
+    loaders: _Query | tuple[_Query, ...], op: Callable[..., DataFrame], *args, **kw
+) -> _Query:
+    """The driver query ``op(*frames, *args, **kw)``, one frame per
+    loader (``loaders`` is one loader or a tuple of them)."""
+    if not isinstance(loaders, tuple):
+        loaders = (loaders,)
 
     def query(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return op(loader(spark, sf_dir), *args, **kw)
+        return op(*(load(spark, sf_dir) for load in loaders), *args, **kw)
 
     return query
 
@@ -215,7 +215,7 @@ def _per_doc(**exprs: Callable[[Column], Column]) -> _Query:
 
     def query(spark: SparkSession, sf_dir: str) -> DataFrame:
         text = F.col("text")
-        return _docs(spark, sf_dir).select(
+        return load_table(spark, sf_dir, "documents").select(
             "doc_id", *(fn(text).alias(name) for name, fn in exprs.items())
         )
 
@@ -230,7 +230,7 @@ def q_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     per doc, the keeper is a window-min over the fingerprint (one
     shuffle total), and both gates are plain predicates — no second
     aggregation or join. At 100 TB this is scan + one exchange."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     scored = d.select(
         "doc_id",
         lang_id(F.col("text")).alias("pred_lang"),
@@ -252,7 +252,7 @@ def q_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster resolution: LSH near-dup pairs → connected
     components (min-label propagation) → per-doc keeper decision."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return duplicate_components(docs, minhash_lsh_dedup(docs, threshold=0.5))
 
 
@@ -261,15 +261,17 @@ def q_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     English documents (pre-filter semi-join BEFORE any distance
     work) — embeddings align with documents on vec_id = doc_id."""
     allowed = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .filter(F.col("lang") == "en")
         .select(F.col("doc_id").alias("vec_id"))
     )
-    return S.cosine_topk_filtered(_emb(spark, sf_dir), allowed, n_queries=10, k=3)
+    return S.cosine_topk_filtered(
+        load_table(spark, sf_dir, "embeddings"), allowed, n_queries=10, k=3
+    )
 
 
 def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = to_media_table(_docs(spark, sf_dir))
+    media = to_media_table(load_table(spark, sf_dir, "documents"))
     return media.select(
         "doc_id", "media_type", "n_bytes", F.md5(F.col("payload")).alias("checksum")
     )
@@ -278,28 +280,11 @@ def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embedding_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 zip/posexplode analogue: array position-join — components of
     the first 4 embedding dims as rows."""
-    e = _emb(spark, sf_dir).filter(F.col("vec_id") < 20)
+    e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 20)
     return e.select(
         "vec_id",
         F.posexplode(F.slice("embedding", 1, 4)).alias("pos", "c"),
     ).select("vec_id", "pos", F.round(F.col("c").cast("double"), 6).alias("c"))
-
-
-def q_events_per_day(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_utc(spark)  # driver-session guard (plans/session.py)
-    return _events(spark, sf_dir).groupBy(
-        F.date_format("ts", "yyyy-MM-dd").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-
-
-def q_props_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    k = F.nullif(F.regexp_extract(F.col("props"), r'"k":\s*(\d+)', 1), F.lit("")).cast(
-        "int"
-    )
-    return _events(spark, sf_dir).select("user_id", k.alias("k")).groupBy("user_id").agg(
-        F.sum("k").alias("k_sum"),
-        F.count("k").alias("k_n"),
-    )
 
 
 def _json_spans(df: DataFrame) -> DataFrame:
@@ -320,7 +305,7 @@ def q_extract_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_extract_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extraction over the driver's documents table (plain-text path)."""
     ensure_package_shipped(spark)
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     return _json_spans(
         d.select("doc_id", extract_udf(F.col("text")).alias("x")).select(
             "doc_id", "x.*"
@@ -340,7 +325,7 @@ def q_extract_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_package_shipped(spark)
-    return extract_media_features(to_media_table(_docs(spark, sf_dir)))
+    return extract_media_features(to_media_table(load_table(spark, sf_dir, "documents")))
 
 
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -348,7 +333,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     stub thumbnail is digest-repetition filler; its LENGTH is the part
     with defined semantics, and the oracle can compute it)."""
     ensure_package_shipped(spark)
-    r = resize_images(to_media_table(_docs(spark, sf_dir)))
+    r = resize_images(to_media_table(load_table(spark, sf_dir, "documents")))
     return r.select(
         "doc_id", "width", "height", "resized_width", "resized_height",
         F.octet_length("thumbnail").cast("int").alias("thumb_len"),
@@ -357,13 +342,13 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_package_shipped(spark)
-    return sample_frames(to_media_table(_docs(spark, sf_dir)))
+    return sample_frames(to_media_table(load_table(spark, sf_dir, "documents")))
 
 
 def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-window chunking (context-window prep): one row per
     overlapping chunk, tail chunks kept short."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id", F.posexplode(chunk_structs(F.col("text"))).alias("chunk_idx", "c")
     ).select("doc_id", "chunk_idx", F.col("c.chunk_text"), F.col("c.n_tokens"))
@@ -381,7 +366,7 @@ def q_near_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters → keep the highest-QUALITY member per cluster (tie → min
     id) instead of the arbitrary min-id keeper. One row per doc with
     its cluster, score, and keep/drop verdict."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_dedup(docs, threshold=0.5)
     comps = duplicate_components(docs, pairs)
     scored = docs.select("doc_id", quality_score(F.col("text")).alias("quality"))
@@ -404,8 +389,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     text pipeline uses; one representative (min vec_id) survives per
     cluster. Textually distinct rephrasings collapse here that no
     shingle method can catch — the complement of MinHash dedup."""
-    emb = _emb(spark, sf_dir)
-    pairs = S.cosine_neardup_lsh(emb, threshold=0.3, bits=8, n_bands=8, max_bucket=256)
+    emb = load_table(spark, sf_dir, "embeddings")
+    pairs = S.cosine_neardup_lsh(emb, threshold=0.3)
     return duplicate_components(emb.select("vec_id"), pairs, id_col="vec_id")
 
 
@@ -417,12 +402,12 @@ def q_cap_drop_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     this corpus scale — the audit a user runs before trusting a capped
     operator's recall. It reads the operators' own constants, so it
     always audits the caps they apply."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     wfp = winnow_docs(docs).select("doc_id", F.explode("fps").alias("fp"))
     w_stats = C.cap_drop_stats(wfp, "fp", WINNOW_MAX_POSTINGS, "winnow_max_postings")
     sh = docs.select(
         F.col("source").alias("src"),
-        F.explode(word_shingles(F.col("text"), SHINGLE_N)).alias("s"),
+        F.explode(word_shingles(F.col("text"))).alias("s"),
     ).distinct()
     s_stats = C.cap_drop_stats(sh, "s", C.OVERLAP_MAX_SOURCES, "cross_source_max_sources")
     return w_stats.unionByName(s_stats)
@@ -472,7 +457,7 @@ def _pii_augmented_text() -> Column:
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII detection + redaction (emails/phones/IPv4) over the
     deterministically augmented text — map-only scalar regex work."""
-    d = _docs(spark, sf_dir).select("doc_id", _pii_augmented_text().alias("t"))
+    d = load_table(spark, sf_dir, "documents").select("doc_id", _pii_augmented_text().alias("t"))
     n_emails, n_phones, n_ips = pii_counts(F.col("t"))
     return d.select(
         "doc_id",
@@ -491,7 +476,7 @@ def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority") == "1-URGENT"
     )
     return bloom_semijoin_stats(
-        _lineitem(spark, sf_dir), orders, "l_orderkey", "o_orderkey"
+        load_table(spark, sf_dir, "lineitem"), orders, "l_orderkey", "o_orderkey"
     )
 
 
@@ -501,7 +486,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice and pii_scrub's augmentation): docs with id % 11 == 0 are
     removed in the new snapshot, id % 13 == 0 get a ' [rev2]' edit,
     id % 17 == 0 are duplicated as fresh high-id additions."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text", "source")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
     did = F.col("doc_id")
     base = docs.filter(did % 11 != 0).withColumn(
         "text",
@@ -525,7 +510,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     id % 7 == 0 — so the verdicts exercise all three outcomes
     (re-crawl of indexed docs → dup_index, fresh copies of unindexed
     docs → dup_batch, the rest → novel)."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     did = F.col("doc_id")
     batch = docs.unionByName(
         docs.filter(did % 7 == 0).select(
@@ -538,40 +523,43 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_dedup(batch, index)
 
 
+# the star-join inputs of region_revenue and revenue_rollup
+_STAR = tuple(_table(t) for t in ("lineitem", "supplier", "nation", "region"))
+
 SPARK_QUERIES: dict[str, _Query] = {
     # relational operator suite (SURVEY §2.5/2.6 mappings)
-    "q1_pricing_summary": R.pricing_summary,
-    "q3_top_orders": R.top_orders,
-    "q5_region_revenue": R.region_revenue,
-    "mode_event_type": R.mode_event_type,
-    "mode_event_type_ties_null": R.mode_event_type_ties_null,
-    "argmax_event": R.argmax_event,
-    "latest_event": R.latest_event,
-    "event_type_pivot": R.event_type_pivot,
-    "progress_ratio": R.progress_ratio,
-    "paginate_events": R.paginate_events,
-    "paginate_events_keyset": R.paginate_events_keyset,
-    "distinct_user_types": R.distinct_user_types,
-    "events_per_day": q_events_per_day,
-    "props_sum": q_props_sum,
+    "q1_pricing_summary": _on(_table("lineitem"), R.pricing_summary),
+    "q3_top_orders": _on((_table("customer"), _table("orders"), _table("lineitem")), R.top_orders),
+    "q5_region_revenue": _on(_STAR, R.region_revenue),
+    "mode_event_type": _on(_table("events"), R.mode_event_type),
+    "mode_event_type_ties_null": _on(_table("events"), R.mode_event_type_ties_null),
+    "argmax_event": _on(_table("events"), R.argmax_event),
+    "latest_event": _on(_table("events"), R.latest_event),
+    "event_type_pivot": _on(_table("events"), R.event_type_pivot),
+    "progress_ratio": _on(_table("events"), R.progress_ratio),
+    "paginate_events": _on(_table("events"), R.paginate_events),
+    "paginate_events_keyset": _on(_table("events"), R.paginate_events_keyset),
+    "distinct_user_types": _on(_table("events"), R.distinct_user_types),
+    "events_per_day": _on(_table("events"), R.events_per_day),
+    "props_sum": _on(_table("events"), R.props_sum),
     # line-window analogues (SURVEY §2.4 W1/W2)
-    "w2_label_next": R.label_next_value,
-    "w1_anchor_lookback": R.anchor_lookback,
-    "w3_label_offset2": R.label_offset2,
-    "w7_multi_pass": R.multi_pass_coalesce,
-    "orders_by_month": R.orders_by_month,
-    "revenue_rollup": R.revenue_rollup,
-    "revenue_cube": R.revenue_cube,
-    "sessionize_events": R.sessionize_events,
-    "asof_last_purchase": R.asof_last_purchase,
-    "source_quota_sample": R.source_quota_sample,
+    "w2_label_next": _on(_table("documents"), R.label_next_value),
+    "w1_anchor_lookback": _on(_table("documents"), R.anchor_lookback),
+    "w3_label_offset2": _on(_table("documents"), R.label_offset2),
+    "w7_multi_pass": _on(_table("documents"), R.multi_pass_coalesce),
+    "orders_by_month": _on(_table("orders"), R.orders_by_month),
+    "revenue_rollup": _on(_STAR, R.revenue_rollup),
+    "revenue_cube": _on(_table("lineitem"), R.revenue_cube),
+    "sessionize_events": _on(_table("events"), R.sessionize_events),
+    "asof_last_purchase": _on(_table("events"), R.asof_last_purchase),
+    "source_quota_sample": _on(_table("documents"), R.source_quota_sample),
     # Gopher-style repetition signals (zero-shuffle scalar expressions)
     "repetition_stats": _per_doc(
         dup_line_frac=dup_line_frac, top_bigram_frac=top_bigram_frac
     ),
     "chunk_docs": q_chunk_docs,
     "sft_pairs": _on(_transcripts, sft_pairs),
-    "format_tons": R.format_tons,
+    "format_tons": _on(_table("events"), R.format_tons),
     "embedding_components": q_embedding_components,
     # text analysis (training-data ops)
     "text_stats": _per_doc(n_tokens=token_count, n_chars_actual=char_count),
@@ -580,24 +568,22 @@ SPARK_QUERIES: dict[str, _Query] = {
     "quality_score_docs": _per_doc(quality=quality_score),
     "fingerprint_docs": _per_doc(fp=fingerprint),
     # dedup family
-    "dedup_exact_docs": _on(_docs, dedup_exact),
-    "ngram_jaccard": _on(_docs, ngram_jaccard_pairs, threshold=0.5),
-    "minhash_lsh": _on(_docs, minhash_lsh_dedup, threshold=0.5),
+    "dedup_exact_docs": _on(_table("documents"), dedup_exact),
+    "ngram_jaccard": _on(_table("documents"), ngram_jaccard_pairs, threshold=0.5),
+    "minhash_lsh": _on(_table("documents"), minhash_lsh_dedup, threshold=0.5),
     "simhash_docs": _on(_wide_docs, simhash),
     "dedup_components": q_dedup_components,
     "corpus_filter": q_corpus_filter,
     # similarity search
-    "knn_topk": _on(_emb, S.cosine_topk, n_queries=10, k=3),
-    "embedding_neardup": _on(_emb, S.cosine_neardup, threshold=0.4),
-    "embedding_neardup_lsh": _on(
-        _emb, S.cosine_neardup_lsh, threshold=0.3, bits=8, n_bands=8, max_bucket=256
-    ),
-    "label_centroids": _on(_emb, S.label_centroid_count),
+    "knn_topk": _on(_table("embeddings"), S.cosine_topk, k=3),
+    "embedding_neardup": _on(_table("embeddings"), S.cosine_neardup, threshold=0.4),
+    "embedding_neardup_lsh": _on(_table("embeddings"), S.cosine_neardup_lsh, threshold=0.3),
+    "label_centroids": _on(_table("embeddings"), S.label_centroid_count),
     # IVF runs the seeded closed-form quantizer, so the DuckDB oracle
     # runs the identical algorithm; ivf_topk is the wider probe (6 of
     # 16 cells).
-    "ivf_topk": _on(_emb, S.ivf_topk_seeded, n_queries=10, k=3, n_probe=6),
-    "ivf_topk_seeded": _on(_emb, S.ivf_topk_seeded, n_queries=10, k=3, n_probe=4),
+    "ivf_topk": _on(_table("embeddings"), S.ivf_topk_seeded, n_queries=10, k=3, n_probe=6),
+    "ivf_topk_seeded": _on(_table("embeddings"), S.ivf_topk_seeded, n_queries=10, k=3, n_probe=4),
     # multimodal
     "media_meta": q_media_meta,
     # extraction engine and conversation ops: oracles are a pure-Python
@@ -616,57 +602,55 @@ SPARK_QUERIES: dict[str, _Query] = {
     "winnow_overlap": _on(_wide_docs, winnow_overlap_pairs),
     "winnow_span_runs": _on(_wide_docs, winnow_span_runs),
     "near_dedup_keep_best": q_near_dedup_keep_best,
-    "clicks_before_purchase": R.clicks_before_purchase,
+    "clicks_before_purchase": _on(_table("events"), R.clicks_before_purchase),
     # corpus-level training-data ops
-    "decontaminate_docs": _on(_docs, C.decontaminate),
-    "tfidf_top_terms": _on(_docs, C.tfidf_top_terms),
-    "length_percentiles": _on(_docs, C.length_percentiles),
-    "vocab_stats": _on(_docs, C.vocab_stats),
-    "train_val_split": _on(_docs, C.train_val_split),
+    "decontaminate_docs": _on(_table("documents"), C.decontaminate),
+    "tfidf_top_terms": _on(_table("documents"), C.tfidf_top_terms),
+    "length_percentiles": _on(_table("documents"), C.length_percentiles),
+    "vocab_stats": _on(_table("documents"), C.vocab_stats),
+    "train_val_split": _on(_table("documents"), C.train_val_split),
     "pii_scrub": q_pii_scrub,
-    "source_stats": _on(_docs, C.source_stats),
-    "cross_source_overlap": _on(_docs, C.cross_source_overlap),
-    "quantize_embeddings": _on(_emb, S.quantize_embeddings),
-    "boilerplate_scrub": _on(_docs, C.boilerplate_scrub),
-    "pack_sequences": _on(_docs, C.pack_sequences),
-    "script_profile": _on(_docs, C.script_profile),
-    "source_mixture_weights": _on(_docs, C.source_mixture_weights),
-    "materialize_mixture": _on(_docs, C.materialize_mixture),
-    "rolling_user_value": R.rolling_user_value,
-    "funnel_conversion": R.funnel_conversion,
-    "source_top_terms": _on(_docs, C.source_top_terms),
+    "source_stats": _on(_table("documents"), C.source_stats),
+    "cross_source_overlap": _on(_table("documents"), C.cross_source_overlap),
+    "quantize_embeddings": _on(_table("embeddings"), S.quantize_embeddings),
+    "boilerplate_scrub": _on(_table("documents"), C.boilerplate_scrub),
+    "pack_sequences": _on(_table("documents"), C.pack_sequences),
+    "script_profile": _on(_table("documents"), C.script_profile),
+    "source_mixture_weights": _on(_table("documents"), C.source_mixture_weights),
+    "materialize_mixture": _on(_table("documents"), C.materialize_mixture),
+    "rolling_user_value": _on(_table("events"), R.rolling_user_value),
+    "funnel_conversion": _on(_table("events"), R.funnel_conversion),
+    "source_top_terms": _on(_table("documents"), C.source_top_terms),
     "cap_drop_accounting": q_cap_drop_accounting,
     "weighted_sample": _on(_weighted_docs, C.weighted_sample, k=20),
-    "weighted_sample_clamp": _on(
-        _weighted_docs, C.weighted_sample_clamp_stats, max_weight=16
-    ),
+    "weighted_sample_clamp": _on(_weighted_docs, C.weighted_sample_clamp_stats),
     "semantic_decontaminate": _on(
-        _emb, S.semantic_decontaminate, n_eval=20, threshold=0.4
+        _table("embeddings"), S.semantic_decontaminate, n_eval=20, threshold=0.4
     ),
-    "knn_label_propagation": _on(_emb, S.knn_label_propagation, n_queries=30, k=5),
-    "canonical_dedup": _on(_docs, canonical_dedup),
+    "knn_label_propagation": _on(_table("embeddings"), S.knn_label_propagation, n_queries=30, k=5),
+    "canonical_dedup": _on(_table("documents"), canonical_dedup),
     "filtered_knn": q_filtered_knn,
-    "skew_report": _on(_events, R.skew_report, "user_id", top_n=5),
+    "skew_report": _on(_table("events"), R.skew_report, "user_id", top_n=5),
     "semantic_dedup": q_semantic_dedup,
     "span_surgery": q_span_surgery,
-    "unigram_commonness": _on(_docs, C.unigram_commonness),
+    "unigram_commonness": _on(_table("documents"), C.unigram_commonness),
     # mergeable sketches (distributed cardinality / frequency / join pruning)
     # ~12k-40k distinct l_orderkey per l_returnflag at the driver tiers:
     # solidly in HLL's raw-estimate regime; the exact count rides along
-    "hll_distinct": _on(_lineitem, hll_distinct, "l_orderkey", "l_returnflag"),
+    "hll_distinct": _on(_table("lineitem"), hll_distinct, "l_orderkey", "l_returnflag"),
     "bloom_semijoin": q_bloom_semijoin,
     # the synthetic l_partkey stream is uniform, so the exact column
     # shows the ~N/w collision floor: what is under test is
     # never-undercount and the (e/w)*N bound, not point accuracy
-    "cms_frequencies": _on(_lineitem, cms_top_frequencies, "l_partkey"),
+    "cms_frequencies": _on(_table("lineitem"), cms_top_frequencies, "l_partkey"),
     # skew-safe join mechanism + corpus CDC
-    "salted_join_revenue": R.salted_part_revenue,
+    "salted_join_revenue": _on((_table("lineitem"), _table("part")), R.salted_part_revenue),
     "snapshot_diff": q_snapshot_diff,
     # batch-vs-index dedup protocol + collocation mining + BPE stats
     "incremental_dedup": q_incremental_dedup,
-    "pmi_collocations": _on(_docs, C.pmi_collocations),
-    "bpe_merge_candidates": _on(_docs, C.bpe_merge_candidates),
-    "vocab_growth": _on(_docs, C.vocab_growth),
+    "pmi_collocations": _on(_table("documents"), C.pmi_collocations),
+    "bpe_merge_candidates": _on(_table("documents"), C.bpe_merge_candidates),
+    "vocab_growth": _on(_table("documents"), C.vocab_growth),
 }
 
 # ---------------------------------------------------------------------------
@@ -1542,9 +1526,7 @@ FROM embeddings a CROSS JOIN embeddings b
 WHERE a.vec_id < b.vec_id
   AND round(({_DOT_AB}) / (({_NORM_A}) * ({_NORM_B})), 6) >= 0.4
 """,
-    "embedding_neardup_lsh": S.neardup_lsh_sql(
-        threshold=0.3, bits=8, n_bands=8, max_bucket=256
-    ),
+    "embedding_neardup_lsh": S.neardup_lsh_sql(threshold=0.3),
     # semantic decontamination: eval pool broadcast-joined to the
     # corpus, max over rounded sims (fold-order-free)
     "semantic_decontaminate": f"""
@@ -1583,19 +1565,20 @@ r AS (
 SELECT q_id, vec_id, sim, rank FROM r WHERE rank <= 3
 """,
     # skew diagnostic: integer counts + a deterministic "key:count"
-    # serialization (order by count desc, key-string asc on both
-    # sides); NULL keys surface under the '<null>' sentinel so the
-    # hottest key is never silently dropped (see skew_report docstring)
+    # serialization (order by count desc, key-string asc with the NULL
+    # key first on both sides); a NULL key is listed as 'null=count',
+    # which no 'key:count' entry can equal (see skew_report docstring)
     "skew_report": """
 WITH c AS (SELECT user_id AS k, count(*) AS c FROM events GROUP BY 1),
-top AS (SELECT coalesce(CAST(k AS VARCHAR), '<null>') AS ks, c FROM c
-        ORDER BY c DESC, coalesce(CAST(k AS VARCHAR), '<null>') ASC LIMIT 5)
+top AS (SELECT CAST(k AS VARCHAR) AS ks, c FROM c
+        ORDER BY c DESC, CAST(k AS VARCHAR) ASC NULLS FIRST LIMIT 5)
 SELECT 'user_id' AS key_col,
   (SELECT CAST(sum(c) AS BIGINT) FROM c) AS n_rows,
   (SELECT count(*) FROM c) AS n_keys,
   (SELECT max(c) FROM c) AS max_count,
-  (SELECT string_agg(ks || ':' || CAST(c AS VARCHAR), ','
-                     ORDER BY c DESC, ks ASC) FROM top) AS top_keys
+  (SELECT string_agg(CASE WHEN ks IS NULL THEN 'null=' || CAST(c AS VARCHAR)
+                          ELSE ks || ':' || CAST(c AS VARCHAR) END, ','
+                     ORDER BY c DESC, ks ASC NULLS FIRST) FROM top) AS top_keys
 """,
     # kNN label propagation: same sim chain, neighbor ties on vec_id,
     # vote ties on the smaller label

@@ -23,4 +23,4 @@ def transcripts_path(tmp_path_factory):
     from ocr_spark.fixtures import write_transcripts
 
     path = tmp_path_factory.mktemp("fixtures") / "transcripts_sf0001.parquet"
-    return write_transcripts(str(path), sf=0.001, seed=42)
+    return write_transcripts(str(path), sf=0.001)

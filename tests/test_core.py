@@ -456,7 +456,7 @@ def test_fast_html_equals_stdlib_parser():
     from ocr_spark.core.html_main import extract_html, extract_html_reference
     from ocr_spark.fixtures import gen_transcripts
 
-    texts = list(gen_transcripts(0.002, seed=42).text)
+    texts = list(gen_transcripts(0.002).text)
     rng = random.Random(7)
     html_texts = [t for t in texts if t.lstrip()[:1] == "<"]
     cases = list(texts)

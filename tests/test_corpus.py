@@ -162,7 +162,7 @@ def test_boilerplate_scrub_semantics(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in boilerplate_scrub(d, seg_tokens=4, max_docs=2).collect()
+        for r in boilerplate_scrub(d, max_docs=2).collect()
     }
     # "h1 h2 h3 h4" appears in 3 docs > max_docs=2 -> dropped everywhere
     assert out[0]["clean_text"] == "u1 u2 u3 u4 tail"  # short tail kept
@@ -380,7 +380,7 @@ def test_pmi_collocations_count_invariants(spark):
     n_total = docs.select(
         F.explode(F.split(F.trim("text"), r"\s+")).alias("t")
     ).count()
-    rows = pmi_collocations(docs, min_count=5, top_n=20).collect()
+    rows = pmi_collocations(docs, top_n=20).collect()
     assert [r.rank for r in sorted(rows, key=lambda r: r.rank)] == list(
         range(1, len(rows) + 1)
     )
@@ -522,7 +522,7 @@ def test_weighted_sample_clamp_stats_quantifies_distortion(spark):
     df = spark.createDataFrame(
         [(1, 40), (2, 16), (3, None), (4, -3), (5, 5)], "id long, weight int"
     )
-    r = weighted_sample_clamp_stats(df, max_weight=16).collect()[0]
+    r = weighted_sample_clamp_stats(df).collect()[0]
     assert r["cap_value"] == 16
     assert r["n_rows"] == 5
     assert r["n_clamped_high"] == 1  # 40 → 16

@@ -18,7 +18,7 @@ def test_num_hashes_overflow_bound_enforced(spark):
     would wrap silently where DuckDB raises, so the API refuses."""
     df = spark.createDataFrame([(1, "a b c d e")], "doc_id int, text string")
     with pytest.raises(ValueError, match="num_hashes"):
-        minhash_lsh_dedup(df, num_hashes=16, bands=4)
+        minhash_lsh_dedup(df, num_hashes=16)
 
 
 TINY_DOCS = [

@@ -101,6 +101,68 @@ def test_query_matches_oracle(spark, duck, name):
         raise AssertionError(f"{name}: value mismatch, first diffs: {diff}")
 
 
+# the registry queries that read events.ts or orders.o_orderdate
+# (TIMESTAMP_NTZ in the testdata)
+_TIMESTAMP_QUERIES = (
+    "q3_top_orders",
+    "latest_event",
+    "events_per_day",
+    "orders_by_month",
+    "sessionize_events",
+    "clicks_before_purchase",
+    "funnel_conversion",
+    "rolling_user_value",
+    "asof_last_purchase",
+)
+
+
+_TZ = "spark.sql.session.timeZone"
+
+
+@pytest.fixture
+def los_angeles(spark):
+    """The shared session set to America/Los_Angeles (a zone with DST)
+    for one test, then set back."""
+    old = spark.conf.get(_TZ)
+    spark.conf.set(_TZ, "America/Los_Angeles")
+    yield spark
+    spark.conf.set(_TZ, old)
+
+
+def test_timestamp_queries_ignore_session_zone(los_angeles, duck):
+    """Under a non-UTC session every query over a TIMESTAMP_NTZ column
+    still returns its oracle's rows, and leaves the session's zone as
+    it found it."""
+    for name in _TIMESTAMP_QUERIES:
+        sdf = SPARK_QUERIES[name](los_angeles, SF_DIR)
+        rel = duck.sql(ORACLE_SQL[name])
+        got = _normalize([tuple(r) for r in sdf.collect()], sdf.columns)
+        assert got == _normalize(rel.fetchall(), rel.columns), name
+        assert los_angeles.conf.get(_TZ) == "America/Los_Angeles", name
+
+
+def test_ntz_helpers_are_zone_free_in_a_dst_gap(los_angeles):
+    """2026-03-08 02:30:00 does not exist in Los Angeles (clocks jump
+    from 02:00 to 03:00); the helpers still give its UTC epoch and its
+    own text."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from ocr_spark.operators.relational import _epoch_us, _ts_text
+
+    gap = los_angeles.sql("SELECT TIMESTAMP_NTZ'2026-03-08 02:30:00' AS ts")
+    ts = F.col("ts")
+    row = gap.select(_epoch_us(ts), _ts_text(ts, 19), _ts_text(ts, 10), _ts_text(ts, 7)).first()
+    utc = dt.datetime(2026, 3, 8, 2, 30, tzinfo=dt.timezone.utc)
+    assert tuple(row) == (
+        int(utc.timestamp()) * 1_000_000,
+        "2026-03-08 02:30:00",
+        "2026-03-08",
+        "2026-03",
+    )
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0

@@ -9,8 +9,8 @@ from ocr_spark.fixtures import gen_transcripts
 
 
 def test_deterministic():
-    a = gen_transcripts(0.001, seed=42)
-    b = gen_transcripts(0.001, seed=42)
+    a = gen_transcripts(0.001)
+    b = gen_transcripts(0.001)
     pd.testing.assert_frame_equal(a, b)
 
 

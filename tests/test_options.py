@@ -9,11 +9,16 @@ ever run. The scan is syntactic over every tracked ``*.py``:
   a positional argument sets the parameter at its index, a keyword
   argument the parameter it names;
 - ``_on(loader, op, *args, **kw)`` in ``ocr_spark/queries.py`` is a
-  call of ``op`` whose positional arguments start at its second
-  parameter (the first is the loaded frame);
+  call of ``op`` whose positional arguments start after the loaded
+  frames: at its second parameter, or after N frames when ``loader``
+  is a literal tuple of N loaders;
 - passing ``x=x`` (or ``x`` at ``x``'s index) from an enclosing
   function's own parameter ``x`` sets it only if that parameter is
-  required or itself set by some caller (resolved to a fixpoint).
+  required or itself set by some caller (resolved to a fixpoint);
+- an argument whose value equals the default does not set it. Values
+  are compared where both sides resolve: literals, and upper-case
+  module constants (``_MAX_WEIGHT``, ``SHINGLE_N``, ``C.OVERLAP_MAX_SOURCES``)
+  followed through ``from ... import`` and module aliases.
 """
 
 from __future__ import annotations
@@ -25,12 +30,67 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 
 
-def _defaulted(fn: ast.FunctionDef) -> tuple[list[str], set[str]]:
+_UNKNOWN = object()
+
+
+def _defaulted(fn: ast.FunctionDef) -> tuple[list[str], dict[str, ast.expr]]:
+    """Positional parameter names, and each defaulted parameter's
+    default expression."""
     a = fn.args
     pos = [p.arg for p in a.posonlyargs + a.args]
-    dflt = set(pos[len(pos) - len(a.defaults) :]) if a.defaults else set()
-    dflt |= {p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
+    dflt = dict(zip(pos[len(pos) - len(a.defaults) :], a.defaults))
+    dflt |= {p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
     return pos, dflt
+
+
+def _bindings(trees: dict[str, ast.Module]) -> dict[str, dict[str, tuple]]:
+    """Per file, what each module-level name is bound to: an assigned
+    expression, a name imported from another tracked file, or a
+    tracked module."""
+    out: dict[str, dict[str, tuple]] = {}
+    for f, tree in trees.items():
+        b = out[f] = {}
+        for node in tree.body:
+            if isinstance(node, (ast.Assign, ast.AnnAssign)) and node.value is not None:
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for t in targets:
+                    if isinstance(t, ast.Name):
+                        b[t.id] = ("expr", node.value)
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                src = node.module.replace(".", "/")
+                for a in node.names:
+                    sub = f"{src}/{a.name}.py"
+                    b[a.asname or a.name] = (
+                        ("module", sub) if sub in trees else ("name", f"{src}.py", a.name)
+                    )
+    return out
+
+
+def _value(node: ast.expr, f: str, bindings: dict[str, dict[str, tuple]]):
+    """The value of ``node`` in file ``f`` if it is a literal or an
+    upper-case module constant, else ``_UNKNOWN``."""
+
+    def lookup(f: str, name: str):
+        bound = bindings.get(f, {}).get(name)
+        if name.upper() != name or bound is None:
+            return _UNKNOWN
+        if bound[0] == "expr":
+            return _value(bound[1], f, bindings)
+        if bound[0] == "name":
+            return lookup(bound[1], bound[2])
+        return _UNKNOWN
+
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError):
+        pass
+    if isinstance(node, ast.Name):
+        return lookup(f, node.id)
+    if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+        bound = bindings[f].get(node.value.id)
+        if bound is not None and bound[0] == "module":
+            return lookup(bound[1], node.attr)
+    return _UNKNOWN
 
 
 def _callee(node: ast.expr) -> str | None:
@@ -48,6 +108,7 @@ def unset_parameters(root: Path = ROOT) -> list[str]:
         ["git", "ls-files", "*.py"], cwd=root, capture_output=True, text=True, check=True
     ).stdout.split()
     trees = {f: ast.parse((root / f).read_text(), f) for f in files}
+    bindings = _bindings(trees)
 
     # name -> [(file, def, positional names, defaulted names)]
     defs: dict[str, list] = {}
@@ -63,7 +124,8 @@ def unset_parameters(root: Path = ROOT) -> list[str]:
     sets: list[tuple] = []
 
     class Calls(ast.NodeVisitor):
-        def __init__(self) -> None:
+        def __init__(self, file: str) -> None:
+            self.file = file
             self.stack: list[ast.FunctionDef] = []
 
         def visit_FunctionDef(self, node: ast.FunctionDef) -> None:
@@ -83,14 +145,22 @@ def unset_parameters(root: Path = ROOT) -> list[str]:
         def _record(self, name, args, keywords) -> None:
             for f, fn, pos, dflt in defs.get(name, []):
                 key = (f, name)
+
+                def sets_param(param: str, arg: ast.expr) -> None:
+                    given = _value(arg, self.file, bindings)
+                    default = _value(dflt[param], f, bindings)
+                    if given is not _UNKNOWN and type(given) is type(default) and given == default:
+                        return
+                    sets.append((key, param, self._through(arg, param)))
+
                 for i, arg in args:
                     if isinstance(arg, ast.Starred):
                         break
                     if i < len(pos) and pos[i] in dflt:
-                        sets.append((key, pos[i], self._through(arg, pos[i])))
+                        sets_param(pos[i], arg)
                 for kw in keywords:
                     if kw.arg in dflt:
-                        sets.append((key, kw.arg, self._through(kw.value, kw.arg)))
+                        sets_param(kw.arg, kw.value)
 
         def visit_Call(self, node: ast.Call) -> None:
             name = _callee(node.func)
@@ -98,12 +168,14 @@ def unset_parameters(root: Path = ROOT) -> list[str]:
                 self._record(name, list(enumerate(node.args)), node.keywords)
                 if name == "_on" and len(node.args) >= 2:
                     op = _callee(node.args[1])
-                    extra = [(i + 1, a) for i, a in enumerate(node.args[2:])]
+                    first = node.args[0]
+                    n_in = len(first.elts) if isinstance(first, ast.Tuple) else 1
+                    extra = [(i + n_in, a) for i, a in enumerate(node.args[2:])]
                     self._record(op, extra, node.keywords)
             self.generic_visit(node)
 
-    for tree in trees.values():
-        Calls().visit(tree)
+    for f, tree in trees.items():
+        Calls(f).visit(tree)
 
     done: set = set()
     changed = True

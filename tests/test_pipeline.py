@@ -78,7 +78,7 @@ def _assert_equal(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame):
 
 @pytest.fixture(scope="module")
 def fixture_pdf():
-    return gen_transcripts(0.001, seed=42)
+    return gen_transcripts(0.001)
 
 
 @pytest.fixture(scope="module")
@@ -466,7 +466,6 @@ def test_rolling_user_value_hand_checked(spark):
     stream: 6 events for one user, frame 5."""
     import datetime as dt
 
-    from pyspark.sql import functions as F
     from ocr_spark.operators import relational
 
     base = dt.datetime(2024, 1, 1)
@@ -477,13 +476,9 @@ def test_rolling_user_value_hand_checked(spark):
     df = spark.createDataFrame(
         rows, ["event_id", "ts", "user_id", "event_type", "value", "props"]
     )
-    import os, tempfile
-
-    d = tempfile.mkdtemp()
-    df.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
     out = {
         r.event_id: (r.roll_cents, r.n_in_window)
-        for r in relational.rolling_user_value(spark, d).collect()
+        for r in relational.rolling_user_value(df).collect()
     }
     # cents = 125,225,...,625; frame of 5 trailing rows
     assert out[1] == (125, 1)

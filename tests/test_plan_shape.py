@@ -29,9 +29,9 @@ def test_extraction_single_udf_stage_no_shuffle(spark, transcripts_path):
 
 
 def test_pricing_summary_single_shuffle_and_pruning(spark):
-    from ocr_spark.operators.relational import pricing_summary
+    from ocr_spark.queries import SPARK_QUERIES
 
-    df = pricing_summary(spark, SF_DIR)
+    df = SPARK_QUERIES["q1_pricing_summary"](spark, SF_DIR)
     # one shuffle for the groupBy (plus AQE's optional sort for orderBy)
     assert count_exchanges(df) <= 2
     cols = read_schema_columns(df)
@@ -39,9 +39,9 @@ def test_pricing_summary_single_shuffle_and_pruning(spark):
 
 
 def test_region_revenue_broadcasts_dims(spark):
-    from ocr_spark.operators.relational import region_revenue
+    from ocr_spark.queries import SPARK_QUERIES
 
-    df = region_revenue(spark, SF_DIR)
+    df = SPARK_QUERIES["q5_region_revenue"](spark, SF_DIR)
     plan = physical_plan(df)
     # three dims broadcast: 3 detail headers (tree lines double-count)
     import re
@@ -50,9 +50,9 @@ def test_region_revenue_broadcasts_dims(spark):
 
 
 def test_top_orders_broadcasts_customer(spark):
-    from ocr_spark.operators.relational import top_orders
+    from ocr_spark.queries import SPARK_QUERIES
 
-    df = top_orders(spark, SF_DIR)
+    df = SPARK_QUERIES["q3_top_orders"](spark, SF_DIR)
     plan = physical_plan(df)
     assert "BroadcastHashJoin" in plan
     # filter pushdown on mktsegment reaches the customer scan
@@ -210,10 +210,10 @@ def test_keyset_pagination_no_global_sort(spark):
     """The keyset page plans as TakeOrderedAndProject (per-partition
     top-k) with the key predicate pushed to the scan — no Exchange, no
     single-partition window sort."""
-    from ocr_spark.operators.relational import paginate_events_keyset
+    from ocr_spark.queries import SPARK_QUERIES
     from ocr_spark.plans.checks import count_exchanges, physical_plan
 
-    df = paginate_events_keyset(spark, "/root/testdata/sf0.001")
+    df = SPARK_QUERIES["paginate_events_keyset"](spark, "/root/testdata/sf0.001")
     plan = physical_plan(df)
     assert "TakeOrderedAndProject" in plan
     assert count_exchanges(df) == 0
@@ -238,10 +238,10 @@ def test_asof_join_single_shuffle_no_range_explosion(spark):
     """The as-of join is a cumulative window over the unioned stream:
     exactly one Exchange (user_id), no join operator at all — never
     the quadratic range-join candidate explosion."""
-    from ocr_spark.operators.relational import asof_last_purchase
+    from ocr_spark.queries import SPARK_QUERIES
     from ocr_spark.plans.checks import count_exchanges, physical_plan
 
-    df = asof_last_purchase(spark, SF_DIR)
+    df = SPARK_QUERIES["asof_last_purchase"](spark, SF_DIR)
     assert count_exchanges(df) == 1
     assert "Join" not in physical_plan(df)
 
@@ -292,9 +292,9 @@ def test_range_join_binned_stays_equi_join(spark):
     """The whole point of binning: Catalyst must see an equi-key.
     A naive range predicate degenerates to BroadcastNestedLoopJoin /
     CartesianProduct — quadratic per key at scale."""
-    from ocr_spark.operators.relational import clicks_before_purchase
+    from ocr_spark.queries import SPARK_QUERIES
 
-    df = clicks_before_purchase(spark, SF_DIR)
+    df = SPARK_QUERIES["clicks_before_purchase"](spark, SF_DIR)
     plan = physical_plan(df)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -327,9 +327,9 @@ def test_materialize_mixture_broadcasts_weights(spark):
 
 
 def test_rolling_user_value_single_shuffle(spark):
-    from ocr_spark.operators.relational import rolling_user_value
+    from ocr_spark.queries import SPARK_QUERIES
 
-    df = rolling_user_value(spark, SF_DIR)
+    df = SPARK_QUERIES["rolling_user_value"](spark, SF_DIR)
     assert count_exchanges(df) == 1
 
 
@@ -337,9 +337,9 @@ def test_funnel_conversion_no_range_explosion(spark):
     """The funnel must stay a keyed equi-join + two partial aggs — a
     time-predicate join (signup×purchase pairs) would be quadratic
     per user at scale."""
-    from ocr_spark.operators.relational import funnel_conversion
+    from ocr_spark.queries import SPARK_QUERIES
 
-    df = funnel_conversion(spark, SF_DIR)
+    df = SPARK_QUERIES["funnel_conversion"](spark, SF_DIR)
     plan = physical_plan(df)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan

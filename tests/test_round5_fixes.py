@@ -1,8 +1,9 @@
 """Round-5 ADVICE fixes, pinned.
 
-1. skew_report surfaces NULL keys under the '<null>' sentinel — in
-   parity with the DuckDB oracle shape (Spark↔DuckDB NULL ordering
-   and concat-drop semantics would otherwise diverge).
+1. skew_report surfaces a NULL key as 'null=count', an entry no
+   string key's 'key:count' can equal — in parity with the DuckDB
+   oracle shape (Spark↔DuckDB NULL ordering and concat-drop semantics
+   would otherwise diverge).
 2. conv_dedup coalesces NULL turn text to '' on both engines (NULL
    text ≡ empty turn; all-NULL conversations group, not NULL-fp).
 """
@@ -14,7 +15,7 @@ from pyspark.sql import functions as F
 
 
 # ------------------------------------------------------------------
-# 1. skew_report NULL-key sentinel (Spark ↔ DuckDB parity)
+# 1. skew_report NULL-key entry (Spark ↔ DuckDB parity)
 # ------------------------------------------------------------------
 
 
@@ -28,8 +29,8 @@ def test_skew_report_null_key_parity(spark, tmp_path):
     assert got["n_rows"] == 14
     assert got["n_keys"] == 4
     assert got["max_count"] == 7
-    # NULL surfaces as the sentinel, counted, and first (hottest)
-    assert got["top_keys"] == "<null>:7,a:3,b:3"
+    # NULL surfaces as its own entry, counted, and first (hottest)
+    assert got["top_keys"] == "null=7,a:3,b:3"
 
     # DuckDB twin of the oracle shape on the same data
     p = str(tmp_path / "skew.parquet")
@@ -37,13 +38,34 @@ def test_skew_report_null_key_parity(spark, tmp_path):
     oracle = duckdb.sql(
         f"""
 WITH c AS (SELECT k, count(*) AS c FROM read_parquet('{p}/*.parquet') GROUP BY 1),
-top AS (SELECT coalesce(CAST(k AS VARCHAR), '<null>') AS ks, c FROM c
-        ORDER BY c DESC, coalesce(CAST(k AS VARCHAR), '<null>') ASC LIMIT 3)
-SELECT string_agg(ks || ':' || CAST(c AS VARCHAR), ',' ORDER BY c DESC, ks ASC)
+top AS (SELECT CAST(k AS VARCHAR) AS ks, c FROM c
+        ORDER BY c DESC, CAST(k AS VARCHAR) ASC NULLS FIRST LIMIT 3)
+SELECT string_agg(CASE WHEN ks IS NULL THEN 'null=' || CAST(c AS VARCHAR)
+                       ELSE ks || ':' || CAST(c AS VARCHAR) END, ','
+                  ORDER BY c DESC, ks ASC NULLS FIRST)
 FROM top
 """
     ).fetchone()[0]
     assert oracle == got["top_keys"]
+
+
+def test_skew_report_null_key_unlike_any_string_key(spark, tmp_path):
+    """A NULL key and the string keys '<null>' and 'null' print as
+    three different entries, ordered and rendered as the registry's
+    DuckDB oracle renders the same rows."""
+    from ocr_spark.operators.relational import skew_report
+    from ocr_spark.queries import ORACLE_SQL
+
+    rows = [(None,)] * 4 + [("<null>",)] * 4 + [("null",)] * 2 + [("a",)]
+    df = spark.createDataFrame(rows, "user_id string")
+    got = skew_report(df, "user_id", top_n=5).collect()[0]["top_keys"]
+    assert got == "null=4,<null>:4,null:2,a:1"
+
+    p = str(tmp_path / "events.parquet")
+    df.coalesce(1).write.parquet(p)
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{p}/*.parquet')")
+    assert con.sql(ORACLE_SQL["skew_report"]).fetchone()[-1] == got
 
 
 # ------------------------------------------------------------------

@@ -8,7 +8,7 @@ import re
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.corpus import snapshot_diff
-from ocr_spark.operators.relational import salted_equijoin, salted_part_revenue
+from ocr_spark.operators.relational import salted_equijoin
 from ocr_spark.plans.checks import physical_plan
 from ocr_spark.sources.io import load_table
 

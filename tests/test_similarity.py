@@ -18,7 +18,7 @@ def test_ivf_seeded_recall_vs_bruteforce(spark):
     (quality gate on top of the exact-parity gate)."""
     emb = load_table(spark, SF_DIR, "embeddings")
     exact = {
-        (r["q_id"], r["vec_id"]) for r in cosine_topk(emb, n_queries=10, k=5).collect()
+        (r["q_id"], r["vec_id"]) for r in cosine_topk(emb, k=5).collect()
     }
     approx = {
         (r["q_id"], r["vec_id"])
