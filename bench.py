@@ -181,7 +181,8 @@ def run_profile(sf_dir: str, cpus: str, n_runs: int = PROFILE_RUNS) -> dict:
 
     from ocr_spark.job import ensure_package_shipped
     from ocr_spark.plans.session import build_session
-    from ocr_spark.queries import SPARK_QUERIES, transcripts_fixture_path, _sf_of
+    from ocr_spark.fixtures import transcripts_fixture_path
+    from ocr_spark.queries import SPARK_QUERIES, _sf_of
 
     spark = build_session("bench-profile", master=f"local[{cpus}]")
     ensure_package_shipped(spark)
@@ -389,8 +390,9 @@ def _burn(n: int) -> int:
 def scaling_input_path(sf: float) -> str:
     """The replicated scaling input for this sf tier (cached; embeds
     the fixture version and replication factor)."""
-    from ocr_spark.fixtures import FIXTURE_VERSION, write_replicated_transcripts
-    from ocr_spark.queries import transcripts_fixture_path
+    from ocr_spark.fixtures import FIXTURE_VERSION, transcripts_fixture_path
+    from ocr_spark.fixtures import write_replicated_transcripts
+    from ocr_spark.sources.io import publish
 
     base = transcripts_fixture_path(sf)
     if SCALING_REPLICATION <= 1:
@@ -400,11 +402,9 @@ def scaling_input_path(sf: float) -> str:
         f"ocr_spark_transcripts_v{FIXTURE_VERSION}_sf{sf}"
         f"_x{SCALING_REPLICATION}.parquet",
     )
-    if not os.path.exists(path):
-        tmp = path + ".tmp"
-        write_replicated_transcripts(tmp, base, SCALING_REPLICATION)
-        os.replace(tmp, path)
-    return path
+    return publish(
+        path, lambda tmp: write_replicated_transcripts(tmp, base, SCALING_REPLICATION)
+    )
 
 
 def run_scaling(input_path: str, peak_input_path: str | None = None) -> dict:
@@ -669,7 +669,8 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from ocr_spark.queries import _sf_of, transcripts_fixture_path
+    from ocr_spark.fixtures import transcripts_fixture_path
+    from ocr_spark.queries import _sf_of
 
     sf = _sf_of(sf_dir)
     transcripts = transcripts_fixture_path(sf)

@@ -20,11 +20,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from ocr_spark.fixtures import transcripts_fixture_path  # noqa: E402
 from ocr_spark.job import ensure_package_shipped, extract_transcripts, run_extraction  # noqa: E402
 from ocr_spark.operators.conversation import conv_rollup, transaction_pivot  # noqa: E402
 from ocr_spark.operators.dedup import dedup_exact, minhash_lsh_dedup  # noqa: E402
 from ocr_spark.plans.session import build_session  # noqa: E402
-from ocr_spark.queries import transcripts_fixture_path  # noqa: E402
 from ocr_spark.udfs import fields_udf  # noqa: E402
 
 

@@ -25,6 +25,8 @@ from datetime import datetime, timedelta
 import numpy as np
 import pandas as pd
 
+from ocr_spark.sources.io import publish
+
 _WORDS = (
     "shipment cargo freight lorry route godown depot invoice material plastic "
     "scrap granule consignment transport carrier driver octroi tax weight "
@@ -46,6 +48,11 @@ def _transcripts_fixture_file(sf: float) -> str:
         tempfile.gettempdir(),
         f"ocr_spark_transcripts_v{FIXTURE_VERSION}_sf{sf}.parquet",
     )
+
+
+def transcripts_fixture_path(sf: float) -> str:
+    """The transcripts parquet for ``sf``, written on first use."""
+    return publish(_transcripts_fixture_file(sf), lambda tmp: write_transcripts(tmp, sf))
 
 
 _STATES = ("Maharashtra", "Gujarat", "West Bengal", "Karnataka", "Rajasthan")

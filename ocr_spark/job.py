@@ -25,9 +25,9 @@ Design for the 10^12-turn target:
   marker as soon as it commits; a re-run skips marked shards and
   overwrites (idempotent) any half-written shard directory — strictly
   stronger than the reference's lose-on-disconnect queue (``OCR API
-  2/api.py:167-178``). On a real cluster the markers live on the
-  shared FS next to the Iceberg table; with Iceberg the per-shard
-  write is a snapshot commit.
+  2/api.py:167-178``). The output is a directory of parquet shards,
+  written with Spark's own writer; on a real cluster it and the
+  markers live on the shared FS (docs/SCALE.md §2 on a table sink).
 - **Per-partition lineage + metrics** (``MANIFEST_SCHEMA``): each task
   reports turns, convs, blocks kept/dropped, bytes in/out, wall_ms
   via an accumulator — one tiny dict per task on the driver.
@@ -44,10 +44,10 @@ import os
 import tempfile
 import threading
 import time
-import uuid
 import zipfile
 from collections import deque
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from pathlib import Path
 
 import pandas as pd
 from pyspark import TaskContext
@@ -65,7 +65,7 @@ if __package__ in (None, ""):
     _sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ocr_spark.schema import MANIFEST_SCHEMA, OUTPUT_SCHEMA
-from ocr_spark.sources.io import read_input, validate_input_schema, write_output
+from ocr_spark.sources.io import publish, read_input, validate_input_schema
 from ocr_spark.udfs import drop_dead_importers, extract_batch, extract_udf
 
 DEFAULT_SALT_THRESHOLD = 2000  # max turns per (conv_id, salt) shuffle key
@@ -210,7 +210,7 @@ def _make_runner(acc, shard: int):
 def _write_manifest_local(rows: list[dict], dest: str) -> None:
     """Manifest rows live on the driver (accumulator output, ≤1 tiny
     dict per task) — write them with pyarrow directly instead of
-    spending a Spark job on ~128 rows. Layout matches write_output
+    spending a Spark job on ~128 rows. Layout matches a shard's output
     (parquet dir), so read_manifest is unchanged. On a real cluster
     with an object-store destination this stays a driver-side put."""
     import pyarrow as pa
@@ -315,7 +315,7 @@ def run_extraction(
         balanced = salted.repartition(per_shard, "conv_id", "salt")
         out = balanced.mapInPandas(_make_runner(acc, shard), OUTPUT_SCHEMA)
         try:
-            write_output(out, os.path.join(output_dir, f"shard={shard}"))
+            out.write.mode("overwrite").parquet(os.path.join(output_dir, f"shard={shard}"))
             _write_manifest_local(
                 list(acc.value), os.path.join(output_dir, "_manifest", f"shard={shard}")
             )
@@ -329,10 +329,7 @@ def run_extraction(
     def mark(shard: int) -> None:
         if checkpoint_dir:
             marker = _marker_path(checkpoint_dir, shard)
-            tmp = f"{marker}.{uuid.uuid4().hex}.tmp"
-            with open(tmp, "w") as f:
-                f.write("done\n")
-            os.replace(tmp, marker)  # atomic
+            publish(marker, lambda tmp: Path(tmp).write_text("done\n"))
 
     done = [
         s for s in range(n_shards)
@@ -379,7 +376,7 @@ def _cli_main() -> None:
     """spark-submit entry point (SURVEY.md §3.4):
 
         spark-submit --py-files ocr_spark.zip ocr_spark/job.py \
-            --input <tbl-or-path> --output <tbl-or-path> \
+            --input <tbl-or-path> --output <dir> \
             --checkpoint <dir> [--shards N] [--partitions P]
 
     On a cluster the session comes from spark-submit's conf; running

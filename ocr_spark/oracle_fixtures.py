@@ -27,7 +27,8 @@ import json
 import os
 import tempfile
 
-from ocr_spark.fixtures import FIXTURE_VERSION
+from ocr_spark.fixtures import FIXTURE_VERSION, transcripts_fixture_path
+from ocr_spark.sources.io import publish
 
 
 def _core_tag() -> str:
@@ -56,15 +57,6 @@ def spans_to_json(spans: list[tuple[int, int]]) -> str:
     return json.dumps(
         [{"start": s, "end": e} for s, e in spans], separators=(",", ":")
     )
-
-
-def _cached(name: str, build) -> str:
-    path = os.path.join(tempfile.gettempdir(), name)
-    if not os.path.exists(path):
-        tmp = path + f".{os.getpid()}.tmp"
-        build(tmp)
-        os.replace(tmp, path)
-    return path
 
 
 def oracle_path(name: str) -> str:
@@ -132,8 +124,6 @@ def transcripts_extraction_oracle_path(sf: float) -> str:
     """Extraction over the synthetic transcripts fixture, pure Python."""
     import pyarrow.parquet as pq
 
-    from ocr_spark.queries import transcripts_fixture_path
-
     def build(out: str) -> None:
         t = pq.read_table(
             transcripts_fixture_path(sf), columns=["conv_id", "turn_idx", "text"]
@@ -148,7 +138,7 @@ def transcripts_extraction_oracle_path(sf: float) -> str:
             rows, [("conv_id", pa.string()), ("turn_idx", pa.int32())], out
         )
 
-    return _cached(extract_oracle_name(sf), build)
+    return publish(oracle_path(extract_oracle_name(sf)), build)
 
 
 def documents_extraction_oracle_path(sf_dir: str) -> str:
@@ -166,7 +156,7 @@ def documents_extraction_oracle_path(sf_dir: str) -> str:
         )
         _write_extraction(rows, [("doc_id", pa.int64())], out)
 
-    return _cached(docextract_oracle_name(sf_dir), build)
+    return publish(oracle_path(docextract_oracle_name(sf_dir)), build)
 
 
 def fields_oracle_path(sf: float) -> str:
@@ -207,7 +197,7 @@ def fields_oracle_path(sf: float) -> str:
             out,
         )
 
-    return _cached(fields_oracle_name(sf), build)
+    return publish(oracle_path(fields_oracle_name(sf)), build)
 
 
 def ensure_oracle_fixtures(sf: float = 0.01, sf_dir: str = "/root/testdata/sf0.01") -> None:

@@ -58,27 +58,3 @@ def build_session(
         b = b.config(k, v)
     return b.getOrCreate()
 
-
-def iceberg_runtime_available(spark: SparkSession) -> bool:
-    """True when the Iceberg Spark runtime is on the session's JVM
-    classpath (the north rule's design point is an Iceberg transcript
-    table; this sandbox ships no runtime JAR, so callers branch to a
-    session-catalog/parquet fallback). Detection is a classloader
-    probe, not a config guess — a cluster that ships the JAR via
-    ``--packages`` or ``spark.jars`` is detected regardless of how the
-    catalog is configured. Cached per SparkContext (Class.forName costs
-    a Py4J round-trip)."""
-    sc = spark.sparkContext
-    cached = getattr(sc, "_ocr_spark_iceberg", None)
-    if cached is not None:
-        return cached
-    try:
-        sc._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.source.IcebergSource"
-        )
-        available = True
-    except Exception:
-        available = False
-    sc._ocr_spark_iceberg = available
-    return available
-

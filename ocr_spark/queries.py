@@ -53,7 +53,6 @@ tests/test_entry_oracle.py runs the whole registry against its oracles.
 
 from __future__ import annotations
 
-import os
 import re
 from collections.abc import Callable
 
@@ -61,7 +60,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocr_spark.core.fields import FIELD_NAMES
-from ocr_spark.fixtures import _transcripts_fixture_file, write_transcripts
+from ocr_spark.fixtures import _transcripts_fixture_file, transcripts_fixture_path
 from ocr_spark.functions.text import (
     LANG_PRIORITY,
     PII_EMAIL_RE as _PII_EMAIL,
@@ -137,25 +136,10 @@ from ocr_spark.udfs import extract_udf, fields_udf
 
 _Query = Callable[[SparkSession, str], DataFrame]
 
-_FIXTURE_CACHE: dict[float, str] = {}
-
 
 def _sf_of(sf_dir: str) -> float:
     m = re.search(r"sf(\d+(?:\.\d+)?)", sf_dir)
     return float(m.group(1)) if m else 0.01
-
-
-def transcripts_fixture_path(sf: float) -> str:
-    """Deterministic synthetic transcripts parquet for this sf, written
-    on first use and cached (fixtures._transcripts_fixture_file)."""
-    if sf not in _FIXTURE_CACHE:
-        path = _transcripts_fixture_file(sf)
-        if not os.path.exists(path):
-            tmp = path + ".tmp"
-            write_transcripts(tmp, sf)
-            os.replace(tmp, path)
-        _FIXTURE_CACHE[sf] = path
-    return _FIXTURE_CACHE[sf]
 
 
 def _table(name: str) -> _Query:

@@ -1,14 +1,12 @@
-"""Readers/writers: Iceberg-first with parquet-path fallback.
+"""Readers and the one file-publish step.
 
 Rebuild of the reference's source/sink surface (SURVEY.md §2.1):
 the directory scan + extension filter (S1, ``OCR API 2/main.py:42-72``)
 becomes a table read with a predicate; the Socket.IO sink (S5) becomes
-the output table + lineage manifest. One interface so the job code is
-identical whether the catalog is Iceberg (production) or bare parquet
-paths: path-vs-identifier picks the surface by name shape, and
-identifier writes branch on a one-time classloader probe for the
-Iceberg runtime (plans/session.iceberg_runtime_available) — never a
-try/except at task time.
+the job's directory of parquet shards + lineage manifest (job.py,
+Spark's own writer). Input is path-or-table by name shape, so the job
+code is identical on an Iceberg table (production) or a parquet path.
+``publish`` is how every cached or marker file lands at its path.
 
 The report exports (S7 CSV, S8 PDF) have no wrapper here: their data
 is the ``transaction_pivot`` driver query, written with Spark's own
@@ -18,6 +16,8 @@ is the ``transaction_pivot`` driver query, written with Spark's own
 from __future__ import annotations
 
 import os
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -52,22 +52,20 @@ def read_input(spark: SparkSession, source: str) -> DataFrame:
     return spark.read.parquet(source)
 
 
-def write_output(df: DataFrame, dest: str) -> None:
-    """Write (overwrite) a table. A path writes parquet; an identifier routes by
-    runtime: with Iceberg available, a DataSourceV2 ``writeTo(...)
-    createOrReplace`` (an atomic Iceberg snapshot commit — the real
-    deployment's transactional sink); without it, a session-catalog
-    managed parquet table via ``saveAsTable`` (the V1 path — the
-    session catalog does not support v2 REPLACE TABLE)."""
-    from ocr_spark.plans.session import iceberg_runtime_available
-
-    if not _is_path(dest):
-        if iceberg_runtime_available(df.sparkSession):
-            df.writeTo(dest).using("iceberg").createOrReplace()
-        else:
-            df.write.mode("overwrite").saveAsTable(dest)
-    else:
-        df.write.mode("overwrite").parquet(dest)
+def publish(path: str, build: Callable[[str], object]) -> str:
+    """Return ``path``, first building it if it does not exist:
+    ``build(tmp)`` writes a uniquely named temp file that is renamed
+    onto ``path`` atomically, so no reader sees a partial file. If
+    ``build`` raises, the temp is removed and ``path`` stays absent."""
+    if not os.path.exists(path):
+        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+        try:
+            build(tmp)
+            os.replace(tmp, path)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+    return path
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

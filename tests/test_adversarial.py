@@ -4,6 +4,7 @@ and each span's raw slice is non-empty when text is non-empty)."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
 from ocr_spark.core import extract_turn
@@ -68,3 +69,44 @@ def test_adversarial_through_spark(spark):
     for name, raw in rows:
         r = extract_turn(raw)
         assert got[name] == (r.kind, r.extracted_text), name
+
+
+def test_oversize_payloads_through_spark(spark):
+    """Twenty 4 MiB turns in one partition (~80 MiB). Spark caps each
+    Arrow input batch by bytes (``spark.sql.execution.arrow.
+    maxBytesPerBatch``, 64 MiB by default) as well as by
+    ``maxRecordsPerBatch`` (2048), so the UDF sees several batches, not
+    one that grows with payload size (docs/SCALE.md §1 "Memory"); each
+    row still equals the core's own result."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.job import ensure_package_shipped
+    from ocr_spark.udfs import extract_udf
+
+    ensure_package_shipped(spark)
+    line = "shipment cargo freight route depot invoice material weight tonnage\n"
+    reps = (4 << 20) // len(line)
+    n_rows = 20
+    text = F.concat(F.col("id").cast("string"), F.lit(" "), F.repeat(F.lit(line), reps))
+
+    @F.pandas_udf("int")
+    def batch_len(s: pd.Series) -> pd.Series:
+        return pd.Series([len(s)] * len(s))
+
+    rows = (
+        spark.range(0, n_rows, 1, numPartitions=1)
+        .select("id", batch_len(text).alias("n"), extract_udf(text).alias("x"))
+        .collect()
+    )
+    assert len(rows) == n_rows
+    # a batch of n rows contributes n rows of 1/n each
+    assert round(sum(1 / r["n"] for r in rows)) >= 2
+    for r in rows:
+        e = extract_turn(f"{r['id']} " + line * reps)
+        x = r["x"]
+        assert (x["kind"], x["extracted_text"], [tuple(s) for s in x["spans"]]) == (
+            e.kind, e.extracted_text, [tuple(s) for s in e.spans]
+        ), r["id"]
+        assert (x["blocks_kept"], x["blocks_dropped"], x["bytes_in"], x["bytes_out"]) == (
+            e.blocks_kept, e.blocks_dropped, e.bytes_in, e.bytes_out
+        ), r["id"]

@@ -1,62 +1,89 @@
-"""Table-identifier surface of read_input/write_output: the Iceberg
-branch when the runtime JAR is present, the session-catalog managed
-parquet table otherwise (this sandbox ships no JAR, so the fallback is
-the live-tested branch and the Iceberg branch is skip-guarded)."""
+"""The file layer (sources/io.py): ``read_input`` resolves a name
+without '/' through the session catalog (an Iceberg table where the
+runtime is configured, a managed table here), the extraction job gives
+the same output on a table as on its parquet path, and ``publish``
+builds a file at most once and never leaves a partial one."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
-from ocr_spark.plans.session import iceberg_runtime_available
-from ocr_spark.sources.io import read_input, write_output
+from ocr_spark.job import run_extraction
+from ocr_spark.sources.io import publish, read_input
 
 
-def test_runtime_probe_is_cached_and_boolean(spark):
-    a = iceberg_runtime_available(spark)
-    assert isinstance(a, bool)
-    assert iceberg_runtime_available(spark) is a  # cached per context
-
-
-def test_identifier_roundtrip_via_session_catalog(spark, tmp_path):
-    """Identifier writes must land in the catalog and read back through
-    the same identifier — job code never branches on deployment."""
-    if iceberg_runtime_available(spark):
-        pytest.skip("covered by test_identifier_roundtrip_via_iceberg")
+def test_identifier_roundtrip_via_session_catalog(spark):
+    """A table written by Spark's own writer reads back through
+    read_input by its identifier — job code never branches on
+    deployment."""
     df = spark.createDataFrame(
         [("c1", 0, "hello world"), ("c1", 1, "second turn")],
         "conv_id string, turn_idx int, text string",
     )
     tbl = "ocr_spark_test_roundtrip"
     try:
-        write_output(df, tbl)
+        df.write.mode("overwrite").saveAsTable(tbl)
         back = read_input(spark, tbl)
         assert sorted(tuple(r) for r in back.collect()) == sorted(
             tuple(r) for r in df.collect()
         )
-        # the fallback provider is parquet, not Iceberg
-        provider = {
-            r["col_name"]: r["data_type"]
-            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect()
-        }.get("Provider", "").lower()
-        assert provider == "parquet"
-        # overwrite is idempotent (same identifier, fresh contents)
-        write_output(df.limit(1), tbl)
-        assert read_input(spark, tbl).count() == 1
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
-def test_identifier_roundtrip_via_iceberg(spark, tmp_path):
-    """The production branch: an atomic Iceberg snapshot commit via
-    writeTo().createOrReplace(). Runs only where the runtime JAR is on
-    the classpath (a real cluster / a dev box with --packages)."""
-    if not iceberg_runtime_available(spark):
-        pytest.skip("Iceberg runtime JAR not on classpath in this sandbox")
-    df = spark.createDataFrame([("c1", 0, "t")], "conv_id string, turn_idx int, text string")
-    tbl = "ocr_spark_test_iceberg"
+def test_job_on_table_input_equals_path_input(spark, transcripts_path, tmp_path):
+    tbl = "ocr_spark_test_transcripts"
     try:
-        write_output(df, tbl)
-        assert read_input(spark, tbl).count() == 1
+        spark.read.parquet(transcripts_path).write.mode("overwrite").saveAsTable(tbl)
+        for name, source in (("table", tbl), ("path", transcripts_path)):
+            run_extraction(
+                spark, source, str(tmp_path / name), n_shards=2, num_partitions=4
+            )
+        got = {
+            name: sorted(tuple(r) for r in spark.read.parquet(str(tmp_path / name)).collect())
+            for name in ("table", "path")
+        }
+        assert len(got["table"]) == spark.read.parquet(transcripts_path).count() > 0
+        assert got["table"] == got["path"]
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
+
+def _write(text: str, calls: list):
+    def build(tmp: str) -> None:
+        calls.append(tmp)
+        with open(tmp, "w") as f:
+            f.write(text)
+
+    return build
+
+
+def test_publish_builds_once(tmp_path):
+    path = str(tmp_path / "f.txt")
+    calls: list = []
+    assert publish(path, _write("first", calls)) == path
+    assert publish(path, _write("second", calls)) == path
+    assert len(calls) == 1 and calls[0] != path
+    with open(path) as f:
+        assert f.read() == "first"
+    assert os.listdir(tmp_path) == ["f.txt"]
+
+
+def test_publish_failed_build_leaves_nothing(tmp_path):
+    path = str(tmp_path / "f.txt")
+
+    def broken(tmp: str) -> None:
+        with open(tmp, "w") as f:
+            f.write("partial")
+        raise OSError("disk full")
+
+    with pytest.raises(OSError, match="disk full"):
+        publish(path, broken)
+    assert os.listdir(tmp_path) == []
+    calls: list = []
+    publish(path, _write("whole", calls))
+    assert len(calls) == 1
+    with open(path) as f:
+        assert f.read() == "whole"
