@@ -18,9 +18,10 @@ from __future__ import annotations
 from typing import NamedTuple
 
 from ocr_spark.core.html_main import extract_html
-from ocr_spark.core.pdf_layout import extract_pdf_like
-from ocr_spark.core.plain import extract_plain
-from ocr_spark.core.sniff import sniff_kind
+from ocr_spark.core.lines import split_lines_with_spans
+from ocr_spark.core.pdf_layout import extract_pdf_like_lines
+from ocr_spark.core.plain import extract_plain_lines
+from ocr_spark.core.sniff import is_html, layout_kind
 
 
 class ExtractResult(NamedTuple):
@@ -31,13 +32,6 @@ class ExtractResult(NamedTuple):
     blocks_dropped: int
     bytes_in: int
     bytes_out: int
-
-
-_EXTRACTORS = {
-    "html": extract_html,
-    "pdf_like": extract_pdf_like,
-    "plain": extract_plain,
-}
 
 
 def extract_turn(raw: str | None) -> ExtractResult:
@@ -55,8 +49,16 @@ def extract_turn(raw: str | None) -> ExtractResult:
         # output is Arrow-safe
         raw = raw.encode("utf-8", "replace").decode("utf-8")
         bytes_in = len(raw.encode("utf-8"))
-    kind = sniff_kind(raw)
-    text, spans, kept, droppedn = _EXTRACTORS[kind](raw)
+    # sniff_kind + the kind's extractor, with a non-html payload split
+    # into lines once for both the layout checks and the extractor
+    if is_html(raw):
+        kind = "html"
+        text, spans, kept, droppedn = extract_html(raw)
+    else:
+        lines = split_lines_with_spans(raw)
+        kind = layout_kind(raw, lines)
+        extract = extract_pdf_like_lines if kind == "pdf_like" else extract_plain_lines
+        text, spans, kept, droppedn = extract(lines)
     return ExtractResult(
         kind=kind,
         extracted_text=text,

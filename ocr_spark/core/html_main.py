@@ -30,7 +30,6 @@ from __future__ import annotations
 import html as _html
 import re
 from html.parser import HTMLParser
-from typing import NamedTuple
 
 from ocr_spark.core.normalize import collapse_all_ws, fix_confusables, normalize_unicode
 
@@ -69,125 +68,116 @@ _TAG_FLAGS["a"] = _TAG_FLAGS.get("a", 0) | _F_LINK
 _ASCII_ALPHA = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
 
 
-class Block(NamedTuple):
-    text: str        # normalized (entity-decoded, ws-collapsed) block text
-    start: int       # raw char offset of first text chunk
-    end: int         # raw char offset one past last text chunk
-    link_chars: int
-    total_chars: int
-    boiler: bool
-
-    @property
-    def link_density(self) -> float:
-        return self.link_chars / self.total_chars if self.total_chars else 0.0
-
-    @property
-    def kept(self) -> bool:
-        # word-count gate fails for unsegmented scripts (CJK/Thai have
-        # no spaces) — a 12+ non-space-char block passes regardless of
-        # word segmentation; short junk ("Read more") stays dropped
-        substantial = (
-            len(self.text.split()) >= _MIN_WORDS
-            or len(self.text.replace(" ", "")) >= _MIN_SOLID_CHARS
-        )
-        return (
-            not self.boiler
-            and substantial
-            and self.link_density < _MAX_LINK_DENSITY
-        )
-
-
 class _BlockBuilder:
     """The block-segmentation/scoring state machine, parser-agnostic:
-    driven by (tag, data-with-offsets) events from either the stdlib
-    ``HTMLParser`` adapter (the behavioral reference) or the fast
-    regex tokenizer below. One implementation of the semantics, two
-    event sources — equality asserted corpus-wide in tests."""
+    driven by (tag flags, data-with-offsets) events from either the
+    stdlib ``HTMLParser`` adapter (the behavioral reference) or the
+    fast regex tokenizer below. One implementation of the semantics,
+    two event sources — equality asserted corpus-wide in tests.
+
+    Tag events take the tag's ``_TAG_FLAGS`` value, so a caller skips
+    the call for a tag without flags. Each closed block is scored on
+    the spot: kept blocks land in ``texts``/``spans``, the rest count
+    in ``dropped``."""
 
     def __init__(self) -> None:
         self._skip_depth = 0
         self._boiler_depth = 0
         self._link_depth = 0
-        self._chunks: list[tuple[int, int, str]] = []  # (start, end, decoded)
+        self._chunks: list[str] = []  # decoded text of the open block
+        self._start = 0  # raw offset of the open block's first chunk
+        self._end = 0    # raw offset one past its last chunk
         self._block_boiler = False
         self._block_link_chars = 0
-        self.blocks: list[Block] = []
+        self.texts: list[str] = []
+        self.spans: list[tuple[int, int]] = []
+        self.dropped = 0
 
     # -- block lifecycle ------------------------------------------------
     def _flush(self) -> None:
-        if not self._chunks:
-            self._block_link_chars = 0
-            self._block_boiler = False
-            return
-        decoded = "".join(c[2] for c in self._chunks)
-        normalized = normalize_unicode(fix_confusables(decoded))
-        text = collapse_all_ws(normalized)
-        # total is the collapsed length of the RAW decoded text; when
-        # normalization was an identity (the common case) that equals
-        # len(text) — skip the second collapse pass
-        total = len(text) if normalized == decoded else len(collapse_all_ws(decoded))
-        start = self._chunks[0][0]
-        end = self._chunks[-1][1]
-        if text:
-            self.blocks.append(
-                Block(
-                    text=text,
-                    start=start,
-                    end=end,
-                    link_chars=min(self._block_link_chars, total),
-                    total_chars=total,
-                    boiler=self._block_boiler,
-                )
-            )
+        """Close the open block. Callers check ``_chunks`` first: with
+        no chunk the block state is already reset, so there is nothing
+        to do."""
+        decoded = "".join(self._chunks)
         self._chunks = []
+        link_chars = self._block_link_chars
+        boiler = self._block_boiler
         self._block_link_chars = 0
         self._block_boiler = False
+        if decoded.isspace():
+            # normalization maps every isspace() char to \s and the
+            # collapse strips the rest: no block, skip the passes
+            return
+        normalized = normalize_unicode(fix_confusables(decoded))
+        text = collapse_all_ws(normalized)
+        if not text:
+            return
+        # word-count gate fails for unsegmented scripts (CJK/Thai have
+        # no spaces) — a 12+ non-space-char block passes regardless of
+        # word segmentation; short junk ("Read more") stays dropped
+        kept = not boiler and (
+            len(text.split()) >= _MIN_WORDS
+            or len(text.replace(" ", "")) >= _MIN_SOLID_CHARS
+        )
+        if kept and link_chars:
+            # total is the collapsed length of the RAW decoded text;
+            # when normalization was an identity (the common case) that
+            # equals len(text) — skip the second collapse pass
+            total = len(text) if normalized == decoded else len(collapse_all_ws(decoded))
+            kept = total == 0 or min(link_chars, total) / total < _MAX_LINK_DENSITY
+        if kept:
+            self.texts.append(text)
+            self.spans.append((self._start, self._end))
+        else:
+            self.dropped += 1
 
-    def _add_chunk(self, start: int, end: int, decoded: str) -> None:
-        if self._skip_depth > 0 or not decoded:
+    def add(self, start: int, end: int, decoded: str) -> None:
+        if self._skip_depth or not decoded:
             return
         if not self._chunks:
             self._block_boiler = self._boiler_depth > 0
-        self._chunks.append((start, end, decoded))
-        if self._link_depth > 0:
+            self._start = start
+        self._chunks.append(decoded)
+        self._end = end
+        if self._link_depth:
             self._block_link_chars += len(collapse_all_ws(decoded))
 
-    # -- tag events (one _TAG_FLAGS probe per event; order of the
-    # flag branches mirrors the original membership-test chain) ------
-    def on_start(self, tag: str) -> None:
-        f = _TAG_FLAGS.get(tag, 0)
-        if not f:
-            return
-        if f & _F_BLOCK:
+    # -- tag events (flag branches in the order of the original
+    # membership-test chain) ---------------------------------------------
+    def start(self, f: int) -> None:
+        if f & _F_BLOCK and self._chunks:
             self._flush()
         if f & _F_SKIP:
             self._skip_depth += 1
         if f & _F_BOILER:
-            self._flush()
+            if self._chunks:
+                self._flush()
             self._boiler_depth += 1
         if f & _F_LINK:
             self._link_depth += 1
 
-    def on_end(self, tag: str) -> None:
-        f = _TAG_FLAGS.get(tag, 0)
-        if not f:
-            return
-        if f & _F_BLOCK:
+    def end(self, f: int) -> None:
+        if f & _F_BLOCK and self._chunks:
             self._flush()
         if f & _F_SKIP and self._skip_depth > 0:
             self._skip_depth -= 1
         if f & _F_BOILER and self._boiler_depth > 0:
-            self._flush()
+            if self._chunks:
+                self._flush()
             self._boiler_depth -= 1
         if f & _F_LINK and self._link_depth > 0:
             self._link_depth -= 1
 
-    def on_startend(self, tag: str) -> None:
-        if _TAG_FLAGS.get(tag, 0) & _F_BLOCK:
+    def startend(self, f: int) -> None:
+        if f & _F_BLOCK and self._chunks:
             self._flush()
 
-    def finish(self) -> None:
-        self._flush()
+    def result(self) -> tuple[str, list[tuple[int, int]], int, int]:
+        """Close the last block → (extracted_text, spans, blocks_kept,
+        blocks_dropped)."""
+        if self._chunks:
+            self._flush()
+        return "\n".join(self.texts), self.spans, len(self.texts), self.dropped
 
 
 def _decode_charref(name: str) -> str:
@@ -230,38 +220,34 @@ class _MainContentParser(HTMLParser):
         return self._line_starts[line - 1] + col
 
     def handle_starttag(self, tag, attrs):
-        self.builder.on_start(tag)
+        self.builder.start(_TAG_FLAGS.get(tag, 0))
 
     def handle_endtag(self, tag):
-        self.builder.on_end(tag)
+        self.builder.end(_TAG_FLAGS.get(tag, 0))
 
     def handle_startendtag(self, tag, attrs):
-        self.builder.on_startend(tag)
+        self.builder.startend(_TAG_FLAGS.get(tag, 0))
 
     def handle_data(self, data):
         start = self._abs_pos()
-        self.builder._add_chunk(start, start + len(data), data)
+        self.builder.add(start, start + len(data), data)
 
     def handle_entityref(self, name):
         start = self._abs_pos()
         end = start + len(name) + 1  # '&' + name
         if end < len(self._raw) and self._raw[end] == ";":
             end += 1
-        self.builder._add_chunk(start, end, _html.unescape(f"&{name};"))
+        self.builder.add(start, end, _html.unescape(f"&{name};"))
 
     def handle_charref(self, name):
         start = self._abs_pos()
         end = start + len(name) + 2  # '&#' + name
         if end < len(self._raw) and self._raw[end] == ";":
             end += 1
-        self.builder._add_chunk(start, end, _decode_charref(name))
+        self.builder.add(start, end, _decode_charref(name))
 
     def handle_comment(self, data):  # comments are never content
         pass
-
-    def close(self):
-        super().close()
-        self.builder.finish()
 
 
 # -- fast tokenizer ---------------------------------------------------------
@@ -308,7 +294,17 @@ _TAG_END_LETTERS = "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 _ENDTAG_STRICT_RE = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
 _CHARREF_RE = re.compile(r"&#([0-9]+|[xX][0-9a-fA-F]+)(?=[^0-9a-fA-F])")
 _ENTITYREF_RE = re.compile(r"&([a-zA-Z][-.a-zA-Z0-9]*)(?=[^a-zA-Z0-9])")
-_DATA_BOUNDARY_RE = re.compile(r"[&<]")
+# _scan's first try at every step, one alternation of three token
+# shapes: (1) a data run; (2) a start tag, bare or with only
+# ` name="value"` attributes (single space, XML-style name, double-
+# quoted value) — exactly the stdlib start-tag parse for this shape,
+# since the name is _TAGNAME_RE's and a quoted value is opaque to
+# locatestarttagend/attrfind; (3) a strict end tag (endtagfind)
+_FAST_TOKEN_RE = re.compile(
+    r"([^<&]+)"
+    r'|<([a-zA-Z][^\t\n\r\f />\x00]*)(?: [a-zA-Z_:][-.a-zA-Z0-9_:]*="[^"]*")*>'
+    r"|</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>"
+)
 _CDATA_END = {"script": re.compile(r"</\s*script", re.IGNORECASE),
               "style": re.compile(r"</\s*style", re.IGNORECASE)}
 # stdlib _markupbase closers: comments accept whitespace before '>'
@@ -354,7 +350,7 @@ def _consume_cdata(raw: str, b: _BlockBuilder, tag: str, start: int, add) -> int
         add(pos, s, raw[pos:s])  # suppressed (skip tag), kept for parity
         sm = _ENDTAG_STRICT_RE.match(raw, s)
         if sm and sm.group(1).lower() == tag:
-            b.on_end(tag)
+            b.end(_TAG_FLAGS[tag])
             return sm.end()
         gt = raw.find(">", s)
         if gt < 0:
@@ -367,43 +363,54 @@ def _scan(raw: str, b: _BlockBuilder) -> None:
     """Drive the builder over ``raw`` with html.parser-equivalent
     events (one feed + one close). Data chunks split at every '&'/'<'
     like the stdlib parser (chunk boundaries matter: per-chunk
-    whitespace collapse feeds the link-density score)."""
+    whitespace collapse feeds the link-density score).
+
+    Each step first tries ``_FAST_TOKEN_RE``: a ``[^<&]+`` data run, a
+    start tag that is bare or has only `` name="value"`` attributes, or
+    a strict end tag — the shapes of nearly every token in real pages,
+    where the stdlib emulation below would reach the same event by a
+    longer route. Every other shape (entities and charrefs, comments,
+    declarations, ``/>`` tags, other attribute forms, tolerant or
+    unterminated tags, stray '<'/'&') falls back to that emulation in
+    the same loop."""
     n = len(raw)
     i = 0
-    add = b._add_chunk
+    add = b.add
+    fast = _FAST_TOKEN_RE.match
+    flags = _TAG_FLAGS.get
     semi_last = raw.rfind(";")  # O(1) '";" in rest' checks for &# bails
     # stdlib runs goahead twice (feed + close); every break-causing
     # construct (a '&#' bail or any parse_* -1) consumes one pass, and
     # a break in the CLOSE pass dumps the rest as one data chunk
     in_close_pass = False
     while i < n:
-        m = _DATA_BOUNDARY_RE.search(raw, i)
-        j = m.start() if m else n
-        if i < j:
-            add(i, j, raw[i:j])
-            i = j
-        if i >= n:
-            break
+        m = fast(raw, i)
+        if m is not None:
+            e = m.end()
+            g = m.lastindex
+            if g == 1:
+                add(i, e, m.group(1))
+            elif g == 2:
+                tag = m.group(2).lower()
+                f = flags(tag, 0)
+                if f:
+                    b.start(f)
+                    if tag in _CDATA_END:
+                        e = _consume_cdata(raw, b, tag, e, add)
+                        if e < 0:
+                            return
+            else:
+                f = flags(m.group(3).lower(), 0)
+                if f:
+                    b.end(f)
+            i = e
+            continue
+        # raw[i] is '<' or '&' (a data run would have matched)
         nxt1 = raw[i + 1] if i + 1 < n else ""
         if raw[i] == "<":
             if nxt1 in _ASCII_ALPHA:
                 # start tag — mirror check_for_whole_start_tag +
                 # parse_starttag exactly
-                tm = _TAGNAME_RE.match(raw, i + 1)
-                te = tm.end()
-                if te < n and raw[te] == ">":
-                    # attribute-free fast path (identical to the full
-                    # emulation for this shape)
-                    tag = tm.group(0).lower()
-                    b.on_start(tag)
-                    if tag in _CDATA_END:
-                        i = _consume_cdata(raw, b, tag, te + 1, add)
-                        if i < 0:
-                            b.finish()
-                            return
-                        continue
-                    i = te + 1
-                    continue
                 lm = _LOCATE_STARTTAG_RE.match(raw, i)
                 j = lm.end()
                 nxt = raw[j : j + 1]
@@ -420,7 +427,8 @@ def _scan(raw: str, b: _BlockBuilder) -> None:
                     endpos = j if j > i else i + 1
                 # parse_starttag: advance k over name+attrs, then the
                 # remainder before endpos decides the tag's fate
-                k = _TAGFIND_TOLERANT_RE.match(raw, i + 1).end()
+                tm = _TAGFIND_TOLERANT_RE.match(raw, i + 1)
+                k = tm.end()
                 while k < endpos:
                     am = _ATTRFIND_TOLERANT_RE.match(raw, k)
                     if not am:
@@ -432,15 +440,14 @@ def _scan(raw: str, b: _BlockBuilder) -> None:
                     add(i, endpos, raw[i:endpos])
                     i = endpos
                     continue
-                tag = tm.group(0).lower()
+                tag = tm.group(1).lower()
                 if tail == "/>":
-                    b.on_startend(tag)
+                    b.startend(flags(tag, 0))
                 else:
-                    b.on_start(tag)
+                    b.start(flags(tag, 0))
                     if tag in _CDATA_END:
                         i = _consume_cdata(raw, b, tag, endpos, add)
                         if i < 0:
-                            b.finish()
                             return
                         continue
                 i = endpos
@@ -449,17 +456,14 @@ def _scan(raw: str, b: _BlockBuilder) -> None:
                     in_close_pass = True
                     i = _close_fallback(raw, i, add)  # stdlib -1 path
                     continue
-                em = _ENDTAG_STRICT_RE.match(raw, i)
-                if em:
-                    b.on_end(em.group(1).lower())
-                    i = em.end()
-                elif raw[i : i + 3] == "</>":
+                # (a strict end tag took the fast path)
+                if raw[i : i + 3] == "</>":
                     i += 3  # stdlib: consumed, no event
                 elif i + 2 < n and raw[i + 2] in _ASCII_ALPHA:
                     # tolerant end tag: name then junk until '>'
                     tm = _TAGNAME_RE.match(raw, i + 2)
                     gt = raw.find(">", tm.end())
-                    b.on_end(tm.group(0).lower())
+                    b.end(flags(tm.group(0).lower(), 0))
                     i = gt + 1
                 else:
                     # bogus comment '</ junk>': no event, eat to '>'
@@ -527,12 +531,10 @@ def _scan(raw: str, b: _BlockBuilder) -> None:
                     # the remainder as one data chunk
                     if i < n:
                         add(i, n, raw[i:n])
-                    b.finish()
                     return
                 in_close_pass = True
             else:
                 add(i, n, raw[i:n])  # rest of the doc becomes data
-                b.finish()
                 return
         else:  # '&'
             em = _ENTITYREF_RE.match(raw, i)
@@ -547,21 +549,10 @@ def _scan(raw: str, b: _BlockBuilder) -> None:
                     add(i + 1, n, raw[i + 1 :])  # '&' dropped
                 else:
                     add(i, n, raw[i:n])
-                b.finish()
                 return
             else:
                 add(i, i + 1, "&")
                 i += 1
-    b.finish()
-    return
-
-
-def _extract_blocks(blocks: list[Block]) -> tuple[str, list[tuple[int, int]], int, int]:
-    kept = [b for b in blocks if b.kept]
-    dropped = len(blocks) - len(kept)
-    text = "\n".join(b.text for b in kept)
-    spans = [(b.start, b.end) for b in kept]
-    return text, spans, len(kept), dropped
 
 
 def extract_html(raw: str) -> tuple[str, list[tuple[int, int]], int, int]:
@@ -572,7 +563,7 @@ def extract_html(raw: str) -> tuple[str, list[tuple[int, int]], int, int]:
     path; ``extract_html_reference`` is the stdlib-parser twin."""
     b = _BlockBuilder()
     _scan(raw, b)
-    return _extract_blocks(b.blocks)
+    return b.result()
 
 
 def extract_html_reference(raw: str) -> tuple[str, list[tuple[int, int]], int, int]:
@@ -581,4 +572,4 @@ def extract_html_reference(raw: str) -> tuple[str, list[tuple[int, int]], int, i
     parser = _MainContentParser(raw)
     parser.feed(raw)
     parser.close()
-    return _extract_blocks(parser.builder.blocks)
+    return parser.builder.result()

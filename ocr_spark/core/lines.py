@@ -20,17 +20,27 @@ class Line(NamedTuple):
 
 
 _TERM_RE = re.compile(r"\r\n|\r|\n")
+# builds a Line straight from its field tuple, skipping the namedtuple
+# __new__ wrapper (one Python-level call per line)
+_new_line = tuple.__new__
 
 
 def split_lines_with_spans(raw: str) -> list[Line]:
     """Split on \\n / \\r\\n / \\r, keeping raw char spans per line
     (terminator scan stays C-side — a per-char Python loop was ~30% of
-    the pdf_like extraction profile)."""
+    the pdf_like extraction profile; a CR-free payload, the common
+    case, is one ``str.split``)."""
     lines: list[Line] = []
     i = 0
+    if "\r" not in raw:
+        for text in raw.split("\n"):
+            e = i + len(text)
+            lines.append(_new_line(Line, (text, i, e)))
+            i = e + 1
+        return lines
     for m in _TERM_RE.finditer(raw):
         s = m.start()
-        lines.append(Line(raw[i:s], i, s))
+        lines.append(_new_line(Line, (raw[i:s], i, s)))
         i = m.end()
-    lines.append(Line(raw[i:], i, len(raw)))
+    lines.append(_new_line(Line, (raw[i:], i, len(raw))))
     return lines

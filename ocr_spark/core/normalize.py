@@ -100,9 +100,17 @@ def collapse_all_ws(text: str) -> str:
     return _ALL_WS_RUN_RE.sub(" ", text).strip()
 
 
-def clean_inline(text: str) -> str:
-    """Full inline-text pipeline: confusables → unicode fold → ws collapse.
+def clean_block(lines: list[str]) -> list[str]:
+    """Inline-text pipeline over a block's lines: confusables → unicode
+    fold → ws collapse, i.e. ``collapse_ws(normalize_unicode(
+    fix_confusables(line)))`` per line, empty results dropped. Applied
+    to each kept block; never used for offset math.
 
-    Applied to each kept block's text; never used for offset math.
-    """
-    return collapse_ws(normalize_unicode(fix_confusables(text)))
+    It runs as one pass over the '\n'-joined block plus a per-line
+    trim, which is identical for lines without '\n': no confusable
+    pattern or ``_WS_RUN_RE`` match contains '\n', no replacement and
+    no NFKC mapping produces one, and '\n' is an NFKC-stable starter,
+    so every step maps the joined text line by line; only the trim of
+    ``collapse_ws`` has to run per line."""
+    text = _WS_RUN_RE.sub(" ", normalize_unicode(fix_confusables("\n".join(lines))))
+    return [t for t in map(str.strip, text.split("\n")) if t]

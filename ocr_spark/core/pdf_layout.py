@@ -29,7 +29,7 @@ from __future__ import annotations
 import re
 
 from ocr_spark.core.lines import Line, split_lines_with_spans
-from ocr_spark.core.normalize import clean_inline
+from ocr_spark.core.normalize import clean_block
 
 _PAGE_MARK_RE = re.compile(
     r"(?i)^\s*(?:page\s+\d{1,4}(?:\s+of\s+\d{1,4})?"
@@ -104,7 +104,11 @@ def _merge_lines(texts: list[str]) -> list[str]:
 
 def extract_pdf_like(raw: str) -> tuple[str, list[tuple[int, int]], int, int]:
     """→ (extracted_text, spans, blocks_kept, blocks_dropped)."""
-    lines = split_lines_with_spans(raw)
+    return extract_pdf_like_lines(split_lines_with_spans(raw))
+
+
+def extract_pdf_like_lines(lines: list[Line]) -> tuple[str, list[tuple[int, int]], int, int]:
+    """``extract_pdf_like`` over the payload's already-split lines."""
     blocks: list[list[Line]] = []
     current: list[Line] = []
     dropped = 0
@@ -135,10 +139,7 @@ def extract_pdf_like(raw: str) -> tuple[str, list[tuple[int, int]], int, int]:
     kept = 0
     for blk in blocks:
         texts = [ln.text.rstrip() for ln in blk]
-        texts = _reconstruct_columns(texts)
-        texts = _merge_lines(texts)
-        cleaned = [clean_inline(t) for t in texts]
-        cleaned = [t for t in cleaned if t]
+        cleaned = clean_block(_merge_lines(_reconstruct_columns(texts)))
         if not cleaned:
             dropped += 1
             continue

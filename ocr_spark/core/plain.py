@@ -14,12 +14,16 @@ returns the same text — the cleaning pipeline is a projection.
 from __future__ import annotations
 
 from ocr_spark.core.lines import Line, split_lines_with_spans
-from ocr_spark.core.normalize import clean_inline
+from ocr_spark.core.normalize import clean_block
 
 
 def extract_plain(raw: str) -> tuple[str, list[tuple[int, int]], int, int]:
     """→ (extracted_text, spans, blocks_kept, blocks_dropped)."""
-    lines = split_lines_with_spans(raw)
+    return extract_plain_lines(split_lines_with_spans(raw))
+
+
+def extract_plain_lines(lines: list[Line]) -> tuple[str, list[tuple[int, int]], int, int]:
+    """``extract_plain`` over the payload's already-split lines."""
     paragraphs: list[list[Line]] = []
     current: list[Line] = []
     for ln in lines:
@@ -35,8 +39,7 @@ def extract_plain(raw: str) -> tuple[str, list[tuple[int, int]], int, int]:
     spans: list[tuple[int, int]] = []
     dropped = 0
     for para in paragraphs:
-        cleaned = [clean_inline(ln.text) for ln in para]
-        cleaned = [t for t in cleaned if t]
+        cleaned = clean_block([ln.text for ln in para])
         if not cleaned:
             dropped += 1
             continue

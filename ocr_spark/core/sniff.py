@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import re
 
-from ocr_spark.core.lines import split_lines_with_spans
+from ocr_spark.core.lines import Line, split_lines_with_spans
 
 # Strong HTML evidence: a real tag (open, close, doctype, or comment) for
 # a common HTML element. Requires the tag shape `<name ...>` — a bare
@@ -45,10 +45,20 @@ def sniff_kind(text: str) -> str:
     """Route a raw payload to its extractor kind. First match wins."""
     if not text:
         return "plain"
-    if _HTML_TAG_RE.search(text):
+    if is_html(text):
         return "html"
-    lines = [ln.text.strip() for ln in split_lines_with_spans(text)]
-    nonempty = [ln for ln in lines if ln]
+    return layout_kind(text, split_lines_with_spans(text))
+
+
+def is_html(text: str) -> bool:
+    """The strongest rule: real HTML markup anywhere in the payload."""
+    return _HTML_TAG_RE.search(text) is not None
+
+
+def layout_kind(text: str, lines: list[Line]) -> str:
+    """``pdf_like`` | ``plain`` for a non-html payload, from its text
+    and its already-split lines."""
+    nonempty = [t for t in (ln.text.strip() for ln in lines) if t]
     if len(nonempty) >= 4:
         if _TABLE_SENTINEL_RE.search(text) or _DOC_KEYWORD_RE.search(text):
             return "pdf_like"

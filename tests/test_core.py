@@ -5,7 +5,7 @@ from __future__ import annotations
 from ocr_spark.core.extract import extract_turn
 from ocr_spark.core.html_main import extract_html
 from ocr_spark.core.lines import split_lines_with_spans
-from ocr_spark.core.normalize import clean_inline, collapse_all_ws, fix_confusables
+from ocr_spark.core.normalize import clean_block, collapse_all_ws, fix_confusables
 from ocr_spark.core.pdf_layout import extract_pdf_like
 from ocr_spark.core.plain import extract_plain
 from ocr_spark.core.sniff import sniff_kind
@@ -31,7 +31,7 @@ def test_confusables_reference_set():
 
 
 def test_clean_inline_nbsp_zero_width():
-    assert clean_inline("a ​b\tc") == "a b c"
+    assert clean_block(["a ​b\tc"]) == ["a b c"]
 
 
 def test_collapse_all_ws():
@@ -494,6 +494,16 @@ def test_fast_html_equals_stdlib_parser():
         "<p>before <![CDATA[a>b]]> rest of the words here</p>",
         "<p>x <![if gt 5]>cond<![endif]> words here now</p>",
         "<p>unterminated <![CDATA[ words here now",
+        # start-tag shapes at and just past the fast path's edge
+        '<a href="x">linked words here</a><p>body words here now</p>',
+        '<DIV class="c">upper case tag words</DIV>',
+        '<a  href="x">two spaces before attr words</a>',
+        '<a href="a>b">gt inside value words</a>',
+        '<a href="x"/>self closed with attr words here',
+        '<p>pic <img src="x" /> caption words here</p>',
+        '<script type="t">var x = "<p>";</script><p>after script words</p>',
+        "<p>\u00a0\u3000\u200b\x1c\x85</p><p>whitespace filler above words</p>",
+        "<div>\x1c\x85 \u00a0</div><a href=\"x\">\u3000</a>words here now",
     ]
     for e in cases:
         assert extract_html(e) == extract_html_reference(e), repr(e[:120])

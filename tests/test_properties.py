@@ -80,7 +80,14 @@ _htmlish = st.lists(
     | st.sampled_from(
         ["<p>", "</p>", "<script>", "</script>", "<a href='x'>", "</a>",
          "&amp;", "&#x41;", "&#", "<!--", "-->", "<![CDATA[", "]]>",
-         " />", "/>", "< p", "</ x>", "words here"]
+         " />", "/>", "< p", "</ x>", "words here",
+         # start tags at and just past the fast path's edge
+         '<a href="x">', '<DIV class="c">', '<a  href="x">',
+         '<a href="a>b">', '<a href="x"/>', '<img src="x" />',
+         '<script type="t">',
+         # whitespace-only filler: the isspace() block shortcut must
+         # agree with the \s collapse after NFKC
+         "\u00a0", "\u3000", "\u200b", "\x1c", "\x85"]
     ),
     max_size=40,
 ).map("".join)
@@ -151,3 +158,29 @@ def test_ascii_fast_paths_exact(raw):
 
     assert fix_confusables(raw) == ref_fix(raw)
     assert normalize_unicode(raw) == ref_norm(raw)
+
+
+_block_line = st.lists(
+    st.text(
+        alphabet=st.characters(codec="utf-8", exclude_categories=("Cs",), exclude_characters="\n"),
+        max_size=8,
+    )
+    | st.sampled_from(
+        ["Το", "το", "Tο", "tо", "То", " T0 ", " t0 ", "T0", "\u0301", "\u0327",
+         "\u00a0", "\u3000", "\u200b", "\u00ad", "\ufeff", "\x1c", "\x85",
+         "\u2028", "\r", "\x0b", "\ufb01", "\uff34", " ", "\t", "e", "words"]
+    ),
+    max_size=12,
+).map("".join)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_block_line, max_size=8))
+def test_clean_block_equals_per_line_clean(lines):
+    """One cleaning pass over a joined block equals cleaning each line
+    on its own (confusables → unicode fold → ws collapse), empties
+    dropped."""
+    from ocr_spark.core.normalize import clean_block, collapse_ws, fix_confusables, normalize_unicode
+
+    per_line = [collapse_ws(normalize_unicode(fix_confusables(t))) for t in lines]
+    assert clean_block(lines) == [t for t in per_line if t]
