@@ -109,14 +109,15 @@ class _BlockBuilder:
             # collapse strips the rest: no block, skip the passes
             return
         normalized = normalize_unicode(fix_confusables(decoded))
-        text = collapse_all_ws(normalized)
-        if not text:
+        words = normalized.split()
+        if not words:
             return
+        text = " ".join(words)  # collapse_all_ws(normalized)
         # word-count gate fails for unsegmented scripts (CJK/Thai have
         # no spaces) — a 12+ non-space-char block passes regardless of
         # word segmentation; short junk ("Read more") stays dropped
         kept = not boiler and (
-            len(text.split()) >= _MIN_WORDS
+            len(words) >= _MIN_WORDS
             or len(text.replace(" ", "")) >= _MIN_SOLID_CHARS
         )
         if kept and link_chars:

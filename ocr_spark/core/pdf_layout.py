@@ -37,15 +37,24 @@ _PAGE_MARK_RE = re.compile(
     r"|\d{1,4}\s*/\s*\d{1,4})\s*$"
 )
 _SEPARATOR_RE = re.compile(r"^[\s\-=_*.·•|~#]+$")
+# first char of a noise line once stripped: a page mark opens with
+# 'page', '-' or a \d (any str.isdecimal() char), a separator with one
+# of its rule chars — a line opening with anything else skips both
+# regexes
+_NOISE_LEAD = frozenset("pP-=_*.·•|~#")
 _GAP_RE = re.compile(r"\S(\s{3,})\S")
+# _GAP_RE within one line of a '\n'-joined block: any line has a gap
+# exactly when the block has a match
+_BLOCK_GAP_RE = re.compile(r"\S[^\S\n]{3,}\S")
 _HYPHEN_BREAK_RE = re.compile(r"[A-Za-z]-$")
 _CONTINUATION_RE = re.compile(r"^\s*:")
 _COLUMN_ALIGN_TOLERANCE = 2
 
 
 def _is_noise(stripped: str) -> bool:
-    if not stripped:
-        return False  # blank = block separator, not noise
+    lead = stripped[:1]  # '' for blank = block separator, not noise
+    if not (lead in _NOISE_LEAD or lead.isdecimal()):
+        return False
     return bool(_PAGE_MARK_RE.match(stripped) or _SEPARATOR_RE.match(stripped))
 
 
@@ -138,8 +147,17 @@ def extract_pdf_like_lines(lines: list[Line]) -> tuple[str, list[tuple[int, int]
     spans: list[tuple[int, int]] = []
     kept = 0
     for blk in blocks:
+        # each pass runs only on a block it can change: a column
+        # region needs a gap, a merge needs a line ending in '-' before
+        # another line, or a ':'
         texts = [ln.text.rstrip() for ln in blk]
-        cleaned = clean_block(_merge_lines(_reconstruct_columns(texts)))
+        block = "\n".join(texts)
+        if _BLOCK_GAP_RE.search(block):
+            texts = _reconstruct_columns(texts)
+            block = "\n".join(texts)
+        if ":" in block or "-\n" in block:
+            block = "\n".join(_merge_lines(texts))
+        cleaned = clean_block(block)
         if not cleaned:
             dropped += 1
             continue

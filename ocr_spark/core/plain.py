@@ -39,7 +39,7 @@ def extract_plain_lines(lines: list[Line]) -> tuple[str, list[tuple[int, int]], 
     spans: list[tuple[int, int]] = []
     dropped = 0
     for para in paragraphs:
-        cleaned = clean_block([ln.text for ln in para])
+        cleaned = clean_block("\n".join([ln.text for ln in para]))
         if not cleaned:
             dropped += 1
             continue

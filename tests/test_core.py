@@ -31,7 +31,7 @@ def test_confusables_reference_set():
 
 
 def test_clean_inline_nbsp_zero_width():
-    assert clean_block(["a ​b\tc"]) == ["a b c"]
+    assert clean_block("a ​b\tc") == ["a b c"]
 
 
 def test_collapse_all_ws():

@@ -180,7 +180,23 @@ def test_clean_block_equals_per_line_clean(lines):
     """One cleaning pass over a joined block equals cleaning each line
     on its own (confusables → unicode fold → ws collapse), empties
     dropped."""
-    from ocr_spark.core.normalize import clean_block, collapse_ws, fix_confusables, normalize_unicode
+    import re
 
-    per_line = [collapse_ws(normalize_unicode(fix_confusables(t))) for t in lines]
-    assert clean_block(lines) == [t for t in per_line if t]
+    from ocr_spark.core.normalize import clean_block, fix_confusables, normalize_unicode
+
+    def clean_line(t):
+        return re.sub(r"[ \t\f\v]+", " ", normalize_unicode(fix_confusables(t))).strip()
+
+    per_line = [clean_line(t) for t in lines]
+    assert clean_block("\n".join(lines)) == [t for t in per_line if t]
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_block_line, max_size=4).map("\n".join))
+def test_collapse_all_ws_equals_regex_collapse(text):
+    """The str.split() collapse equals the \\s-regex collapse."""
+    import re
+
+    from ocr_spark.core.normalize import collapse_all_ws
+
+    assert collapse_all_ws(text) == re.sub(r"\s+", " ", text).strip()
