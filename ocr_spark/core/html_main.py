@@ -1,8 +1,8 @@
 """HTML main-content extraction: boilerplate stripping with block scoring.
 
-Boilerpipe/readability-style heuristic over a stdlib ``html.parser`` DOM
-walk (lxml is not available in this environment, and the parse is a
-single forward pass anyway):
+Boilerpipe/readability-style heuristic over one forward pass of
+``html.parser``-equivalent events (lxml is not available in this
+environment):
 
 1. Segment the document into text blocks at block-level tag boundaries
    (``p``, ``div``, ``li``, ``h1-6``, ``td``, ``br`` …).
@@ -19,9 +19,25 @@ gating (W11 block spans + P3 confidence gate, SURVEY.md §2.4/§2.2):
 region segmentation, per-region score, keep/drop — but over HTML blocks
 with density scoring instead of regex-bounded invoice tables.
 
-Offsets: ``HTMLParser.getpos()`` returns (1-based line, 0-based col)
-against the fed string; we convert to absolute char offsets through a
-precomputed line-start table of the raw text. Spans therefore always
+Events come from ``_scan``, a regex tokenizer that reproduces the stdlib
+parser's event stream with native absolute offsets. Its fast path is one
+compiled alternation tried at every step, matching the three shapes that
+make up nearly every token of a real page: a ``[^<&]+`` data run, a
+start tag that is bare (``<p>``) or carries only `` name="value"``
+attributes (one space before each, double-quoted values), and a strict
+end tag (``</p>``, ``</ p >``). ``script``/``style`` start tags on that
+path still consume their raw-text content through ``_consume_cdata``.
+Everything else — entity and character references, comments,
+declarations, processing instructions, marked sections, ``/>`` tags,
+single-quoted, bare or multi-space attributes, tolerant and unterminated
+tags, stray ``<``/``&`` — falls back, in the same loop, to a step-by-step
+emulation of ``html.parser``.
+
+``extract_html_reference`` drives the same block builder from the stdlib
+``HTMLParser`` itself, the reference the fast path is equality-tested
+against. There ``HTMLParser.getpos()`` returns (1-based line, 0-based
+col) against the fed string, converted to absolute char offsets through
+a precomputed line-start table of the raw text. Spans therefore always
 index the raw payload (SURVEY.md §7 hard part (a)).
 """
 
@@ -256,7 +272,8 @@ class _MainContentParser(HTMLParser):
 # direct regex scanning and native absolute offsets: no per-tag method
 # dispatch, no line/col bookkeeping, no attribute parsing. Behavioral
 # parity with _MainContentParser is asserted corpus-wide in
-# tests/test_core.py::test_fast_html_equals_stdlib_parser.
+# tests/test_core.py::test_fast_html_equals_stdlib_parser and
+# tests/test_properties.py::test_fast_tokenizer_equals_stdlib_property.
 
 _TAGNAME_RE = re.compile(r"[a-zA-Z][^\t\n\r\f />\x00]*")  # name only
 # CPython's tagfind_tolerant / attrfind_tolerant, verbatim (stdlib,
@@ -366,14 +383,24 @@ def _scan(raw: str, b: _BlockBuilder) -> None:
     like the stdlib parser (chunk boundaries matter: per-chunk
     whitespace collapse feeds the link-density score).
 
-    Each step first tries ``_FAST_TOKEN_RE``: a ``[^<&]+`` data run, a
-    start tag that is bare or has only `` name="value"`` attributes, or
-    a strict end tag — the shapes of nearly every token in real pages,
-    where the stdlib emulation below would reach the same event by a
-    longer route. Every other shape (entities and charrefs, comments,
-    declarations, ``/>`` tags, other attribute forms, tolerant or
-    unterminated tags, stray '<'/'&') falls back to that emulation in
-    the same loop."""
+    Each step first tries ``_FAST_TOKEN_RE``, which takes:
+
+    - a ``[^<&]+`` data run;
+    - a start tag that is bare (``<p>``, ``<DIV>``) or has only
+      `` name="value"`` attributes, one space before each and the value
+      double-quoted (``<a href="/x">``, ``<a href="a>b">``); a
+      ``script``/``style`` one then consumes its content through
+      ``_consume_cdata``;
+    - a strict end tag (``</p>``, ``</ p >``).
+
+    These are the shapes of nearly every token in real pages, and for
+    them the stdlib emulation below would reach the same event by a
+    longer route. Every other shape falls back to that emulation in the
+    same loop: entity and character references, comments,
+    declarations, processing instructions, marked sections, ``/>`` tags
+    (``<br/>``, ``<img src="x" />``), attributes that are single-quoted,
+    bare, valueless or preceded by two spaces, tolerant or unterminated
+    tags, and stray '<'/'&'."""
     n = len(raw)
     i = 0
     add = b.add

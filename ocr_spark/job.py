@@ -176,7 +176,7 @@ def _make_runner(acc, shard: int):
                     axis=1,
                 )
                 n_turns += len(out)
-                convs.update(pdf["conv_id"])
+                convs.update(pdf["conv_id"].unique())
                 kept += int(ext["blocks_kept"].sum())
                 dropped += int(ext["blocks_dropped"].sum())
                 b_in += int(ext["bytes_in"].sum())
@@ -347,13 +347,15 @@ def run_extraction(
 def read_manifest(
     spark: SparkSession, output_dir: str, dedupe: bool = True
 ) -> DataFrame:
-    """Lineage manifest. Accumulator updates from transformations are
-    NOT deduped by Spark across task retries/speculation, so a
-    transient failure leaves a partial 'failed:*' row next to the
-    retry's 'ok' row. ``dedupe=True`` (default) keeps one row per
-    (shard, partition_id) — preferring ok status, then the highest
-    attempt — which restores sum-able metrics; ``dedupe=False``
-    returns the raw attempt log (every row, for failure forensics)."""
+    """Lineage manifest. Spark does not promise to apply an
+    accumulator update from a transformation only once per partition,
+    so ``dedupe=True`` (default) keeps one row per (shard,
+    partition_id) — preferring ok status, then the highest attempt —
+    which keeps the metrics sum-able; ``dedupe=False`` returns every
+    row. A task that fails in its Python worker adds no row at all:
+    pyspark sends a task's accumulator updates only when it succeeds,
+    so a retried partition shows just the retry's row
+    (tests/test_pipeline.py::test_task_retry_after_injected_failure)."""
     raw = spark.read.schema(MANIFEST_SCHEMA).parquet(
         os.path.join(output_dir, "_manifest")
     )

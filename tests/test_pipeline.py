@@ -172,6 +172,13 @@ def test_job_end_to_end_with_manifest(spark, transcripts_path, oracle, tmp_path)
     assert (m["status"] == "ok").all()
     assert m["bytes_in"].sum() == oracle["bytes_in"].sum()
     assert m["blocks_kept"].sum() == oracle["blocks_kept"].sum()
+    # n_convs counts each task's distinct conversations; a task's rows
+    # are its own part file, named by its partition id
+    for r in m.itertuples():
+        files = glob.glob(f"{out}/shard={r.shard}/part-{r.partition_id:05d}-*.parquet")
+        convs = pd.concat([pd.read_parquet(f, columns=["conv_id"]) for f in files])
+        assert r.n_convs == convs["conv_id"].nunique()
+    assert (m["n_turns"] > m["n_convs"]).all()  # every task repeats conversations
 
 
 def test_manifest_rows_leave_the_driver_after_each_run(spark, transcripts_path, tmp_path):
@@ -598,3 +605,80 @@ def test_conv_dedup_finds_duplicate_conversations(spark):
     got = {r["conv_id"]: (r["n_dup_convs"], r["is_keeper"]) for r in conv_dedup(df).collect()}
     assert got == {"a": (2, True), "b": (2, False), "c": (1, True)}
 
+
+
+_RETRY_DRIVER = '''
+import json
+import os
+import sys
+
+from pyspark.sql import SparkSession
+
+from ocr_spark import job
+
+marker, input_path, clean_out, flaky_out = sys.argv[1:5]
+real_extract_batch = job.extract_batch
+
+
+def extract_batch_failing_once(texts):
+    """The first call anywhere (O_EXCL marker) raises; every later
+    call, the retry included, extracts as usual."""
+    try:
+        fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    except FileExistsError:
+        return real_extract_batch(texts)
+    os.close(fd)
+    raise RuntimeError("injected task failure")
+
+
+spark = SparkSession.builder.getOrCreate()
+job.run_extraction(spark, input_path, clean_out, num_partitions=4)
+job.extract_batch = extract_batch_failing_once
+job.run_extraction(spark, input_path, flaky_out, num_partitions=4)
+spark.stop()
+'''
+
+
+def test_task_retry_after_injected_failure(spark, transcripts_path, oracle, tmp_path):
+    """A task that fails once is retried (local[4,2]: two attempts per
+    task): the output still equals the oracle, the manifest holds the
+    retry's row, and its sums equal a clean run's."""
+    import shutil
+    import subprocess
+
+    driver = tmp_path / "retry_driver.py"
+    driver.write_text(_RETRY_DRIVER)
+    marker = str(tmp_path / "failed-once")
+    clean_out, flaky_out = str(tmp_path / "clean"), str(tmp_path / "flaky")
+    submit = shutil.which("spark-submit") or os.path.join(
+        os.environ.get("SPARK_HOME", "/opt/spark"), "bin", "spark-submit"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__import__("ocr_spark").__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")])))
+    r = subprocess.run(
+        [
+            submit, "--master", "local[4,2]", "--conf", "spark.ui.enabled=false",
+            str(driver), marker, transcripts_path, clean_out, flaky_out,
+        ],
+        capture_output=True, text=True, timeout=300, env=env,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert os.path.exists(marker)  # the injected failure really fired
+
+    got = _collect_sorted(spark.read.parquet(flaky_out).drop("shard"))
+    _assert_equal(got, oracle)
+
+    # the retried partition shows attempt 1 and no failed row: pyspark's
+    # worker sends a task's accumulator updates only when the task
+    # succeeds, so the failed attempt's manifest row never reaches the
+    # driver
+    raw = read_manifest(spark, flaky_out, dedupe=False).toPandas()
+    assert (raw["status"] == "ok").all()
+    assert not raw.duplicated(["shard", "partition_id"]).any()
+    assert sorted(raw["attempt"]) == [0] * (len(raw) - 1) + [1]
+
+    sums = ["n_turns", "n_convs", "blocks_kept", "blocks_dropped", "bytes_in", "bytes_out"]
+    flaky = read_manifest(spark, flaky_out).toPandas()
+    clean = read_manifest(spark, clean_out).toPandas()
+    assert (flaky["status"] == "ok").all()
+    assert flaky[sums].sum().to_dict() == clean[sums].sum().to_dict()
