@@ -19,9 +19,9 @@ from typing import NamedTuple
 
 from ocr_spark.core.html_main import extract_html
 from ocr_spark.core.lines import split_lines_with_spans
-from ocr_spark.core.pdf_layout import extract_pdf_like_lines
-from ocr_spark.core.plain import extract_plain_lines
-from ocr_spark.core.sniff import is_html, layout_kind
+from ocr_spark.core.pdf_layout import _extract_pdf_like_lines
+from ocr_spark.core.plain import _extract_plain_lines
+from ocr_spark.core.sniff import _is_html, _layout_kind
 
 
 class ExtractResult(NamedTuple):
@@ -51,13 +51,13 @@ def extract_turn(raw: str | None) -> ExtractResult:
         bytes_in = len(raw.encode("utf-8"))
     # sniff_kind + the kind's extractor, with a non-html payload split
     # into lines once for both the layout checks and the extractor
-    if is_html(raw):
+    if _is_html(raw):
         kind = "html"
         text, spans, kept, droppedn = extract_html(raw)
     else:
         lines = split_lines_with_spans(raw)
-        kind = layout_kind(raw, lines)
-        extract = extract_pdf_like_lines if kind == "pdf_like" else extract_plain_lines
+        kind = _layout_kind(raw, lines)
+        extract = _extract_pdf_like_lines if kind == "pdf_like" else _extract_plain_lines
         text, spans, kept, droppedn = extract(lines)
     return ExtractResult(
         kind=kind,

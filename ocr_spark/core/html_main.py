@@ -140,8 +140,9 @@ class _BlockBuilder:
             # total is the collapsed length of the RAW decoded text;
             # when normalization was an identity (the common case) that
             # equals len(text) — skip the second collapse pass
+            # (> 0: decoded has a non-space char)
             total = len(text) if normalized == decoded else len(collapse_all_ws(decoded))
-            kept = total == 0 or min(link_chars, total) / total < _MAX_LINK_DENSITY
+            kept = min(link_chars, total) / total < _MAX_LINK_DENSITY
         if kept:
             self.texts.append(text)
             self.spans.append((self._start, self._end))

@@ -113,10 +113,10 @@ def _merge_lines(texts: list[str]) -> list[str]:
 
 def extract_pdf_like(raw: str) -> tuple[str, list[tuple[int, int]], int, int]:
     """→ (extracted_text, spans, blocks_kept, blocks_dropped)."""
-    return extract_pdf_like_lines(split_lines_with_spans(raw))
+    return _extract_pdf_like_lines(split_lines_with_spans(raw))
 
 
-def extract_pdf_like_lines(lines: list[Line]) -> tuple[str, list[tuple[int, int]], int, int]:
+def _extract_pdf_like_lines(lines: list[Line]) -> tuple[str, list[tuple[int, int]], int, int]:
     """``extract_pdf_like`` over the payload's already-split lines."""
     blocks: list[list[Line]] = []
     current: list[Line] = []

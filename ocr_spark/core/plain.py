@@ -19,10 +19,10 @@ from ocr_spark.core.normalize import clean_block
 
 def extract_plain(raw: str) -> tuple[str, list[tuple[int, int]], int, int]:
     """→ (extracted_text, spans, blocks_kept, blocks_dropped)."""
-    return extract_plain_lines(split_lines_with_spans(raw))
+    return _extract_plain_lines(split_lines_with_spans(raw))
 
 
-def extract_plain_lines(lines: list[Line]) -> tuple[str, list[tuple[int, int]], int, int]:
+def _extract_plain_lines(lines: list[Line]) -> tuple[str, list[tuple[int, int]], int, int]:
     """``extract_plain`` over the payload's already-split lines."""
     paragraphs: list[list[Line]] = []
     current: list[Line] = []

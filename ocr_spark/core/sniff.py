@@ -45,17 +45,17 @@ def sniff_kind(text: str) -> str:
     """Route a raw payload to its extractor kind. First match wins."""
     if not text:
         return "plain"
-    if is_html(text):
+    if _is_html(text):
         return "html"
-    return layout_kind(text, split_lines_with_spans(text))
+    return _layout_kind(text, split_lines_with_spans(text))
 
 
-def is_html(text: str) -> bool:
+def _is_html(text: str) -> bool:
     """The strongest rule: real HTML markup anywhere in the payload."""
     return _HTML_TAG_RE.search(text) is not None
 
 
-def layout_kind(text: str, lines: list[Line]) -> str:
+def _layout_kind(text: str, lines: list[Line]) -> str:
     """``pdf_like`` | ``plain`` for a non-html payload, from its text
     and its already-split lines."""
     nonempty = [t for t in (ln.text.strip() for ln in lines) if t]
