@@ -606,9 +606,7 @@ def test_conv_dedup_finds_duplicate_conversations(spark):
     assert got == {"a": (2, True), "b": (2, False), "c": (1, True)}
 
 
-
 _RETRY_DRIVER = '''
-import json
 import os
 import sys
 
