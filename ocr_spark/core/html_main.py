@@ -20,25 +20,24 @@ region segmentation, per-region score, keep/drop — but over HTML blocks
 with density scoring instead of regex-bounded invoice tables.
 
 Events come from ``_scan``, a regex tokenizer that reproduces the stdlib
-parser's event stream with native absolute offsets. Its fast path is one
-compiled alternation tried at every step, matching the three shapes that
-make up nearly every token of a real page: a ``[^<&]+`` data run, a
-start tag that is bare (``<p>``) or carries only `` name="value"``
-attributes (one space before each, double-quoted values), and a strict
-end tag (``</p>``, ``</ p >``). ``script``/``style`` start tags on that
-path still consume their raw-text content through ``_consume_cdata``.
-Everything else — entity and character references, comments,
-declarations, processing instructions, marked sections, ``/>`` tags,
-single-quoted, bare or multi-space attributes, tolerant and unterminated
-tags, stray ``<``/``&`` — falls back, in the same loop, to a step-by-step
-emulation of ``html.parser``.
+parser's event stream with native absolute offsets for the token shapes
+that make up nearly every real page: a ``[^<&]+`` data run, a start tag
+that is bare (``<p>``) or carries only `` name="value"`` attributes (one
+space before each, double-quoted values), a strict end tag (``</p>``,
+``</ p >``), and a character or entity reference (``&#8212;``,
+``&amp;``). ``script``/``style`` content is skipped to its close tag.
 
-``extract_html_reference`` drives the same block builder from the stdlib
-``HTMLParser`` itself, the reference the fast path is equality-tested
-against. There ``HTMLParser.getpos()`` returns (1-based line, 0-based
-col) against the fed string, converted to absolute char offsets through
-a precomputed line-start table of the raw text. Spans therefore always
-index the raw payload (SURVEY.md §7 hard part (a)).
+At the first token of any other shape — comments, declarations,
+processing instructions, marked sections, ``/>`` tags, other attribute
+forms, tolerant or unterminated tags, stray ``<``/``&`` —
+``extract_html`` drops the partial result and runs the whole document
+through ``extract_html_reference``: the same block builder driven by the
+stdlib ``HTMLParser`` itself, which is also the reference the fast path
+is equality-tested against. There ``HTMLParser.getpos()`` returns
+(1-based line, 0-based col) against the fed string, converted to
+absolute char offsets through a precomputed line-start table of the raw
+text. Spans therefore always index the raw payload (SURVEY.md §7 hard
+part (a)).
 """
 
 from __future__ import annotations
@@ -79,9 +78,6 @@ for _t in _SKIP_TAGS:
 for _t in _BOILER_TAGS:
     _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | _F_BOILER
 _TAG_FLAGS["a"] = _TAG_FLAGS.get("a", 0) | _F_LINK
-# ASCII letters as a set: one hash probe replaces the
-# isascii()+isalpha() method-call pair at the scanner's '<'/'&' sites
-_ASCII_ALPHA = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
 
 
 class _BlockBuilder:
@@ -213,10 +209,9 @@ def _decode_charref(name: str) -> str:
 
 
 class _MainContentParser(HTMLParser):
-    """stdlib-parser event source: the behavioral REFERENCE twin for
-    the fast tokenizer (``html.parser``'s per-tag machinery dominates
-    the extraction profile, so the hot path is ``_scan`` below; this
-    twin stays for the corpus-wide equality test)."""
+    """stdlib-parser event source: the general fallback for every
+    document the fast tokenizer does not take, and the behavioral
+    reference it is equality-tested against."""
 
     def __init__(self, raw: str):
         # convert_charrefs=False so entity/charref callbacks fire with
@@ -267,337 +262,129 @@ class _MainContentParser(HTMLParser):
     def handle_comment(self, data):  # comments are never content
         pass
 
+    def parse_marked_section(self, i, report=1):
+        """The stdlib RAISES AssertionError on a malformed ``<![``
+        (``<![3 junk]>``, ``<![ x]>``). Extraction is total, so such a
+        section is consumed like a bogus comment: up to the next '>',
+        or -1 (unterminated) when there is none."""
+        pos = self.getpos()
+        try:
+            return super().parse_marked_section(i, report)
+        except AssertionError:
+            self.lineno, self.offset = pos  # _scan_name moved it
+            gt = self.rawdata.find(">", i + 3)
+            return gt + 1 if gt >= 0 else -1
+
 
 # -- fast tokenizer ---------------------------------------------------------
-# Replicates the stdlib parser's event stream (feed-once + close) with
-# direct regex scanning and native absolute offsets: no per-tag method
-# dispatch, no line/col bookkeeping, no attribute parsing. Behavioral
-# parity with _MainContentParser is asserted corpus-wide in
-# tests/test_core.py::test_fast_html_equals_stdlib_parser and
-# tests/test_properties.py::test_fast_tokenizer_equals_stdlib_property.
+# Reproduces the stdlib parser's event stream (feed-once + close) for
+# the common token shapes, with direct regex scanning and native
+# absolute offsets: no per-tag method dispatch, no line/col bookkeeping,
+# no attribute parsing. Behavioral parity with _MainContentParser is
+# asserted in tests/test_core.py::test_fast_html_equals_stdlib_parser
+# and tests/test_properties.py::test_fast_tokenizer_equals_stdlib_property.
 
-_TAGNAME_RE = re.compile(r"[a-zA-Z][^\t\n\r\f />\x00]*")  # name only
-# CPython's tagfind_tolerant / attrfind_tolerant, verbatim (stdlib,
-# PSF-licensed): parse_starttag's `end = rawdata[k:endpos]` check needs
-# k advanced by exactly this name+attrs consumption, or '<tag />' (the
-# XHTML void form) classifies as a start tag instead of startend
-_TAGFIND_TOLERANT_RE = re.compile(r"([a-zA-Z][^\t\n\r\f />\x00]*)(?:\s|/(?!>))*")
-_ATTRFIND_TOLERANT_RE = re.compile(
-    r"((?<=[\'\"\s/])[^\s/>][^\s/=>]*)(\s*=+\s*"
-    r"(\'[^\']*\'|\"[^\"]*\"|(?![\'\"])[^>\s]*))?(?:\s|/(?!>))*"
-)
-# CPython html.parser's locatestarttagend_tolerant, verbatim (stdlib,
-# PSF-licensed) — using the exact same pattern is what makes the fast
-# path byte-equivalent to the stdlib twin on malformed attributes
-# (quoted values are opaque only AFTER '=', a bare quote ends the tag
-# region, etc.)
-_LOCATE_STARTTAG_RE = re.compile(
-    r"""
-  <[a-zA-Z][^\t\n\r\f />\x00]*       # tag name
-  (?:[\s/]*                          # optional whitespace before attribute name
-    (?:(?<=['"\s/])[^\s/>][^\s/=>]*  # attribute name
-      (?:\s*=+\s*                    # value indicator
-        (?:'[^']*'                   # LITA-enclosed value
-          |"[^"]*"                   # LIT-enclosed value
-          |(?!['"])[^>\s]*           # bare value
-        )
-        (?:\s*,)*                    # possibly followed by a comma
-      )?(?:\s|/(?!>))*
-     )*
-   )?
-  \s*                                # trailing whitespace
-""",
-    re.VERBOSE,
-)
-_TAG_END_LETTERS = "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-_ENDTAG_STRICT_RE = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
-_CHARREF_RE = re.compile(r"&#([0-9]+|[xX][0-9a-fA-F]+)(?=[^0-9a-fA-F])")
-_ENTITYREF_RE = re.compile(r"&([a-zA-Z][-.a-zA-Z0-9]*)(?=[^a-zA-Z0-9])")
-# _scan's first try at every step, one alternation of three token
-# shapes: (1) a data run; (2) a start tag, bare or with only
-# ` name="value"` attributes (single space, XML-style name, double-
-# quoted value) — exactly the stdlib start-tag parse for this shape,
-# since the name is _TAGNAME_RE's and a quoted value is opaque to
-# locatestarttagend/attrfind; (3) a strict end tag (endtagfind)
+# _scan's only step, one alternation of five token shapes: (1) a data
+# run; (2) a start tag, bare or with only ` name="value"` attributes
+# (single space, XML-style name, double-quoted value) — exactly the
+# stdlib start-tag parse for this shape, since a quoted value is opaque
+# to locatestarttagend/attrfind; (3) a strict end tag (endtagfind);
+# (4) a character and (5) an entity reference, with the stdlib's
+# charref/entityref patterns (the terminating char is looked at, not
+# consumed: the caller takes it only if it is ';')
 _FAST_TOKEN_RE = re.compile(
     r"([^<&]+)"
     r'|<([a-zA-Z][^\t\n\r\f />\x00]*)(?: [a-zA-Z_:][-.a-zA-Z0-9_:]*="[^"]*")*>'
     r"|</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>"
+    r"|&#([0-9]+|[xX][0-9a-fA-F]+)(?=[^0-9a-fA-F])"
+    r"|&([a-zA-Z][-.a-zA-Z0-9]*)(?=[^a-zA-Z0-9])"
 )
-_CDATA_END = {"script": re.compile(r"</\s*script", re.IGNORECASE),
-              "style": re.compile(r"</\s*style", re.IGNORECASE)}
-# stdlib _markupbase closers: comments accept whitespace before '>'
-_COMMENT_CLOSE_RE = re.compile(r"--\s*>")
-# marked sections: '<![CDATA[..]]>' family closes with ']]>',
-# MS conditional '<![if ..]>' family with ']>'
-_MS_NAME_RE = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*")
-_MARKED_CLOSE_RE = re.compile(r"]\s*]\s*>")
-_MS_COND_CLOSE_RE = re.compile(r"]\s*>")
-_MARKED_SECTIONS = frozenset({"temp", "cdata", "ignore", "include", "rcdata"})
-_MS_CONDITIONALS = frozenset({"if", "else", "endif"})
+# raw-text elements end only at the stdlib's cdata-mode close tag
+_CDATA_END = {
+    t: re.compile(rf"</\s*{t}\s*>", re.IGNORECASE) for t in ("script", "style")
+}
 
 
-def _close_fallback(raw: str, i: int, add) -> int:
-    """stdlib close()'s recovery for a parse_* that returned -1: data
-    up to the next '>' (inclusive), else up to the next '<', else one
-    char — then parsing CONTINUES from there."""
-    k = raw.find(">", i + 1)
-    if k >= 0:
-        k += 1
-    else:
-        k = raw.find("<", i + 1)
-        if k < 0:
-            k = i + 1
-    add(i, k, raw[i:k])
-    return k
-
-
-def _consume_cdata(raw: str, b: _BlockBuilder, tag: str, start: int, add) -> int:
-    """Raw-text element content from ``start``: only a STRICT close
-    tag whose name equals ``tag`` exits CDATA mode (stdlib parse_endtag
-    with cdata_elem set — a bogus '</script foo>' is emitted as data
-    and scanning continues inside the element). Returns the resume
-    index, or -1 when the element is unclosed (stdlib drops the rest).
-    """
-    cd = _CDATA_END[tag]
-    pos = start
-    while True:
-        em = cd.search(raw, pos)
-        if em is None:
-            return -1
-        s = em.start()
-        add(pos, s, raw[pos:s])  # suppressed (skip tag), kept for parity
-        sm = _ENDTAG_STRICT_RE.match(raw, s)
-        if sm and sm.group(1).lower() == tag:
-            b.end(_TAG_FLAGS[tag])
-            return sm.end()
-        gt = raw.find(">", s)
-        if gt < 0:
-            return -1
-        add(s, gt, raw[s:gt])  # bogus close: data, stay in CDATA
-        pos = gt
-
-
-def _scan(raw: str, b: _BlockBuilder) -> None:
+def _scan(raw: str, b: _BlockBuilder) -> bool:
     """Drive the builder over ``raw`` with html.parser-equivalent
-    events (one feed + one close). Data chunks split at every '&'/'<'
-    like the stdlib parser (chunk boundaries matter: per-chunk
-    whitespace collapse feeds the link-density score).
+    events (one feed + one close) → False at the first token the fast
+    path does not take, leaving the builder half-fed. Data chunks split
+    at every '&'/'<' like the stdlib parser (chunk boundaries matter:
+    per-chunk whitespace collapse feeds the link-density score).
 
-    Each step first tries ``_FAST_TOKEN_RE``, which takes:
+    Each step matches ``_FAST_TOKEN_RE``, which takes:
 
     - a ``[^<&]+`` data run;
     - a start tag that is bare (``<p>``, ``<DIV>``) or has only
       `` name="value"`` attributes, one space before each and the value
       double-quoted (``<a href="/x">``, ``<a href="a>b">``); a
-      ``script``/``style`` one then consumes its content through
-      ``_consume_cdata``;
-    - a strict end tag (``</p>``, ``</ p >``).
+      ``script``/``style`` one then skips its content to the close tag
+      (to the end of the document if there is none);
+    - a strict end tag (``</p>``, ``</ p >``);
+    - a character or entity reference followed by a terminating char
+      (``&#8212;``, ``&#x41 ``, ``&amp;``, ``&nbsp<``).
 
-    These are the shapes of nearly every token in real pages, and for
-    them the stdlib emulation below would reach the same event by a
-    longer route. Every other shape falls back to that emulation in the
-    same loop: entity and character references, comments,
-    declarations, processing instructions, marked sections, ``/>`` tags
-    (``<br/>``, ``<img src="x" />``), attributes that are single-quoted,
-    bare, valueless or preceded by two spaces, tolerant or unterminated
-    tags, and stray '<'/'&'."""
+    These are the shapes of nearly every token in real pages. Every
+    other one — comments, declarations, processing instructions,
+    marked sections, ``/>`` tags (``<br/>``, ``<img src="x" />``),
+    attributes that are single-quoted, bare, valueless or preceded by
+    two spaces, tolerant or unterminated tags, stray '<'/'&',
+    references at the end of the document — stops the scan."""
     n = len(raw)
     i = 0
     add = b.add
     fast = _FAST_TOKEN_RE.match
     flags = _TAG_FLAGS.get
-    semi_last = raw.rfind(";")  # O(1) '";" in rest' checks for &# bails
-    # stdlib runs goahead twice (feed + close); every break-causing
-    # construct (a '&#' bail or any parse_* -1) consumes one pass, and
-    # a break in the CLOSE pass dumps the rest as one data chunk
-    in_close_pass = False
     while i < n:
         m = fast(raw, i)
-        if m is not None:
-            e = m.end()
-            g = m.lastindex
-            if g == 1:
-                add(i, e, m.group(1))
-            elif g == 2:
-                tag = m.group(2).lower()
-                f = flags(tag, 0)
-                if f:
-                    b.start(f)
-                    if tag in _CDATA_END:
-                        e = _consume_cdata(raw, b, tag, e, add)
-                        if e < 0:
-                            return
-            else:
-                f = flags(m.group(3).lower(), 0)
-                if f:
+        if m is None:
+            return False
+        e = m.end()
+        g = m.lastindex
+        if g == 1:
+            add(i, e, m.group(1))
+        elif g == 2:
+            tag = m.group(2).lower()
+            f = flags(tag, 0)
+            if f:
+                b.start(f)
+                if tag in _CDATA_END:
+                    # the content is skip-tag data: no event reaches a block
+                    cm = _CDATA_END[tag].search(raw, e)
+                    if cm is None:
+                        return True  # unclosed: the stdlib drops the rest
                     b.end(f)
-            i = e
-            continue
-        # raw[i] is '<' or '&' (a data run would have matched)
-        nxt1 = raw[i + 1] if i + 1 < n else ""
-        if raw[i] == "<":
-            if nxt1 in _ASCII_ALPHA:
-                # start tag — mirror check_for_whole_start_tag +
-                # parse_starttag exactly
-                lm = _LOCATE_STARTTAG_RE.match(raw, i)
-                j = lm.end()
-                nxt = raw[j : j + 1]
-                if nxt == ">":
-                    endpos = j + 1
-                elif nxt == "/" and raw.startswith("/>", j):
-                    endpos = j + 2
-                elif nxt == "" or nxt in _TAG_END_LETTERS or nxt == "/":
-                    # incomplete at buffer end (stdlib -1)
-                    in_close_pass = True
-                    i = _close_fallback(raw, i, add)
-                    continue
-                else:
-                    endpos = j if j > i else i + 1
-                # parse_starttag: advance k over name+attrs, then the
-                # remainder before endpos decides the tag's fate
-                tm = _TAGFIND_TOLERANT_RE.match(raw, i + 1)
-                k = tm.end()
-                while k < endpos:
-                    am = _ATTRFIND_TOLERANT_RE.match(raw, k)
-                    if not am:
-                        break
-                    k = am.end()
-                tail = raw[k:endpos].strip()
-                if tail not in (">", "/>"):
-                    # junk before tag end: the whole region is data
-                    add(i, endpos, raw[i:endpos])
-                    i = endpos
-                    continue
-                tag = tm.group(1).lower()
-                if tail == "/>":
-                    b.startend(flags(tag, 0))
-                else:
-                    b.start(flags(tag, 0))
-                    if tag in _CDATA_END:
-                        i = _consume_cdata(raw, b, tag, endpos, add)
-                        if i < 0:
-                            return
-                        continue
-                i = endpos
-            elif nxt1 == "/":
-                if raw.find(">", i + 1) < 0:
-                    in_close_pass = True
-                    i = _close_fallback(raw, i, add)  # stdlib -1 path
-                    continue
-                # (a strict end tag took the fast path)
-                if raw[i : i + 3] == "</>":
-                    i += 3  # stdlib: consumed, no event
-                elif i + 2 < n and raw[i + 2] in _ASCII_ALPHA:
-                    # tolerant end tag: name then junk until '>'
-                    tm = _TAGNAME_RE.match(raw, i + 2)
-                    gt = raw.find(">", tm.end())
-                    b.end(flags(tm.group(0).lower(), 0))
-                    i = gt + 1
-                else:
-                    # bogus comment '</ junk>': no event, eat to '>'
-                    i = raw.find(">", i + 2) + 1
-            elif raw[i : i + 4] == "<!--":
-                cm = _COMMENT_CLOSE_RE.search(raw, i + 4)
-                if cm is None:
-                    in_close_pass = True
-                    i = _close_fallback(raw, i, add)  # unterminated
-                else:
-                    i = cm.end()
-            elif raw[i : i + 3] == "<![":
-                # marked section: '<![CDATA[...]]>' / '<![if ...]>'
-                nm = _MS_NAME_RE.match(raw, i + 3)
-                name = nm.group(0).lower() if nm else ""
-                if name in _MARKED_SECTIONS:
-                    close = _MARKED_CLOSE_RE.search(raw, i + 3)
-                elif name in _MS_CONDITIONALS:
-                    close = _MS_COND_CLOSE_RE.search(raw, i + 3)
-                else:
-                    # stdlib parse_marked_section RAISES here
-                    # (AssertionError: 'expected name token') — a
-                    # deliberate divergence: extraction is total, so a
-                    # malformed section degrades to bogus-comment
-                    # consumption instead of crashing the pipeline
-                    close = None
-                    gt = raw.find(">", i + 3)
-                    if gt < 0:
-                        in_close_pass = True
-                        i = _close_fallback(raw, i, add)
-                        continue
-                    i = gt + 1
-                    continue
-                if close is None:
-                    in_close_pass = True
-                    i = _close_fallback(raw, i, add)
-                    continue
-                i = close.end()  # section content is never text
-            elif nxt1 in ("?", "!"):
-                gt = raw.find(">", i + 2)
-                if gt < 0:
-                    in_close_pass = True
-                    i = _close_fallback(raw, i, add)
-                    continue
-                i = gt + 1  # pi / declaration: no content event
-            elif i + 1 < n:
-                add(i, i + 1, "<")
-                i += 1
-            else:
-                add(i, n, "<")  # stdlib close(): trailing '<' is data
-                break
-        elif nxt1 == "#":  # '&#'
-            cm = _CHARREF_RE.match(raw, i)
-            if cm:
-                k = cm.end()
-                end = k + 1 if raw[k] == ";" else k
-                add(i, end, _decode_charref(cm.group(1)))
-                i = end
-            elif semi_last >= i:
-                # stdlib bail: '&#' as data + goahead breaks
-                add(i, i + 2, "&#")
-                i += 2
-                if in_close_pass:
-                    # second break happened in close(): end-phase dumps
-                    # the remainder as one data chunk
-                    if i < n:
-                        add(i, n, raw[i:n])
-                    return
-                in_close_pass = True
-            else:
-                add(i, n, raw[i:n])  # rest of the doc becomes data
-                return
-        else:  # '&'
-            em = _ENTITYREF_RE.match(raw, i)
-            if em:
-                k = em.end()
-                end = k + 1 if raw[k] == ";" else k
-                add(i, end, _html.unescape(f"&{em.group(1)};"))
-                i = end
-            elif i + 1 < n and raw[i + 1] in _ASCII_ALPHA:
-                # incomplete entity at EOF (stdlib close() quirks)
-                if n - i == 2:
-                    add(i + 1, n, raw[i + 1 :])  # '&' dropped
-                else:
-                    add(i, n, raw[i:n])
-                return
-            else:
-                add(i, i + 1, "&")
-                i += 1
+                    e = cm.end()
+        elif g == 3:
+            f = flags(m.group(3).lower(), 0)
+            if f:
+                b.end(f)
+        else:
+            if raw[e] == ";":
+                e += 1
+            add(i, e, _decode_charref(m.group(4)) if g == 4
+                else _html.unescape(f"&{m.group(5)};"))
+        i = e
+    return True
 
 
 def extract_html(raw: str) -> tuple[str, list[tuple[int, int]], int, int]:
     """→ (extracted_text, spans, blocks_kept, blocks_dropped).
 
     Kept blocks joined with '\\n' in document order; spans are sorted,
-    non-overlapping raw char offsets of the kept blocks. Fast-tokenizer
-    path; ``extract_html_reference`` is the stdlib-parser twin."""
+    non-overlapping raw char offsets of the kept blocks. Runs the fast
+    tokenizer, and the stdlib-parser twin ``extract_html_reference``
+    on the whole document when the fast path stops short."""
     b = _BlockBuilder()
-    _scan(raw, b)
-    return b.result()
+    if _scan(raw, b):
+        return b.result()
+    return extract_html_reference(raw)
 
 
 def extract_html_reference(raw: str) -> tuple[str, list[tuple[int, int]], int, int]:
-    """stdlib ``html.parser`` twin — the behavioral reference the fast
-    path is equality-tested against (kept out of the hot path)."""
+    """stdlib ``html.parser`` twin: ``extract_html``'s fallback for the
+    documents ``_scan`` does not take, and the behavioral reference the
+    fast path is equality-tested against."""
     parser = _MainContentParser(raw)
     parser.feed(raw)
     parser.close()

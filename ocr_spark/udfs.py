@@ -4,9 +4,9 @@ Zero per-row Python at the Spark row boundary (north_rule): rows cross
 into Python as Arrow record batches; inside a batch the per-document
 parsers lean on C-backed ``re`` and ``unicodedata`` (SURVEY.md §4). The
 html path is the regex tokenizer ``core/html_main._scan``;
-``html.parser`` (pure Python) serves only as the test reference
-``extract_html_reference``. The reference
-processes one document per network round-trip (``OCR API
+``html.parser`` (pure Python, ``extract_html_reference``) runs only for
+the rare document that tokenizer stops on, and as its test reference.
+The reference processes one document per network round-trip (``OCR API
 2/ocr_utils.py:6-13``); here one Python invocation handles
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` documents.
 """

@@ -447,10 +447,11 @@ def test_fields_inline_label_value_merged_layout():
 
 
 def test_fast_html_equals_stdlib_parser():
-    """The fast tokenizer (core/html_main._scan) must be
-    byte-equivalent to the stdlib html.parser twin — over the whole
-    fixture corpus, plus truncations/splices/char-mutations of it and
-    a battery of malformed edges."""
+    """extract_html (the fast tokenizer, core/html_main._scan, with
+    its stdlib fallback) must be byte-equivalent to the stdlib
+    html.parser twin — over the whole fixture corpus, plus
+    truncations/splices/char-mutations of it and a battery of
+    malformed edges."""
     import random
 
     from ocr_spark.core.html_main import extract_html, extract_html_reference
@@ -494,6 +495,11 @@ def test_fast_html_equals_stdlib_parser():
         "<p>before <![CDATA[a>b]]> rest of the words here</p>",
         "<p>x <![if gt 5]>cond<![endif]> words here now</p>",
         "<p>unterminated <![CDATA[ words here now",
+        # malformed marked sections: the stdlib raises, the fallback
+        # parser consumes them like a bogus comment
+        "<p>bad <![3 junk]> words here now</p>",
+        "<p>bad <![ spaced]> words here now</p>",
+        "<p>bad <![3 junk never closed words here now",
         # start-tag shapes at and just past the fast path's edge
         '<a href="x">linked words here</a><p>body words here now</p>',
         '<DIV class="c">upper case tag words</DIV>',
@@ -507,9 +513,23 @@ def test_fast_html_equals_stdlib_parser():
     ]
     for e in cases:
         assert extract_html(e) == extract_html_reference(e), repr(e[:120])
-    # stdlib parse_marked_section RAISES on malformed sections — the
-    # fast path must stay total instead (documented divergence)
     for e in ("<p>bad <![3 junk]> words here now</p>",
               "<p>bad <![ spaced]> words here now</p>"):
         text, spans, kept, dropped = extract_html(e)
         assert kept == 1 and "words here now" in text
+    assert extract_html("<p>bad <![3 junk]> words here now</p>") == (
+        "bad words here now", [(3, 33)], 1, 0)
+
+
+def test_fixture_html_takes_the_fast_path():
+    """Every html turn of the fixture is tokenized by ``_scan`` alone:
+    a document it stops on costs ~3x as much in the stdlib fallback,
+    and the parity tests and golden digest cannot see that."""
+    from ocr_spark.core.html_main import _BlockBuilder, _scan
+    from ocr_spark.core.sniff import _is_html
+    from ocr_spark.fixtures import gen_transcripts
+
+    html_texts = [t for t in gen_transcripts(0.002).text if _is_html(t)]
+    assert html_texts
+    stopped = [t for t in html_texts if not _scan(t, _BlockBuilder())]
+    assert not stopped, repr(stopped[0][:200])
