@@ -21,17 +21,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from ocr_spark.fixtures import transcripts_fixture_path  # noqa: E402
-from ocr_spark.job import ensure_package_shipped, extract_transcripts, run_extraction  # noqa: E402
+from ocr_spark.job import extract_transcripts, run_extraction  # noqa: E402
 from ocr_spark.operators.conversation import conv_rollup, transaction_pivot  # noqa: E402
 from ocr_spark.operators.dedup import dedup_exact, minhash_lsh_dedup  # noqa: E402
 from ocr_spark.plans.session import build_session  # noqa: E402
-from ocr_spark.udfs import fields_udf  # noqa: E402
+from ocr_spark.schema import FIELDS_SCHEMA  # noqa: E402
+from ocr_spark.udfs import fields_batch, map_batches  # noqa: E402
 
 
 def main() -> None:
     sf = float(sys.argv[1]) if len(sys.argv) > 1 else 0.001
     spark = build_session("ocr_spark-example")
-    ensure_package_shipped(spark)
     src = transcripts_fixture_path(sf)
     work = tempfile.mkdtemp(prefix="ocr_spark_example_")
 
@@ -50,9 +50,9 @@ def main() -> None:
 
     print("== document fields (pdf_like turns) + transaction pivot")
     ext = extract_transcripts(spark.read.parquet(src)).filter(F.col("kind") == "pdf_like")
-    fields = ext.select(
-        "conv_id", "turn_idx", fields_udf(F.col("extracted_text")).alias("f")
-    ).select("conv_id", "turn_idx", "f.*")
+    fields = map_batches(
+        ext.select("conv_id", "turn_idx", "extracted_text"), fields_batch, FIELDS_SCHEMA
+    )
     fields.select("conv_id", "category", "vehicle_no", "doc_date", "quantity").show(
         5, truncate=40
     )

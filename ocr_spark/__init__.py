@@ -7,9 +7,11 @@ reference (VishalSingh1806/OCR), re-expressed Spark-first per SURVEY.md:
                           extract → normalize, with char-span lineage).
                           This module IS the reference oracle: the exact
                           same code runs single-process in tests and
-                          inside the Arrow-batch UDFs on the cluster.
-- ``ocr_spark.udfs``      pandas/Arrow UDF wrappers (zero per-row Python
-                          at the Spark row boundary).
+                          inside the Arrow-batch stages on the cluster.
+- ``ocr_spark.udfs``      the one Python stage shape: ``map_batches``
+                          runs a per-batch pandas function through
+                          ``mapInPandas`` (Arrow batches, zero per-row
+                          Python at the Spark row boundary).
 - ``ocr_spark.job``       distributed orchestration: hash(conv_id)
                           partitioning with skew salting, per-partition
                           lineage + metrics, checkpoint-resume.

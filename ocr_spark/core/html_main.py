@@ -250,7 +250,7 @@ class _MainContentParser(HTMLParser):
         end = start + len(name) + 1  # '&' + name
         if end < len(self._raw) and self._raw[end] == ";":
             end += 1
-        self.builder.add(start, end, _html.unescape(f"&{name};"))
+        self.builder.add(start, end, _html.unescape(self._raw[start:end]))
 
     def handle_charref(self, name):
         start = self._abs_pos()
@@ -363,7 +363,7 @@ def _scan(raw: str, b: _BlockBuilder) -> bool:
             if raw[e] == ";":
                 e += 1
             add(i, e, _decode_charref(m.group(4)) if g == 4
-                else _html.unescape(f"&{m.group(5)};"))
+                else _html.unescape(raw[i:e]))
         i = e
     return True
 

@@ -41,15 +41,12 @@ from __future__ import annotations
 
 import logging
 import os
-import tempfile
 import threading
 import time
-import zipfile
 from collections import deque
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from pathlib import Path
 
-import pandas as pd
 from pyspark import TaskContext
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
@@ -66,7 +63,12 @@ if __package__ in (None, ""):
 
 from ocr_spark.schema import MANIFEST_SCHEMA, OUTPUT_SCHEMA
 from ocr_spark.sources.io import publish, read_input, validate_input_schema
-from ocr_spark.udfs import drop_dead_importers, extract_batch, extract_udf
+from ocr_spark.udfs import (
+    drop_dead_importers,
+    ensure_package_shipped,
+    extract_rows,
+    map_batches,
+)
 
 DEFAULT_SALT_THRESHOLD = 2000  # max turns per (conv_id, salt) shuffle key
 
@@ -82,51 +84,17 @@ class _ListAccumulator(AccumulatorParam):
         return a
 
 
-def ensure_package_shipped(spark: SparkSession) -> None:
-    """Ship the ``ocr_spark`` package to executors.
-
-    Equivalent of ``spark-submit --py-files engine.zip`` (SURVEY.md
-    §3.4) for sessions that weren't launched that way: zip the package
-    once and ``addPyFile`` it so Python workers can unpickle the UDFs.
-    No-op if already shipped on this SparkContext.
-    """
-    sc = spark.sparkContext
-    if getattr(sc, "_ocr_spark_shipped", False):
-        return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    fd, zip_path = tempfile.mkstemp(prefix="ocr_spark_", suffix=".zip")
-    os.close(fd)
-    with zipfile.ZipFile(zip_path, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    rel = os.path.join(
-                        "ocr_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
-    sc.addPyFile(zip_path)
-    sc._ocr_spark_shipped = True
-    # Spark serves the zip through its file server from its own copy;
-    # reclaim the staging file when the process exits
-    import atexit
-
-    atexit.register(lambda p=zip_path: os.path.exists(p) and os.unlink(p))
-
-
 # --------------------------------------------------------------------------
 # Declarative extraction (used by entry()/queries() and notebooks)
 # --------------------------------------------------------------------------
 
 def extract_transcripts(df: DataFrame) -> DataFrame:
-    """transcripts → extraction output, as a single Catalyst-visible
-    projection (column pruning reaches the scan: only conv_id,
+    """transcripts → extraction output, one ``mapInPandas`` stage over
+    a projection (column pruning reaches the scan: only conv_id,
     turn_idx, text are read)."""
-    return df.select(
-        "conv_id", "turn_idx", extract_udf(F.col("text")).alias("x")
-    ).select("conv_id", "turn_idx", "x.*")
+    return map_batches(
+        df.select("conv_id", "turn_idx", "text"), extract_rows, OUTPUT_SCHEMA
+    )
 
 
 # --------------------------------------------------------------------------
@@ -153,7 +121,9 @@ def with_skew_salt(df: DataFrame, threshold: int = DEFAULT_SALT_THRESHOLD) -> Da
 # --------------------------------------------------------------------------
 
 def _make_runner(acc, shard: int):
-    """mapInPandas runner: extract + accumulate per-task lineage."""
+    """mapInPandas runner: ``extract_rows`` per batch, plus the
+    per-task lineage tap — the one Python stage that does not go
+    through ``udfs.map_batches``, because it needs the whole task."""
 
     def run(batches):
         drop_dead_importers()
@@ -166,20 +136,13 @@ def _make_runner(acc, shard: int):
         kept = dropped = b_in = b_out = 0
         try:
             for pdf in batches:
-                ext = extract_batch(pdf["text"])
-                out = pd.concat(
-                    [
-                        pdf[["conv_id", "turn_idx"]].reset_index(drop=True),
-                        ext.reset_index(drop=True),
-                    ],
-                    axis=1,
-                )
+                out = extract_rows(pdf)
                 n_turns += len(out)
-                convs.update(pdf["conv_id"].unique())
-                kept += int(ext["blocks_kept"].sum())
-                dropped += int(ext["blocks_dropped"].sum())
-                b_in += int(ext["bytes_in"].sum())
-                b_out += int(ext["bytes_out"].sum())
+                convs.update(out["conv_id"].unique())
+                kept += int(out["blocks_kept"].sum())
+                dropped += int(out["blocks_dropped"].sum())
+                b_in += int(out["bytes_in"].sum())
+                b_out += int(out["bytes_out"].sum())
                 yield out
         finally:
             acc.add(
@@ -310,7 +273,7 @@ def run_extraction(
                 F.pmod(F.xxhash64("conv_id"), F.lit(n_shards)) == shard
             )
         salted = with_skew_salt(part, salt_threshold)
-        balanced = salted.repartition(per_shard, "conv_id", "salt")
+        balanced = salted.repartition(per_shard, "conv_id", "salt").drop("salt")
         out = balanced.mapInPandas(_make_runner(acc, shard), OUTPUT_SCHEMA)
         try:
             out.write.mode("overwrite").parquet(os.path.join(output_dir, f"shard={shard}"))
@@ -348,11 +311,11 @@ def read_manifest(
     """Lineage manifest. Spark does not promise to apply an
     accumulator update from a transformation only once per partition,
     so ``dedupe=True`` (default) keeps one row per (shard,
-    partition_id) — preferring ok status, then the highest attempt —
-    which keeps the metrics sum-able; ``dedupe=False`` returns every
-    row. A task that fails in its Python worker adds no row at all:
-    pyspark sends a task's accumulator updates only when it succeeds,
-    so a retried partition shows just the retry's row
+    partition_id), the highest attempt's, which keeps the metrics
+    sum-able; ``dedupe=False`` returns every row. A task that fails in
+    its Python worker adds no row: pyspark sends a task's accumulator
+    updates only when it succeeds, so every row is an ``ok`` one and a
+    retried partition shows just the retry's row
     (tests/test_pipeline.py::test_task_retry_after_injected_failure)."""
     raw = spark.read.schema(MANIFEST_SCHEMA).parquet(
         os.path.join(output_dir, "_manifest")
@@ -361,10 +324,7 @@ def read_manifest(
         return raw
     from pyspark.sql import Window
 
-    w = Window.partitionBy("shard", "partition_id").orderBy(
-        F.when(F.col("status") == "ok", 0).otherwise(1).asc(),
-        F.col("attempt").desc(),
-    )
+    w = Window.partitionBy("shard", "partition_id").orderBy(F.col("attempt").desc())
     return (
         raw.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

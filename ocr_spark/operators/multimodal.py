@@ -17,7 +17,6 @@ so throughput scales linearly with cores until IO-bound.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -31,7 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ocr_spark.udfs import drop_dead_importers
+from ocr_spark.udfs import map_batches
 
 FEATURE_SCHEMA = StructType(
     [
@@ -79,31 +78,26 @@ def _fake_decode(payload: bytes, media_type: str) -> tuple[int, int]:
     return width, height
 
 
+def _features_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    dims = [
+        _fake_decode(_as_bytes(p), m) for p, m in zip(pdf["payload"], pdf["media_type"])
+    ]
+    return pd.DataFrame(
+        {
+            "doc_id": pdf["doc_id"].astype("int64"),
+            "media_type": pdf["media_type"],
+            "n_bytes": pdf["n_bytes"].astype("int64"),
+            "width": pd.Series([w for w, _ in dims], dtype="int32"),
+            "height": pd.Series([h for _, h in dims], dtype="int32"),
+            "checksum": [hashlib.md5(_as_bytes(p)).hexdigest() for p in pdf["payload"]],
+        }
+    )
+
+
 def extract_media_features(media: DataFrame) -> DataFrame:
     """Batch feature extraction over the media table. One mapInPandas
     stage, schema-stable output, no shuffle."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_dead_importers()
-        for pdf in batches:
-            dims = [
-                _fake_decode(_as_bytes(p), m)
-                for p, m in zip(pdf["payload"], pdf["media_type"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pdf["n_bytes"].astype("int64"),
-                    "width": pd.Series([w for w, _ in dims], dtype="int32"),
-                    "height": pd.Series([h for _, h in dims], dtype="int32"),
-                    "checksum": [
-                        hashlib.md5(_as_bytes(p)).hexdigest() for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return media.mapInPandas(run, FEATURE_SCHEMA)
+    return map_batches(media, _features_batch, FEATURE_SCHEMA)
 
 
 RESIZE_SCHEMA = StructType(
@@ -128,64 +122,52 @@ FRAME_SCHEMA = StructType(
 )
 
 
+def _resize_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    rows = []
+    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+        b = _as_bytes(payload)
+        w, h = _fake_decode(b, "image/png")
+        scale = min(1.0, 64 / max(w, h))
+        rw, rh = max(1, int(w * scale)), max(1, int(h * scale))
+        # STUB thumbnail: digest-derived bytes, length rw*rh//64
+        thumb = hashlib.sha256(b).digest() * (1 + rw * rh // 2048)
+        rows.append((int(doc_id), w, h, rw, rh, thumb[: max(1, rw * rh // 64)]))
+    return pd.DataFrame(rows, columns=RESIZE_SCHEMA.names)
+
+
 def resize_images(media: DataFrame) -> DataFrame:
     """Image resize plumbing: aspect-preserving target dims (longest
     side at most 64) + a deterministic stub thumbnail (real path:
     PIL.Image.thumbnail).
     Filters to image payloads first so the decode stage scans only the
     relevant rows (predicate applied before the Python boundary)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_dead_importers()
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = _as_bytes(payload)
-                w, h = _fake_decode(b, "image/png")
-                scale = min(1.0, 64 / max(w, h))
-                rw, rh = max(1, int(w * scale)), max(1, int(h * scale))
-                # STUB thumbnail: digest-derived bytes, length rw*rh//64
-                thumb = hashlib.sha256(b).digest() * (1 + rw * rh // 2048)
-                rows.append((int(doc_id), w, h, rw, rh, thumb[: max(1, rw * rh // 64)]))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height",
-                    "resized_width", "resized_height", "thumbnail",
-                ],
-            )
-
-    return media.filter(F.col("media_type") == "image/png").mapInPandas(
-        run, RESIZE_SCHEMA
+    return map_batches(
+        media.filter(F.col("media_type") == "image/png"), _resize_batch, RESIZE_SCHEMA
     )
+
+
+def _frames_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    rows = []
+    for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+        s = _as_bytes(payload).decode("utf-8", errors="replace")
+        step = max(1, len(s) // _N_FRAMES)
+        for i in range(_N_FRAMES):
+            # STUB frame decode: checksum of the char window
+            window = s[i * step : (i + 1) * step] or s
+            rows.append((int(doc_id), i, hashlib.md5(window.encode("utf-8")).hexdigest()))
+    return pd.DataFrame(rows, columns=FRAME_SCHEMA.names)
 
 
 def sample_frames(media: DataFrame) -> DataFrame:
     """Video frame-sampling plumbing: ``_N_FRAMES`` evenly-spaced frames
     per payload (real path: pyav seek+decode). One input row fans out
-    to ``_N_FRAMES`` output rows — the mapInPandas generator shape for
-    1→N expansion.
+    to ``_N_FRAMES`` output rows — a per-batch function may return
+    more rows than it was given.
 
     The STUB windows over decoded CHARACTERS, not raw bytes: byte
     windows can split multi-byte sequences, which no SQL oracle can
     hash portably — char windows keep the oracle valid for any unicode
     payload (a real frame decoder replaces this wholesale anyway)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_dead_importers()
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                s = _as_bytes(payload).decode("utf-8", errors="replace")
-                step = max(1, len(s) // _N_FRAMES)
-                for i in range(_N_FRAMES):
-                    # STUB frame decode: checksum of the char window
-                    window = s[i * step : (i + 1) * step] or s
-                    rows.append(
-                        (int(doc_id), i, hashlib.md5(window.encode("utf-8")).hexdigest())
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_checksum"])
-
-    return media.filter(F.col("media_type") == "video/mp4").mapInPandas(
-        run, FRAME_SCHEMA
+    return map_batches(
+        media.filter(F.col("media_type") == "video/mp4"), _frames_batch, FRAME_SCHEMA
     )

@@ -58,6 +58,7 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ocr_spark.core.fields import FIELD_NAMES
 from ocr_spark.fixtures import _transcripts_fixture_file, transcripts_fixture_path
@@ -80,7 +81,7 @@ from ocr_spark.functions.text import (
     top_bigram_frac,
     word_shingles,
 )
-from ocr_spark.job import ensure_package_shipped, extract_transcripts
+from ocr_spark.job import extract_transcripts
 from ocr_spark.operators import corpus as C
 from ocr_spark.operators import relational as R
 from ocr_spark.operators import similarity as S
@@ -127,8 +128,9 @@ from ocr_spark.oracle_fixtures import (
     fields_oracle_name,
     oracle_path,
 )
+from ocr_spark.schema import EXTRACT_STRUCT, FIELDS_SCHEMA
 from ocr_spark.sources.io import load_table
-from ocr_spark.udfs import extract_udf, fields_udf
+from ocr_spark.udfs import extract_rows, fields_batch, map_batches
 
 # ---------------------------------------------------------------------------
 # Spark-side queries
@@ -282,33 +284,27 @@ def _json_spans(df: DataFrame) -> DataFrame:
 def q_extract_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship pipeline: synthetic transcripts (same sf tier as
     sf_dir) → sniff → route → extract → spans+metrics."""
-    ensure_package_shipped(spark)
     return _json_spans(extract_transcripts(_transcripts(spark, sf_dir)))
 
 
 def q_extract_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extraction over the driver's documents table (plain-text path)."""
-    ensure_package_shipped(spark)
-    d = load_table(spark, sf_dir, "documents")
-    return _json_spans(
-        d.select("doc_id", extract_udf(F.col("text")).alias("x")).select(
-            "doc_id", "x.*"
-        )
-    )
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    schema = StructType([d.schema["doc_id"], *EXTRACT_STRUCT.fields])
+    return _json_spans(map_batches(d, extract_rows, schema))
 
 
 def q_extract_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference parity surface: per-turn document fields over the
     pdf_like turns (classify cascade + W/F-heuristics, core/fields.py)."""
-    ensure_package_shipped(spark)
     ext = extract_transcripts(_transcripts(spark, sf_dir))
-    return ext.filter(F.col("kind") == "pdf_like").select(
-        "conv_id", "turn_idx", fields_udf(F.col("extracted_text")).alias("f")
-    ).select("conv_id", "turn_idx", "f.*")
+    pdf_like = ext.filter(F.col("kind") == "pdf_like").select(
+        "conv_id", "turn_idx", "extracted_text"
+    )
+    return map_batches(pdf_like, fields_batch, FIELDS_SCHEMA)
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     return extract_media_features(to_media_table(load_table(spark, sf_dir, "documents")))
 
 
@@ -316,7 +312,6 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver surface projects thumbnail bytes to their length (the
     stub thumbnail is digest-repetition filler; its LENGTH is the part
     with defined semantics, and the oracle can compute it)."""
-    ensure_package_shipped(spark)
     r = resize_images(to_media_table(load_table(spark, sf_dir, "documents")))
     return r.select(
         "doc_id", "width", "height", "resized_width", "resized_height",
@@ -325,7 +320,6 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     return sample_frames(to_media_table(load_table(spark, sf_dir, "documents")))
 
 

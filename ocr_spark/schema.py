@@ -16,6 +16,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ocr_spark.core.fields import FIELD_NAMES
+
 SPAN_TYPE = StructType(
     [StructField("start", IntegerType()), StructField("end", IntegerType())]
 )
@@ -36,6 +38,11 @@ EXTRACT_STRUCT = StructType(
 OUTPUT_SCHEMA = StructType(
     [StructField("conv_id", StringType()), StructField("turn_idx", IntegerType())]
     + list(EXTRACT_STRUCT.fields)
+)
+
+# What udfs.fields_batch returns per pdf_like turn (core/fields.py)
+FIELDS_SCHEMA = StructType(
+    OUTPUT_SCHEMA.fields[:2] + [StructField(n, StringType()) for n in FIELD_NAMES]
 )
 
 # Per-partition lineage/metrics manifest (SURVEY.md §1.2)

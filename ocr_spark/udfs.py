@@ -1,4 +1,4 @@
-"""Arrow-batch UDF wrappers around the pure extraction core.
+"""Arrow-batch stages around the pure extraction core.
 
 Zero per-row Python at the Spark row boundary (north_rule): rows cross
 into Python as Arrow record batches; inside a batch the per-document
@@ -9,22 +9,31 @@ the rare document that tokenizer stops on, and as its test reference.
 The reference processes one document per network round-trip (``OCR API
 2/ocr_utils.py:6-13``); here one Python invocation handles
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` documents.
+
+Every Python stage has one shape, ``mapInPandas``: ``map_batches``
+runs a per-batch function over a frame; only the job's runner keeps
+its own generator, for its per-task lineage (docs/SCALE.md §1).
 """
 
 from __future__ import annotations
 
+import os
 import sys
+import tempfile
+import zipfile
 import zipimport
+from collections.abc import Callable
 
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ocr_spark.core.extract import extract_turn
-from ocr_spark.schema import EXTRACT_STRUCT
+from ocr_spark.core.fields import FIELD_NAMES, extract_fields
 
 
 def drop_dead_importers() -> None:
-    """Worker hygiene; call first in every Python entry point. pyspark
+    """Worker hygiene, run first by both stage bodies. pyspark
     runs ``importlib.invalidate_caches()`` before each task, which makes
     every zipimporter re-read its zip: the spark-core jar (no ``.py``)
     and one per imported ``pyspark.zip`` subpackage (docs/SCALE.md §1).
@@ -34,6 +43,54 @@ def drop_dead_importers() -> None:
     for key, f in list(sys.path_importer_cache.items()):
         if isinstance(f, zipimport.zipimporter) and (f.archive.endswith(".jar") or f.prefix):
             del sys.path_importer_cache[key]
+
+
+def ensure_package_shipped(spark: SparkSession) -> None:
+    """Ship the ``ocr_spark`` package to executors.
+
+    Equivalent of ``spark-submit --py-files engine.zip`` (SURVEY.md
+    §3.4) for sessions that weren't launched that way: zip the package
+    once and ``addPyFile`` it so Python workers can unpickle the stage
+    functions. No-op if already shipped on this SparkContext.
+    """
+    sc = spark.sparkContext
+    if getattr(sc, "_ocr_spark_shipped", False):
+        return
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    fd, zip_path = tempfile.mkstemp(prefix="ocr_spark_", suffix=".zip")
+    os.close(fd)
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            if "__pycache__" in root:
+                continue
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(root, fn)
+                    rel = os.path.join(
+                        "ocr_spark", os.path.relpath(full, pkg_dir)
+                    )
+                    zf.write(full, rel)
+    sc.addPyFile(zip_path)
+    sc._ocr_spark_shipped = True
+    # Spark serves the zip through its file server from its own copy;
+    # reclaim the staging file when the process exits
+    import atexit
+
+    atexit.register(lambda p=zip_path: os.path.exists(p) and os.unlink(p))
+
+
+def map_batches(df: DataFrame, fn: Callable, schema: StructType) -> DataFrame:
+    """One ``mapInPandas`` stage: ``fn`` maps each Arrow batch of
+    ``df`` to a frame of ``schema``. Ships the package, and runs the
+    worker hygiene before the first batch."""
+    ensure_package_shipped(df.sparkSession)
+
+    def run(batches):
+        drop_dead_importers()
+        for pdf in batches:
+            yield fn(pdf)
+
+    return df.mapInPandas(run, schema)
 
 
 def extract_batch(text: pd.Series) -> pd.DataFrame:
@@ -63,36 +120,17 @@ def extract_batch(text: pd.Series) -> pd.DataFrame:
     )
 
 
-@pandas_udf(EXTRACT_STRUCT)
-def extract_udf(text: pd.Series) -> pd.DataFrame:
-    """Scalar Arrow UDF: text → extraction struct."""
-    drop_dead_importers()
-    return extract_batch(text)
+def extract_rows(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One batch of rows with a ``text`` column → the same rows, ``text``
+    replaced by the extraction columns (``schema.EXTRACT_STRUCT``)."""
+    return pdf.drop(columns="text").join(extract_batch(pdf["text"]))
 
 
-def fields_batch(text: pd.Series) -> pd.DataFrame:
-    """Document-field extraction over one Arrow batch (reconstructed
-    pdf_like text → fixed field struct; core/fields.py)."""
-    from ocr_spark.core.fields import FIELD_NAMES, extract_fields
-
-    results = [extract_fields(t or "") for t in text]
-    return pd.DataFrame(
-        {name: pd.Series([getattr(r, name) for r in results], dtype="object")
-         for name in FIELD_NAMES},
-        index=text.index,
+def fields_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Document fields over one batch: reconstructed pdf_like
+    ``extracted_text`` → the fixed field columns (core/fields.py), the
+    batch's other columns kept."""
+    fields = [extract_fields(t or "") for t in pdf["extracted_text"]]
+    return pdf.drop(columns="extracted_text").join(
+        pd.DataFrame(fields, columns=FIELD_NAMES, index=pdf.index, dtype="object")
     )
-
-
-def _fields_struct_type():
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from ocr_spark.core.fields import FIELD_NAMES
-
-    return StructType([StructField(n, StringType()) for n in FIELD_NAMES])
-
-
-@pandas_udf(_fields_struct_type())
-def fields_udf(text: pd.Series) -> pd.DataFrame:
-    """Scalar Arrow UDF: reconstructed text → document fields."""
-    drop_dead_importers()
-    return fields_batch(text)

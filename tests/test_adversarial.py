@@ -53,20 +53,17 @@ def test_adversarial_payload(name):
 
 
 def test_adversarial_through_spark(spark):
-    """The same payloads through the Arrow UDF — batch boundary must
+    """The same payloads through the Arrow stage — batch boundary must
     not change results (arrow string handling, null bytes, size)."""
-    from ocr_spark.job import ensure_package_shipped
-    from ocr_spark.udfs import extract_udf
-    from pyspark.sql import functions as F
+    from ocr_spark.job import extract_transcripts
 
-    ensure_package_shipped(spark)
-    rows = [(k, v) for k, v in sorted(CASES.items())]
-    df = spark.createDataFrame(rows, "name string, text string")
+    rows = [(k, 0, v) for k, v in sorted(CASES.items())]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
     got = {
-        r["name"]: (r["x"]["kind"], r["x"]["extracted_text"])
-        for r in df.select("name", extract_udf(F.col("text")).alias("x")).collect()
+        r["conv_id"]: (r["kind"], r["extracted_text"])
+        for r in extract_transcripts(df).collect()
     }
-    for name, raw in rows:
+    for name, _, raw in rows:
         r = extract_turn(raw)
         assert got[name] == (r.kind, r.extracted_text), name
 
@@ -75,38 +72,36 @@ def test_oversize_payloads_through_spark(spark):
     """Twenty 4 MiB turns in one partition (~80 MiB). Spark caps each
     Arrow input batch by bytes (``spark.sql.execution.arrow.
     maxBytesPerBatch``, 64 MiB by default) as well as by
-    ``maxRecordsPerBatch`` (2048), so the UDF sees several batches, not
-    one that grows with payload size (docs/SCALE.md §1 "Memory"); each
-    row still equals the core's own result."""
+    ``maxRecordsPerBatch`` (2048), so the stage sees several batches,
+    not one that grows with payload size (docs/SCALE.md §1 "Memory");
+    each row still equals the core's own result."""
     from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    from ocr_spark.job import ensure_package_shipped
-    from ocr_spark.udfs import extract_udf
+    from ocr_spark.schema import EXTRACT_STRUCT
+    from ocr_spark.udfs import extract_rows, map_batches
 
-    ensure_package_shipped(spark)
     line = "shipment cargo freight route depot invoice material weight tonnage\n"
     reps = (4 << 20) // len(line)
     n_rows = 20
     text = F.concat(F.col("id").cast("string"), F.lit(" "), F.repeat(F.lit(line), reps))
 
-    @F.pandas_udf("int")
-    def batch_len(s: pd.Series) -> pd.Series:
-        return pd.Series([len(s)] * len(s))
+    def extract_with_batch_len(pdf: pd.DataFrame) -> pd.DataFrame:
+        return extract_rows(pdf).assign(n=len(pdf))
 
-    rows = (
-        spark.range(0, n_rows, 1, numPartitions=1)
-        .select("id", batch_len(text).alias("n"), extract_udf(text).alias("x"))
-        .collect()
+    schema = StructType(
+        [StructField("id", LongType()), *EXTRACT_STRUCT.fields, StructField("n", IntegerType())]
     )
+    src = spark.range(0, n_rows, 1, numPartitions=1).select("id", text.alias("text"))
+    rows = map_batches(src, extract_with_batch_len, schema).collect()
     assert len(rows) == n_rows
     # a batch of n rows contributes n rows of 1/n each
     assert round(sum(1 / r["n"] for r in rows)) >= 2
-    for r in rows:
-        e = extract_turn(f"{r['id']} " + line * reps)
-        x = r["x"]
+    for x in rows:
+        e = extract_turn(f"{x['id']} " + line * reps)
         assert (x["kind"], x["extracted_text"], [tuple(s) for s in x["spans"]]) == (
             e.kind, e.extracted_text, [tuple(s) for s in e.spans]
-        ), r["id"]
+        ), x["id"]
         assert (x["blocks_kept"], x["blocks_dropped"], x["bytes_in"], x["bytes_out"]) == (
             e.blocks_kept, e.blocks_dropped, e.bytes_in, e.bytes_out
-        ), r["id"]
+        ), x["id"]

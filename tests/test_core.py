@@ -510,6 +510,11 @@ def test_fast_html_equals_stdlib_parser():
         '<script type="t">var x = "<p>";</script><p>after script words</p>',
         "<p>\u00a0\u3000\u200b\x1c\x85</p><p>whitespace filler above words</p>",
         "<div>\x1c\x85 \u00a0</div><a href=\"x\">\u3000</a>words here now",
+        # references without ';' decode their own source span: an
+        # unknown name stays as written, a known prefix decodes
+        "<p>AT&T rocks the market today</p>",
+        "<p>fish &ampchips and more words here</p>",
+        "<p>R&D &copy 2024 &Unknown. words here now</p>",
     ]
     for e in cases:
         assert extract_html(e) == extract_html_reference(e), repr(e[:120])
@@ -519,6 +524,8 @@ def test_fast_html_equals_stdlib_parser():
         assert kept == 1 and "words here now" in text
     assert extract_html("<p>bad <![3 junk]> words here now</p>") == (
         "bad words here now", [(3, 33)], 1, 0)
+    assert extract_html("<p>AT&T rocks the market today</p>") == (
+        "AT&T rocks the market today", [(3, 30)], 1, 0)
 
 
 def test_fixture_html_takes_the_fast_path():

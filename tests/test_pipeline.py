@@ -340,36 +340,39 @@ def test_spark_submit_cli(transcripts_path, tmp_path):
     assert os.path.exists(os.path.join(ckpt, "shard-00000.done"))
 
 
-def test_fields_udf_and_transaction_pivot(spark, transcripts_path):
-    from ocr_spark.core.fields import extract_fields
-    from ocr_spark.job import ensure_package_shipped, extract_transcripts
+def test_fields_batch_and_transaction_pivot(spark, transcripts_path):
+    from ocr_spark.core.fields import FIELD_NAMES, extract_fields
+    from ocr_spark.job import extract_transcripts
     from ocr_spark.operators.conversation import transaction_pivot
-    from ocr_spark.udfs import fields_udf
+    from ocr_spark.schema import FIELDS_SCHEMA
+    from ocr_spark.udfs import fields_batch, map_batches
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType, StructField, StructType
 
-    ensure_package_shipped(spark)
     ext = extract_transcripts(spark.read.parquet(transcripts_path)).filter(
         F.col("kind") == "pdf_like"
     )
-    fdf = ext.select(
-        "conv_id", "turn_idx", "extracted_text",
-        fields_udf(F.col("extracted_text")).alias("f"),
+    fdf = map_batches(
+        ext.select(
+            "conv_id", "turn_idx", "extracted_text",
+            F.col("extracted_text").alias("source_text"),
+        ),
+        fields_batch,
+        StructType(FIELDS_SCHEMA.fields + [StructField("source_text", StringType())]),
     )
     rows = fdf.limit(200).collect()
     assert rows
-    for r in rows:  # UDF ≡ pure function on every row
-        expect = extract_fields(r["extracted_text"])
-        assert tuple(r["f"]) == tuple(expect)
+    for r in rows:  # stage ≡ pure function on every row
+        expect = extract_fields(r["source_text"])
+        assert tuple(r[n] for n in FIELD_NAMES) == tuple(expect)
 
-    piv = transaction_pivot(
-        fdf.select("conv_id", "turn_idx", "f.*")
-    )
+    piv = transaction_pivot(fdf.drop("source_text"))
     got = {r["conv_id"]: r for r in piv.collect()}
     assert got
     # first-wins semantics check on one conversation via pandas
     import pandas as pd
 
-    pdf = fdf.select("conv_id", "turn_idx", "f.*").toPandas()
+    pdf = fdf.drop("source_text").toPandas()
     conv = pdf["conv_id"].iloc[0]
     sub = pdf[pdf["conv_id"] == conv].sort_values("turn_idx")
     first_vehicle = sub["vehicle_no"].dropna().iloc[0] if sub["vehicle_no"].notna().any() else None
@@ -615,23 +618,23 @@ from pyspark.sql import SparkSession
 from ocr_spark import job
 
 marker, input_path, clean_out, flaky_out = sys.argv[1:5]
-real_extract_batch = job.extract_batch
+real_extract_rows = job.extract_rows
 
 
-def extract_batch_failing_once(texts):
+def extract_rows_failing_once(pdf):
     """The first call anywhere (O_EXCL marker) raises; every later
     call, the retry included, extracts as usual."""
     try:
         fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
     except FileExistsError:
-        return real_extract_batch(texts)
+        return real_extract_rows(pdf)
     os.close(fd)
     raise RuntimeError("injected task failure")
 
 
 spark = SparkSession.builder.getOrCreate()
 job.run_extraction(spark, input_path, clean_out, num_partitions=4)
-job.extract_batch = extract_batch_failing_once
+job.extract_rows = extract_rows_failing_once
 job.run_extraction(spark, input_path, flaky_out, num_partitions=4)
 spark.stop()
 '''

@@ -86,25 +86,54 @@ def test_dedup_exact_is_partial_aggregated(spark):
     assert count_exchanges(df) == 1
 
 
-def test_extraction_job_exchange_count(spark, transcripts_path):
+def _shard_plan(spark, monkeypatch, input_path, output_dir, num_partitions):
+    """The frame one ``run_extraction`` shard job writes, captured at
+    its ``write.parquet`` call (one shard, so one frame)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from ocr_spark.job import run_extraction
+
+    written = []
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        written.append(self._df)
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    run_extraction(spark, input_path, output_dir, num_partitions=num_partitions)
+    (df,) = written
+    return df
+
+
+def test_extraction_job_exchange_count(spark, transcripts_path, monkeypatch, tmp_path):
     """The full job plan: exactly one hash repartition (the explicit
     salted exchange) on the extraction path."""
     import re
 
-    from ocr_spark.job import ensure_package_shipped, with_skew_salt
-    from ocr_spark.udfs import extract_udf
-    from pyspark.sql import functions as F
-
-    ensure_package_shipped(spark)
-    df = spark.read.parquet(transcripts_path).select("conv_id", "turn_idx", "text")
-    salted = with_skew_salt(df).repartition(32, "conv_id", "salt")
-    out = salted.select("conv_id", "turn_idx", extract_udf(F.col("text")).alias("x"))
+    out = _shard_plan(spark, monkeypatch, transcripts_path, str(tmp_path / "out"), 32)
     plan = physical_plan(out)
     # the salt is a projection of turn_idx: the salted hash repartition
     # is the only exchange — no pre-pass aggregate, no join
     assert count_exchanges(out) == 1
     assert re.search(r"Arguments: hashpartitioning\(conv_id#\d+, salt#\d+, 32\)", plan)
     assert "Join" not in plan
+
+
+def test_one_python_stage_shape(spark, transcripts_path, monkeypatch, tmp_path):
+    """The driver's ``extract_transcripts`` query and a job shard run
+    the same operator: one ``MapInPandas``, no scalar-UDF
+    ``ArrowEvalPython``."""
+    import re
+
+    from ocr_spark.queries import SPARK_QUERIES
+
+    query = SPARK_QUERIES["extract_transcripts"](spark, SF_DIR)
+    shard = _shard_plan(spark, monkeypatch, transcripts_path, str(tmp_path / "out"), 4)
+    for df in (query, shard):
+        plan = physical_plan(df)
+        assert len(re.findall(r"^\(\d+\) MapInPandas\b", plan, re.M)) == 1
+        assert "ArrowEvalPython" not in plan
 
 
 def test_partitioned_output_prunes(spark, transcripts_path, tmp_path):

@@ -83,10 +83,12 @@ def test_reused_worker_starts_task_without_dead_importers(spark):
 
 
 def test_every_python_entry_point_calls_hygiene(spark, monkeypatch):
-    """The extraction runner, both scalar UDFs and the three multimodal
-    ``mapInPandas`` bodies call the hygiene function first."""
+    """Both Python stage bodies call the hygiene function first: the
+    extraction runner, and the ``udfs.map_batches`` body that runs
+    every other stage (``extract_transcripts``, the fields stage, the
+    three multimodal operators)."""
     calls: list[str] = []
-    for mod in (job, udfs, multimodal):
+    for mod in (job, udfs):
         monkeypatch.setattr(
             mod, "drop_dead_importers", lambda m=mod.__name__: calls.append(m)
         )
@@ -95,30 +97,33 @@ def test_every_python_entry_point_calls_hygiene(spark, monkeypatch):
         def add(self, rows):
             pass
 
-    text = pd.Series(["<p>hello</p>", "plain text"])
-    turns = pd.DataFrame({"conv_id": ["c", "c"], "turn_idx": [0, 1], "text": text})
+    turns = pd.DataFrame({"conv_id": ["c"], "turn_idx": [0], "text": ["<p>hello</p>"]})
+    fields = turns.rename(columns={"text": "extracted_text"})
+    media = pd.DataFrame({
+        "doc_id": [1], "media_type": ["image/png"], "payload": [b"abc"],
+        "n_bytes": [3],
+    })
     list(job._make_runner(_Acc(), 0)(iter([turns])))
-    udfs.extract_udf.func(text)
-    udfs.fields_udf.func(text)
 
     bodies = []
 
-    class _Media:
+    class _Frame:
+        sparkSession = spark
+
+        def select(self, *_cols):
+            return self
+
         def filter(self, _cond):
             return self
 
         def mapInPandas(self, fn, _schema):
             bodies.append(fn)
 
+    job.extract_transcripts(_Frame())
+    udfs.map_batches(_Frame(), udfs.fields_batch, None)
     for op in (multimodal.extract_media_features, multimodal.resize_images,
                multimodal.sample_frames):
-        op(_Media())
-    media = pd.DataFrame({
-        "doc_id": [1], "media_type": ["image/png"], "payload": [b"abc"],
-        "n_bytes": [3],
-    })
-    for body in bodies:
-        list(body(iter([media])))
-    assert calls == [
-        "ocr_spark.job", "ocr_spark.udfs", "ocr_spark.udfs",
-    ] + ["ocr_spark.operators.multimodal"] * 3
+        op(_Frame())
+    for body, batch in zip(bodies, [turns, fields, media, media, media], strict=True):
+        list(body(iter([batch])))
+    assert calls == ["ocr_spark.job"] + ["ocr_spark.udfs"] * 5
